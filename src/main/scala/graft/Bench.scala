@@ -7,6 +7,11 @@ import org.apache.spark.sql.SparkSession
   * materialisation — `.count()` would let Spark skip work), after a
   * warmup pass that absorbs JVM/codegen startup. Prints ONE JSON line. */
 object Bench {
+  /** The core count SURVEY §4's generated numbers claim (`local[32]`):
+   *  only a full-suite run at this count writes bench_local_last.json,
+   *  the artifact those numbers are generated from. */
+  val SurveyCpus = 32
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -83,6 +88,18 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
+    // The full-suite artifact a run writes and compares against. A
+    // SPARK_GRAFT_ONLY-filtered dev run must not clobber the last
+    // FULL-suite artifact: survey_numbers.py falls back to
+    // bench_local_last.json when the harness wrapper is unparsed, and
+    // a 2-query targeted run overwriting it silently breaks the
+    // regenerated SURVEY numbers (observed round 8). Neither may a run
+    // at another core count, whose totals SURVEY §4 does not claim: it
+    // writes bench_local_c<cpus>.json instead.
+    val artifact =
+      if (only.isDefined) "bench_local_only.json"
+      else if (cpus == SurveyCpus.toString) "bench_local_last.json"
+      else s"bench_local_c$cpus.json"
     /** Canary: a pinned set of cheap, code-stable queries timed
       * before AND after the full suite in the same JVM (full rationale
       * at the canary pass below). Declared once, here, because the
@@ -703,7 +720,7 @@ object Bench {
     // round summary cannot miss it. Canary-normalized: a host that
     // merely got slower moves every key, so ratios divide out the
     // canary drift when the previous artifact recorded one.
-    val prevArtifact = java.nio.file.Paths.get("bench_local_last.json")
+    val prevArtifact = java.nio.file.Paths.get(artifact)
     val prevRoot: Option[com.fasterxml.jackson.databind.JsonNode] =
       if (only.isDefined || !java.nio.file.Files.exists(prevArtifact)) None
       else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
@@ -858,15 +875,8 @@ object Bench {
     val total = resultsCanon.map(_._2._1).filter(_ >= 0).sum
     val qsFull = jmap(resultsCanon.map { case (k, (med, _, _)) => k -> med },
       _.toString)
-    // A SPARK_GRAFT_ONLY-filtered dev run must not clobber the last
-    // FULL-suite artifact: survey_numbers.py falls back to
-    // bench_local_last.json when the harness wrapper is unparsed, and
-    // a 2-query targeted run overwriting it silently breaks the
-    // regenerated SURVEY numbers (observed round 8).
-    val outName =
-      if (only.isDefined) "bench_local_only.json" else "bench_local_last.json"
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(outName),
+      java.nio.file.Paths.get(artifact),
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"query_spread":$spread,"canary_before":${jmap(canaryBefore, _.toString)},"canary_after":${jmap(canaryAfter, _.toString)},"canary_mid":${canaryMid.mkString("[", ",", "]")},"canary_drift":$canaryDrift,"host_factor":${r3(hostFactor)},"noise_envelope":${r3(noiseEnvelope)},"regression_adjudication":"$adjudication","ingest_events_per_sec":$eps,"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     val headlineKeys = Seq("events_parse", "app_list", "task_quantiles",
@@ -883,7 +893,7 @@ object Bench {
     val hl = if (only.isDefined) resultsCanon
       else resultsCanon.filter(kv => headlineKeys.contains(kv._1))
     val qs = jmap(hl.map { case (k, (med, _, _)) => k -> med }, r3)
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"canary_drift":${r3(canaryDrift)},"host_factor":${r3(hostFactor)},"ingest_events_per_sec":$eps,"trigger_regression_alert":${regressions.nonEmpty},"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir","full":"$outName"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"canary_drift":${r3(canaryDrift)},"host_factor":${r3(hostFactor)},"ingest_events_per_sec":$eps,"trigger_regression_alert":${regressions.nonEmpty},"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir","full":"$artifact"}""")
     spark.stop()
     org.apache.commons.io.FileUtils.deleteDirectory(benchRoot.toFile)
   }

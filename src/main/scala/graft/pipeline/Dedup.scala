@@ -471,12 +471,15 @@ ORDER BY n.source"""
     // (det, doc_a, doc_b) checkpoint instead of three per-family ones.
     // r17 (guide §2.6 overlap-independent-subtrees): the composite is
     // job-COUNT-bound at small scale (Profile: ~60 sequential sub-
-    // second jobs per call) and its two verify chains are independent
-    // once the shared signature frame is pinned — materialize sigBoth
-    // once, then run the union-Jaccard verify and the simhash
-    // band+hamming verify as CONCURRENT driver jobs (actions are only
-    // sequential because the driver calls them sequentially; the
-    // second chain's tasks back-fill the first chain's stage tails).
+    // second jobs per call) and its two verify chains are independent,
+    // so the union-Jaccard verify and the simhash band+hamming verify
+    // run as CONCURRENT driver jobs (actions are only sequential
+    // because the driver calls them sequentially; the second chain's
+    // tasks back-fill the first chain's stage tails). Nothing is
+    // materialized before the fork: both chains race to fill the
+    // shared sigBoth / ngCands / mhCands caches, which Spark's block
+    // locking keeps correct. r17 measured the race cheaper than a
+    // sigBoth.count() ahead of it, which adds a job to the graph.
     // Lazy-pin mode (plan audits) keeps the old single-threaded lazy
     // shape — no actions, nothing to overlap.
     val fp = sigBoth.select(col("doc_id"), simhashFpCol.as("fp"))

@@ -75,35 +75,28 @@ object EventLogSource {
    *  overhead, no scan locality). Rewrites the store range-partitioned
    *  on (event_date, app_id, event_time_us) into ~targetBytes output
    *  files — each date directory ends up with ceil(dateBytes /
-   *  targetBytes) sorted files — then swaps directories.
+   *  targetBytes) sorted files — then swaps directories
+   *  ([[graft.streaming.StateStores.swapIn]]; a missing store is left
+   *  alone).
    *
    *  The swap is two FS renames (atomic per rename on HDFS/POSIX, not
    *  on object stores — there, write to a fresh location and repoint
    *  the catalog instead; this helper is for filesystem-backed
    *  stores). */
   def compactStore(spark: SparkSession, storeDir: String,
-                   targetBytes: Long = 512L << 20): Unit = {
-    val path = new Path(storeDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(path).getLength
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(storeDir + ".compact-tmp")
-    val old = new Path(storeDir + ".compact-old")
-    spark.read.parquet(storeDir)
-      .repartitionByRange(n, col("event_date"), col("app_id"), col("event_time_us"))
-      .sortWithinPartitions("event_date", "app_id", "event_time_us")
-      .write.mode("overwrite")
-      .partitionBy("event_date")
-      .parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compactStore: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"compactStore: cannot install $tmp")
+                   targetBytes: Long = 512L << 20): Unit =
+    graft.streaming.StateStores.swapIn(spark, storeDir) { tmp =>
+      val path = new Path(storeDir)
+      val totalBytes = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(path).getLength
+      val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+      spark.read.parquet(storeDir)
+        .repartitionByRange(n, col("event_date"), col("app_id"), col("event_time_us"))
+        .sortWithinPartitions("event_date", "app_id", "event_time_us")
+        .write.mode("overwrite")
+        .partitionBy("event_date")
+        .parquet(tmp)
     }
-    fs.delete(old, true)
-  }
 
   /** Write the canonical frame as a bucketed table: `bucketBy(app_id)`
    *  pre-shuffles once at write time, so every subsequent per-app

@@ -104,7 +104,7 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
    *  one partition at a time and never stage as a driver-side map. */
   private def saveStateStreaming(carryOver: Iterator[(String, FileState)],
                                  fresh: Iterator[(String, FileState)]): Unit = {
-    // tmp-write + rename-swap (StreamingClusters.compactState
+    // tmp-write + rename-swap (graft.streaming.StateStores.swapIn
     // discipline): `fresh` is a toLocalIterator that runs Spark jobs
     // BETWEEN writes, so writing the live path directly would leave a
     // truncated checkpoint if any of those jobs dies mid-commit. The

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.pipeline.Dedup
 
@@ -29,7 +28,8 @@ import graft.pipeline.Dedup
  * windows), probes the folded store with one (fp, len)-keyed hash
  * join, batch-internal duplication collapses by the same keep-first
  * occ-key order the offline operator uses, and the two appends (docs,
- * chunk identities) are O(batch). Corpus TEXT is never an input to a
+ * then chunk identities — [[StateStores.commit]]'s order) are
+ * O(batch). Corpus TEXT is never an input to a
  * trigger (plan-audited in StreamingIngestSpec). Replayed batches
  * (at-least-once restart) find all their chunks already stored, drop
  * entirely, and append nothing new to the doc store.
@@ -39,13 +39,7 @@ object StreamingCdcDedup {
   private val chunkSchema = StructType(Seq(
     StructField("fp", LongType), StructField("len", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(chunkSchema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], chunkSchema)
-  }
+  private def chunksOf(storeDir: String) = storeDir + "_chunks"
 
   /** One micro-batch's per-doc chunk-dup ledger, built ONLY from the
    *  chunk store + the batch (exposed for testing and the plan
@@ -53,7 +47,7 @@ object StreamingCdcDedup {
   def triggerFlags(spark: SparkSession, batch: DataFrame,
                    chunksDir: String, avgChunk: Int = 8): DataFrame =
     Dedup.cdcChunkDedupIncremental(batch.limit(0), batch, avgChunk,
-      corpusChunks = Some(readOrEmpty(spark, chunksDir)))
+      corpusChunks = Some(StateStores.read(spark, chunksDir, chunkSchema)))
 
   /** One micro-batch of the loop: ledger from the store, drop docs
    *  with `dup_tokens == n_tokens` (fully reconstructible — an exact
@@ -68,58 +62,28 @@ object StreamingCdcDedup {
       .filter(col("dup_tokens") =!= col("n_tokens"))
       .select("doc_id")
     val survivors = b.join(keep, "doc_id").cache()
-    // r17 (guide §2.6 via StateWrites): both appends read the
-    // materialized survivor cache — overlap them.
-    survivors.count()
-    StateWrites.overlap(
-      () => survivors.write.mode("append").parquet(storeDir),
-      () => Dedup.cdcChunkStore(survivors, avgChunk)
-        .write.mode("append").parquet(chunksDir))
+    StateStores.commit(None, storeDir -> survivors,
+      chunksDir -> Dedup.cdcChunkStore(survivors, avgChunk))
     survivors.unpersist()
     ()
   }
 
   /** Offline state maintenance between stream restarts: the chunk
    *  store distinct-folds and repartitions by fp — same read
-   *  semantics, fewer files; same tmp-write + rename-swap crash
-   *  discipline as [[StreamingDedup.compactState]]. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   chunksDir: String = null, partitions: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dir = Option(chunksDir).getOrElse(storeDir + "_chunks")
-    val path = new Path(dir)
-    val fs = path.getFileSystem(hconf)
-    if (!fs.exists(path)) return
-    val tmp = new Path(dir + ".compact-tmp")
-    val old = new Path(dir + ".compact-old")
-    spark.read.schema(chunkSchema).parquet(dir)
-      .distinct()
-      .repartition(partitions, col("fp"))
-      .write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compactState: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path)
-      throw new java.io.IOException(s"compactState: cannot install $tmp")
-    }
-    fs.delete(old, true)
+   *  semantics, fewer files ([[StateStores.swapIn]]). */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val dir = chunksOf(storeDir)
+    StateStores.swapIn(spark, dir)(tmp =>
+      spark.read.schema(chunkSchema).parquet(dir)
+        .distinct()
+        .repartition(32, col("fp"))
+        .write.parquet(tmp))
   }
 
   /** Start the CDC-dedup ingest loop over a streaming documents frame
-   *  (`doc_id`, `text`); the chunk store defaults to a sibling of
-   *  `storeDir`. */
+   *  (`doc_id`, `text`); the chunk store is a sibling of `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, checkpoint: String,
-                       avgChunk: Int = 8,
-                       chunksDir: String = null): StreamingQuery = {
-    val cDir = Option(chunksDir).getOrElse(storeDir + "_chunks")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, cDir, avgChunk)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       avgChunk: Int = 8): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, chunksOf(storeDir), avgChunk))
 }

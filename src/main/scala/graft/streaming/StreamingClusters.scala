@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -33,7 +32,7 @@ import graft.pipeline.Clustering
  * Replay tolerance: a re-run batch recomputes the identical delta
  * (prior labels fold to the same frame — the re-appended rows are
  * byte-identical, and ties inside `max_by` carry equal labels).
- * Compaction = fold + crash-safe rename-swap, identical semantics
+ * Compaction = fold + [[StateStores.swapIn]], identical semantics
  * because the fold IS what every read does.
  */
 object StreamingClusters {
@@ -42,20 +41,12 @@ object StreamingClusters {
     StructField("doc_id", LongType), StructField("label", LongType),
     StructField("batch_id", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(labelSchema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], labelSchema)
-  }
-
   /** The current labeling `(doc_id, label)`: latest-batch-wins fold
    *  over the delta store — what a trigger consumes and what readers
    *  (survivor selection, [[graft.pipeline.Clustering.clusterSizes]]-
    *  style rollups via `precomputedPairs`-free paths) should read. */
   def readLabels(spark: SparkSession, labelDir: String): DataFrame =
-    readOrEmpty(spark, labelDir)
+    StateStores.read(spark, labelDir, labelSchema)
       .groupBy("doc_id")
       .agg(expr("max_by(label, batch_id)").as("label"))
 
@@ -97,7 +88,7 @@ object StreamingClusters {
     if (pairs.length > localMax) {
       processPairsDistributed(batchPairs, batchId, labelDir); return
     }
-    val store = readOrEmpty(spark, labelDir)
+    val store = StateStores.read(spark, labelDir, labelSchema)
     val endIds = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val endLabels = store
       .join(broadcast(endIds.toSeq.toDF("doc_id")), "doc_id")
@@ -147,7 +138,7 @@ object StreamingClusters {
   private def processPairsDistributed(batchPairs: DataFrame, batchId: Long,
                                       labelDir: String): Unit = {
     val spark = batchPairs.sparkSession
-    val store = readOrEmpty(spark, labelDir)
+    val store = StateStores.read(spark, labelDir, labelSchema)
     val pairs = batchPairs.select("doc_a", "doc_b").cache()
     val ends = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
@@ -172,28 +163,13 @@ object StreamingClusters {
   }
 
   /** Offline state maintenance: fold to one row per doc and rewrite
-   *  compacted via the family's crash-safe tmp-write + rename-swap. */
-  def compactState(spark: SparkSession, labelDir: String,
-                   partitions: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(labelDir)
-    val fs = path.getFileSystem(hconf)
-    if (!fs.exists(path)) return
-    val tmp = new Path(labelDir + ".compact-tmp")
-    val old = new Path(labelDir + ".compact-old")
-    readOrEmpty(spark, labelDir)
-      .groupBy("doc_id")
-      .agg(expr("max_by(label, batch_id)").as("label"),
-        max("batch_id").as("batch_id"))
-      .repartition(partitions)
-      .write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compactState: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"compactState: cannot install $tmp")
-    }
-    fs.delete(old, true)
-  }
+   *  compacted ([[StateStores.swapIn]]). */
+  def compactState(spark: SparkSession, labelDir: String): Unit =
+    StateStores.swapIn(spark, labelDir)(tmp =>
+      spark.read.schema(labelSchema).parquet(labelDir)
+        .groupBy("doc_id")
+        .agg(expr("max_by(label, batch_id)").as("label"),
+          max("batch_id").as("batch_id"))
+        .repartition(32)
+        .write.parquet(tmp))
 }

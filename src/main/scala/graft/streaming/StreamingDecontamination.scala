@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.pipeline.Decontamination
 
@@ -42,15 +41,6 @@ object StreamingDecontamination {
   private val shingleSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("gram", StringType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
   /** The flagged (doc_id, bench_id, inter_n, bench_n, overlap) frame
    *  for one micro-batch, built ONLY from the static benchmark shingle
    *  store + the batch itself. Exposed for testing; the streaming loop
@@ -61,7 +51,7 @@ object StreamingDecontamination {
     Decontamination.benchmarkOverlap(
       batch, batch.limit(0), minOverlap,
       precomputedBenchShingles =
-        Some(readOrEmpty(spark, benchShingleDir, shingleSchema)))
+        Some(StateStores.read(spark, benchShingleDir, shingleSchema)))
 
   /** One micro-batch: flag, persist the contamination ledger, admit
    *  only clean docs. All work is O(batch); no state advances. */
@@ -72,15 +62,11 @@ object StreamingDecontamination {
     val b = batch.select("doc_id", "text")
     val flagged =
       triggerOverlap(spark, b, benchShingleDir, minOverlap).cache()
-    // r17 (guide §2.6 via StateWrites): ledger and admitted-store
-    // appends both read the materialized flag cache.
-    flagged.count()
-    StateWrites.overlap(
-      () => flagged.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(ledgerDir),
-      () => b.join(flagged.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
-        .write.mode("append").parquet(storeDir))
+    flagged.count() // read by both the ledger and the admitted-doc append
+    StateStores.commit(
+      Some(ledgerDir -> flagged.withColumn("batch_id", lit(batchId))),
+      storeDir -> b.join(flagged.select("doc_id").distinct(),
+        Seq("doc_id"), "left_anti"))
     flagged.unpersist()
   }
 
@@ -93,13 +79,7 @@ object StreamingDecontamination {
                      storeDir: String, ledgerDir: String,
                      checkpoint: String,
                      minOverlap: Double = 0.3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, ledgerDir,
-          benchShingleDir, minOverlap)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, ledgerDir, benchShingleDir,
+        minOverlap))
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.pipeline.Dedup
 
@@ -29,10 +28,11 @@ import graft.pipeline.Dedup
  * documents — the only O(corpus) terms left are columnar store scans,
  * and the expensive stages (shingling, df counting, pair verify) are
  * all O(batch). The corpus "state" is parquet — shared with every
- * batch consumer, compactable
- * ([[graft.sources.EventLogSource.compactStore]] pattern), and not
+ * batch consumer, compactable ([[StateStores.swapIn]]), and not
  * bounded by executor state-store memory the way a
- * `flatMapGroupsWithState` vocabulary would be.
+ * `flatMapGroupsWithState` vocabulary would be. Write ordering and
+ * replay are [[StateStores.commit]]'s contract: survivors first, then
+ * the shingle and gram-df appends, the pairs ledger alongside.
  *
  * Survivor rule (deterministic): the corpus is already accepted, so a
  * batch doc pairing with ANY corpus doc is dropped no matter which
@@ -57,14 +57,8 @@ object StreamingDedup {
   private val gramDfSchema = StructType(Seq(
     StructField("gram", StringType), StructField("df_cnt", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def shinglesOf(storeDir: String) = storeDir + "_shingles"
+  private def gramDfOf(storeDir: String) = storeDir + "_gramdf"
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
    *  maintained shingle/gram-df stores + the batch itself — corpus
@@ -75,8 +69,22 @@ object StreamingDedup {
                    gramDfDir: String, maxDf: Long, minJaccard: Double): DataFrame =
     Dedup.dedupNgramIncremental(
       batch.limit(0), batch, maxDf, minJaccard,
-      corpusShingles = Some(readOrEmpty(spark, shingleDir, shingleSchema)),
-      corpusGramDf = Some(readOrEmpty(spark, gramDfDir, gramDfSchema)))
+      corpusShingles = Some(StateStores.read(spark, shingleDir, shingleSchema)),
+      corpusGramDf = Some(StateStores.read(spark, gramDfDir, gramDfSchema)))
+
+  /** The survivor rule (see the header) of a batch keyed by `<key>_id`
+   *  against its (`<key>_a` < `<key>_b`)-oriented pairs: `<key>_b` of
+   *  any pair drops; `<key>_a` drops only when its partner is a
+   *  corpus (non-batch) row. Shared by every pair-emitting loop. */
+  private[streaming] def pairSurvivors(batch: DataFrame, pairs: DataFrame,
+                                       key: String): DataFrame = {
+    val (id, a, b) = (s"${key}_id", s"${key}_a", s"${key}_b")
+    val dropAsA = pairs
+      .join(batch.select(col(id).as(b)), Seq(b), "left_anti")
+      .select(col(a).as(id))
+    val dupIds = pairs.select(col(b).as(id)).union(dropAsA).distinct()
+    batch.join(dupIds, Seq(id), "left_anti")
+  }
 
   /** One micro-batch of the dedup loop: detect pairs, append survivors
    *  to the doc store, and advance the shingle + gram-df stores with
@@ -88,43 +96,19 @@ object StreamingDedup {
     val b = batch.select("doc_id", "text")
     val pairs = triggerPairs(spark, b, shingleDir, gramDfDir, maxDf, minJaccard)
       .cache()
-    // r17 (guide §2.6): the four per-trigger writes were sequential
-    // driver actions, but the pairs append is independent of the
-    // survivor chain once the pair cache is filled, and the shingle /
-    // gram-df appends are independent of each other once the survivor-
-    // shingle cache is filled — overlap them from a 2-thread pool so a
-    // write's task tail back-fills with the next write's tasks. Replay
-    // semantics are unchanged: every write is the same idempotent
-    // append, and the at-least-once contract already tolerates a crash
-    // between ANY two of them (re-appended rows are exact duplicates).
-    pairs.count()
-    // doc_b of any pair is always dropped; doc_a is dropped only
-    // when its partner is a corpus doc (anti-join on batch ids) —
-    // for batch-batch pairs the smaller doc_a survives.
-    val batchIds = b.select("doc_id")
-    val dropAsA = pairs
-      .join(batchIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-      .select(col("doc_a").as("doc_id"))
-    val dupIds = pairs.select(col("doc_b").as("doc_id"))
-      .union(dropAsA).distinct()
-    val survivors = b.join(dupIds, Seq("doc_id"), "left_anti").cache()
-    StateWrites.overlap(
-      () => pairs.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(pairsDir),
-      () => {
-        survivors.write.mode("append").parquet(storeDir)
-        // advance the dedup state: the survivors' shingles extend the
-        // shingle store, and their per-gram counts land as an
-        // append-only df delta (folded by SUM at read time — no store
-        // rewrite)
-        val survivorSh = Dedup.shingles(survivors).cache()
-        survivorSh.count()
-        StateWrites.overlap(
-          () => survivorSh.write.mode("append").parquet(shingleDir),
-          () => survivorSh.groupBy("gram").agg(count(lit(1)).as("df_cnt"))
-            .write.mode("append").parquet(gramDfDir))
-        survivorSh.unpersist()
-      })
+    pairs.count() // read by the ledger append and the survivor chain
+    val survivors = pairSurvivors(b, pairs, "doc").cache()
+    // the survivors' shingles extend the shingle store, and their
+    // per-gram counts land as an append-only df delta (folded by SUM
+    // at read time — no store rewrite); both appends read this cache
+    val survivorSh = Dedup.shingles(survivors).cache()
+    survivorSh.count()
+    StateStores.commit(
+      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
+      storeDir -> survivors,
+      shingleDir -> survivorSh,
+      gramDfDir -> survivorSh.groupBy("gram").agg(count(lit(1)).as("df_cnt")))
+    survivorSh.unpersist()
     survivors.unpersist()
     pairs.unpersist()
   }
@@ -132,68 +116,36 @@ object StreamingDedup {
   /** Offline state maintenance: after many triggers the gram-df delta
    *  store holds one small file set per batch and the shingle store
    *  fragments the same way. Fold the df deltas to ONE row per gram
-   *  and rewrite both state stores compacted, via the same
-   *  tmp-write + rename-swap [[graft.sources.EventLogSource
-   *  .compactStore]] uses (a crash leaves either the old or the new
-   *  store installed, never a half state). Run it between stream
-   *  restarts — semantics are unchanged because the SUM-fold is
-   *  exactly what every read does anyway. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   shingleDir: String = null, gramDfDir: String = null,
-                   partitions: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swapIn(dir: String, write: String => Unit): Unit = {
-      val path = new Path(dir)
-      val fs = path.getFileSystem(hconf)
-      if (!fs.exists(path)) return
-      val tmp = new Path(dir + ".compact-tmp")
-      val old = new Path(dir + ".compact-old")
-      write(tmp.toString)
-      fs.delete(old, true)
-      if (!fs.rename(path, old))
-        throw new java.io.IOException(s"compactState: cannot move $path aside")
-      if (!fs.rename(tmp, path)) {
-        fs.rename(old, path) // roll back
-        throw new java.io.IOException(s"compactState: cannot install $tmp")
-      }
-      fs.delete(old, true)
-    }
-    val shDir = Option(shingleDir).getOrElse(storeDir + "_shingles")
-    val dfDir = Option(gramDfDir).getOrElse(storeDir + "_gramdf")
+   *  and rewrite both state stores compacted ([[StateStores.swapIn]]).
+   *  Run it between stream restarts — semantics are unchanged because
+   *  the SUM-fold is exactly what every read does anyway. */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val (shDir, dfDir) = (shinglesOf(storeDir), gramDfOf(storeDir))
     // sortWithinPartitions: tight per-row-group gram min/max, so the
     // trigger's pushed-down rare-gram In predicate (dedupNgram
     // Incremental's r17 shape) row-group-skips the non-matching bulk
     // of a compacted store.
-    swapIn(shDir, tmp => spark.read.schema(shingleSchema).parquet(shDir)
-      .repartition(partitions, col("gram"))
-      .sortWithinPartitions("gram")
-      .write.parquet(tmp))
-    swapIn(dfDir, tmp => spark.read.schema(gramDfSchema).parquet(dfDir)
-      .groupBy("gram").agg(sum("df_cnt").as("df_cnt"))
-      .repartition(partitions)
-      .write.parquet(tmp))
+    StateStores.swapIn(spark, shDir)(tmp =>
+      spark.read.schema(shingleSchema).parquet(shDir)
+        .repartition(32, col("gram"))
+        .sortWithinPartitions("gram")
+        .write.parquet(tmp))
+    StateStores.swapIn(spark, dfDir)(tmp =>
+      spark.read.schema(gramDfSchema).parquet(dfDir)
+        .groupBy("gram").agg(sum("df_cnt").as("df_cnt"))
+        .repartition(32)
+        .write.parquet(tmp))
   }
 
   /** Start the dedup loop over a streaming documents frame (schema
    *  must include `doc_id` and `text`). `storeDir` accumulates
    *  surviving documents; `pairsDir` the verified near-dup pairs with
-   *  their batch id; the shingle/gram-df state stores default to
-   *  siblings of `storeDir`. */
+   *  their batch id; the shingle/gram-df state stores are siblings of
+   *  `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, maxDf: Long = 5L,
-                       minJaccard: Double = 0.2,
-                       shingleDir: String = null,
-                       gramDfDir: String = null): StreamingQuery = {
-    val shDir = Option(shingleDir).getOrElse(storeDir + "_shingles")
-    val dfDir = Option(gramDfDir).getOrElse(storeDir + "_gramdf")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, pairsDir, shDir, dfDir,
-          maxDf, minJaccard)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       minJaccard: Double = 0.2): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, pairsDir, shinglesOf(storeDir),
+        gramDfOf(storeDir), maxDf, minJaccard))
 }

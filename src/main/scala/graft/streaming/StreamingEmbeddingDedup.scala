@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import graft.pipeline.Embeddings
 
@@ -35,8 +34,9 @@ import graft.pipeline.Embeddings
  * old cost) until [[compactState]] rebuilds the sibling. Appends are
  * per-vector rows; replayed batches (at-least-once restarts)
  * re-append byte-identical rows and [[compactState]]'s distinct
- * restores one row per vector. Survivor orientation and the
- * parquet-state discipline are [[StreamingDedup]]'s — see its header.
+ * restores one row per vector. Survivor orientation is
+ * [[StreamingDedup]]'s — see its header; write ordering is
+ * [[StateStores.commit]]'s.
  *
  * WIDTH: `planes` defaults to [[PlanesAuto]] — the width is chosen
  * PER TRIGGER from the maintained fp store's row count (a
@@ -86,13 +86,10 @@ object StreamingEmbeddingDedup {
                             autoWideAt: Long): Int =
     if (planes > 0) planes
     else {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      def countIf(dir: String, schema: StructType): Option[Long] = {
-        val p = new Path(dir)
-        if (p.getFileSystem(hconf).exists(p))
+      def countIf(dir: String, schema: StructType): Option[Long] =
+        if (StateStores.exists(spark, dir))
           Some(spark.read.schema(schema).parquet(dir).count())
         else None
-      }
       val stored = countIf(fpDir, fpSchema)
         .orElse(countIf(qvDir, qvSchema)).getOrElse(0L)
       if (stored >= autoWideAt) Embeddings.NumPlanesWide
@@ -107,14 +104,8 @@ object StreamingEmbeddingDedup {
   private val fpSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("fp", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def qvOf(storeDir: String) = storeDir + "_qv"
+  private def fpOf(qvDir: String) = qvDir + "_fp"
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
    *  maintained quantized index + the batch itself — corpus embeddings
@@ -126,19 +117,17 @@ object StreamingEmbeddingDedup {
                    fpDir: String = null,
                    autoWideAt: Long = AutoWideVectors): DataFrame = {
     val resolvedPlanes = resolvePlanes(spark, planes, qvDir,
-      Option(fpDir).getOrElse(qvDir + "_fp"), autoWideAt)
+      Option(fpDir).getOrElse(fpOf(qvDir)), autoWideAt)
     // Banding side: the maintained fp store (8 B/vector scan) when it
     // exists; a store created before the fp sibling landed falls back
     // to deriving fingerprints from the quantized rows — correct at
     // the measured O(state x planes) cost — until compactState (which
     // rebuilds the sibling) or the next seeded restart.
-    val fps = Option(fpDir).filter { d =>
-      val pth = new Path(d)
-      pth.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pth)
-    }.map(d => spark.read.schema(fpSchema).parquet(d))
+    val fps = Option(fpDir).filter(StateStores.exists(spark, _))
+      .map(spark.read.schema(fpSchema).parquet(_))
     Embeddings.dedupEmbeddingIncremental(
       batch.limit(0), batch, minCosine,
-      corpusQuantized = Some(readOrEmpty(spark, qvDir, qvSchema)),
+      corpusQuantized = Some(StateStores.read(spark, qvDir, qvSchema)),
       planes = resolvedPlanes,
       corpusFingerprints = fps)
   }
@@ -153,41 +142,23 @@ object StreamingEmbeddingDedup {
                    fpDir: String = null,
                    autoWideAt: Long = AutoWideVectors): Unit = {
     val spark = batch.sparkSession
-    val dir = Option(fpDir).getOrElse(qvDir + "_fp")
+    val dir = Option(fpDir).getOrElse(fpOf(qvDir))
     val b = batch.select("vec_id", "embedding")
     val pairs = triggerPairs(spark, b, qvDir, minCosine, planes, dir,
       autoWideAt).cache()
-    // r17 (guide §2.6 via StateWrites): the pairs append is
-    // independent of the survivor chain once the pair cache is
-    // filled. The qv and fp appends previously EACH quantized the
-    // survivors (embFingerprints = signFp ∘ quantized) — the fp
-    // append now derives from the same survivor-quantized frame
-    // (embFingerprintsFromQuantized, bit-identical by definition),
-    // and the three survivor-side appends run overlapped against the
-    // materialized caches.
-    pairs.count()
-    // Same orientation-blind rule as StreamingDedup: vec_b of any pair
-    // drops; vec_a drops only when its partner is a corpus vector.
-    val batchIds = b.select("vec_id")
-    val dropAsA = pairs
-      .join(batchIds.withColumnRenamed("vec_id", "vec_b"), Seq("vec_b"), "left_anti")
-      .select(col("vec_a").as("vec_id"))
-    val dupIds = pairs.select(col("vec_b").as("vec_id"))
-      .union(dropAsA).distinct()
-    val survivors = b.join(dupIds, Seq("vec_id"), "left_anti").cache()
+    pairs.count() // read by the ledger append and the survivor chain
+    val survivors = StreamingDedup.pairSurvivors(b, pairs, "vec").cache()
+    // The qv and fp appends both read the survivors' quantized rows:
+    // the fp append derives from them (embFingerprintsFromQuantized,
+    // bit-identical to quantizing again by definition) rather than
+    // quantizing the survivors a second time.
     val survQv = Embeddings.quantizedIndex(survivors).cache()
-    StateWrites.overlap(
-      () => pairs.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(pairsDir),
-      () => {
-        survivors.count()
-        survQv.count()
-        StateWrites.overlap(
-          () => survivors.write.mode("append").parquet(storeDir),
-          () => survQv.write.mode("append").parquet(qvDir),
-          () => Embeddings.embFingerprintsFromQuantized(survQv)
-            .write.mode("append").parquet(dir))
-      })
+    survQv.count()
+    StateStores.commit(
+      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
+      storeDir -> survivors,
+      qvDir -> survQv,
+      dir -> Embeddings.embFingerprintsFromQuantized(survQv))
     survQv.unpersist()
     survivors.unpersist()
     pairs.unpersist()
@@ -195,55 +166,29 @@ object StreamingEmbeddingDedup {
 
   /** Offline state maintenance between stream restarts: replayed
    *  batches append byte-identical (vec_id, qarr, nq) rows, so
-   *  compaction is distinct + rewrite via the same crash-safe
-   *  tmp-write + rename-swap as [[StreamingDedup.compactState]]. The
+   *  compaction is distinct + rewrite ([[StateStores.swapIn]]). The
    *  fp sibling is REBUILT from the compacted quantized rows (also
    *  the migration path that materializes it for a pre-fp-store
    *  deployment). */
-  def compactState(spark: SparkSession, storeDir: String,
-                   qvDir: String = null, partitions: Int = 32): Unit = {
-    val dir = Option(qvDir).getOrElse(storeDir + "_qv")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(hconf)
-    if (!fs.exists(path)) return
-    def swapIn(target: Path, write: String => Unit): Unit = {
-      val tmp = new Path(target + ".compact-tmp")
-      val old = new Path(target + ".compact-old")
-      write(tmp.toString)
-      fs.delete(old, true)
-      if (fs.exists(target) && !fs.rename(target, old))
-        throw new java.io.IOException(s"compactState: cannot move $target aside")
-      if (!fs.rename(tmp, target)) {
-        fs.rename(old, target) // roll back
-        throw new java.io.IOException(s"compactState: cannot install $tmp")
-      }
-      fs.delete(old, true)
-    }
-    swapIn(path, t => spark.read.schema(qvSchema).parquet(dir)
-      .distinct().repartition(partitions).write.parquet(t))
-    swapIn(new Path(dir + "_fp"), t =>
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val dir = qvOf(storeDir)
+    if (!StateStores.exists(spark, dir)) return
+    StateStores.install(spark, dir)(tmp =>
+      spark.read.schema(qvSchema).parquet(dir)
+        .distinct().repartition(32).write.parquet(tmp))
+    StateStores.install(spark, fpOf(dir))(tmp =>
       Embeddings.embFingerprintsFromQuantized(
           spark.read.schema(qvSchema).parquet(dir))
-        .repartition(partitions).write.parquet(t))
+        .repartition(32).write.parquet(tmp))
   }
 
   /** Start the loop over a streaming embeddings frame (schema must
    *  include `vec_id` and `embedding: array<float>`). The quantized
-   *  index store defaults to a sibling of `storeDir`. */
+   *  index store is a sibling of `storeDir`. */
   def dedupedVecStream(vecs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, minCosine: Double = 0.4,
-                       qvDir: String = null,
-                       planes: Int = PlanesAuto): StreamingQuery = {
-    val dir = Option(qvDir).getOrElse(storeDir + "_qv")
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, pairsDir, dir, minCosine,
-          planes)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       planes: Int = PlanesAuto): StreamingQuery =
+    StateStores.availableNow(vecs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, pairsDir, qvOf(storeDir),
+        minCosine, planes))
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.pipeline.Dedup
 
@@ -28,11 +27,15 @@ import graft.pipeline.Dedup
  * an input to a trigger — the only corpus-sized terms are columnar
  * scans of the two state stores, and the bloom store stays <= m/64
  * rows FOREVER (appended deltas OR into the same fixed bit space).
- * Replayed batches (at-least-once restart) re-flag themselves as
- * duplicates of their own earlier append — re-run triggers drop the
- * whole batch, append nothing new to the doc store, and only add
- * already-set bloom bits plus extra hash-store rows that bias
- * `n_corpus_copies` up, never a false survivor.
+ *
+ * Write ordering is [[StateStores.commit]]'s: the doc append commits
+ * before the hash and bloom appends start. A replayed batch
+ * (at-least-once restart) whose hash and bloom appends both committed
+ * flags itself as a duplicate of its own earlier append and appends
+ * nothing — its documents are already stored. One whose state commit
+ * was cut short re-admits the same survivors: duplicate doc rows,
+ * already-set bloom bits and extra hash rows that bias
+ * `n_corpus_copies` up, never a false survivor and never a lost doc.
  */
 object StreamingExactDedup {
 
@@ -41,14 +44,8 @@ object StreamingExactDedup {
   private val wordSchema = StructType(Seq(
     StructField("word_idx", IntegerType), StructField("word", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def hashesOf(storeDir: String) = storeDir + "_hashes"
+  private def bloomOf(storeDir: String) = storeDir + "_bloom"
 
   /** One micro-batch's dup verdict, built ONLY from the two state
    *  stores + the batch (exposed for testing and the plan audit):
@@ -57,8 +54,8 @@ object StreamingExactDedup {
                    wordsDir: String, mBits: Int, probes: Int): DataFrame =
     Dedup.dedupExactIncremental(
       batch.limit(0), batch, mBits, probes,
-      corpusWords = Some(readOrEmpty(spark, wordsDir, wordSchema)),
-      corpusHashes = Some(readOrEmpty(spark, hashDir, hashSchema)))
+      corpusWords = Some(StateStores.read(spark, wordsDir, wordSchema)),
+      corpusHashes = Some(StateStores.read(spark, hashDir, hashSchema)))
 
   /** One micro-batch of the loop: flag corpus dups, collapse
    *  batch-internal copies (smallest doc_id wins — the
@@ -78,74 +75,38 @@ object StreamingExactDedup {
       .filter(col("rk") === 1)
       .select(col("doc_id"), col("text"), col("content_hash"))
       .cache()
-    // r17 (guide §2.6 via StateWrites): the three state appends all
-    // read the materialized survivor cache and are independent of
-    // each other — overlap them as concurrent driver jobs.
-    survivors.count()
-    StateWrites.overlap(
-      () => survivors.select("doc_id", "text")
-        .write.mode("append").parquet(storeDir),
-      () => survivors.select("doc_id", "content_hash")
-        .write.mode("append").parquet(hashDir),
-      () => Dedup.bloomWords(survivors, mBits, probes)
-        .write.mode("append").parquet(wordsDir))
+    StateStores.commit(None,
+      storeDir -> survivors.select("doc_id", "text"),
+      hashDir -> survivors.select("doc_id", "content_hash"),
+      wordsDir -> Dedup.bloomWords(survivors, mBits, probes))
     survivors.unpersist()
     ()
   }
 
   /** Offline state maintenance, between stream restarts: the word
    *  deltas fold to ONE row per word_idx and the hash store
-   *  repartitions by hash — same read semantics, fewer files; same
-   *  tmp-write + rename-swap crash discipline as
-   *  [[StreamingDedup.compactState]]. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   hashDir: String = null, wordsDir: String = null,
-                   partitions: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swapIn(dir: String, write: String => Unit): Unit = {
-      val path = new Path(dir)
-      val fs = path.getFileSystem(hconf)
-      if (!fs.exists(path)) return
-      val tmp = new Path(dir + ".compact-tmp")
-      val old = new Path(dir + ".compact-old")
-      write(tmp.toString)
-      fs.delete(old, true)
-      if (!fs.rename(path, old))
-        throw new java.io.IOException(s"compactState: cannot move $path aside")
-      if (!fs.rename(tmp, path)) {
-        fs.rename(old, path)
-        throw new java.io.IOException(s"compactState: cannot install $tmp")
-      }
-      fs.delete(old, true)
-    }
-    val hDir = Option(hashDir).getOrElse(storeDir + "_hashes")
-    val wDir = Option(wordsDir).getOrElse(storeDir + "_bloom")
-    swapIn(hDir, tmp => spark.read.schema(hashSchema).parquet(hDir)
-      .repartition(partitions, col("content_hash"))
-      .write.parquet(tmp))
-    swapIn(wDir, tmp => spark.read.schema(wordSchema).parquet(wDir)
-      .groupBy("word_idx").agg(expr("bit_or(word)").as("word"))
-      .coalesce(1)
-      .write.parquet(tmp))
+   *  repartitions by hash — same read semantics, fewer files
+   *  ([[StateStores.swapIn]]). */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val (hDir, wDir) = (hashesOf(storeDir), bloomOf(storeDir))
+    StateStores.swapIn(spark, hDir)(tmp =>
+      spark.read.schema(hashSchema).parquet(hDir)
+        .repartition(32, col("content_hash"))
+        .write.parquet(tmp))
+    StateStores.swapIn(spark, wDir)(tmp =>
+      spark.read.schema(wordSchema).parquet(wDir)
+        .groupBy("word_idx").agg(expr("bit_or(word)").as("word"))
+        .coalesce(1)
+        .write.parquet(tmp))
   }
 
   /** Start the exact-dedup ingest loop over a streaming documents
-   *  frame (`doc_id`, `text`); state stores default to siblings of
+   *  frame (`doc_id`, `text`); the state stores are siblings of
    *  `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, checkpoint: String,
                        mBits: Int = Dedup.BloomBits,
-                       probes: Int = Dedup.BloomProbes,
-                       hashDir: String = null,
-                       wordsDir: String = null): StreamingQuery = {
-    val hDir = Option(hashDir).getOrElse(storeDir + "_hashes")
-    val wDir = Option(wordsDir).getOrElse(storeDir + "_bloom")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, hDir, wDir, mBits, probes)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       probes: Int = Dedup.BloomProbes): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, hashesOf(storeDir),
+        bloomOf(storeDir), mBits, probes))
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.pipeline.Dedup
 
@@ -27,8 +26,8 @@ import graft.pipeline.Dedup
  * per-document rows — there is nothing to fold at read time, so
  * replayed batches (at-least-once restarts) re-append byte-identical
  * rows and [[compactState]]'s distinct restores one row per key.
- * Survivor orientation, replay tolerance, and the parquet-state
- * discipline are [[StreamingDedup]]'s — see its header.
+ * Survivor orientation and replay tolerance are [[StreamingDedup]]'s —
+ * see its header; write ordering is [[StateStores.commit]]'s.
  */
 object StreamingMinhashDedup {
 
@@ -38,14 +37,8 @@ object StreamingMinhashDedup {
     StructField("doc_id", LongType) +:
       (0 until Dedup.NumHashes).map(j => StructField(s"mh$j", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def shinglesOf(storeDir: String) = storeDir + "_shingles"
+  private def sigOf(storeDir: String) = storeDir + "_sig"
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
    *  maintained signature + shingle stores and the batch itself —
@@ -56,8 +49,8 @@ object StreamingMinhashDedup {
                    idFamily: String): DataFrame =
     Dedup.dedupMinhashIncremental(
       batch.limit(0), batch, minJaccard, idFamily,
-      corpusShingles = Some(readOrEmpty(spark, shingleDir, shingleSchema)),
-      corpusSignatures = Some(readOrEmpty(spark, sigDir, sigSchema)))
+      corpusShingles = Some(StateStores.read(spark, shingleDir, shingleSchema)),
+      corpusSignatures = Some(StateStores.read(spark, sigDir, sigSchema)))
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
    *  extend the shingle + signature stores with the survivors' rows.
@@ -69,85 +62,37 @@ object StreamingMinhashDedup {
     val b = batch.select("doc_id", "text")
     val pairs = triggerPairs(spark, b, shingleDir, sigDir, minJaccard, idFamily)
       .cache()
-    // r17 (guide §2.6 via StateWrites): the pairs append is
-    // independent of the survivor chain once the pair cache is
-    // filled; the shingle and signature appends both read the
-    // materialized survivor cache and are independent of each other.
-    pairs.count()
-    // Same orientation-blind rule as StreamingDedup: doc_b of any pair
-    // drops; doc_a drops only when its partner is a corpus doc.
-    val batchIds = b.select("doc_id")
-    val dropAsA = pairs
-      .join(batchIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-      .select(col("doc_a").as("doc_id"))
-    val dupIds = pairs.select(col("doc_b").as("doc_id"))
-      .union(dropAsA).distinct()
-    val survivors = b.join(dupIds, Seq("doc_id"), "left_anti").cache()
-    StateWrites.overlap(
-      () => pairs.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(pairsDir),
-      () => {
-        survivors.write.mode("append").parquet(storeDir)
-        StateWrites.overlap(
-          () => Dedup.shingles(survivors)
-            .write.mode("append").parquet(shingleDir),
-          () => Dedup.minhashSignatures(survivors, idFamily)
-            .write.mode("append").parquet(sigDir))
-      })
+    pairs.count() // read by the ledger append and the survivor chain
+    val survivors = StreamingDedup.pairSurvivors(b, pairs, "doc").cache()
+    StateStores.commit(
+      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
+      storeDir -> survivors,
+      shingleDir -> Dedup.shingles(survivors),
+      sigDir -> Dedup.minhashSignatures(survivors, idFamily))
     survivors.unpersist()
     pairs.unpersist()
   }
 
   /** Offline state maintenance between stream restarts: replayed
    *  batches append byte-identical per-document rows to both stores,
-   *  so compaction is distinct + rewrite via the same crash-safe
-   *  tmp-write + rename-swap as [[StreamingDedup.compactState]]. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   shingleDir: String = null, sigDir: String = null,
-                   partitions: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swapIn(dir: String, write: String => Unit): Unit = {
-      val path = new Path(dir)
-      val fs = path.getFileSystem(hconf)
-      if (!fs.exists(path)) return
-      val tmp = new Path(dir + ".compact-tmp")
-      val old = new Path(dir + ".compact-old")
-      write(tmp.toString)
-      fs.delete(old, true)
-      if (!fs.rename(path, old))
-        throw new java.io.IOException(s"compactState: cannot move $path aside")
-      if (!fs.rename(tmp, path)) {
-        fs.rename(old, path) // roll back
-        throw new java.io.IOException(s"compactState: cannot install $tmp")
-      }
-      fs.delete(old, true)
-    }
-    val shDir = Option(shingleDir).getOrElse(storeDir + "_shingles")
-    val sDir = Option(sigDir).getOrElse(storeDir + "_sig")
-    swapIn(shDir, tmp => spark.read.schema(shingleSchema).parquet(shDir)
-      .distinct().repartition(partitions, col("gram")).write.parquet(tmp))
-    swapIn(sDir, tmp => spark.read.schema(sigSchema).parquet(sDir)
-      .distinct().repartition(partitions).write.parquet(tmp))
+   *  so compaction is distinct + rewrite ([[StateStores.swapIn]]). */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val (shDir, sDir) = (shinglesOf(storeDir), sigOf(storeDir))
+    StateStores.swapIn(spark, shDir)(tmp =>
+      spark.read.schema(shingleSchema).parquet(shDir)
+        .distinct().repartition(32, col("gram")).write.parquet(tmp))
+    StateStores.swapIn(spark, sDir)(tmp =>
+      spark.read.schema(sigSchema).parquet(sDir)
+        .distinct().repartition(32).write.parquet(tmp))
   }
 
   /** Start the loop over a streaming documents frame (schema must
    *  include `doc_id` and `text`). The shingle/signature state stores
-   *  default to siblings of `storeDir`. */
+   *  are siblings of `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, minJaccard: Double = 0.2,
-                       idFamily: String = "md5",
-                       shingleDir: String = null,
-                       sigDir: String = null): StreamingQuery = {
-    val shDir = Option(shingleDir).getOrElse(storeDir + "_shingles")
-    val sDir = Option(sigDir).getOrElse(storeDir + "_sig")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, pairsDir, shDir, sDir,
-          minJaccard, idFamily)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       idFamily: String = "md5"): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, pairsDir, shinglesOf(storeDir),
+        sigOf(storeDir), minJaccard, idFamily))
 }

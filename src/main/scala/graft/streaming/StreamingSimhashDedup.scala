@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.pipeline.Dedup
 
@@ -21,10 +20,10 @@ import graft.pipeline.Dedup
  * batch restriction below the pair join — per-trigger compute is
  * O(batch), the only O(corpus) term is the store scan.
  *
- * Survivor rule, replay tolerance (at-least-once restarts re-derive
+ * Survivor rule and replay tolerance (at-least-once restarts re-derive
  * the same verdicts; re-appended rows are exact duplicates, folded by
- * [[compactState]]'s distinct), and the parquet-state discipline are
- * [[StreamingDedup]]'s — see its header for the contract.
+ * [[compactState]]'s distinct) are [[StreamingDedup]]'s — see its
+ * header; write ordering is [[StateStores.commit]]'s.
  *
  * DEFAULT width is [[Dedup.SimBitsWide]] (64-bit fingerprints, 4
  * 16-bit bands): the sf10 probe (bench_sf10_r14) measured the 32-bit
@@ -41,14 +40,7 @@ object StreamingSimhashDedup {
   private val fpSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("fp", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def fpOf(storeDir: String) = storeDir + "_fp"
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
    *  maintained fingerprint store + the batch itself — corpus text is
@@ -60,7 +52,7 @@ object StreamingSimhashDedup {
                    batchFingerprints: Option[Dedup.TaggedFingerprints] = None): DataFrame =
     Dedup.dedupSimhashIncremental(
       batch.limit(0), batch, maxHamming, idFamily,
-      corpusFingerprints = Some(readOrEmpty(spark, fpDir, fpSchema)),
+      corpusFingerprints = Some(StateStores.read(spark, fpDir, fpSchema)),
       fpBits = fpBits, batchFingerprints = batchFingerprints)
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
@@ -84,34 +76,15 @@ object StreamingSimhashDedup {
         batchFingerprints =
           Some(Dedup.TaggedFingerprints(batchFp, idFamily, fpBits)))
       .cache()
-    // r17 (guide §2.6 via StateWrites): the pairs append is
-    // independent of the survivor chain once the pair cache is
-    // filled; within the chain the doc-store and fp-store appends
-    // both read the materialized survivor cache.
-    pairs.count()
-    // Same orientation-blind rule as StreamingDedup: doc_b of any pair
-    // drops; doc_a drops only when its partner is a corpus doc.
-    val batchIds = b.select("doc_id")
-    val dropAsA = pairs
-      .join(batchIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-      .select(col("doc_a").as("doc_id"))
-    val dupIds = pairs.select(col("doc_b").as("doc_id"))
-      .union(dropAsA).distinct()
-    val survivors = b.join(dupIds, Seq("doc_id"), "left_anti").cache()
-    StateWrites.overlap(
-      () => pairs.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(pairsDir),
-      () => {
-        survivors.count()
-        StateWrites.overlap(
-          () => survivors.write.mode("append").parquet(storeDir),
-          // survivor fps = the shared batch fp frame restricted to
-          // survivor ids (fingerprints are per-doc deterministic —
-          // identical rows to re-deriving them from survivor text)
-          () => batchFp
-            .join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
-            .write.mode("append").parquet(fpDir))
-      })
+    pairs.count() // read by the ledger append and the survivor chain
+    val survivors = StreamingDedup.pairSurvivors(b, pairs, "doc").cache()
+    StateStores.commit(
+      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
+      storeDir -> survivors,
+      // survivor fps = the shared batch fp frame restricted to
+      // survivor ids (fingerprints are per-doc deterministic —
+      // identical rows to re-deriving them from survivor text)
+      fpDir -> batchFp.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"))
     survivors.unpersist()
     pairs.unpersist()
     batchFp.unpersist()
@@ -119,47 +92,23 @@ object StreamingSimhashDedup {
 
   /** Offline state maintenance between stream restarts: replayed
    *  batches append byte-identical (doc_id, fp) rows, so compaction is
-   *  a plain distinct + rewrite via the same crash-safe
-   *  tmp-write + rename-swap as [[StreamingDedup.compactState]]. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   fpDir: String = null, partitions: Int = 32): Unit = {
-    val dir = Option(fpDir).getOrElse(storeDir + "_fp")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(hconf)
-    if (!fs.exists(path)) return
-    val tmp = new Path(dir + ".compact-tmp")
-    val old = new Path(dir + ".compact-old")
-    spark.read.schema(fpSchema).parquet(dir)
-      .distinct().repartition(partitions)
-      .write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compactState: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"compactState: cannot install $tmp")
-    }
-    fs.delete(old, true)
+   *  a plain distinct + rewrite ([[StateStores.swapIn]]). */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val dir = fpOf(storeDir)
+    StateStores.swapIn(spark, dir)(tmp =>
+      spark.read.schema(fpSchema).parquet(dir)
+        .distinct().repartition(32)
+        .write.parquet(tmp))
   }
 
   /** Start the loop over a streaming documents frame (schema must
-   *  include `doc_id` and `text`). The fp state store defaults to a
-   *  sibling of `storeDir`. */
+   *  include `doc_id` and `text`). The fp state store is a sibling of
+   *  `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, maxHamming: Int = 3,
                        idFamily: String = "md5",
-                       fpDir: String = null,
-                       fpBits: Int = Dedup.SimBitsWide): StreamingQuery = {
-    val dir = Option(fpDir).getOrElse(storeDir + "_fp")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, pairsDir, dir,
-          maxHamming, idFamily, fpBits)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       fpBits: Int = Dedup.SimBitsWide): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, pairsDir, fpOf(storeDir),
+        maxHamming, idFamily, fpBits))
 }

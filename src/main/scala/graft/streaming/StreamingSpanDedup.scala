@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.pipeline.TextAnalysis
 
@@ -29,6 +28,8 @@ import graft.pipeline.TextAnalysis
  * the columnar store scan, and corpus TEXT is never re-read
  * (plan-audited like every family member).
  *
+ * Write ordering is [[StateStores.commit]]'s: survivors first, then the
+ * gram-count deltas, the stats ledger alongside.
  * Replay tolerance (at-least-once restarts): re-appended count deltas
  * bias gram counts UP, which can only mark MORE batch positions as
  * duplicated — rejection gets conservative, never a false "unique";
@@ -41,14 +42,7 @@ object StreamingSpanDedup {
   private val gramCntSchema = StructType(Seq(
     StructField("gram", StringType), StructField("cnt", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def gramCntOf(storeDir: String) = storeDir + "_gramcnt"
 
   /** The per-doc span-stats frame for one micro-batch, built ONLY
    *  from the maintained gram-count store + the batch itself — corpus
@@ -58,7 +52,7 @@ object StreamingSpanDedup {
                    gramCntDir: String, k: Int): DataFrame =
     TextAnalysis.spanDedupIncremental(
       batch.limit(0), batch, k,
-      corpusGramCounts = Some(readOrEmpty(spark, gramCntDir, gramCntSchema)))
+      corpusGramCounts = Some(StateStores.read(spark, gramCntDir, gramCntSchema)))
 
   /** One micro-batch: span-account, persist the per-doc stats ledger,
    *  reject mostly-verbatim docs, append survivors + their gram-count
@@ -69,73 +63,39 @@ object StreamingSpanDedup {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text")
     val stats = triggerStats(spark, b, gramCntDir, k).cache()
-    // r17 (guide §2.6 via StateWrites): the stats append is
-    // independent of the survivor chain once the stats cache is
-    // filled; within the chain the store and gram-count appends both
-    // read the materialized survivor cache.
-    stats.count()
+    stats.count() // read by the ledger append and the survivor chain
     val rejected = stats.filter(col("dup_ratio") >= maxDupRatio)
       .select("doc_id")
     val survivors = b.join(rejected, Seq("doc_id"), "left_anti").cache()
-    StateWrites.overlap(
-      () => stats.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(statsDir),
-      () => {
-        survivors.count()
-        StateWrites.overlap(
-          () => survivors.write.mode("append").parquet(storeDir),
-          () => TextAnalysis.spanGramCounts(survivors, k)
-            .write.mode("append").parquet(gramCntDir))
-      })
+    StateStores.commit(
+      Some(statsDir -> stats.withColumn("batch_id", lit(batchId))),
+      storeDir -> survivors,
+      gramCntDir -> TextAnalysis.spanGramCounts(survivors, k))
     survivors.unpersist()
     stats.unpersist()
   }
 
   /** Offline state maintenance between stream restarts: fold the
-   *  count deltas to one row per gram and rewrite compacted, via the
-   *  crash-safe tmp-write + rename-swap every family member uses —
-   *  semantics unchanged because the SUM-fold is what every read does
-   *  anyway. */
-  def compactState(spark: SparkSession, storeDir: String,
-                   gramCntDir: String = null, partitions: Int = 32): Unit = {
-    val dir = Option(gramCntDir).getOrElse(storeDir + "_gramcnt")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(hconf)
-    if (!fs.exists(path)) return
-    val tmp = new Path(dir + ".compact-tmp")
-    val old = new Path(dir + ".compact-old")
-    spark.read.schema(gramCntSchema).parquet(dir)
-      .groupBy("gram").agg(sum("cnt").as("cnt"))
-      .repartition(partitions)
-      .write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compactState: cannot move $path aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back
-      throw new java.io.IOException(s"compactState: cannot install $tmp")
-    }
-    fs.delete(old, true)
+   *  count deltas to one row per gram and rewrite compacted
+   *  ([[StateStores.swapIn]]) — semantics unchanged because the
+   *  SUM-fold is what every read does anyway. */
+  def compactState(spark: SparkSession, storeDir: String): Unit = {
+    val dir = gramCntOf(storeDir)
+    StateStores.swapIn(spark, dir)(tmp =>
+      spark.read.schema(gramCntSchema).parquet(dir)
+        .groupBy("gram").agg(sum("cnt").as("cnt"))
+        .repartition(32)
+        .write.parquet(tmp))
   }
 
   /** Start the loop over a streaming documents frame (schema must
    *  include `doc_id` and `text`). `storeDir` accumulates accepted
    *  documents; `statsDir` the per-doc span ledger with batch ids;
-   *  the gram-count state store defaults to a sibling of
-   *  `storeDir`. */
+   *  the gram-count state store is a sibling of `storeDir`. */
   def curatedDocStream(docs: DataFrame, storeDir: String, statsDir: String,
                        checkpoint: String, k: Int = 5,
-                       maxDupRatio: Double = 0.5,
-                       gramCntDir: String = null): StreamingQuery = {
-    val dir = Option(gramCntDir).getOrElse(storeDir + "_gramcnt")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, statsDir, dir, k, maxDupRatio)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       maxDupRatio: Double = 0.5): StreamingQuery =
+    StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
+      processBatch(batch, batchId, storeDir, statsDir, gramCntOf(storeDir),
+        k, maxDupRatio))
 }

@@ -101,4 +101,15 @@ class SurveyInventorySpec extends AnyFunSuite {
       s"SURVEY §4 slowest-query line (${sm.group(1)} ${sm.group(2)}) != artifact " +
         f"(${actualSlowest._1} ${actualSlowest._2}%.2f) — rerun tools/survey_numbers.py")
   }
+
+  test("Bench.SurveyCpus is the core count SURVEY §4 claims (closing-artifact gate)") {
+    val survey = {
+      val src = scala.io.Source.fromFile("SURVEY.md", "UTF-8")
+      try src.mkString finally src.close()
+    }
+    val claimed = """benched queries at sf[0-9.]+ / local\[(\d+)\]""".r
+      .findFirstMatchIn(survey)
+      .getOrElse(fail("SURVEY §4 generated block has no headline line"))
+    assert(claimed.group(1).toInt === Bench.SurveyCpus)
+  }
 }
