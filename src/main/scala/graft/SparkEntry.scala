@@ -145,10 +145,10 @@ ORDER BY event_id"""
     "fingerprint" -> ((s, d) => TextAnalysis.fingerprint(docs(s, d))),
     "winnow_fingerprints" -> ((s, d) => TextAnalysis.winnowFingerprints(docs(s, d))),
     "winnow_density" -> ((s, d) => TextAnalysis.winnowDensity(docs(s, d))),
-    // native whole-selection expression path; same oracle (identical
-    // selection by construction)
+    // kept key: runs the same native winnow_fps path as
+    // winnow_fingerprints, against the same oracle
     "winnow_fingerprints_expr" -> ((s, d) =>
-      TextAnalysis.winnowFingerprintsExpr(docs(s, d))),
+      TextAnalysis.winnowFingerprints(docs(s, d))),
     "winnow_overlap" -> ((s, d) => TextAnalysis.winnowOverlap(docs(s, d))),
     "winnow_overlap_incr" -> ((s, d) => TextAnalysis.winnowOverlapIncremental(
       docs(s, d).filter(col("doc_id") < 400),
@@ -253,9 +253,9 @@ ORDER BY event_id"""
     "dedup_exact" -> ((s, d) => Dedup.dedupExact(docs(s, d))),
     "dedup_curve" -> ((s, d) => Dedup.dedupCurve(docs(s, d))),
     "cdc_chunk_dedup" -> ((s, d) => Dedup.cdcChunkDedup(docs(s, d))),
-    // Scale mode C of the CDC family: the native cdc_chunks
-    // expression chain, sharing the window-chain oracle VERBATIM
-    "cdc_chunk_dedup_expr" -> ((s, d) => Dedup.cdcChunkDedupExpr(docs(s, d))),
+    // kept key: runs the same native cdc_chunks path as
+    // cdc_chunk_dedup, against the same oracle
+    "cdc_chunk_dedup_expr" -> ((s, d) => Dedup.cdcChunkDedup(docs(s, d))),
     "boilerplate_chunks" -> ((s, d) => Dedup.boilerplateChunks(docs(s, d))),
     "cdc_chunk_trim" -> ((s, d) => Dedup.cdcChunkTrim(docs(s, d))),
     "cdc_chunk_size_hist" -> ((s, d) => Dedup.cdcChunkSizeHist(docs(s, d))),
@@ -362,9 +362,6 @@ ORDER BY event_id"""
     "dedup_minhash" -> ((s, d) => Dedup.dedupMinhash(docs(s, d))),
     // Scale mode (codegen'd poly_hash gram ids — digest-free AND
     // SQL-reproducible): bit-exact banded-signature oracle at any SF.
-    // (xxhash is cheaper still but oracle-opaque: its old ground-truth
-    // oracle doubled as a 100%-LSH-recall assertion, which broke at
-    // sf0.1 on one borderline pair — spec-covered instead.)
     "dedup_minhash_fast" -> ((s, d) =>
       Dedup.dedupMinhash(docs(s, d), idFamily = "poly")),
     // Scale mode C (native whole-signature expression): signatures as
@@ -375,18 +372,19 @@ ORDER BY event_id"""
     "dedup_minhash_wide" -> ((s, d) =>
       Dedup.dedupMinhashExpr(docs(s, d), numHashes = 32, bands = 8)),
     "dedup_simhash" -> ((s, d) => Dedup.dedupSimhash(docs(s, d))),
-    // Scale mode B (codegen'd poly_hash gram ids — digest-free like
-    // xxhash, but SQL-reproducible): full fingerprint-parity oracle.
+    // Scale mode B (codegen'd poly_hash gram ids — digest-free and
+    // SQL-reproducible): full fingerprint-parity oracle. At 32 bits
+    // the fingerprint pass is the native simhash_fp projection.
     "dedup_simhash_fast" -> ((s, d) =>
       Dedup.dedupSimhash(docs(s, d), idFamily = "poly")),
     // 64-bit scale-mode simhash through the FULL hash gate (poly
     // family): fingerprints/bands/hamming re-derived in SQL at width 64
     "dedup_simhash_wide" -> ((s, d) =>
       Dedup.dedupSimhash(docs(s, d), idFamily = "poly", fpBits = 64)),
-    // Scale mode C (native whole-fingerprint expression): the
-    // signature pass is a pure projection; same oracle as mode B
-    // because the fingerprints are bit-identical.
-    "dedup_simhash_expr" -> ((s, d) => Dedup.dedupSimhashExpr(docs(s, d))),
+    // kept key: runs the same path as dedup_simhash_fast, against the
+    // same oracle
+    "dedup_simhash_expr" -> ((s, d) =>
+      Dedup.dedupSimhash(docs(s, d), idFamily = "poly")),
     "dedup_simhash_incr" -> ((s, d) => Dedup.dedupSimhashIncremental(
       docs(s, d).filter(col("doc_id") < 400),
       docs(s, d).filter(col("doc_id") >= 400))),

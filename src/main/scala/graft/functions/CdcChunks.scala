@@ -18,18 +18,18 @@ import org.apache.spark.unsafe.types.UTF8String
  * `sum(gh_i * i)` (i = 1-based offset within the chunk) plus its
  * token length, in position order.
  *
- * Why: the DataFrame formulation ([[graft.pipeline.Dedup]]'s
- * `cdcOccurrences`) must posexplode every token and pay a
+ * Why: a DataFrame formulation must posexplode every token and pay a
  * doc-partitioned exchange + sort TWICE (the running cut-count
  * window, then the within-chunk offset window) before the (fp, len)
  * aggregate. Chunking is per-document local by construction — the
  * [[WinnowFps]] precedent — so this expression keeps the whole chain
  * inside whole-stage codegen: scan → project → explode of the CHUNK
  * set only (~1/avg of the tokens), with NO exchange before a
- * consumer's partial agg. Chunk identities are bit-identical to the
- * window-chain path (`cdc_chunk_dedup_expr` shares
- * `cdcChunkDedupOracle` verbatim; CdcChunksSpec asserts per-doc
- * sequence equality).
+ * consumer's partial agg. It is the one Spark spelling of the chunk
+ * chain ([[graft.pipeline.Dedup]]'s `cdcOccurrences` builds every CDC
+ * key on it); the DuckDB oracles re-derive the chunks with those two
+ * windows, and CdcChunksSpec checks it per doc against an
+ * independent Scala reference.
  *
  * Every token lands in exactly one chunk (token mass is conserved);
  * an empty string is ONE token (`split` semantics) and yields one
@@ -72,8 +72,8 @@ object CdcChunks {
   /** Shared by interpreted eval and codegen ([[PolyHash.compute]]
    *  static-invoke pattern). Tokenization matches `split(text, ' ')`
    *  with trailing empties kept (the [[WordNGrams]] contract); the
-   *  cut rule and fingerprint mirror `cdcOccurrences`'s window chain:
-   *  a token with `poly_hash % avg == 0` STARTS a new chunk (the
+   *  cut rule and fingerprint mirror the oracles' window chain: a
+   *  token with `poly_hash % avg == 0` STARTS a new chunk (the
    *  running cut-count window includes the current row). */
   def compute(s: UTF8String, avg: Int): ArrayData = {
     val toks = s.toString.split(" ", -1)

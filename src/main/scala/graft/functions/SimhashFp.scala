@@ -20,12 +20,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * exchange — rows stay where the scan put them until banding. The
  * arithmetic is bit-for-bit the aggregation path's
  * (`Dedup.simhashFpWide` over `poly` gram ids), so the existing
- * banded-parity DuckDB oracle verifies this path unchanged
- * (`dedup_simhash_expr` shares `dedupSimhashFastOracle` verbatim).
+ * banded-parity DuckDB oracle verifies this path unchanged. It is the
+ * fingerprint pass of every `poly`/32-bit simhash caller
+ * (`Dedup.simhashFingerprints`); md5 ids and the 64-bit width keep
+ * the aggregation.
  *
  * Empty arrays fingerprint to 0 — the caller must filter gram-less
  * docs (< n tokens) out first, exactly as the aggregation path drops
- * them by producing no vote rows (`Dedup.dedupSimhashExpr` does).
+ * them by producing no vote rows (`Dedup.simhashFingerprints` does).
  * Null input gives null; null array ELEMENTS are skipped (the
  * `word_ngrams` producer never emits them).
  */

@@ -13,22 +13,22 @@ import org.apache.spark.unsafe.types.UTF8String
  * (Schleimer-Wilkerson-Aiken, SIGMOD'03) of a document in one in-row
  * loop: hash every word n-gram with [[PolyHash]], slide a window of
  * `w` consecutive gram hashes, keep the minimum PACKED value
- * (`hash * 2^20 + pos` — the same leftmost-tie packing
- * `TextAnalysis.winnowFingerprints` uses), distinct, in position
- * order.
+ * (`hash * 2^20 + pos` — the leftmost-tie packing the DuckDB
+ * oracle uses), distinct, in position order.
  *
- * Why: winnowing is per-document LOCAL by construction, yet the
+ * Why: winnowing is per-document LOCAL by construction, yet a
  * DataFrame formulation must posexplode every gram and pay a
  * doc-partitioned exchange + sort just to run the sliding-window min.
  * This expression keeps the whole selection inside whole-stage
  * codegen — scan → project → explode of the SELECTED set only
  * (~2/(w+1) of the grams), with NO exchange until a consumer
- * aggregates. Selection is bit-identical to the window-chain path
- * (`winnow_fingerprints_expr` shares `winnowFingerprintsOracle`
- * verbatim; WinnowFpsSpec asserts per-doc equality).
+ * aggregates. It is the one Spark spelling of the selection
+ * (`TextAnalysis.winnowFingerprints` and every winnow key run it);
+ * the DuckDB oracle re-derives it with that window, and WinnowFpsSpec
+ * checks it per doc against an independent Scala reference.
  *
  * Documents with fewer than n + w - 1 tokens have no full window and
- * yield an empty array (the window path's `pos <= n_grams - w` filter
+ * yield an empty array (the oracle's `pos <= n_grams - w` filter
  * drops them identically). Null text gives null.
  */
 case class WinnowFps(first: Expression, second: Expression, third: Expression)

@@ -23,11 +23,13 @@ import graft.util.Round.r4
  * sorted ROW_NUMBER (mirrored by the DuckDB oracle); hash families are
  * affine maps (a_j*gid + b_j) mod P over those ids — pure integer
  * arithmetic, identical in any engine. At 100 TB the library swaps the
- * md5 digest for a digest-free family (`idFamily = "poly"` — the
- * codegen'd [[graft.functions.PolyHash]], still SQL-reproducible so
- * the oracle verifies signatures bit-for-bit at any scale — or
- * `"xxhash"`, cheapest but oracle-opaque, covered by the in-driver
- * scale-mode specs); the algorithm is otherwise unchanged.
+ * md5 digest for the digest-free `idFamily = "poly"` — the codegen'd
+ * [[graft.functions.PolyHash]], still SQL-reproducible so the oracle
+ * verifies signatures bit-for-bit at any scale; the algorithm is
+ * otherwise unchanged. The two families (`md5`, `poly`) are the only
+ * gram-id spellings; where a native whole-signature expression exists
+ * (`cdc_chunks`, `winnow_fps`, `simhash_fp` at poly/32) it is the ONE
+ * path its callers run.
  */
 object Dedup {
 
@@ -60,9 +62,8 @@ object Dedup {
    *  bands multiply band-key cardinality by 256, and hamming <= 3 on
    *  64 bits is also the semantically sane threshold at corpus scale
    *  (3/32 random collisions pass at ~1.3e-6 per pair — thousands of
-   *  false near-dups per 1e12 pairs). No SQL oracle (the xxhash
-   *  precedent): spec-covered, ground-truth-equality oracles double as
-   *  100%-recall assertions and the hamming ball DIFFERS by design. */
+   *  false near-dups per 1e12 pairs). Under `idFamily = "poly"` the
+   *  width is hash-gated bit-for-bit (`dedup_simhash_wide`). */
   val SimBitsWide = 64
 
   /** Exact dedup: first doc_id wins per content hash; emits survivors
@@ -631,12 +632,6 @@ ORDER BY source"""
    *    multiply-add loop per gram, no digest, no allocation, AND still
    *    exactly reproducible in DuckDB ([[polyGramIdSql]]), so the
    *    scale mode keeps a full fingerprint-parity oracle.
-   *  - `"xxhash"` (cheapest, oracle-opaque): `pmod(xxhash64, P)` —
-   *    nothing another engine reproduces, so no SQL oracle; covered by
-   *    the in-driver scale-mode specs. (A ground-truth-equality oracle
-   *    was tried and retired: it doubles as a 100%-LSH-recall
-   *    assertion, which is probabilistic at the Jaccard threshold and
-   *    broke at sf0.1.)
    *
    *  mod P keeps the affine hashes (a*gid+b) inside Long range under
    *  ANSI arithmetic AND non-negative (a raw 64-bit hash would
@@ -651,10 +646,8 @@ ORDER BY source"""
           % Prime).as("gid"))
       case "poly" => sh.select(col("doc_id"),
         call_function("poly_hash", col("gram")).as("gid"))
-      case "xxhash" => sh.select(col("doc_id"),
-        pmod(xxhash64(col("gram")), lit(Prime)).as("gid"))
       case other => throw new IllegalArgumentException(
-        s"unknown gram-id family '$other' (md5|poly|xxhash)")
+        s"unknown gram-id family '$other' (md5|poly)")
     }
 
   /** DuckDB spelling of the md5 gram id. */
@@ -2571,8 +2564,8 @@ ORDER BY m.doc_a, m.doc_b"""
    *  ~J^4) missed all 4 bands: 255/256 rows. Banded LSH recall is
    *  probabilistic BY DESIGN at the threshold, so equality-with-
    *  ground-truth is the wrong invariant to gate on; family parity is
-   *  exact. The xxhash family remains available (cheapest, oracle-
-   *  opaque) and spec-covered (PipelineSpec scale-mode test). */
+   *  exact. The recall floor against brute-force truth lives in
+   *  PipelineSpec instead. */
   lazy val dedupMinhashFastOracle: String =
     "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
       minhashTailSql
@@ -2648,42 +2641,23 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  setting — 16-bit bands keep bucket occupancy flat where the
    *  32-bit default's 256-value bands saturate (the sf10 probe,
    *  STRESS_SF1.md) — and under `idFamily = "poly"` it keeps a full
-   *  bit-for-bit DuckDB oracle ([[dedupSimhashWideOracle]]). */
+   *  bit-for-bit DuckDB oracle ([[dedupSimhashWideOracle]]). At
+   *  poly/32 the fingerprint pass is the native projection of
+   *  [[simhashFingerprints]] (which reads text, not
+   *  `precomputedShingles`); every other (family, width) aggregates
+   *  bit votes over the shingle frame. */
   def dedupSimhash(docs: DataFrame, maxHamming: Int = 3,
                    idFamily: String = "md5",
                    precomputedShingles: Option[DataFrame] = None,
                    fpBits: Int = SimBits): DataFrame = {
     require(fpBits % SimBands == 0, s"fpBits must be a multiple of $SimBands")
-    val sh = cachedOrStore(docs, precomputedShingles)
-    val fp = simhashFpWide(shingleIds(sh, idFamily), fpBits)
-      .cache() // used for banding AND the per-side fp lookup below
+    val fp = (
+      if (simhashNative(idFamily, fpBits)) simhashFingerprints(docs, idFamily, fpBits)
+      else simhashFpWide(shingleIds(cachedOrStore(docs, precomputedShingles),
+        idFamily), fpBits)
+    ).cache() // used for banding AND the per-side fp lookup below
     val cands = saltedBucketPairs(
       simhashNibbles(fp, fpBits / SimBands), Seq("band", "nib"), "doc_id")
-    simhashVerify(cands, fp, maxHamming)
-  }
-
-  /** SimHash via the native WHOLE-FINGERPRINT expression
-   *  ([[graft.functions.SimhashFp]], `poly` family): the signature
-   *  pass is a pure projection — `word_ngrams` → `simhash_fp` inside
-   *  one whole-stage-codegen'd Project, NO gram explode, NO
-   *  per-(doc, bit) vote aggregation, NO exchange before banding —
-   *  where [[dedupSimhash]] pays explode + a 32-column partial agg +
-   *  a doc-keyed shuffle for the same bits. Gram-less docs (< 3
-   *  tokens) are filtered exactly as the aggregation path drops them
-   *  (no vote rows). Output is bit-identical to
-   *  `dedupSimhash(idFamily = "poly")` — `dedup_simhash_expr` shares
-   *  [[dedupSimhashFastOracle]] verbatim, and SimhashFpSpec asserts
-   *  per-document fingerprint equality of the two paths. */
-  /** The aggregation-path `poly`-family fingerprint frame
-   *  (doc_id, fp) — exposed so SimhashFpSpec can assert per-document
-   *  parity between the two fingerprint paths. */
-  def simhashPolyFingerprints(docs: DataFrame): DataFrame =
-    simhashFpWide(shingleIds(shingles(docs), "poly"))
-
-  def dedupSimhashExpr(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val fp = simhashFingerprints(docs, "expr")
-      .cache() // banding AND the per-side fp lookup
-    val cands = saltedBucketPairs(simhashNibbles(fp), Seq("band", "nib"), "doc_id")
     simhashVerify(cands, fp, maxHamming)
   }
 
@@ -2755,29 +2729,39 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  the cheapest incremental near-dup state in the family (minhash
    *  keeps 16 longs + the shingle store for verify; simhash verifies
    *  from the fingerprints themselves, so this frame is the WHOLE
-   *  state). */
-  /** `idFamily = "expr"` is the [[graft.functions.SimhashFp]]
-   *  projection path — fingerprints BIT-IDENTICAL to `"poly"`
-   *  (SimhashFpSpec), so a store written under either family serves
-   *  triggers run under the other; the expr family just skips the
-   *  explode + vote agg + exchange per batch. */
+   *  state).
+   *
+   *  At `poly`/[[SimBits]] this is the native
+   *  [[graft.functions.SimhashFp]] projection — `word_ngrams` →
+   *  `simhash_fp` inside one whole-stage-codegen'd Project, no gram
+   *  explode, no per-(doc, bit) vote aggregation, no exchange before
+   *  banding. Gram-less docs (< 3 tokens) are filtered, as the vote
+   *  aggregation drops them by producing no vote rows. The expression
+   *  is 32-bit only and md5 gram ids are oracle-pinned, so `md5` and
+   *  the 64-bit width aggregate bit votes over gram ids
+   *  ([[simhashFpWide]]). SimhashFpSpec asserts the projection equals
+   *  [[simhashVoteFingerprints]] per doc at poly/32, so fp stores
+   *  written by either path serve the same triggers. */
   def simhashFingerprints(docs: DataFrame, idFamily: String = "md5",
                           fpBits: Int = SimBits): DataFrame =
-    idFamily match {
-      case "expr" =>
-        require(fpBits == SimBits,
-          s"the native simhash_fp expression is $SimBits-bit; " +
-            "use an aggregation-path family (poly/md5/xxhash) for fpBits=64")
-        docs
-          .select(col("doc_id"),
-            call_function("word_ngrams", col("text"), lit(3)).as("grams"))
-          .filter(size(col("grams")) > 0)
-          .select(col("doc_id"),
-            call_function("simhash_fp", col("grams")).as("fp"))
-      case _ =>
-        simhashFpWide(shingleIds(shingles(docs.select("doc_id", "text")),
-          idFamily), fpBits)
-    }
+    if (simhashNative(idFamily, fpBits))
+      docs
+        .select(col("doc_id"),
+          call_function("word_ngrams", col("text"), lit(3)).as("grams"))
+        .filter(size(col("grams")) > 0)
+        .select(col("doc_id"),
+          call_function("simhash_fp", col("grams")).as("fp"))
+    else simhashVoteFingerprints(docs, idFamily, fpBits)
+
+  private def simhashNative(idFamily: String, fpBits: Int): Boolean =
+    idFamily == "poly" && fpBits == SimBits
+
+  /** The bit-vote aggregation spelling of [[simhashFingerprints]] at
+   *  any (family, width). */
+  private[graft] def simhashVoteFingerprints(docs: DataFrame, idFamily: String,
+                                             fpBits: Int): DataFrame =
+    simhashFpWide(shingleIds(shingles(docs.select("doc_id", "text")),
+      idFamily), fpBits)
 
   /** Materialize [[simhashFingerprints]] as a parquet store. */
   def writeSimhashStore(docs: DataFrame, path: String,
@@ -2961,9 +2945,10 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
 
   /** Oracle for the 100 TB SimHash mode (`idFamily = "poly"`): the
    *  [[polyShidCte]] reproduces the codegen'd poly_hash gram ids
-   *  exactly, so — unlike an xxhash64 family — the scale mode's
-   *  fingerprints, bands, and hamming distances are verified
-   *  bit-for-bit, not just row-counted. */
+   *  exactly, so the scale mode's fingerprints, bands, and hamming
+   *  distances are verified bit-for-bit, not just row-counted. The
+   *  Spark side fingerprints through the native simhash_fp
+   *  projection; `dedup_simhash_expr` runs the same path. */
   val dedupSimhashFastOracle: String =
     "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
       simhashTailSql
@@ -3463,6 +3448,48 @@ SELECT source, exact_distinct, CAST(kmv_est AS BIGINT) AS kmv_est,
                  ELSE 0 END AS BIGINT) AS rel_err_pm
 FROM est ORDER BY source"""
 
+  /** The CDC chunking chain: (doc_id, [extras...], chunk_idx, fp, len,
+   *  occ_key) chunk-occurrence frame off the native
+   *  [[graft.functions.CdcChunks]] expression — ONE definition of the
+   *  cut rule + fingerprint shared by [[cdcChunkDedup]],
+   *  [[boilerplateChunks]], [[cdcChunkTrim]], the store builder and
+   *  the incremental path. `extraCols` are passthrough per-document
+   *  columns carried into the grouping (e.g. `source`).
+   *
+   *  chunk_idx is the 0-based chunk ordinal, where the oracles'
+   *  running cut-count window starts at 0 or 1 — both are strictly
+   *  increasing in document position, so occ_key (doc-major,
+   *  position-minor) selects the SAME canonical occurrence per
+   *  (fp, len) group, and no consumer emits chunk_idx or occ_key
+   *  itself (only first_key div CdcKeyMult, or per-doc counts).
+   *
+   *  Canonical occurrence key: doc_id * 2^24 + chunk_idx — a strict
+   *  total order on (doc_id, chunk_idx) in both engines provided
+   *  chunk_idx < 2^24 (tokens-per-doc < 16.7M — no real document
+   *  approaches it; the r14 shape's 65536 multiplier made >65535
+   *  tokens/doc silently collide into the NEXT doc's key space) and
+   *  doc_id < 2^39 (~550B docs — ~250x a 100 TB corpus at 50 KB/doc).
+   *  PropertySpec asserts the corpus bound so a testdata refresh
+   *  can't silently violate the encoding. */
+  private[graft] def cdcOccurrences(docs: DataFrame, avgChunk: Int,
+                                    extraCols: Seq[String]): DataFrame = {
+    val keep = Seq(col("doc_id")) ++ extraCols.map(col)
+    docs
+      .select(keep ++ Seq(
+        posexplode(call_function("cdc_chunks", col("text"),
+          lit(avgChunk))).as(Seq("chunk_idx0", "ch"))): _*)
+      .select(keep ++ Seq(
+        col("chunk_idx0").cast("long").as("chunk_idx"),
+        col("ch.fp").as("fp"), col("ch.len").as("len")): _*)
+      .withColumn("occ_key",
+        col("doc_id") * lit(CdcKeyMult) + col("chunk_idx"))
+  }
+
+  /** occ_key multiplier — see [[cdcOccurrences]]'s bound rationale.
+   *  Lives in lockstep with the literal in [[cdcOccCteSql]] and
+   *  [[cdcChunkDedupIncrementalOracle]]. */
+  val CdcKeyMult: Long = 1L << 24
+
   /** Content-defined chunking (CDC) dedup ledger — the LBFS/FastCDC
    *  storage-dedup primitive (Muthitacharoen et al. SOSP 2001; Xia et
    *  al. ATC 2016) at word granularity: a chunk boundary opens at
@@ -3482,88 +3509,16 @@ FROM est ORDER BY source"""
    *  is savable — the per-source ledger a chunk store / transport
    *  dedup layer reads to size itself.
    *
-   *  Scale shape: tokenize+hash is one projection; the cut rule and
-   *  in-chunk offsets are PER-DOCUMENT windows (hash-partitioned by
-   *  doc_id, bounded by document length — embarrassingly parallel,
-   *  nothing global); chunk identity then collapses through a
-   *  (fp, len)-keyed partial agg at ~n_tokens/avgChunk cardinality —
+   *  Scale shape: the whole cut-rule + fingerprint chain is ONE
+   *  in-row codegen'd loop ([[cdcOccurrences]]: scan → project →
+   *  posexplode of the CHUNK set, ~1/avgChunk of the tokens, no
+   *  exchange, nothing global); chunk identity then collapses through
+   *  a (fp, len)-keyed partial agg at ~n_tokens/avgChunk cardinality —
    *  the same shuffle class as exact dedup's content-hash groupBy —
    *  and the final rollup is |sources| rows. No self-join anywhere. */
-  /** The shared CDC chunking chain: (doc_id, [extras...], chunk_idx,
-   *  fp, len, occ_key) chunk-occurrence frame — ONE definition of the
-   *  cut rule + fingerprint shared by [[cdcChunkDedup]], the store
-   *  builder, and the incremental path, so the three can never drift
-   *  (the simhashFpWide/SimhashFp lockstep discipline). `extraCols`
-   *  are passthrough per-document columns carried into the grouping
-   *  (e.g. `source`). */
-  private[graft] def cdcOccurrences(docs: DataFrame, avgChunk: Int,
-                                    extraCols: Seq[String]): DataFrame = {
-    val keep = Seq(col("doc_id")) ++ extraCols.map(col)
-    val tok = docs
-      .select(keep ++ Seq(
-        posexplode(split(col("text"), " ")).as(Seq("pos0", "word"))): _*)
-      .select(keep ++ Seq(
-        (col("pos0") + 1).cast("long").as("pos"),
-        call_function("poly_hash", col("word")).as("gh")): _*)
-    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val chunked = tok.withColumn("chunk_idx",
-      sum(when(pmod(col("gh"), lit(avgChunk.toLong)) === 0, 1L)
-        .otherwise(0L)).over(wDoc))
-    val wChunk = Window.partitionBy("doc_id", "chunk_idx").orderBy("pos")
-    val occ = chunked
-      .withColumn("off", row_number().over(wChunk).cast("long"))
-      .groupBy(keep ++ Seq(col("chunk_idx")): _*)
-      .agg(sum(col("gh") * col("off")).as("fp"), count(lit(1)).as("len"))
-    // canonical occurrence key: doc_id * 2^24 + chunk_idx — a strict
-    // total order on (doc_id, chunk_idx) in both engines provided
-    // chunk_idx < 2^24 (tokens-per-doc < 16.7M — no real document
-    // approaches it; the r14 shape's 65536 multiplier made >65535
-    // tokens/doc silently collide into the NEXT doc's key space) and
-    // doc_id < 2^39 (~550B docs — ~250x a 100 TB corpus at 50 KB/doc).
-    // PropertySpec asserts the corpus bound so a testdata refresh
-    // can't silently violate the encoding.
-    occ.withColumn("occ_key",
-      col("doc_id") * lit(CdcKeyMult) + col("chunk_idx"))
-  }
-
-  /** occ_key multiplier — see [[cdcOccurrences]]'s bound rationale.
-   *  Lives in lockstep with the literal in [[cdcOccCteSql]] and
-   *  [[cdcChunkDedupIncrementalOracle]]. */
-  val CdcKeyMult: Long = 1L << 24
-
-  /** CDC chunk-occurrence frame via the native [[graft.functions.CdcChunks]]
-   *  expression — the 100 TB mode of [[cdcOccurrences]]: the whole
-   *  cut-rule + fingerprint chain runs in ONE in-row codegen'd loop
-   *  (scan → project → posexplode of the CHUNK set, ~1/avgChunk of
-   *  the tokens, NO exchange), where the window chain posexplodes
-   *  every token through two doc-partitioned windows. The emitted
-   *  chunk ordinal is 0-based where the window chain's cut-count sum
-   *  starts at 0 or 1 — but both are strictly increasing in document
-   *  position, so occ_key (doc-major, position-minor) selects the
-   *  SAME canonical occurrence per (fp, len) group and every is_dup
-   *  verdict is identical: `cdc_chunk_dedup_expr` shares
-   *  [[cdcChunkDedupOracle]] VERBATIM (the SimhashFp/MinhashSig
-   *  discipline); CdcChunksSpec asserts per-doc (fp, len) sequence
-   *  parity against the window chain. */
-  private[graft] def cdcOccurrencesExpr(docs: DataFrame, avgChunk: Int,
-                                        extraCols: Seq[String]): DataFrame = {
-    val keep = Seq(col("doc_id")) ++ extraCols.map(col)
-    docs
-      .select(keep ++ Seq(
-        posexplode(call_function("cdc_chunks", col("text"),
-          lit(avgChunk))).as(Seq("chunk_idx0", "ch"))): _*)
-      .select(keep ++ Seq(
-        col("chunk_idx0").cast("long").as("chunk_idx"),
-        col("ch.fp").as("fp"), col("ch.len").as("len")): _*)
-      .withColumn("occ_key",
-        col("doc_id") * lit(CdcKeyMult) + col("chunk_idx"))
-  }
-
-  /** The per-source duplication rollup shared by [[cdcChunkDedup]]
-   *  and [[cdcChunkDedupExpr]] — keep-first canonical per chunk
-   *  identity, then a |sources|-row ledger. */
-  private def cdcChunkRollup(withKey: DataFrame): DataFrame = {
+  def cdcChunkDedup(docs: DataFrame, avgChunk: Int = 8): DataFrame = {
+    // keep-first canonical per chunk identity, then a |sources|-row ledger
+    val withKey = cdcOccurrences(docs, avgChunk, Seq("source"))
     val canon = withKey.groupBy("fp", "len")
       .agg(min(col("occ_key")).as("first_key"))
     val flagged = withKey.join(canon, Seq("fp", "len"))
@@ -3581,14 +3536,6 @@ FROM est ORDER BY source"""
       .orderBy("source")
   }
 
-  def cdcChunkDedup(docs: DataFrame, avgChunk: Int = 8): DataFrame =
-    cdcChunkRollup(cdcOccurrences(docs, avgChunk, Seq("source")))
-
-  /** [[cdcChunkDedup]] through the native expression chain — same
-   *  answer (shares the oracle verbatim), no per-token exchange. */
-  def cdcChunkDedupExpr(docs: DataFrame, avgChunk: Int = 8): DataFrame =
-    cdcChunkRollup(cdcOccurrencesExpr(docs, avgChunk, Seq("source")))
-
   /** Mirrors [[cdcChunkDedup]]: the per-WORD poly hash re-derives
    *  through [[polyShidCte]]'s power table (LEFT JOIN + COALESCE so a
    *  zero-length word hashes to 0 exactly like the expression);
@@ -3596,9 +3543,11 @@ FROM est ORDER BY source"""
    *  [[graft.functions.PolyHash]]. */
   /** The shared CDC chunk-occurrence CTE chain over `documents`
    *  (through `occ(doc_id, source, chunk_idx, fp, len, occ_key)`) —
-   *  one SQL definition for every corpus-wide CDC oracle, mirroring
-   *  the single [[cdcOccurrences]] builder on the Spark side. Prepend
-   *  `WITH RECURSIVE`. */
+   *  one SQL definition for every corpus-wide CDC oracle. The Spark
+   *  side is the single [[cdcOccurrences]] builder over the native
+   *  `cdc_chunks` expression; this chain re-derives the same chunks
+   *  with a running cut-count window and a within-chunk offset
+   *  window. Prepend `WITH RECURSIVE`. */
   private lazy val cdcOccCteSql: String = s"""pw AS (
   SELECT 1 AS i, CAST(1 AS BIGINT) AS v
   UNION ALL
@@ -3785,7 +3734,7 @@ FROM per ORDER BY doc_id"""
    *  (one in-row loop, no exchange), collapse map-side to ~log2(max
    *  len) buckets; the totals join is a 1-row broadcast. */
   def cdcChunkSizeHist(docs: DataFrame, avgChunk: Int = 8): DataFrame = {
-    val occ = cdcOccurrencesExpr(docs.select("doc_id", "text"), avgChunk, Nil)
+    val occ = cdcOccurrences(docs.select("doc_id", "text"), avgChunk, Nil)
     val buckets = occ
       .select((length(expr("bin(len)")) - 1).cast("long").as("len_bucket"),
         col("len"))
@@ -3843,11 +3792,11 @@ ORDER BY b.len_bucket"""
    *  exact-dedup shuffle class — and the rollup is |sources| rows. */
   def snapshotChunkDiff(oldDocs: DataFrame, newDocs: DataFrame,
                         avgChunk: Int = 8): DataFrame = {
-    val oldChunks = cdcOccurrencesExpr(oldDocs.select("doc_id", "text"),
+    val oldChunks = cdcOccurrences(oldDocs.select("doc_id", "text"),
         avgChunk, Nil)
       .select("fp", "len").distinct()
       .withColumn("known", lit(1L))
-    val addedOcc = cdcOccurrencesExpr(
+    val addedOcc = cdcOccurrences(
       newDocs.join(oldDocs.select("doc_id"), Seq("doc_id"), "left_anti"),
       avgChunk, Seq("source"))
     addedOcc.join(oldChunks, Seq("fp", "len"), "left")
@@ -3896,7 +3845,7 @@ FROM scd_per ORDER BY source"""
    *  appends are harmless (membership semantics — the fold is the
    *  `distinct()` at read). */
   def cdcChunkStore(docs: DataFrame, avgChunk: Int = 8): DataFrame =
-    cdcOccurrencesExpr(docs.select("doc_id", "text"), avgChunk, Nil)
+    cdcOccurrences(docs.select("doc_id", "text"), avgChunk, Nil)
       .select("fp", "len").distinct()
 
   /** Materialize [[cdcChunkStore]] as parquet. */
@@ -3934,11 +3883,9 @@ FROM scd_per ORDER BY source"""
     // (measured: the uncached triple chain dominated the sf10 trigger
     // constant). Same `graft.pin.results=false` test seam as
     // pinnedVerify so plan audits see the composed shape. Batch
-    // chunking goes through the native cdc_chunks expression — chunk
-    // identities bit-identical to the window chain (CdcChunksSpec)
-    // with zero exchanges before the pin, which removes the two
-    // doc-partitioned windows from every trigger's constant.
-    val occRaw = cdcOccurrencesExpr(batch.select("doc_id", "text"), avgChunk, Nil)
+    // chunking is the native cdc_chunks expression: zero exchanges
+    // before the pin.
+    val occRaw = cdcOccurrences(batch.select("doc_id", "text"), avgChunk, Nil)
     val occ =
       if (batch.sparkSession.conf.get("graft.pin.results", "true") == "false")
         occRaw

@@ -759,40 +759,14 @@ ORDER BY doc_id"""
    *  `MIN` — aggregation-order free, ties resolved toward the LEFTMOST
    *  minimal gram by construction (the SWA paper picks rightmost;
    *  either is a valid deterministic winnowing — noted, not hidden).
-   *  Scale shape: one in-row explode (position-preserving
-   *  `word_ngrams_all`), ONE doc-partitioned exchange for the sliding
-   *  window, then a distinct on the selected set; no join, no corpus-
-   *  wide window, text never passes an exchange. */
-  def winnowFingerprints(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame = {
-    val grams = docs
-      .select(col("doc_id"), expr(s"word_ngrams_all(text, $n)").as("gs"))
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-        posexplode(col("gs")).as(Seq("pos", "gram")))
-      .select(col("doc_id"), col("n_grams"), col("pos").cast("long").as("pos"),
-        (call_function("poly_hash", col("gram")) * lit(1048576L)
-          + col("pos").cast("long")).as("pk"))
-    val win = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.currentRow, w - 1)
-    grams
-      .withColumn("wmin", min("pk").over(win))
-      .filter(col("pos") <= col("n_grams") - w)
-      .select(col("doc_id"), col("wmin")).distinct()
-      .select(col("doc_id"),
-        (col("wmin") % lit(1048576L)).as("fp_pos"),
-        expr("wmin div 1048576").as("fp_hash"))
-      .orderBy("doc_id", "fp_pos")
-  }
-
-  /** Winnowing via the native WHOLE-SELECTION expression
-   *  ([[graft.functions.WinnowFps]]): the gram hash, sliding-window
-   *  min, and distinct all run in ONE in-row loop, so the plan is
-   *  scan → project → explode of the SELECTED set (~2/(w+1) of the
-   *  grams) — where [[winnowFingerprints]] posexplodes EVERY gram and
-   *  pays a doc-partitioned exchange + sort for the window. Selection
-   *  is bit-identical (same packing, same leftmost tie rule) —
-   *  `winnow_fingerprints_expr` shares [[winnowFingerprintsOracle]]
-   *  verbatim, and WinnowFpsSpec asserts per-doc equality. */
-  def winnowFingerprintsExpr(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame =
+   *  Scale shape: the native whole-selection expression
+   *  ([[graft.functions.WinnowFps]]) runs the gram hash, sliding-window
+   *  min and distinct in ONE in-row loop, so the plan is scan →
+   *  project → explode of the SELECTED set (~2/(w+1) of the grams);
+   *  no exchange before the final ordering, no join, no window, text
+   *  never passes an exchange. The oracle re-derives the selection with
+   *  a doc-partitioned sliding-window MIN. */
+  def winnowFingerprints(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame =
     docs
       .select(col("doc_id"),
         explode(call_function("winnow_fps", col("text"), lit(n), lit(w)))
@@ -862,7 +836,7 @@ ORDER BY doc_id, fp_pos"""
    *  |sources| rows. Window count is pure per-doc arithmetic
    *  (`max(0, n_tok - n - w + 2)`). */
   def winnowDensity(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame = {
-    val sel = winnowFingerprintsExpr(docs.select("doc_id", "text"), n, w)
+    val sel = winnowFingerprints(docs.select("doc_id", "text"), n, w)
       .groupBy("doc_id").agg(count(lit(1)).as("n_sel"))
     docs.select(col("doc_id"), col("source"),
         greatest(lit(0L), size(split(col("text"), " ")).cast("long")
@@ -919,9 +893,7 @@ ORDER BY source"""
    *  not per overlap query. */
   def winnowOverlap(docs: DataFrame, maxDf: Long = 5L, minShared: Long = 2L,
                     precomputedFps: Option[DataFrame] = None): DataFrame = {
-    // expression-path fingerprints: bit-identical selection
-    // (WinnowFpsSpec), no per-gram explode or doc-partitioned window
-    val fps = precomputedFps.getOrElse(winnowFingerprintsExpr(docs))
+    val fps = precomputedFps.getOrElse(winnowFingerprints(docs))
       .select("doc_id", "fp_hash").distinct()
     val df = fps.groupBy("fp_hash").agg(count(lit(1)).as("df_cnt"))
     val rare = fps.join(df.filter(col("df_cnt") <= maxDf), "fp_hash")
@@ -997,9 +969,9 @@ ORDER BY doc_a, doc_b"""
   def winnowOverlapIncremental(corpus: DataFrame, batch: DataFrame,
                                maxDf: Long = 5L, minShared: Long = 2L,
                                corpusFps: Option[DataFrame] = None): DataFrame = {
-    val cf = corpusFps.getOrElse(winnowFingerprintsExpr(corpus))
+    val cf = corpusFps.getOrElse(winnowFingerprints(corpus))
       .select("doc_id", "fp_hash").distinct()
-    val bf = winnowFingerprintsExpr(batch) // expr path: batch never explodes per-gram
+    val bf = winnowFingerprints(batch)
       .select("doc_id", "fp_hash").distinct()
     val all = cf.union(bf)
     val rareHashes = all.groupBy("fp_hash").agg(count(lit(1)).as("df_cnt"))

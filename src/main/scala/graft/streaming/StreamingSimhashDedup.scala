@@ -69,8 +69,10 @@ object StreamingSimhashDedup {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text")
     // r16: ONE fingerprint pass per trigger — the probe and the fp
-    // store append previously each ran the batch's shingle+vote pass
-    // from text; the shared frame is delta-sized and dropped below.
+    // store append previously each fingerprinted the batch from text;
+    // the shared frame is delta-sized and dropped below. At poly/32
+    // the pass is the simhash_fp projection, otherwise the
+    // shingle+vote aggregation (Dedup.simhashFingerprints).
     val batchFp = Dedup.simhashFingerprints(b, idFamily, fpBits).cache()
     val pairs = triggerPairs(spark, b, fpDir, maxHamming, idFamily, fpBits,
         batchFingerprints =

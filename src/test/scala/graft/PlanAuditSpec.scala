@@ -812,17 +812,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p2.contains("Window"), p2)
   }
 
-  test("winnowing: doc-partitioned window, no join, no global sort") {
+  test("winnowing: in-row selection, no window, no join, no exchange before the final ordering") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val p = plan(graft.pipeline.TextAnalysis.winnowFingerprints(docs))
-    // per-doc sliding MIN partitions by doc_id; the fingerprint pass
-    // must never join and never collapse to a single partition
-    assert(p.contains("Exchange hashpartitioning(doc_id"), p)
-    val lines = p.linesIterator.toSeq
-    val winIdx = lines.indexWhere(_.contains("Window ["))
-    assert(winIdx >= 0, p)
-    assert(!lines.take(winIdx + 1).exists(_.contains("SinglePartition")), p)
+    // the sliding MIN runs inside winnow_fps, so the fingerprint pass
+    // is scan -> project -> explode; the only exchange is the final
+    // ORDER BY's range partitioning, above everything else
+    assert(!p.contains("Window"), p)
     assert(!p.contains("Join"), p)
+    assert(!p.contains("SinglePartition"), p)
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning"), p)
   }
 
   test("winnow overlap: df-capped fingerprint join, no cartesian, no window") {

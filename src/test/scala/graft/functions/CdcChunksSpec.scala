@@ -43,28 +43,30 @@ class CdcChunksSpec extends SparkSpec {
       assert(got.map(_._2).sum === text.split(" ", -1).length.toLong,
         s"'$text' avg=$avg mass")
     }
-  }
-
-  test("expression path equals the window-chain occurrence frame per doc, in order") {
+    // every sf0.001 document through the occurrence builder the CDC
+    // keys run: occ_key is doc-major/position-minor, so sorting by it
+    // gives each doc's chunk sequence in position order
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    // occ_key is doc-major/position-minor in BOTH paths, so sorting
-    // by it aligns the two sequences doc by doc, chunk by chunk —
-    // the per-occurrence parity the shared-oracle contract rests on
-    def seqOf(df: org.apache.spark.sql.DataFrame) = df
-      .orderBy("occ_key")
-      .select("doc_id", "fp", "len")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val a = seqOf(graft.pipeline.Dedup.cdcOccurrences(docs, 8, Nil))
-    val b = seqOf(graft.pipeline.Dedup.cdcOccurrencesExpr(docs, 8, Nil))
-    assert(a.nonEmpty)
-    assert(a === b)
+      .filter(col("text").isNotNull)
+    val texts = docs.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val occ = graft.pipeline.Dedup.cdcOccurrences(docs, 8, Nil)
+      .orderBy("occ_key").select("doc_id", "fp", "len").collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toSeq
+    val byDoc = occ.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2) }
+    assert(texts.nonEmpty)
+    assert(byDoc.keySet === texts.keySet)
+    for ((d, text) <- texts) {
+      assert(byDoc(d) === reference(text, 8), s"doc $d sequence")
+      assert(byDoc(d).toSet === reference(text, 8).toSet, s"doc $d set")
+    }
   }
 
   test("chunking runs inside one codegen span before the explode — no window, no exchange") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = graft.pipeline.Dedup.cdcOccurrencesExpr(docs, 8, Nil)
+    val plan = graft.pipeline.Dedup.cdcOccurrences(docs, 8, Nil)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Exchange"), plan)

@@ -40,13 +40,12 @@ class SimhashFpSpec extends SparkSpec {
   test("expression path fingerprints equal the aggregation path's (poly family) per doc") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val exprFp = docs
-      .select(col("doc_id"),
-        call_function("word_ngrams", col("text"), lit(3)).as("grams"))
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"),
-        call_function("simhash_fp", col("grams")).as("fp_expr"))
-    val aggFp = graft.pipeline.Dedup.simhashPolyFingerprints(docs)
+    // the fingerprint pass every poly/32 caller runs vs the bit-vote
+    // aggregation that wrote fp stores before it took over
+    val exprFp = graft.pipeline.Dedup.simhashFingerprints(docs, "poly")
+      .withColumnRenamed("fp", "fp_expr")
+    val aggFp = graft.pipeline.Dedup.simhashVoteFingerprints(docs, "poly",
+      graft.pipeline.Dedup.SimBits)
     val joined = exprFp.join(aggFp, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("fp_expr"), col("fp"))
       .collect()
@@ -55,19 +54,6 @@ class SimhashFpSpec extends SparkSpec {
       assert(!r.isNullAt(1) && !r.isNullAt(2), s"doc ${r.getLong(0)} present in only one path")
       assert(r.getLong(1) === r.getLong(2), s"doc ${r.getLong(0)}")
     }
-  }
-
-  test("incremental simhash under the expr family equals the poly family run") {
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val corpus = docs.filter(col("doc_id") < 400)
-    val batch = docs.filter(col("doc_id") >= 400)
-    val poly = graft.pipeline.Dedup
-      .dedupSimhashIncremental(corpus, batch, idFamily = "poly").collect().toSeq
-    val exprd = graft.pipeline.Dedup
-      .dedupSimhashIncremental(corpus, batch, idFamily = "expr").collect().toSeq
-    assert(poly === exprd)
-    assert(poly.nonEmpty) // the split must actually exercise pairs
   }
 
   test("whole-stage codegen covers the fingerprint projection (no explode, no aggregate)") {

@@ -37,17 +37,25 @@ class WinnowFpsSpec extends SparkSpec {
         .collect()(0).getSeq[Long](0)
       assert(out === referenceSelection(text, n, w), s"'$text' n=$n w=$w")
     }
-  }
-
-  test("expression path equals the window-chain path on the corpus") {
+    // every sf0.001 document through the operator the winnow keys
+    // run: (fp_pos, fp_hash) re-packs to the reference's packed minima,
+    // in position order
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val a = graft.pipeline.TextAnalysis.winnowFingerprints(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val b = graft.pipeline.TextAnalysis.winnowFingerprintsExpr(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(a.nonEmpty)
-    assert(a === b)
+      .filter(col("text").isNotNull)
+    val texts = docs.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val got = graft.pipeline.TextAnalysis.winnowFingerprints(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(2) * 1048576L + r.getLong(1))).toSeq
+      .groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2) }
+    assert(got.nonEmpty)
+    for ((d, text) <- texts) {
+      val want = referenceSelection(text, 3, 4)
+      val have = got.getOrElse(d, Seq.empty)
+      assert(have === want, s"doc $d sequence")
+      assert(have.toSet === want.toSet, s"doc $d set")
+    }
+    assert(got.keySet.subsetOf(texts.keySet))
   }
 
   test("selection runs inside one codegen span before the explode — no window, no exchange") {

@@ -492,18 +492,18 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset("graft.pin.results")
   }
 
-  test("scale-mode minhash (xxhash64 ids) finds the same verified pairs") {
-    val fast = Dedup.dedupMinhash(docs, minJaccard = 0.2, idFamily = "xxhash")
+  test("scale-mode minhash (poly ids) finds the same verified pairs") {
+    val fast = Dedup.dedupMinhash(docs, minJaccard = 0.2, idFamily = "poly")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fast.contains((0L, 1L)))
     assert(fast.contains((0L, 3L)))
     assert(!fast.exists(p => p._1 == 2L || p._2 == 2L))
   }
 
-  test("xxhash minhash family: pinned recall floor vs brute-force ground truth at sf0.001") {
-    // The xxhash gram-id family is the one member with no DuckDB
-    // oracle (64-bit xxhash has no SQL twin), so its correctness
-    // gate lives here: brute-force ground truth — every pair at
+  test("poly minhash family: pinned recall floor vs brute-force ground truth at sf0.001") {
+    // The DuckDB oracle pins the poly family's pairs to its own LSH
+    // bands, so it says nothing about recall; the recall gate lives
+    // here: brute-force ground truth — every pair at
     // exact shingle Jaccard >= 0.2, derived WITHOUT any LSH — must
     // be recovered by the banded run at >= 90% recall, and every
     // emitted pair must be IN the truth set (the exact verify makes
@@ -526,7 +526,7 @@ class PipelineSpec extends SparkSpec {
       .filter(col("inter_n") * 1.0 / (col("n_a") + col("n_b") - col("inter_n")) >= 0.2)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Dedup.dedupMinhash(corpus, minJaccard = 0.2, idFamily = "xxhash")
+    val got = Dedup.dedupMinhash(corpus, minJaccard = 0.2, idFamily = "poly")
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     sh.unpersist()
@@ -535,7 +535,7 @@ class PipelineSpec extends SparkSpec {
       s"emitted pairs outside ground truth: ${(got -- truth).take(5)}")
     val recall = got.intersect(truth).size.toDouble / truth.size
     assert(recall >= 0.9,
-      s"xxhash family recall $recall below 0.9 floor (${got.size}/${truth.size})")
+      s"poly family recall $recall below 0.9 floor (${got.size}/${truth.size})")
   }
 
   test("containment catches an excerpt that Jaccard misses") {
