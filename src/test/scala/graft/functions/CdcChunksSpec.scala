@@ -63,6 +63,48 @@ class CdcChunksSpec extends SparkSpec {
     }
   }
 
+  /** The per-token window chain the occurrence builder replaced, kept
+   *  here as a second, Spark-side reference: posexplode every token,
+   *  a running cut-count window for the chunk ordinal, a within-chunk
+   *  row_number for the offset, then (fp, len) per chunk. */
+  private def windowChainOccurrences(docs: org.apache.spark.sql.DataFrame,
+                                     avgChunk: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    val tok = docs
+      .select(col("doc_id"),
+        posexplode(split(col("text"), " ")).as(Seq("pos0", "word")))
+      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
+        call_function("poly_hash", col("word")).as("gh"))
+    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wChunk = Window.partitionBy("doc_id", "chunk_idx").orderBy("pos")
+    tok
+      .withColumn("chunk_idx",
+        sum(when(pmod(col("gh"), lit(avgChunk.toLong)) === 0, 1L)
+          .otherwise(0L)).over(wDoc))
+      .withColumn("off", row_number().over(wChunk).cast("long"))
+      .groupBy("doc_id", "chunk_idx")
+      .agg(sum(col("gh") * col("off")).as("fp"), count(lit(1)).as("len"))
+      .withColumn("occ_key",
+        col("doc_id") * lit(graft.pipeline.Dedup.CdcKeyMult) + col("chunk_idx"))
+  }
+
+  test("expression path equals the window-chain occurrence frame per doc, in order") {
+    val docs = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+    // occ_key is doc-major/position-minor in BOTH spellings, so sorting
+    // by it aligns the two sequences doc by doc, chunk by chunk — the
+    // per-occurrence parity the shared-oracle contract rests on
+    def seqOf(df: org.apache.spark.sql.DataFrame) = df
+      .orderBy("occ_key")
+      .select("doc_id", "fp", "len")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val a = seqOf(windowChainOccurrences(docs, 8))
+    val b = seqOf(graft.pipeline.Dedup.cdcOccurrences(docs, 8, Nil))
+    assert(a.nonEmpty)
+    assert(a === b)
+  }
+
   test("chunking runs inside one codegen span before the explode — no window, no exchange") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")

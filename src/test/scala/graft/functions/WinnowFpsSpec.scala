@@ -58,6 +58,42 @@ class WinnowFpsSpec extends SparkSpec {
     assert(got.keySet.subsetOf(texts.keySet))
   }
 
+  /** The per-gram window chain the in-row selection replaced, kept
+   *  here as a second, Spark-side reference: posexplode every gram,
+   *  a doc-partitioned sliding-window MIN over the packed key, then
+   *  the distinct selected set. */
+  private def windowChainFingerprints(docs: org.apache.spark.sql.DataFrame,
+                                      n: Int, w: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    val grams = docs
+      .select(col("doc_id"), expr(s"word_ngrams_all(text, $n)").as("gs"))
+      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
+        posexplode(col("gs")).as(Seq("pos", "gram")))
+      .select(col("doc_id"), col("n_grams"), col("pos").cast("long").as("pos"),
+        (call_function("poly_hash", col("gram")) * lit(1048576L)
+          + col("pos").cast("long")).as("pk"))
+    val win = Window.partitionBy("doc_id").orderBy("pos")
+      .rowsBetween(Window.currentRow, w - 1)
+    grams
+      .withColumn("wmin", min("pk").over(win))
+      .filter(col("pos") <= col("n_grams") - w)
+      .select(col("doc_id"), col("wmin")).distinct()
+      .select(col("doc_id"),
+        (col("wmin") % lit(1048576L)).as("fp_pos"),
+        expr("wmin div 1048576").as("fp_hash"))
+  }
+
+  test("expression path equals the window-chain path on the corpus") {
+    val docs = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+    val a = windowChainFingerprints(docs, 3, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val b = graft.pipeline.TextAnalysis.winnowFingerprints(docs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(a.nonEmpty)
+    assert(a === b)
+  }
+
   test("selection runs inside one codegen span before the explode — no window, no exchange") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
