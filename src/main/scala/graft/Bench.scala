@@ -1,11 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, expr, lit, max, md5}
+import graft.pipeline.{Dedup, Embeddings, TextAnalysis}
+import graft.streaming.{StreamingCdcDedup, StreamingClusters, StreamingDedup,
+  StreamingEmbeddingDedup, StreamingExactDedup, StreamingMinhashDedup,
+  StreamingSimhashDedup, StreamingSpanDedup}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR with a noop-sink write (forces full column
   * materialisation — `.count()` would let Spark skip work), after a
-  * warmup pass that absorbs JVM/codegen startup. Prints ONE JSON line. */
+  * warmup pass that absorbs JVM/codegen startup, plus the
+  * [[Scenarios]] table. Prints ONE JSON line. */
 object Bench {
   /** The core count SURVEY §4's generated numbers claim (`local[32]`):
    *  only a full-suite run at this count writes bench_local_last.json,
@@ -34,17 +41,23 @@ object Bench {
     // streaming state, shared stores, synthetic ingest logs) nests
     // under it and the whole tree is deleted before exit — a bench
     // invocation no longer accumulates corpus-scale temp copies on
-    // the host (round-8 ADVICE).
+    // the host (round-8 ADVICE). The finally covers every exit path:
+    // a failed ingest probe or artifact write leaves nothing behind.
     val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench")
-    def benchTmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(benchRoot, prefix).toString
+    try run(spark, sfDir, cpus, benchRoot)
+    finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(benchRoot.toFile)
+    }
+  }
 
+  private def run(spark: SparkSession, sfDir: String, cpus: String,
+                  benchRoot: java.nio.file.Path): Unit = {
     def runNoop(name: String): Double = {
       spark.catalog.clearCache() // operators cache intermediates; isolate queries
       System.gc() // settle heap so one query's garbage isn't billed to the next
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      try noop(SparkEntry.queries(name)(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
       }
@@ -61,19 +74,13 @@ object Bench {
       * median — round-12 sf1 spreads like [12.4, 90.1] s made
       * median-of-3 untrustworthy). */
     // Clamped + parse-guarded (a typo'd value must not crash a 40-min
-    // suite); only ODD values give a true median — medianOf/runMedian
-    // return the upper-middle sample for even N, fine for spread
-    // bounds but document the intent by using 3 or 5.
+    // suite); only ODD values give a true median — `median` returns
+    // the upper-middle sample for even N, fine for spread bounds but
+    // document the intent by using 3 or 5.
     val reps = math.max(1, sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(3))
-    def runMedian(name: String): (Double, Double, Double) = {
-      val ts = (0 until reps).map(_ => runNoop(name))
-      if (ts.exists(_ < 0)) (-1.0, -1.0, -1.0)
-      else (ts.sorted.apply(ts.size / 2), ts.min, ts.max)
-    }
-    def medianSpread(ts: Seq[Double]): (Double, Double, Double) =
-      if (ts.exists(_ < 0)) (-1.0, -1.0, -1.0)
-      else (ts.sorted.apply(ts.size / 2), ts.min, ts.max)
+    def runMedian(name: String): (Double, Double, Double) =
+      median((0 until reps).map(_ => runNoop(name)))
 
     // Warmup: run every query once at the smallest scale factor so
     // Janino compilation + JIT of the generated code is NOT billed to
@@ -81,9 +88,10 @@ object Bench {
     // factors; only the data volume changes). Standard warmup practice
     // — the timed numbers then reflect data-proportional work.
     val warmDir = "/root/testdata/sf0.001"
+    val ctx = new Ctx(spark, sfDir, warmDir, benchRoot)
     // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run to named keys
-    // (skips the shared-store scenario unless listed). Round artifacts
-    // are always produced with the variable unset.
+    // (a scenario row runs when either of its keys is named). Round
+    // artifacts are always produced with the variable unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -114,8 +122,7 @@ object Bench {
       .contains("1")) canaryKeys else Seq.empty)).distinct
     for (n <- warmNames) {
       spark.catalog.clearCache()
-      try SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
+      try noop(SparkEntry.queries(n)(spark, warmDir))
       catch { case _: Throwable => () }
     }
 
@@ -141,493 +148,14 @@ object Bench {
       else canaryKeys.map(k => k -> runMedian(k)._1)
     val canaryBefore = canaryPass()
 
-    /** Shared-shingle-store scenario: materialize the (doc_id, gram)
-      * store ONCE, then run the whole near-dup family (ngram + minhash
-      * + simhash) from it — the index-at-write-time shape every real
-      * corpus pipeline uses. Timed as TWO keys: the one-time store
-      * write (`shingle_store_write`, amortized across every consumer
-      * of the store, not just these three) and the from-store family
-      * run (`dedup_family_shared`, to compare against the sum of the
-      * three cold per-query medians that each pay tokenize+gram
-      * explode themselves). */
-    val sharedStore =
-      benchTmp("graft-shstore")
-    def sharedFamilyOnce(dir: String): (Double, Double) = {
-      spark.catalog.clearCache()
-      System.gc()
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      try {
-        val t0 = System.nanoTime()
-        graft.pipeline.Dedup.writeShingleStore(docs, sharedStore)
-        val tWrite = (System.nanoTime() - t0) / 1e9
-        val sh = Some(spark.read.parquet(sharedStore))
-        val t1 = System.nanoTime()
-        graft.pipeline.Dedup.dedupNgram(docs, precomputedShingles = sh)
-          .write.format("noop").mode("overwrite").save()
-        graft.pipeline.Dedup.dedupMinhash(docs, precomputedShingles = sh)
-          .write.format("noop").mode("overwrite").save()
-        graft.pipeline.Dedup.dedupSimhash(docs, precomputedShingles = sh)
-          .write.format("noop").mode("overwrite").save()
-        (tWrite, (System.nanoTime() - t1) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] dedup_family_shared failed: ${e.getMessage}")
-        (-1.0, -1.0)
+    // Every scenario row: warm once (absorbs codegen/JIT like every
+    // other query), then `reps` timed calls, in table order.
+    val scenarioRuns = Scenarios
+      .filter(s => only.forall(o => o.contains(s.keys._1) || o.contains(s.keys._2)))
+      .map { s =>
+        s.warm(ctx)
+        s -> (0 until reps).map(_ => s.timed(ctx))
       }
-    }
-    /** Shared-quantized-store scenario, the embedding-family twin of
-      * `dedup_family_shared`: materialize the (vec_id, qarr, nq) ANN
-      * index ONCE (`quantized_store_write`), then run three consumers
-      * (sign-bit near-dup, kNN graph, per-cell outliers) from it
-      * (`emb_family_shared`) — vs each cold query re-quantizing the
-      * corpus itself. */
-    val qStore =
-      benchTmp("graft-qstore")
-    def embFamilyOnce(dir: String): (Double, Double) = {
-      spark.catalog.clearCache()
-      System.gc()
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      try {
-        val t0 = System.nanoTime()
-        graft.pipeline.Embeddings.writeQuantizedStore(emb, qStore)
-        val tWrite = (System.nanoTime() - t0) / 1e9
-        val qv = Some(spark.read.parquet(qStore))
-        val t1 = System.nanoTime()
-        graft.pipeline.Embeddings.dedupEmbedding(emb, precomputedQuantized = qv)
-          .write.format("noop").mode("overwrite").save()
-        graft.pipeline.Embeddings.knnGraph(emb, precomputedQuantized = qv)
-          .write.format("noop").mode("overwrite").save()
-        graft.pipeline.Embeddings.embOutliers(emb, precomputedQuantized = qv)
-          .write.format("noop").mode("overwrite").save()
-        (tWrite, (System.nanoTime() - t1) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] emb_family_shared failed: ${e.getMessage}")
-        (-1.0, -1.0)
-      }
-    }
-
-    /** Streaming near-dup trigger cost vs corpus size: seed the state
-      * stores (corpus + shingles + gram-df) from a PREFIX of the
-      * documents table, then time ONE processBatch of the same fixed
-      * tail batch. Run at a quarter-size and a full-size seed — the
-      * two timings being ~equal is the measured form of the
-      * "per-trigger cost tracks arrival rate, not corpus size" claim
-      * (the trigger reads only the maintained stores; nothing
-      * re-shingles corpus text). */
-    def streamingTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25) // last ~4%
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-stream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        seed.write.mode("overwrite").parquet(s"$base/corpus")
-        graft.pipeline.Dedup.writeShingleStore(seed, s"$base/shingles")
-        spark.read.parquet(s"$base/shingles").groupBy("gram")
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("df_cnt"))
-          .write.mode("overwrite").parquet(s"$base/gramdf")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/shingles",
-          s"$base/gramdf", maxDf = 5L, minJaccard = 0.2)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-    /** Same measurement for the EXACT-dedup ingest loop: seed the
-      * hash + bloom state stores from a prefix, time ONE processBatch
-      * of the same fixed tail batch at two seed sizes. The bloom
-      * store is <= m/64 rows at ANY seed, so the quarter-vs-full gap
-      * can only come from the hash-store verify join's columnar
-      * scan. */
-    def streamingExactTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-xstream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        seed.select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.md5(
-              org.apache.spark.sql.functions.col("text")).as("content_hash"))
-          .write.mode("overwrite").parquet(s"$base/hashes")
-        graft.pipeline.Dedup.bloomWords(seed)
-          .write.mode("overwrite").parquet(s"$base/bloom")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingExactDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/hashes", s"$base/bloom",
-          graft.pipeline.Dedup.BloomBits, graft.pipeline.Dedup.BloomProbes)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_exact_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-    /** Same measurement for the CDC chunk-store admission gate: seed
-      * the (fp, len) chunk store from a prefix, time ONE processBatch
-      * of the fixed tail batch at two seed sizes. The trigger's only
-      * file scan is the chunk store, so the quarter-vs-full gap can
-      * only come from its columnar scan + the membership join's
-      * store-side cardinality. */
-    def streamingCdcTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-cdcstream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        graft.pipeline.Dedup.writeCdcChunkStore(seed, s"$base/chunks")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingCdcDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/chunks")
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_cdc_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-    /** Same measurement for the streaming SPAN member (state = the
-      * SUM-folded gram-count delta store): seed the counts from a
-      * prefix, time ONE processBatch of the fixed tail batch at two
-      * seed sizes. The trigger's only file scan is the gram-count
-      * store, so the quarter-vs-full gap can only come from its
-      * columnar scan + the count-probe join's store-side
-      * cardinality. */
-    def streamingSpanTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-spstream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        graft.pipeline.TextAnalysis.spanGramCounts(seed)
-          .write.mode("overwrite").parquet(s"$base/gramcnt")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingSpanDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/stats", s"$base/gramcnt",
-          k = 5, maxDupRatio = 0.5)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_span_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-    /** Same measurement for the cheapest-state streaming member,
-      * SIMHASH (state = ONE long per corpus doc): seed the fp store
-      * from a prefix under the `poly` family at 32 bits (the
-      * `simhash_fp` projection fingerprint path), time ONE
-      * processBatch of the fixed tail batch at two seed sizes. The trigger's only file scan is the
-      * fp store, so the quarter-vs-full gap can only come from its
-      * columnar scan. */
-    def streamingSimhashTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-shstream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        graft.pipeline.Dedup.writeSimhashStore(seed, s"$base/fp", idFamily = "poly")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        // explicitly the LEGACY 32-bit width: the library default
-        // flipped to SimBitsWide, but this key IS the 32-bit series
-        // (the cliff the pair of keys exists to keep measured)
-        graft.streaming.StreamingSimhashDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/fp",
-          maxHamming = 3, idFamily = "poly",
-          fpBits = graft.pipeline.Dedup.SimBits)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_simhash_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-
-    /** The WIDE (64-bit, 16-bit-band) variant of the simhash trigger —
-      * the corpus-scale setting. Same seed/batch protocol under the
-      * poly gram family (the native simhash_fp expression is 32-bit);
-      * the pair of keys exists so the 32-vs-64 band-occupancy story is
-      * measured, not asserted (the sf10 probe caught the 32-bit
-      * trigger growing linearly with the store). */
-    def streamingSimhash64TriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-sh64stream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        graft.pipeline.Dedup.writeSimhashStore(seed, s"$base/fp",
-          idFamily = "poly", fpBits = graft.pipeline.Dedup.SimBitsWide)
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingSimhashDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/fp",
-          maxHamming = 3, idFamily = "poly",
-          fpBits = graft.pipeline.Dedup.SimBitsWide)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_simhash64_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-
-    /** Same measurement for the streaming MINHASH member (state =
-      * shingle store + per-doc signature store): seed both from a
-      * prefix under the poly family, time ONE processBatch of the
-      * fixed tail batch at two seed sizes. */
-    def streamingMinhashTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val maxId = docs.agg(org.apache.spark.sql.functions.max("doc_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-mhstream-$seedFrac")
-        val seed = docs.filter(org.apache.spark.sql.functions.col("doc_id") < seedN)
-          .select("doc_id", "text")
-        graft.pipeline.Dedup.writeShingleStore(seed, s"$base/shingles")
-        graft.pipeline.Dedup.minhashSignatures(seed, "poly")
-          .write.mode("overwrite").parquet(s"$base/sig")
-        val batch = docs
-          .filter(org.apache.spark.sql.functions.col("doc_id") >= batchStart)
-          .select("doc_id", "text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingMinhashDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/shingles", s"$base/sig",
-          minJaccard = 0.2, idFamily = "poly")
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_minhash_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-
-    /** Same measurement for the streaming EMBEDDING member (state =
-      * the shared ANN quantized index): seed the index from a vector
-      * prefix, time ONE processBatch of the fixed tail batch. */
-    def streamingEmbTriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val maxId = emb.agg(org.apache.spark.sql.functions.max("vec_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-embstream-$seedFrac")
-        val seed = emb.filter(org.apache.spark.sql.functions.col("vec_id") < seedN)
-          .select("vec_id", "embedding")
-        graft.pipeline.Embeddings.writeQuantizedStore(seed, s"$base/qv")
-        graft.pipeline.Embeddings.writeEmbFingerprintStore(seed, s"$base/qv_fp")
-        val batch = emb
-          .filter(org.apache.spark.sql.functions.col("vec_id") >= batchStart)
-          .select("vec_id", "embedding")
-        val t0 = System.nanoTime()
-        // the 32-plane banding is PINNED (the default is now
-        // auto-width): this key tracks the narrow mode's
-        // linear-in-state cost across rounds
-        graft.streaming.StreamingEmbeddingDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/qv", minCosine = 0.4,
-          planes = graft.pipeline.Embeddings.NumPlanes)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_emb_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-
-    /** The WIDE (64-plane, 16-bit-band) variant of the embedding
-      * trigger — the corpus-scale banding. The quantized store is
-      * width-agnostic (fingerprints are derived), so the pair of keys
-      * measures the same state under both bandings: the 32-plane
-      * trigger's candidate mass grows linearly with the store (4x8-bit
-      * bands saturate — the simhash-32 shape, measured 4.7x per 4x
-      * state in the sf10 probe), the wide banding keeps occupancy
-      * flat at a measured recall S-curve shift (EmbeddingsSpec). */
-    def streamingEmb64TriggerOnce(dir: String, seedFrac: Double): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val maxId = emb.agg(org.apache.spark.sql.functions.max("vec_id"))
-          .collect()(0).getLong(0)
-        val batchStart = maxId - math.max(1L, maxId / 25)
-        val seedN = (batchStart * seedFrac).toLong
-        val base = benchTmp(s"graft-emb64stream-$seedFrac")
-        val seed = emb.filter(org.apache.spark.sql.functions.col("vec_id") < seedN)
-          .select("vec_id", "embedding")
-        graft.pipeline.Embeddings.writeQuantizedStore(seed, s"$base/qv")
-        graft.pipeline.Embeddings.writeEmbFingerprintStore(seed, s"$base/qv_fp")
-        val batch = emb
-          .filter(org.apache.spark.sql.functions.col("vec_id") >= batchStart)
-          .select("vec_id", "embedding")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingEmbeddingDedup.processBatch(batch, 0L,
-          s"$base/corpus", s"$base/pairs", s"$base/qv", minCosine = 0.4,
-          planes = graft.pipeline.Embeddings.NumPlanesWide)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_emb64_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-
-    /** Same measurement for the streaming CLUSTER fold: seed a label
-      * store of `seedN` docs (paired into 2-clusters), then time ONE
-      * processPairs of a fixed 1k-pair batch (each pair bridges one
-      * old cluster to one new doc). The fold is touched-only, so the
-      * quarter-vs-full gap can only come from the delta store's
-      * columnar scan. */
-    def streamingClusterTriggerOnce(seedN: Long): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      try {
-        import org.apache.spark.sql.functions.{col, expr}
-        val base = benchTmp(s"graft-cstream-$seedN")
-        val labels = s"$base/labels"
-        spark.range(seedN)
-          .select(col("id").as("doc_id"),
-            expr("id - id % 2").as("label"),
-            expr("CAST(0 AS BIGINT)").as("batch_id"))
-          .write.mode("overwrite").parquet(labels)
-        val pairs = spark.range(1000)
-          .select(expr("id * 2").as("doc_a"),
-            (col("id") + seedN).as("doc_b"))
-        val t0 = System.nanoTime()
-        graft.streaming.StreamingClusters.processPairs(pairs, 1L, labels)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream_cluster_trigger failed: ${e.getMessage}")
-        -1.0
-      }
-    }
-    val runCStream = only.forall(s => s.exists(_.startsWith("stream_cluster_trigger")))
-    val cstreamRuns = if (runCStream) {
-      streamingClusterTriggerOnce(10000L) // absorb codegen/JIT
-      (0 until reps).map(_ =>
-        (streamingClusterTriggerOnce(100000L), streamingClusterTriggerOnce(400000L)))
-    } else Seq.empty
-
-    val runStream = only.forall(s => s.exists(_.startsWith("stream_trigger")))
-    val streamRuns = if (runStream) {
-      streamingTriggerOnce(warmDir, 1.0) // absorb codegen/JIT
-      (0 until reps).map(_ =>
-        (streamingTriggerOnce(sfDir, 0.25), streamingTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runMHStream = only.forall(s => s.exists(_.startsWith("stream_minhash_trigger")))
-    val mhstreamRuns = if (runMHStream) {
-      streamingMinhashTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingMinhashTriggerOnce(sfDir, 0.25), streamingMinhashTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runEStream = only.forall(s => s.exists(_.startsWith("stream_emb_trigger")))
-    val estreamRuns = if (runEStream) {
-      streamingEmbTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingEmbTriggerOnce(sfDir, 0.25), streamingEmbTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runE64Stream = only.forall(s => s.exists(_.startsWith("stream_emb64_trigger")))
-    val e64streamRuns = if (runE64Stream) {
-      streamingEmb64TriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingEmb64TriggerOnce(sfDir, 0.25), streamingEmb64TriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runSHStream = only.forall(s => s.exists(_.startsWith("stream_simhash_trigger")))
-    val shstreamRuns = if (runSHStream) {
-      streamingSimhashTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingSimhashTriggerOnce(sfDir, 0.25), streamingSimhashTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runSH64Stream = only.forall(s => s.exists(_.startsWith("stream_simhash64_trigger")))
-    val sh64streamRuns = if (runSH64Stream) {
-      streamingSimhash64TriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingSimhash64TriggerOnce(sfDir, 0.25), streamingSimhash64TriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runXStream = only.forall(s => s.exists(_.startsWith("stream_exact_trigger")))
-    val xstreamRuns = if (runXStream) {
-      streamingExactTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingExactTriggerOnce(sfDir, 0.25), streamingExactTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runCdcStream = only.forall(s => s.exists(_.startsWith("stream_cdc_trigger")))
-    val cdcstreamRuns = if (runCdcStream) {
-      streamingCdcTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingCdcTriggerOnce(sfDir, 0.25), streamingCdcTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-    val runSpanStream = only.forall(s => s.exists(_.startsWith("stream_span_trigger")))
-    val spanstreamRuns = if (runSpanStream) {
-      streamingSpanTriggerOnce(warmDir, 1.0)
-      (0 until reps).map(_ =>
-        (streamingSpanTriggerOnce(sfDir, 0.25), streamingSpanTriggerOnce(sfDir, 1.0)))
-    } else Seq.empty
-
-    val runShared = only.forall(s =>
-      s.contains("dedup_family_shared") || s.contains("shingle_store_write"))
-    val sharedRuns = if (runShared) {
-      sharedFamilyOnce(warmDir) // absorb codegen/JIT like every other query
-      (0 until reps).map(_ => sharedFamilyOnce(sfDir))
-    } else Seq.empty
-    val runEmbShared = only.forall(s =>
-      s.contains("emb_family_shared") || s.contains("quantized_store_write"))
-    val embSharedRuns = if (runEmbShared) {
-      embFamilyOnce(warmDir)
-      (0 until reps).map(_ => embFamilyOnce(sfDir))
-    } else Seq.empty
-    def medianOf(xs: Seq[Double]): (Double, Double, Double) =
-      if (xs.exists(_ < 0)) (-1.0, -1.0, -1.0)
-      else (xs.sorted.apply(xs.size / 2), xs.min, xs.max)
 
     /** Three full passes over the suite, each in a DIFFERENT
       * deterministic shuffled order, median per query ACROSS passes
@@ -652,43 +180,11 @@ object Bench {
         canaryKeys.map(k => runNoop(k)).filter(_ >= 0).sum
       t
     }
-    val suiteResults = names.map(n => n -> medianSpread(passTimes.map(_(n))))
-    val results = suiteResults ++ (if (runShared) Seq(
-      "shingle_store_write" -> medianOf(sharedRuns.map(_._1)),
-      "dedup_family_shared" -> medianOf(sharedRuns.map(_._2))) else Seq.empty) ++
-      (if (runEmbShared) Seq(
-        "quantized_store_write" -> medianOf(embSharedRuns.map(_._1)),
-        "emb_family_shared" -> medianOf(embSharedRuns.map(_._2))) else Seq.empty) ++
-      (if (runStream) Seq(
-        "stream_trigger_quarter_corpus" -> medianOf(streamRuns.map(_._1)),
-        "stream_trigger_full_corpus" -> medianOf(streamRuns.map(_._2))) else Seq.empty) ++
-      (if (runXStream) Seq(
-        "stream_exact_trigger_quarter_corpus" -> medianOf(xstreamRuns.map(_._1)),
-        "stream_exact_trigger_full_corpus" -> medianOf(xstreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runCdcStream) Seq(
-        "stream_cdc_trigger_quarter_corpus" -> medianOf(cdcstreamRuns.map(_._1)),
-        "stream_cdc_trigger_full_corpus" -> medianOf(cdcstreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runSpanStream) Seq(
-        "stream_span_trigger_quarter_corpus" -> medianOf(spanstreamRuns.map(_._1)),
-        "stream_span_trigger_full_corpus" -> medianOf(spanstreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runSHStream) Seq(
-        "stream_simhash_trigger_quarter_corpus" -> medianOf(shstreamRuns.map(_._1)),
-        "stream_simhash_trigger_full_corpus" -> medianOf(shstreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runSH64Stream) Seq(
-        "stream_simhash64_trigger_quarter_corpus" -> medianOf(sh64streamRuns.map(_._1)),
-        "stream_simhash64_trigger_full_corpus" -> medianOf(sh64streamRuns.map(_._2))) else Seq.empty) ++
-      (if (runMHStream) Seq(
-        "stream_minhash_trigger_quarter_corpus" -> medianOf(mhstreamRuns.map(_._1)),
-        "stream_minhash_trigger_full_corpus" -> medianOf(mhstreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runEStream) Seq(
-        "stream_emb_trigger_quarter_corpus" -> medianOf(estreamRuns.map(_._1)),
-        "stream_emb_trigger_full_corpus" -> medianOf(estreamRuns.map(_._2))) else Seq.empty) ++
-      (if (runE64Stream) Seq(
-        "stream_emb64_trigger_quarter_corpus" -> medianOf(e64streamRuns.map(_._1)),
-        "stream_emb64_trigger_full_corpus" -> medianOf(e64streamRuns.map(_._2))) else Seq.empty) ++
-      (if (runCStream) Seq(
-        "stream_cluster_trigger_quarter_corpus" -> medianOf(cstreamRuns.map(_._1)),
-        "stream_cluster_trigger_full_corpus" -> medianOf(cstreamRuns.map(_._2))) else Seq.empty)
+    val suiteResults = names.map(n => n -> median(passTimes.map(_(n))))
+    val results = suiteResults ++ scenarioRuns.flatMap { case (s, runs) =>
+      Seq(s.keys._1 -> median(runs.map(_._1)),
+        s.keys._2 -> median(runs.map(_._2)))
+    }
     val canaryAfter = canaryPass()
     val canaryDrift = {
       val b = canaryBefore.map(_._2).filter(_ >= 0).sum
@@ -697,7 +193,7 @@ object Bench {
     }
     def r3(x: Double): String =
       if (x < 0) "-1" else BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val eps = ingestEventsPerSec(spark, benchTmp("graft-ingest"))
+    val eps = ingestEventsPerSec(spark, ctx.tmp("graft-ingest"))
     // Full-precision medians + (min,max) spreads go to a local artifact
     // (committed per round as bench_local_r*.json); stdout gets a COMPACT
     // line — the harness that collects BENCH_r*.json keeps only the last
@@ -722,15 +218,12 @@ object Bench {
       if (only.isDefined || !java.nio.file.Files.exists(prevArtifact)) None
       else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readAllBytes(prevArtifact))).toOption
-    val prevQueries: Map[String, Double] = prevRoot
-      .flatMap(r => Option(r.get("queries"))).map { q =>
-        val b = Map.newBuilder[String, Double]
-        val it = q.properties().iterator()
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0)
-        }
-        b.result()
-      }.getOrElse(Map.empty)
+    /** One `{key: seconds}` object of the previous artifact. */
+    def prevMap(field: String): Map[String, Double] = prevRoot
+      .flatMap(r => Option(r.get(field)))
+      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap)
+      .getOrElse(Map.empty)
+    val prevQueries = prevMap("queries")
     def isTriggerKey(k: String) = k.contains("_incr") || k.contains("_trigger_")
     // Cross-round HOST normalization (round-11 lesson: the gate fired
     // on unchanged code because the previous artifact was recorded on
@@ -742,15 +235,7 @@ object Bench {
     // the alert threshold widens by (canaries disagreeing 2x among
     // themselves means per-key ratios carry that much noise, so a
     // 1.6x trigger ratio is not yet code signal).
-    val prevCanary: Map[String, Double] = prevRoot
-      .flatMap(r => Option(r.get("canary_before"))).map { c =>
-        val b = Map.newBuilder[String, Double]
-        val it = c.properties().iterator()
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0)
-        }
-        b.result()
-      }.getOrElse(Map.empty)
+    val prevCanary = prevMap("canary_before")
     val canaryRatios = canaryBefore.flatMap { case (k, v) =>
       prevCanary.get(k).filter(_ > 0).flatMap(p =>
         if (v > 0) Some(v / p) else None)
@@ -804,35 +289,14 @@ object Bench {
       * elevated means code (or cross-round host drift — then the
       * CLAUDE.md worktree A/B is the tiebreak, and the verdict string
       * says so). */
-    def standaloneThunk(k: String): Option[() => Double] = k match {
-      case "stream_trigger_quarter_corpus" => Some(() => streamingTriggerOnce(sfDir, 0.25))
-      case "stream_trigger_full_corpus" => Some(() => streamingTriggerOnce(sfDir, 1.0))
-      case "stream_exact_trigger_quarter_corpus" => Some(() => streamingExactTriggerOnce(sfDir, 0.25))
-      case "stream_exact_trigger_full_corpus" => Some(() => streamingExactTriggerOnce(sfDir, 1.0))
-      case "stream_cdc_trigger_quarter_corpus" => Some(() => streamingCdcTriggerOnce(sfDir, 0.25))
-      case "stream_cdc_trigger_full_corpus" => Some(() => streamingCdcTriggerOnce(sfDir, 1.0))
-      case "stream_span_trigger_quarter_corpus" => Some(() => streamingSpanTriggerOnce(sfDir, 0.25))
-      case "stream_span_trigger_full_corpus" => Some(() => streamingSpanTriggerOnce(sfDir, 1.0))
-      case "stream_simhash_trigger_quarter_corpus" => Some(() => streamingSimhashTriggerOnce(sfDir, 0.25))
-      case "stream_simhash_trigger_full_corpus" => Some(() => streamingSimhashTriggerOnce(sfDir, 1.0))
-      case "stream_simhash64_trigger_quarter_corpus" => Some(() => streamingSimhash64TriggerOnce(sfDir, 0.25))
-      case "stream_simhash64_trigger_full_corpus" => Some(() => streamingSimhash64TriggerOnce(sfDir, 1.0))
-      case "stream_minhash_trigger_quarter_corpus" => Some(() => streamingMinhashTriggerOnce(sfDir, 0.25))
-      case "stream_minhash_trigger_full_corpus" => Some(() => streamingMinhashTriggerOnce(sfDir, 1.0))
-      case "stream_emb_trigger_quarter_corpus" => Some(() => streamingEmbTriggerOnce(sfDir, 0.25))
-      case "stream_emb_trigger_full_corpus" => Some(() => streamingEmbTriggerOnce(sfDir, 1.0))
-      case "stream_emb64_trigger_quarter_corpus" => Some(() => streamingEmb64TriggerOnce(sfDir, 0.25))
-      case "stream_emb64_trigger_full_corpus" => Some(() => streamingEmb64TriggerOnce(sfDir, 1.0))
-      case "stream_cluster_trigger_quarter_corpus" => Some(() => streamingClusterTriggerOnce(100000L))
-      case "stream_cluster_trigger_full_corpus" => Some(() => streamingClusterTriggerOnce(400000L))
-      case qk if SparkEntry.queries.contains(qk) => Some(() => runNoop(qk))
-      case _ => None
-    }
+    def standaloneThunk(k: String): Option[() => Double] =
+      remeasure(k).map(f => () => f(ctx))
+        .orElse(Option.when(SparkEntry.queries.contains(k))(() => runNoop(k)))
     val resultMap = results.toMap
     val standaloneAdjudications: Seq[(String, Double, String)] =
       regressions.map { case (k, norm) =>
         val sMed = standaloneThunk(k)
-          .map(th => medianOf((0 until reps).map(_ => th()))._1)
+          .map(th => median((0 until reps).map(_ => th()))._1)
           .getOrElse(-1.0)
         val prev = prevQueries.getOrElse(k, -1.0)
         val inSuite = resultMap.get(k).map(_._1).getOrElse(-1.0)
@@ -896,16 +360,328 @@ object Bench {
       else resultsCanon.filter(kv => headlineKeys.contains(kv._1))
     val qs = jmap(hl.map { case (k, (med, _, _)) => k -> med }, r3)
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"canary_drift":${r3(canaryDrift)},"host_factor":${r3(hostFactor)},"ingest_events_per_sec":$eps,"trigger_regression_alert":${regressions.nonEmpty},"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir","full":"$artifact"}""")
-    spark.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(benchRoot.toFile)
   }
+
+  /** Median with (min, max) spread; one failed sample (-1) fails the
+    * key. Even N reports the upper-middle sample. */
+  private[graft] def median(ts: Seq[Double]): (Double, Double, Double) =
+    if (ts.exists(_ < 0)) (-1.0, -1.0, -1.0)
+    else (ts.sorted.apply(ts.size / 2), ts.min, ts.max)
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** What a scenario call needs from the running bench: the session,
+    * the timed and the warm-up scale factor, and the bench temp root. */
+  private[graft] final class Ctx(val spark: SparkSession, val sfDir: String,
+                                 val warmDir: String, root: java.nio.file.Path) {
+    /** A fresh dir under the bench root. */
+    def tmp(prefix: String): String =
+      java.nio.file.Files.createTempDirectory(root, prefix).toString
+    private val stores = scala.collection.mutable.Map.empty[String, String]
+    /** One dir per name for the whole run: a store-family row's timed
+      * write overwrites the previous call's store at the same path. */
+    def store(name: String): String = stores.getOrElseUpdate(name, tmp(name))
+  }
+
+  /** One bench scenario outside `SparkEntry.queries`: two result keys,
+    * a warm-up call, and the timed call giving one seconds value per
+    * key (-1 = failed). `remeasure` times one key alone for the
+    * standalone adjudication; trigger rows fill it. */
+  private[graft] final case class Scenario(
+      keys: (String, String),
+      warm: Ctx => Unit,
+      timed: Ctx => (Double, Double),
+      remeasure: Map[String, Ctx => Double] = Map.empty)
+
+  /** The three calls of a trigger row: `Warm` absorbs codegen/JIT,
+    * `Quarter` and `Full` are the two timed seed sizes. */
+  private sealed abstract class Point(val name: String, val seedFrac: Double)
+  private case object Warm extends Point("warm", 1.0)
+  private case object Quarter extends Point("quarter", 0.25)
+  private case object Full extends Point("full", 1.0)
+
+  /** A trigger row: `once(c, point)` seeds the state and times ONE
+    * trigger; the quarter and full seeds are timed back to back. */
+  private def triggerRow(quarterKey: String, fullKey: String)(
+      once: (Ctx, Point) => Double): Scenario = {
+    val quarter = (c: Ctx) => once(c, Quarter)
+    val full = (c: Ctx) => once(c, Full)
+    Scenario((quarterKey, fullKey), c => once(c, Warm),
+      c => (quarter(c), full(c)), Map(quarterKey -> quarter, fullKey -> full))
+  }
+
+  /** The one trigger harness: clear the cache, settle the heap, let
+    * `seed` write the state stores under a fresh dir and hand back the
+    * trigger call, then time that call alone. Any failure gives -1. */
+  private def timeTrigger(c: Ctx, label: String)(
+      seed: String => (() => Unit)): Double = {
+    c.spark.catalog.clearCache()
+    System.gc()
+    try {
+      val trigger = seed(c.tmp(s"graft-$label"))
+      val t0 = System.nanoTime()
+      trigger()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $label failed: ${e.getMessage}")
+      -1.0
+    }
+  }
+
+  private final case class Table(name: String, id: String, value: String)
+  private val Docs = Table("documents", "doc_id", "text")
+  private val Vectors = Table("embeddings", "vec_id", "embedding")
+
+  /** Streaming trigger cost vs corpus size: seed the state stores from
+    * a PREFIX of `t`, then time ONE trigger on the same fixed tail
+    * batch (the last ~4% of ids). Run at a quarter-size and a
+    * full-size seed — the two timings being ~equal is the measured
+    * form of the "per-trigger cost tracks arrival rate, not corpus
+    * size" claim. The warm-up call runs a full-size seed at the
+    * smallest scale factor. */
+  private def tailRow(quarterKey: String, fullKey: String, t: Table)(
+      seed: (DataFrame, String) => Unit)(
+      call: (DataFrame, String) => Unit): Scenario =
+    triggerRow(quarterKey, fullKey) { (c, p) =>
+      val family = quarterKey.stripSuffix("_quarter_corpus")
+      timeTrigger(c, s"${family}_${p.name}") { base =>
+        val dir = if (p == Warm) c.warmDir else c.sfDir
+        val rows = c.spark.read.parquet(s"$dir/${t.name}.parquet")
+        val maxId = rows.agg(max(t.id)).collect()(0).getLong(0)
+        val batchStart = maxId - math.max(1L, maxId / 25) // last ~4%
+        val seedN = (batchStart * p.seedFrac).toLong
+        seed(rows.filter(col(t.id) < seedN).select(t.id, t.value), base)
+        val batch = rows.filter(col(t.id) >= batchStart).select(t.id, t.value)
+        () => call(batch, base)
+      }
+    }
+
+  /** A store-family row: write the shared store ONCE, then run its
+    * three consumers from it; (write, family) seconds come from one
+    * run. The store keeps one path for the whole bench. */
+  private def storeRow(writeKey: String, familyKey: String, table: String)(
+      write: (DataFrame, String) => Unit)(
+      family: (DataFrame, Option[DataFrame]) => Unit): Scenario = {
+    def once(c: Ctx, dir: String): (Double, Double) = {
+      c.spark.catalog.clearCache()
+      System.gc()
+      val store = c.store(writeKey)
+      try {
+        val rows = c.spark.read.parquet(s"$dir/$table.parquet")
+        val t0 = System.nanoTime()
+        write(rows, store)
+        val tWrite = (System.nanoTime() - t0) / 1e9
+        val pre = Some(c.spark.read.parquet(store))
+        val t1 = System.nanoTime()
+        family(rows, pre)
+        (tWrite, (System.nanoTime() - t1) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $familyKey failed: ${e.getMessage}")
+        (-1.0, -1.0)
+      }
+    }
+    Scenario((writeKey, familyKey), c => once(c, c.warmDir), c => once(c, c.sfDir))
+  }
+
+  /** Every bench scenario beyond `SparkEntry.queries`, in run order.
+    * `run` gates, warms, times and reports each row with one loop, and
+    * re-measures a flagged trigger key through its row, so adding a
+    * scenario is adding a row. */
+  private[graft] val Scenarios: Seq[Scenario] = Seq(
+    // The streaming CLUSTER fold: seed a label store of `seedN` docs
+    // (paired into 2-clusters), then time ONE processPairs of a fixed
+    // 1k-pair batch (each pair bridges one old cluster to one new
+    // doc). The fold is touched-only, so the quarter-vs-full gap can
+    // only come from the delta store's columnar scan.
+    triggerRow("stream_cluster_trigger_quarter_corpus",
+        "stream_cluster_trigger_full_corpus") { (c, p) =>
+      val seedN = p match {
+        case Warm => 10000L
+        case Quarter => 100000L
+        case Full => 400000L
+      }
+      timeTrigger(c, s"stream_cluster_trigger_${p.name}") { base =>
+        val labels = s"$base/labels"
+        c.spark.range(seedN)
+          .select(col("id").as("doc_id"),
+            expr("id - id % 2").as("label"),
+            expr("CAST(0 AS BIGINT)").as("batch_id"))
+          .write.mode("overwrite").parquet(labels)
+        val pairs = c.spark.range(1000)
+          .select(expr("id * 2").as("doc_a"),
+            (col("id") + seedN).as("doc_b"))
+        () => StreamingClusters.processPairs(pairs, 1L, labels)
+      }
+    },
+    // The n-gram near-dup loop (state = corpus + shingles + gram-df):
+    // the trigger reads only the maintained stores; nothing
+    // re-shingles corpus text.
+    tailRow("stream_trigger_quarter_corpus", "stream_trigger_full_corpus",
+        Docs) { (seed, base) =>
+      seed.write.mode("overwrite").parquet(s"$base/corpus")
+      Dedup.writeShingleStore(seed, s"$base/shingles")
+      seed.sparkSession.read.parquet(s"$base/shingles").groupBy("gram")
+        .agg(count(lit(1)).as("df_cnt"))
+        .write.mode("overwrite").parquet(s"$base/gramdf")
+    } { (batch, base) =>
+      StreamingDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/shingles",
+        s"$base/gramdf", maxDf = 5L, minJaccard = 0.2)
+    },
+    // The streaming MINHASH member (state = shingle store + per-doc
+    // signature store), seeded under the poly family.
+    tailRow("stream_minhash_trigger_quarter_corpus",
+        "stream_minhash_trigger_full_corpus", Docs) { (seed, base) =>
+      Dedup.writeShingleStore(seed, s"$base/shingles")
+      Dedup.minhashSignatures(seed, "poly")
+        .write.mode("overwrite").parquet(s"$base/sig")
+    } { (batch, base) =>
+      StreamingMinhashDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/shingles", s"$base/sig",
+        minJaccard = 0.2, idFamily = "poly")
+    },
+    // The streaming EMBEDDING member (state = the shared ANN quantized
+    // index), seeded from a vector prefix.
+    tailRow("stream_emb_trigger_quarter_corpus",
+        "stream_emb_trigger_full_corpus", Vectors) { (seed, base) =>
+      Embeddings.writeQuantizedStore(seed, s"$base/qv")
+      Embeddings.writeEmbFingerprintStore(seed, s"$base/qv_fp")
+    } { (batch, base) =>
+      // the 32-plane banding is PINNED (the default is now
+      // auto-width): this key tracks the narrow mode's
+      // linear-in-state cost across rounds
+      StreamingEmbeddingDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/qv", minCosine = 0.4,
+        planes = Embeddings.NumPlanes)
+    },
+    // The WIDE (64-plane, 16-bit-band) variant of the embedding
+    // trigger — the corpus-scale banding. The quantized store is
+    // width-agnostic (fingerprints are derived), so the pair of keys
+    // measures the same state under both bandings: the 32-plane
+    // trigger's candidate mass grows linearly with the store (4x8-bit
+    // bands saturate — the simhash-32 shape, measured 4.7x per 4x
+    // state in the sf10 probe), the wide banding keeps occupancy
+    // flat at a measured recall S-curve shift (EmbeddingsSpec).
+    tailRow("stream_emb64_trigger_quarter_corpus",
+        "stream_emb64_trigger_full_corpus", Vectors) { (seed, base) =>
+      Embeddings.writeQuantizedStore(seed, s"$base/qv")
+      Embeddings.writeEmbFingerprintStore(seed, s"$base/qv_fp")
+    } { (batch, base) =>
+      StreamingEmbeddingDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/qv", minCosine = 0.4,
+        planes = Embeddings.NumPlanesWide)
+    },
+    // The cheapest-state streaming member, SIMHASH (state = ONE long
+    // per corpus doc): the fp store is seeded under the `poly` family
+    // at 32 bits (the `simhash_fp` projection fingerprint path). The
+    // trigger's only file scan is the fp store, so the quarter-vs-full
+    // gap can only come from its columnar scan.
+    tailRow("stream_simhash_trigger_quarter_corpus",
+        "stream_simhash_trigger_full_corpus", Docs) { (seed, base) =>
+      Dedup.writeSimhashStore(seed, s"$base/fp", idFamily = "poly")
+    } { (batch, base) =>
+      // explicitly the LEGACY 32-bit width: the library default
+      // flipped to SimBitsWide, but this key IS the 32-bit series
+      // (the cliff the pair of keys exists to keep measured)
+      StreamingSimhashDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/fp",
+        maxHamming = 3, idFamily = "poly",
+        fpBits = Dedup.SimBits)
+    },
+    // The WIDE (64-bit, 16-bit-band) variant of the simhash trigger —
+    // the corpus-scale setting. Same seed/batch protocol under the
+    // poly gram family (the native simhash_fp expression is 32-bit);
+    // the pair of keys exists so the 32-vs-64 band-occupancy story is
+    // measured, not asserted (the sf10 probe caught the 32-bit
+    // trigger growing linearly with the store).
+    tailRow("stream_simhash64_trigger_quarter_corpus",
+        "stream_simhash64_trigger_full_corpus", Docs) { (seed, base) =>
+      Dedup.writeSimhashStore(seed, s"$base/fp",
+        idFamily = "poly", fpBits = Dedup.SimBitsWide)
+    } { (batch, base) =>
+      StreamingSimhashDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/pairs", s"$base/fp",
+        maxHamming = 3, idFamily = "poly",
+        fpBits = Dedup.SimBitsWide)
+    },
+    // The EXACT-dedup ingest loop (state = hash + bloom stores). The
+    // bloom store is <= m/64 rows at ANY seed, so the quarter-vs-full
+    // gap can only come from the hash-store verify join's columnar
+    // scan.
+    tailRow("stream_exact_trigger_quarter_corpus",
+        "stream_exact_trigger_full_corpus", Docs) { (seed, base) =>
+      seed.select(col("doc_id"), md5(col("text")).as("content_hash"))
+        .write.mode("overwrite").parquet(s"$base/hashes")
+      Dedup.bloomWords(seed)
+        .write.mode("overwrite").parquet(s"$base/bloom")
+    } { (batch, base) =>
+      StreamingExactDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/hashes", s"$base/bloom",
+        Dedup.BloomBits, Dedup.BloomProbes)
+    },
+    // The CDC chunk-store admission gate (state = the (fp, len) chunk
+    // store). The trigger's only file scan is the chunk store, so the
+    // quarter-vs-full gap can only come from its columnar scan + the
+    // membership join's store-side cardinality.
+    tailRow("stream_cdc_trigger_quarter_corpus",
+        "stream_cdc_trigger_full_corpus", Docs) { (seed, base) =>
+      Dedup.writeCdcChunkStore(seed, s"$base/chunks")
+    } { (batch, base) =>
+      StreamingCdcDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/chunks")
+    },
+    // The streaming SPAN member (state = the SUM-folded gram-count
+    // delta store). The trigger's only file scan is the gram-count
+    // store, so the quarter-vs-full gap can only come from its
+    // columnar scan + the count-probe join's store-side cardinality.
+    tailRow("stream_span_trigger_quarter_corpus",
+        "stream_span_trigger_full_corpus", Docs) { (seed, base) =>
+      TextAnalysis.spanGramCounts(seed)
+        .write.mode("overwrite").parquet(s"$base/gramcnt")
+    } { (batch, base) =>
+      StreamingSpanDedup.processBatch(batch, 0L,
+        s"$base/corpus", s"$base/stats", s"$base/gramcnt",
+        k = 5, maxDupRatio = 0.5)
+    },
+    // Shared-shingle-store scenario: materialize the (doc_id, gram)
+    // store ONCE, then run the whole near-dup family (ngram + minhash
+    // + simhash) from it — the index-at-write-time shape every real
+    // corpus pipeline uses. Timed as TWO keys: the one-time store
+    // write (`shingle_store_write`, amortized across every consumer
+    // of the store, not just these three) and the from-store family
+    // run (`dedup_family_shared`, to compare against the sum of the
+    // three cold per-query medians that each pay tokenize+gram
+    // explode themselves).
+    storeRow("shingle_store_write", "dedup_family_shared", "documents")(
+        Dedup.writeShingleStore(_, _)) { (docs, sh) =>
+      noop(Dedup.dedupNgram(docs, precomputedShingles = sh))
+      noop(Dedup.dedupMinhash(docs, precomputedShingles = sh))
+      noop(Dedup.dedupSimhash(docs, precomputedShingles = sh))
+    },
+    // Shared-quantized-store scenario, the embedding-family twin of
+    // `dedup_family_shared`: materialize the (vec_id, qarr, nq) ANN
+    // index ONCE (`quantized_store_write`), then run three consumers
+    // (sign-bit near-dup, kNN graph, per-cell outliers) from it
+    // (`emb_family_shared`) — vs each cold query re-quantizing the
+    // corpus itself.
+    storeRow("quantized_store_write", "emb_family_shared", "embeddings")(
+        Embeddings.writeQuantizedStore(_, _)) { (emb, qv) =>
+      noop(Embeddings.dedupEmbedding(emb, precomputedQuantized = qv))
+      noop(Embeddings.knnGraph(emb, precomputedQuantized = qv))
+      noop(Embeddings.embOutliers(emb, precomputedQuantized = qv))
+    })
+
+  /** The standalone re-measure of a scenario key, if its row has one. */
+  private[graft] def remeasure(key: String): Option[Ctx => Double] =
+    Scenarios.flatMap(_.remeasure.get(key)).headOption
 
   /** Event-log ingest throughput: parse 256k synthetic SparkListener
     * JSON lines through the real parser path (text read -> from_json
     * explicit schema -> hot-field extraction) into a noop sink.
     * Comparable to the reference's 20-30k events/sec DuckDB-insert
     * claim (reference: README.md:13). */
-  private def ingestEventsPerSec(spark: org.apache.spark.sql.SparkSession,
+  private def ingestEventsPerSec(spark: SparkSession,
                                  dir: String): Long = {
     val nFiles = 64
     val perFile = 4000
@@ -926,12 +702,10 @@ object Bench {
     // in one JVM) — a single timed run reports compiler noise, the
     // fastest of three reports the steady state an actual ingest
     // pipeline runs at.
-    graft.events.EventLogParser.read(spark, dir)
-      .write.format("noop").mode("overwrite").save()
+    noop(graft.events.EventLogParser.read(spark, dir))
     val secs = (0 until 3).map { _ =>
       val t0 = System.nanoTime()
-      graft.events.EventLogParser.read(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      noop(graft.events.EventLogParser.read(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }.min
     (nFiles.toLong * perFile / secs).toLong

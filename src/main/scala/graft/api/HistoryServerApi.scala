@@ -153,26 +153,12 @@ FROM canon"""
                         minDate: Option[String] = None,
                         maxDate: Option[String] = None): DataFrame =
     Trends.perfTrends(canon, limit, minDate, maxDate)
-  def gcTimeTrends(canon: DataFrame, limit: Int = 1000,
-                   minDate: Option[String] = None,
-                   maxDate: Option[String] = None): DataFrame =
-    Trends.gcTrends(canon, limit, minDate, maxDate)
-  def cpuUtilization(canon: DataFrame, limit: Int = 2000,
-                     minDate: Option[String] = None,
-                     maxDate: Option[String] = None): DataFrame =
-    Trends.cpuUtil(canon, limit, minDate, maxDate)
-  def memoryUsage(canon: DataFrame, limit: Int = 2000,
-                  minDate: Option[String] = None,
-                  maxDate: Option[String] = None): DataFrame =
-    Trends.memUsage(canon, limit, minDate, maxDate)
   def crossAppSummary(canon: DataFrame): DataFrame =
     CrossApp.crossAppSummary(canon)
   def taskDistribution(canon: DataFrame, limit: Int = 1000): DataFrame =
     CrossApp.taskDistribution(canon, limit)
   def executorUtilization(canon: DataFrame, limit: Int = 50): DataFrame =
     CrossApp.executorUtilization(canon, limit)
-  def resourceUtilization(canon: DataFrame, limit: Int = 2000): DataFrame =
-    CrossApp.resourceUtilMetrics(canon, limit)
   def topResourceConsumers(canon: DataFrame, limit: Int = 10): DataFrame =
     Optimization.resourceHogs(canon, limit)
   def efficiencyAnalysis(canon: DataFrame, limit: Int = 20): DataFrame =

@@ -131,22 +131,6 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
         s"checkpoint swap failed: rename($tmp, $p)")
   }
 
-  /** Paths changed since the last committed scan (new, grown, or
-   *  rewritten — a same-length in-place rewrite still moves the
-   *  modification time, so length alone would miss it). */
-  def pendingFiles(dirUri: String): Seq[String] = {
-    val seen = loadState()
-    listSource(dirUri)
-      .filter { s =>
-        seen.get(s.getPath.toString) match {
-          case Some(st) =>
-            s.getLen != st.seenLen || s.getModificationTime != st.modTime
-          case None => true
-        }
-      }
-      .map(_.getPath.toString)
-  }
-
   /** Parse the pending delta and hand it to `process`; the checkpoint
    *  is committed ONLY after `process` returns normally — at-LEAST-once
    *  semantics (a failure leaves the delta pending, so the next scan
