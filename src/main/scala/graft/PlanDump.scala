@@ -1,13 +1,23 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Optimization-round utility: dump `explain("formatted")` for a
   * comma-separated list of `SparkEntry.queries` keys to
-  * `<outDir>/<key>_<suffix>.txt` — the before/after plan evidence the
-  * optimization rounds commit under plans/r16 etc. Runs at the bench's
-  * core count/shuffle settings so plan shapes (broadcast decisions,
-  * AQE) match what the bench times.
+  * `<outDir>/<key>_<suffix>.txt`, and the plans that EXECUTED while the
+  * key's frame was built (the pinned operators' cache/checkpoint
+  * brackets, see [[executedPlans]]) to `<outDir>/<key>_<suffix>_executed.txt`
+  * — the before/after plan evidence the optimization rounds commit
+  * under plans/r16 etc. Runs at the bench's core count/shuffle settings
+  * so plan shapes (broadcast decisions, AQE) match what the bench times.
   *
   * Usage: runMain graft.PlanDump <keys> <sfDir> <outDir> <suffix> */
 object PlanDump {
@@ -27,26 +37,74 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_PLAN_LAZY=1: dump through the graft.pin.results=false test
-    // seam so operators that eagerly pin intermediate results (the
-    // pinnedVerify/withJaccard brackets) show their COMPOSED plan
-    // instead of an RDD scan over pinned blocks — the shape the plan
-    // audits assert and the optimization evidence reviews.
-    if (sys.env.get("GRAFT_PLAN_LAZY").contains("1"))
-      spark.conf.set("graft.pin.results", "false")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    def write(name: String, text: String): Unit = {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outDir, name), text)
+      println(s"[plandump] wrote $outDir/$name")
+    }
     for (k <- keys) {
       try {
-        val df = SparkEntry.queries(k)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${k}_$suffix.txt"), plan)
-        println(s"[plandump] wrote $outDir/${k}_$suffix.txt")
+        val (df, executed) = executedPlans(spark)(SparkEntry.queries(k)(spark, sfDir))
+        write(s"${k}_$suffix.txt", df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        write(s"${k}_${suffix}_executed.txt", executed.zipWithIndex.map {
+          case (p, i) => s"== executed query ${i + 1} ==\n${p.treeString}"
+        }.mkString("\n"))
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $k failed: ${e.getMessage}")
       }
     }
     spark.stop()
   }
+
+  /** `body`'s result and the physical plan of every query that
+   *  completed successfully while it ran, in completion order. Pinned
+   *  operators run their heavy work inside the call (cache and
+   *  `localCheckpoint` brackets) and return a scan over pinned blocks,
+   *  so these — not the returned frame's plan — are the plans a
+   *  scale audit must inspect.
+   *
+   *  Each plan is flattened: an AQE root becomes its final plan, a
+   *  query stage its stage plan, and the first scan of each cached
+   *  relation in a plan becomes that relation's `cachedPlan` (a cache
+   *  materializes once however often it is read, so later scans of it
+   *  stay leaves, as does a reused exchange).
+   *
+   *  Listener delivery is asynchronous, so after `body` one marker
+   *  query runs and the call waits until the listener has seen it:
+   *  the queue delivers in order, so every earlier completion has been
+   *  recorded by then. */
+  def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val marker = spark.range(1)
+    val markerSeen = new CountDownLatch(1)
+    val completed = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) markerSeen.countDown()
+        else completed.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = body
+      marker.collect()
+      require(markerSeen.await(60, TimeUnit.SECONDS),
+        "query listener did not deliver the marker query within 60 s")
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (result, completed.asScala.toSeq.map(qe => flatten(qe.executedPlan,
+      java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]()))))
+  }
+
+  private def flatten(p: SparkPlan, inlined: java.util.Set[SparkPlan]): SparkPlan =
+    p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan, inlined)
+      case s: QueryStageExec => flatten(s.plan, inlined)
+      case m: InMemoryTableScanExec if inlined.add(m.relation.cachedPlan) =>
+        flatten(m.relation.cachedPlan, inlined)
+      case other => other.withNewChildren(other.children.map(flatten(_, inlined)))
+    }
 }

@@ -237,12 +237,6 @@ object Clustering {
   private[graft] def componentsAuto(pairs: DataFrame,
                                     reliable: Boolean = false): DataFrame =
     if (reliable) connectedComponentsBounded(pairs, reliable = true)
-    // graft.pin.results=false keeps the pair chain LAZY (the
-    // pinnedVerify seam) so plan audits of the batch cluster family
-    // still see the composed shape instead of an RDD scan.
-    else if (pairs.sparkSession.conf
-      .get("graft.pin.results", "true") == "false")
-      connectedComponentsBounded(pairs)
     else connectedComponentsBounded(pairs.localCheckpoint())
 
   def connectedComponentsBounded(pairs: DataFrame,

@@ -481,31 +481,24 @@ ORDER BY n.source"""
     // shared sigBoth / ngCands / mhCands caches, which Spark's block
     // locking keeps correct. r17 measured the race cheaper than a
     // sigBoth.count() ahead of it, which adds a job to the graph.
-    // Lazy-pin mode (plan audits) keeps the old single-threaded lazy
-    // shape — no actions, nothing to overlap.
     val fp = sigBoth.select(col("doc_id"), simhashFpCol.as("fp"))
-    val shPairsLazy = simhashVerify(
+    val shChain = simhashVerify(
         saltedBucketPairs(simhashNibbles(fp), Seq("band", "nib"), "doc_id"),
         fp, maxHamming = 3)
       .select("doc_a", "doc_b")
-    val lazyPins =
-      sh.sparkSession.conf.get("graft.pin.results", "true") == "false"
-    def mkVerified() = withJaccard(ngCands.union(mhCands).distinct(), sh)
-      .filter(col("jaccard") >= 0.2)
-      .select("doc_a", "doc_b")
-    val (verified, shPairs) =
-      if (lazyPins) (mkVerified(), shPairsLazy)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try {
-          val fVer = scala.concurrent.Future { mkVerified() } // pinned by withJaccard
-          val fSh = scala.concurrent.Future { shPairsLazy.localCheckpoint() }
-          (scala.concurrent.Await.result(fVer, scala.concurrent.duration.Duration.Inf),
-            scala.concurrent.Await.result(fSh, scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val (verified, shPairs) = try {
+      val fVer = scala.concurrent.Future { // pinned by withJaccard
+        withJaccard(ngCands.union(mhCands).distinct(), sh)
+          .filter(col("jaccard") >= 0.2)
+          .select("doc_a", "doc_b")
       }
+      val fSh = scala.concurrent.Future { shChain.localCheckpoint() }
+      (scala.concurrent.Await.result(fVer, scala.concurrent.duration.Duration.Inf),
+        scala.concurrent.Await.result(fSh, scala.concurrent.duration.Duration.Inf))
+    } finally pool.shutdown()
     def tag(det: String, df: DataFrame) =
       df.select(lit(det).as("det"), col("doc_a"), col("doc_b"))
     val tagged =
@@ -840,27 +833,19 @@ shid AS (
    *  `localCheckpoint` (block-manager blocks are GC-cleaned, unlike
    *  CacheManager entries), then DROP the caches — per-call cost is
    *  O(batch + one state-store scan) again and nothing cached
-   *  outlives the call.
-   *
-   *  Test seam: `graft.pin.results=false` returns the LAZY composed
-   *  frame instead (no caching, no checkpoint) so plan audits can
-   *  assert the structural shape (batch-below-pair-join, store-only
-   *  scans) that pinning would otherwise collapse to an RDD scan. */
+   *  outlives the call. */
   private[pipeline] def pinnedVerify(
       cands: DataFrame, state: DataFrame,
       idCol: String = "doc_id", aCol: String = "doc_a",
       bCol: String = "doc_b")(
-      verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    if (cands.sparkSession.conf.get("graft.pin.results", "true") == "false")
-      verify(cands, endpointRestrict(state, cands, idCol, aCol, bCol))
-    else {
-      val c = cands.cache()
-      val touched = endpointRestrict(state, c, idCol, aCol, bCol).cache()
-      val out = verify(c, touched).localCheckpoint()
-      touched.unpersist()
-      c.unpersist()
-      out
-    }
+      verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val c = cands.cache()
+    val touched = endpointRestrict(state, c, idCol, aCol, bCol).cache()
+    val out = verify(c, touched).localCheckpoint()
+    touched.unpersist()
+    c.unpersist()
+    out
+  }
 
   private[pipeline] def withJaccard(cands: DataFrame, sh: DataFrame,
                                     restrict: Boolean = true): DataFrame = {
@@ -882,20 +867,15 @@ shid AS (
     // list re-ran candidate generation twice more); the pin is what
     // makes the restriction free. Incremental callers pass
     // restrict = false — their candidate and state frames arrive
-    // already pinned + endpoint-restricted (pinnedVerify). The
-    // graft.pin.results=false seam preserves the fully-lazy shape for
-    // plan audits (the pinnedVerify discipline).
-    val pin = restrict &&
-      cands.sparkSession.conf.get("graft.pin.results", "true") != "false"
-    val c = if (pin) cands.localCheckpoint() else cands
+    // already pinned + endpoint-restricted (pinnedVerify).
+    val c = if (restrict) cands.localCheckpoint() else cands
     // r17: the endpoint-restricted frame is consumed THREE times
     // (size agg + both intersection sides) — uncached, each
     // consumption re-scans the shingle store behind the semi-join.
     // shT is dup-endpoint-bounded (never the store), so cache it and
     // pin the pair-cardinality verify result, then drop the cache —
     // pinnedVerify's bracket applied to the batch path.
-    val shT0 = if (restrict) endpointRestrict(sh, c) else sh
-    val shT = if (pin) shT0.cache() else shT0
+    val shT = if (restrict) endpointRestrict(sh, c).cache() else sh
     val sizes = shT.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = c
       .join(shT.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
@@ -906,7 +886,7 @@ shid AS (
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
       .withColumn("jaccard",
         col("inter_n") * lit(1.0) / (col("n_a") + col("n_b") - col("inter_n")))
-    if (!pin) composed
+    if (!restrict) composed
     else {
       val out = composed.localCheckpoint()
       shT.unpersist()
@@ -1952,8 +1932,6 @@ ORDER BY c.doc_a, c.doc_b"""
     // the broadcast semi-join.
     val rareList = rareBatchGrams.limit(RareGramPushdownMax + 1)
       .collect().map(_.getString(0))
-    if (sys.env.contains("GRAFT_DEBUG_RARELIST"))
-      System.err.println(s"[debug] rareList size = ${rareList.length}")
     val shTouch = (if (rareList.length <= RareGramPushdownMax)
         sh.filter(col("gram").isin(rareList.toIndexedSeq: _*))
       else sh.join(broadcast(rareBatchGrams), Seq("gram"), "left_semi"))
@@ -3881,15 +3859,10 @@ FROM scd_per ORDER BY source"""
     // keys, probe keys, the flag join) and is bounded by the batch —
     // pin it once instead of re-running the chunking per consumer
     // (measured: the uncached triple chain dominated the sf10 trigger
-    // constant). Same `graft.pin.results=false` test seam as
-    // pinnedVerify so plan audits see the composed shape. Batch
-    // chunking is the native cdc_chunks expression: zero exchanges
-    // before the pin.
-    val occRaw = cdcOccurrences(batch.select("doc_id", "text"), avgChunk, Nil)
-    val occ =
-      if (batch.sparkSession.conf.get("graft.pin.results", "true") == "false")
-        occRaw
-      else occRaw.localCheckpoint()
+    // constant). Batch chunking is the native cdc_chunks expression:
+    // zero exchanges before the pin.
+    val occ = cdcOccurrences(batch.select("doc_id", "text"), avgChunk, Nil)
+      .localCheckpoint()
     val batchCanon = occ.groupBy("fp", "len")
       .agg(min(col("occ_key")).as("first_batch_key"))
     // Membership probe with the BATCH side broadcast: the chunk store

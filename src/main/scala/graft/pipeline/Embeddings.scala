@@ -882,7 +882,16 @@ ORDER BY a.vec_id"""
   def knnGraph(emb: DataFrame, k: Int = 5,
                numCentroids: Int = AutoCentroids,
                precomputedQuantized: Option[DataFrame] = None,
-               trainedCentroids: Option[DataFrame] = None): DataFrame = {
+               trainedCentroids: Option[DataFrame] = None): DataFrame =
+    knnGraphCaching(emb, k, numCentroids, precomputedQuantized,
+      trainedCentroids)._1
+
+  /** [[knnGraph]] plus the frames it cached, for a caller that pins
+   *  the graph and then drops them. */
+  private def knnGraphCaching(emb: DataFrame, k: Int, numCentroids: Int,
+                              precomputedQuantized: Option[DataFrame] = None,
+                              trainedCentroids: Option[DataFrame] = None)
+      : (DataFrame, Seq[DataFrame]) = {
     // EAGER cache ([[Dedup.withSharedShingles]] precedent): centroid
     // head, assignment, and the two verify sides scan qv independently
     // and would race a lazy cache into re-quantizing per subtree.
@@ -903,13 +912,14 @@ ORDER BY a.vec_id"""
       .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
     val sym = cands.union(
       cands.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
-    verifyCosine(sym, qv, qv, "vec_a", "vec_b", minCosine = -1.0)
+    val graph = verifyCosine(sym, qv, qv, "vec_a", "vec_b", minCosine = -1.0)
       .withColumn("rk", row_number().over(Window.partitionBy("vec_a")
         .orderBy(col("cosine").desc, col("vec_b"))))
       .filter(col("rk") <= k)
       .select(col("vec_a").as("vec_id"), col("rk").cast("long").as("rank"),
         col("vec_b").as("neighbor_id"), r4(col("cosine")).as("cosine"))
       .orderBy("vec_id", "rank")
+    (graph, assigned +: precomputedQuantized.fold(Seq(qv))(_ => Nil))
   }
 
   /** Shares [[ivfAssignCte]]; the within-cell pair set is enumerated
@@ -1333,9 +1343,11 @@ ORDER BY rank"""
     // kNN-graph chain (capped pairs + verify + rank window) re-ran
     // above its reused exchange per reference; pinned, everything
     // downstream of the graph reads |V|·k rows of blocks.
-    val edges = knnGraph(emb, k, numCentroids)
+    val (graph, graphCaches) = knnGraphCaching(emb, k, numCentroids)
+    val edges = graph
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .localCheckpoint()
+    graphCaches.foreach(_.unpersist())
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val edgesDeg = edges.join(deg, "src").cache()
     // one (vec_id, n) row per vector, consumed by every iteration —
@@ -1363,14 +1375,10 @@ ORDER BY rank"""
     // |V|-row result, then DROP the iteration caches — returning a
     // lazy frame over them leaked a CacheManager entry per call that
     // only the bench's clearCache() reclaimed.
-    if (emb.sparkSession.conf.get("graft.pin.results", "true") == "false")
-      composed
-    else {
-      val out = composed.localCheckpoint()
-      nodesN.unpersist()
-      edgesDeg.unpersist()
-      out
-    }
+    val out = composed.localCheckpoint()
+    nodesN.unpersist()
+    edgesDeg.unpersist()
+    out
   }
 
   /** Same kranked chain as [[knnGraphOracle]]; the power iterations
@@ -3579,19 +3587,14 @@ ORDER BY rank"""
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(d.toLong).as("dims"), col("n_hits"))
     }.reduce(_.unionByName(_))
-    val lazyPins = emb.sparkSession
-      .conf.get("graft.pin.results", "true") == "false"
     val composed = perWidth.crossJoin(broadcast(truthN))
       .select(col("dims"), col("n_hits"), col("n_truth"),
         r4(col("n_hits") * lit(1.0) / col("n_truth")).as("recall"))
       .orderBy("dims")
-    if (lazyPins) composed // plan-audit seam: keep the composed shape
-    else {
-      val out = composed.localCheckpoint() // |widths| rows
-      truth.unpersist()
-      qv.unpersist()
-      out
-    }
+    val out = composed.localCheckpoint() // |widths| rows
+    truth.unpersist()
+    qv.unpersist()
+    out
   }
 
   /** Width-config cross join over the shared qv chain; the zero-norm
@@ -3698,20 +3701,15 @@ ORDER BY dims"""
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(sN.toLong).as("shortlist"), col("n_hits"))
     }.reduce(_.unionByName(_))
-    val lazyPins = emb.sparkSession
-      .conf.get("graft.pin.results", "true") == "false"
     val composed = perSize.crossJoin(broadcast(truthN))
       .select(col("shortlist"), col("n_hits"), col("n_truth"),
         r4(col("n_hits") * lit(1.0) / col("n_truth")).as("recall"))
       .orderBy("shortlist")
-    if (lazyPins) composed // plan-audit seam: keep the composed shape
-    else {
-      val out = composed.localCheckpoint() // |shortlists| rows
-      withCos.unpersist()
-      truth.unpersist()
-      qv.unpersist()
-      out
-    }
+    val out = composed.localCheckpoint() // |shortlists| rows
+    withCos.unpersist()
+    truth.unpersist()
+    qv.unpersist()
+    out
   }
 
   /** Shares [[planeFpCte]] (the fingerprint bits) and the qv/nr
@@ -3833,19 +3831,14 @@ ORDER BY shortlist"""
         .select(lit(k.toLong).as("k"), col("n_hits"))
         .crossJoin(broadcast(tn))
     }.reduce(_.unionByName(_))
-    val lazyPins = emb.sparkSession
-      .conf.get("graft.pin.results", "true") == "false"
     val composed = perK
       .select(col("k"), col("n_hits"), col("n_truth"),
         r4(col("n_hits") * lit(1.0) / col("n_truth")).as("recall"))
       .orderBy("k")
-    if (lazyPins) composed // plan-audit seam: keep the composed shape
-    else {
-      val out = composed.localCheckpoint() // |ks| rows
-      apx.unpersist()
-      truth.unpersist()
-      out
-    }
+    val out = composed.localCheckpoint() // |ks| rows
+    apx.unpersist()
+    truth.unpersist()
+    out
   }
 
   /** Shares the qv/nr milli-quantization CTEs with [[annTopKOracle]];

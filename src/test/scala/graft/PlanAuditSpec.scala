@@ -2,6 +2,8 @@ package graft
 
 import graft.analytics._
 import graft.events.TestDataAdapter
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 /** Scale-design audits: these assert properties of the PHYSICAL PLAN
@@ -14,18 +16,13 @@ class PlanAuditSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def canon = TestDataAdapter.canonical(spark, sf)
 
-  private def plan(df: org.apache.spark.sql.DataFrame): String =
+  private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** Run `body` with the incremental pin bracket disabled
-   *  (`graft.pin.results=false`): the audited frame is then the LAZY
-   *  composed verify — the shape production executes inside the
-   *  bracket — instead of the pinned RDD scan the bracket returns.
-   *  Structural properties (store-only scans, batch-below-pair-join)
-   *  are identical modulo the caching the bracket adds. */
-  private def withLazyPins[T](body: => T): T = {
-    spark.conf.set("graft.pin.results", "false")
-    try body finally spark.conf.unset("graft.pin.results")
+  /** [[executedPlans]] as one printout, for the string audits. */
+  private def executedPlan(body: => DataFrame): (DataFrame, String) = {
+    val (df, plans) = executedPlans(body)
+    (df, plans.mkString("\n"))
   }
 
   test("per-app filter pushes down to the parquet scan") {
@@ -168,25 +165,32 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("incremental near-dup: batch restriction sits BELOW the pair join (no old-old enumeration)") { withLazyPins {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+  test("incremental near-dup: batch restriction sits BELOW the pair join (no old-old enumeration)") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val corpus = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
-    val df = graft.pipeline.Dedup.dedupNgramIncremental(corpus, batch)
-    val lp = df.queryExecution.optimizedPlan
+    val (_, plans) = executedPlans(
+      graft.pipeline.Dedup.dedupNgramIncremental(corpus, batch))
+    def joins(p: SparkPlan) = p.collect { case j: BaseJoinExec => j }
+    def keyRefs(j: BaseJoinExec) = (j.leftKeys ++ j.rightKeys).flatMap(_.references)
     // The gram-keyed pair join must contain, inside one of its inputs,
     // a doc_id-keyed join (the batch-id restriction). If the batch
     // filter were applied above the pair join — the old-old-enumerating
-    // shape — no gram join would have a doc_id join beneath it.
-    val pairJoinHasBatchInput = lp.collect {
-      case j: Join if j.condition.exists(_.references.exists(_.name == "gram")) => j
-    }.exists(_.children.exists(_.collect {
-      case j2: Join if j2.condition.exists(c =>
-        c.references.nonEmpty && c.references.forall(_.name == "doc_id")) => j2
-    }.nonEmpty))
-    assert(pairJoinHasBatchInput, lp.toString)
-  } }
+    // shape — no gram join would have a doc_id join beneath it. The
+    // pair join is keyed on gram ALONE: the verify's (doc_b, gram)
+    // intersection join sits above the doc_id-keyed endpoint
+    // restriction whatever the candidate shape, so it proves nothing.
+    val pairJoins = plans.flatMap(joins).filter(j =>
+      keyRefs(j).nonEmpty && keyRefs(j).forall(_.name == "gram"))
+    assert(pairJoins.nonEmpty, plans.mkString("\n"))
+    val pairJoinHasBatchInput = pairJoins.exists(_.children.exists(c =>
+      joins(c).exists { j2 =>
+        val refs = keyRefs(j2) ++ j2.condition.toSeq.flatMap(_.references)
+        refs.nonEmpty && refs.forall(_.name == "doc_id")
+      }))
+    assert(pairJoinHasBatchInput, plans.mkString("\n"))
+  }
 
   test("stage quantiles: histogram-rank — no row_number, windows see only the (stage, metric, value) histogram") {
     assertHistogramRankShape(plan(JobsStages.stageQuantiles(canon)))
@@ -217,16 +221,16 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("fuzzy decontamination broadcasts the benchmark band signatures — corpus never self-joins") { withLazyPins {
-    // withLazyPins: r17's withJaccard bracket pins the verify result
-    // eagerly; the seam keeps the composed join shape auditable.
+  test("fuzzy decontamination broadcasts the benchmark band signatures — corpus never self-joins") {
+    // r17's withJaccard bracket pins the verify result eagerly, so the
+    // band join runs inside the bracket: audit what executed there.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(graft.pipeline.Decontamination.contaminationMinhash(
+    val (_, p) = executedPlan(graft.pipeline.Decontamination.contaminationMinhash(
       docs.filter(col("doc_id") % 20 =!= 0),
       docs.filter(col("doc_id") % 20 === 0)))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
-  }}
+  }
 
   test("cdc incremental probe: chunk store scanned, never exchanged — batch side broadcasts") {
     // The measured sf10 lesson (STRESS_SF1.md): the shuffled-store
@@ -237,13 +241,11 @@ class PlanAuditSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") < 400)
     val store = graft.pipeline.Dedup.cdcChunkStore(corpus)
       .localCheckpoint() // stand-in for the parquet store read
-    val out = withLazyPins {
-      graft.pipeline.Dedup.cdcChunkDedupIncremental(
-        corpus.limit(0), docs.filter(col("doc_id") >= 400),
-        corpusChunks = Some(store))
-    }
-    val p = plan(out)
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)
+    val (_, plans) = executedPlans(graft.pipeline.Dedup.cdcChunkDedupIncremental(
+      corpus.limit(0), docs.filter(col("doc_id") >= 400),
+      corpusChunks = Some(store)))
+    val p = plans.mkString("\n")
+    assert(plans.exists(q => "BroadcastHashJoin".r.findAllIn(q.toString).size >= 2), p)
     assert(!p.contains("CartesianProduct"), p)
     // the semi probe keyed on (fp, len) must be a broadcast join, not
     // a sort-merge over the store: no SortMergeJoin carrying fp
@@ -266,10 +268,8 @@ class PlanAuditSpec extends SparkSpec {
   test("matryoshka + bq recall: query side broadcasts, corpus never self-joins") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 2000)
-    val (pm, pb) = withLazyPins {
-      (plan(graft.pipeline.Embeddings.matryoshkaRecall(emb, queries)),
-        plan(graft.pipeline.Embeddings.bqRecall(emb, queries)))
-    }
+    val (_, pm) = executedPlan(graft.pipeline.Embeddings.matryoshkaRecall(emb, queries))
+    val (_, pb) = executedPlan(graft.pipeline.Embeddings.bqRecall(emb, queries))
     assert(!pm.contains("CartesianProduct"), pm)
     assert(pm.contains("BroadcastNestedLoopJoin")
       || pm.contains("BroadcastHashJoin"), pm)
@@ -368,7 +368,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(lines.drop(genIdx + 1).exists(_.contains("n_copies")), p)
   }
 
-  test("streaming dedup trigger reads ONLY the shingle/gram-df stores — never corpus text") { withLazyPins {
+  test("streaming dedup trigger reads ONLY the shingle/gram-df stores — never corpus text") {
     import spark.implicits._
     val base = tmpDir("sdedup-audit")
     val corpusDir = base + "/corpusdocs"
@@ -385,31 +385,31 @@ class PlanAuditSpec extends SparkSpec {
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog tonight"))
       .toDF("doc_id", "text")
-    val pairs = graft.streaming.StreamingDedup.triggerPairs(
-      spark, batch, shDir, dfDir, 5L, 0.2)
+    val (pairs, p) = executedPlan(graft.streaming.StreamingDedup.triggerPairs(
+      spark, batch, shDir, dfDir, 5L, 0.2))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read: all of them must point at the shingle or
     // gram-df stores, and none at the corpus documents — re-shingling
     // corpus TEXT per trigger is exactly the O(corpus) term this path
     // exists to eliminate
-    val locations = plan(pairs).linesIterator
+    val locations = p.linesIterator
       .filter(_.contains("Location")).toSeq
-    assert(locations.nonEmpty, plan(pairs))
+    assert(locations.nonEmpty, p)
     assert(locations.forall(l =>
       l.contains("shinglestore") || l.contains("gramdfstore")), locations.toString)
-    assert(!plan(pairs).contains("corpusdocs"), plan(pairs))
+    assert(!p.contains("corpusdocs"), p)
     // r17: the rare-batch-gram restriction reaches the shingle-store
     // scan as a PUSHED In predicate (row-group skipping on a
     // gram-clustered compacted store), not a broadcast semi-join —
     // the batch here is far below RareGramPushdownMax.
-    assert(plan(pairs).contains("In(gram"), plan(pairs))
+    assert(p.contains("In(gram"), p)
     // and the result is still right: 10 is a near-dup of stored doc 0
     val got = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((0L, 10L)))
-  } }
+  }
 
-  test("streaming SIMHASH trigger reads ONLY the fingerprint store — never corpus text") { withLazyPins {
+  test("streaming SIMHASH trigger reads ONLY the fingerprint store — never corpus text") {
     import spark.implicits._
     val base = tmpDir("simdedup-audit")
     val corpusDir = base + "/corpusdocs"
@@ -427,23 +427,23 @@ class PlanAuditSpec extends SparkSpec {
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
-    val pairs = graft.streaming.StreamingSimhashDedup.triggerPairs(
-      spark, batch, fpDir, 3, "md5")
+    val (pairs, p) = executedPlan(graft.streaming.StreamingSimhashDedup.triggerPairs(
+      spark, batch, fpDir, 3, "md5"))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read — and the simhash store is ONE long per
     // corpus doc, the smallest per-trigger state in the family
-    val locations = plan(pairs).linesIterator
+    val locations = p.linesIterator
       .filter(_.contains("Location")).toSeq
-    assert(locations.nonEmpty, plan(pairs))
+    assert(locations.nonEmpty, p)
     assert(locations.forall(_.contains("fpstore")), locations.toString)
-    assert(!plan(pairs).contains("corpusdocs"), plan(pairs))
+    assert(!p.contains("corpusdocs"), p)
     // identical text => identical fingerprint => hamming 0 vs stored 0
     val got = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((0L, 10L)))
-  } }
+  }
 
-  test("streaming MINHASH trigger reads ONLY the signature/shingle stores — never corpus text") { withLazyPins {
+  test("streaming MINHASH trigger reads ONLY the signature/shingle stores — never corpus text") {
     import spark.implicits._
     val base = tmpDir("mhdedup-audit")
     val corpusDir = base + "/corpusdocs"
@@ -459,24 +459,24 @@ class PlanAuditSpec extends SparkSpec {
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank tonight"))
       .toDF("doc_id", "text")
-    val pairs = graft.streaming.StreamingMinhashDedup.triggerPairs(
-      spark, batch, shDir, sigDir, 0.2, "md5")
+    val (pairs, p) = executedPlan(graft.streaming.StreamingMinhashDedup.triggerPairs(
+      spark, batch, shDir, sigDir, 0.2, "md5"))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read: band candidates come from the signature
     // store, exact-Jaccard verify from the shingle store — corpus text
     // appears nowhere
-    val locations = plan(pairs).linesIterator
+    val locations = p.linesIterator
       .filter(_.contains("Location")).toSeq
-    assert(locations.nonEmpty, plan(pairs))
+    assert(locations.nonEmpty, p)
     assert(locations.forall(l =>
       l.contains("sigstore") || l.contains("shinglestore")), locations.toString)
-    assert(!plan(pairs).contains("corpusdocs"), plan(pairs))
+    assert(!p.contains("corpusdocs"), p)
     val got = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((0L, 10L)))
-  } }
+  }
 
-  test("streaming EMBEDDING trigger reads ONLY the quantized index — never corpus embeddings") { withLazyPins {
+  test("streaming EMBEDDING trigger reads ONLY the quantized index — never corpus embeddings") {
     import spark.implicits._
     val base = tmpDir("embdedup-audit")
     val corpusDir = base + "/corpusvecs"
@@ -489,16 +489,16 @@ class PlanAuditSpec extends SparkSpec {
     corpus.write.parquet(corpusDir)
     graft.pipeline.Embeddings.quantizedIndex(corpus).write.parquet(qvDir)
     val batch = Seq((10L, vecA)).toDF("vec_id", "embedding")
-    val pairs = graft.streaming.StreamingEmbeddingDedup.triggerPairs(
-      spark, batch, qvDir, 0.4)
+    val (pairs, p) = executedPlan(graft.streaming.StreamingEmbeddingDedup.triggerPairs(
+      spark, batch, qvDir, 0.4))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is the quantized index — raw corpus embeddings are never
     // re-quantized per trigger
-    val locations = plan(pairs).linesIterator
+    val locations = p.linesIterator
       .filter(_.contains("Location")).toSeq
-    assert(locations.nonEmpty, plan(pairs))
+    assert(locations.nonEmpty, p)
     assert(locations.forall(_.contains("qvstore")), locations.toString)
-    assert(!plan(pairs).contains("corpusvecs"), plan(pairs))
+    assert(!p.contains("corpusvecs"), p)
     // identical vector => cosine 1.0 vs stored 0
     val got = pairs.select("vec_a", "vec_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -509,18 +509,18 @@ class PlanAuditSpec extends SparkSpec {
     // corpus embeddings still never read
     graft.pipeline.Embeddings.writeEmbFingerprintStore(
       corpus, base + "/fpstore")
-    val pairs2 = graft.streaming.StreamingEmbeddingDedup.triggerPairs(
-      spark, batch, qvDir, 0.4, fpDir = base + "/fpstore")
-    val locs2 = plan(pairs2).linesIterator
+    val (pairs2, p2) = executedPlan(graft.streaming.StreamingEmbeddingDedup.triggerPairs(
+      spark, batch, qvDir, 0.4, fpDir = base + "/fpstore"))
+    val locs2 = p2.linesIterator
       .filter(_.contains("Location")).toSeq
     assert(locs2.exists(_.contains("fpstore")), locs2.toString)
     assert(locs2.forall(l => l.contains("qvstore") || l.contains("fpstore")),
       locs2.toString)
-    assert(!plan(pairs2).contains("corpusvecs"), plan(pairs2))
+    assert(!p2.contains("corpusvecs"), p2)
     val got2 = pairs2.select("vec_a", "vec_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got2 === Set((0L, 10L)))
-  } }
+  }
 
   test("span dedup and lm surprisal plans are partial-agg joins, no cartesian") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -602,15 +602,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("knn pagerank: no cartesian, the only nested-loop join is the broadcast 1-row count") { withLazyPins {
-    // withLazyPins: r17 pins the pagerank result (the ADVICE cache-
-    // bracket fix); the seam keeps the iteration chain auditable.
+  test("knn pagerank: no cartesian, the only nested-loop join is the broadcast 1-row count") {
+    // r17 pins the pagerank result (the ADVICE cache-bracket fix), so
+    // the iteration chain runs inside the bracket: audit what executed.
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val p = plan(graft.pipeline.Embeddings.knnPagerank(emb))
+    val (_, p) = executedPlan(graft.pipeline.Embeddings.knnPagerank(emb))
     assert(!p.contains("CartesianProduct"), p)
     // nodes x count(*) is a broadcast of ONE row, never a shuffle
     assert(p.contains("BroadcastNestedLoopJoin"), p)
-  }}
+  }
 
   test("tfidf and novelty plans are partial-agg joins, no cartesian") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -758,11 +758,11 @@ class PlanAuditSpec extends SparkSpec {
 
   test("dedup token savings: drop sets at pair cardinality, broadcast totals, no cartesian") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // precomputed shingles: the store-less path eagerly checkpoints
-    // (withSharedShingles deletes its scratch store), which would
-    // collapse the audited plan to a checkpoint scan
-    val p = plan(graft.pipeline.Dedup.dedupTokenSavings(docs,
-      precomputedShingles = Some(graft.pipeline.Dedup.shingles(docs))))
+    // the operator returns a pinned 5-row frame: the drop-set rollup
+    // and its totals broadcast run inside the bracket, so audit the
+    // plans that executed there, and first show they are present
+    val (_, p) = executedPlan(graft.pipeline.Dedup.dedupTokenSavings(docs))
+    assert(p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     // the only nested-loop is the 1-row corpus-totals broadcast
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1, p)
@@ -1012,12 +1012,8 @@ class PlanAuditSpec extends SparkSpec {
     // plans the pinned bracket actually EXECUTES — a direct
     // FileSourceScan runs once per plan occurrence; a cached
     // relation's plan runs once no matter how many InMemoryTableScans
-    // reference it.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
+    // reference it (PlanDump.executedPlans inlines it once).
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import spark.implicits._
     val base = tmpDir("mhdedup-pin-audit")
     val corpusDir = base + "/corpusdocs"
@@ -1034,62 +1030,27 @@ class PlanAuditSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank tonight"))
       .toDF("doc_id", "text")
 
-    // Executed scan instances: recurse through AQE wrappers and query
-    // stages (leaf nodes hiding the real subtrees), and through each
-    // cached relation's plan exactly ONCE (however many
-    // InMemoryTableScans reference it, the cache materializes once).
-    // ReusedExchange stays a leaf — it re-reads, never re-executes.
-    def fileScans(p: SparkPlan,
-                  seen: java.util.IdentityHashMap[SparkPlan, Unit]): Seq[FileSourceScanExec] =
-      p match {
-        case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan, seen)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          fileScans(q.plan, seen)
-        case m: InMemoryTableScanExec =>
-          val cp = m.relation.cachedPlan
-          if (seen.containsKey(cp)) Seq.empty
-          else { seen.put(cp, ()); fileScans(cp, seen) }
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(fileScans(_, seen))
-      }
     def scanPaths(p: SparkPlan): Seq[String] =
-      fileScans(p, new java.util.IdentityHashMap[SparkPlan, Unit]())
+      p.collect { case f: FileSourceScanExec => f }
         .map(_.relation.location.rootPaths.mkString(","))
 
-    val captured = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[SparkPlan]())
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        captured.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
+    val (pairs, plans) = executedPlans(graft.streaming.StreamingMinhashDedup
+      .triggerPairs(spark, batch, shDir, sigDir, 0.2, "md5"))
+    val got = pairs.select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === Set((0L, 10L)))
+    // the pinned bracket's materialization is the plan that reads stores
+    val rel = plans.filter(p => scanPaths(p).exists(_.contains(base)))
+    assert(rel.nonEmpty, "no captured execution read the state stores — " +
+      s"captured ${plans.size} plans")
+    for (p <- rel) {
+      val paths = scanPaths(p)
+      assert(!paths.exists(_.contains("corpusdocs")), paths.toString)
+      val sigScans = paths.count(_.contains("sigstore"))
+      val shScans = paths.count(_.contains("shinglestore"))
+      assert(sigScans <= 2, s"signature store executes $sigScans scans:\n$p")
+      assert(shScans <= 3, s"shingle store executes $shScans scans:\n$p")
     }
-    spark.listenerManager.register(listener)
-    try {
-      val got = graft.streaming.StreamingMinhashDedup.triggerPairs(
-        spark, batch, shDir, sigDir, 0.2, "md5")
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === Set((0L, 10L)))
-      // listener delivery is async on the shared bus — wait for the
-      // pinned bracket's materialization (the plan that reads stores)
-      val deadline = System.nanoTime + 20L * 1000 * 1000 * 1000
-      def relevant = captured.asScala.toList
-        .filter(p => scanPaths(p).exists(_.contains(base)))
-      while (System.nanoTime < deadline && relevant.isEmpty) Thread.sleep(50)
-      val rel = relevant
-      assert(rel.nonEmpty, "no captured execution read the state stores — " +
-        s"captured ${captured.size} plans")
-      for (p <- rel) {
-        val paths = scanPaths(p)
-        assert(!paths.exists(_.contains("corpusdocs")), paths.toString)
-        val sigScans = paths.count(_.contains("sigstore"))
-        val shScans = paths.count(_.contains("shinglestore"))
-        assert(sigScans <= 2, s"signature store executes $sigScans scans:\n$p")
-        assert(shScans <= 3, s"shingle store executes $shScans scans:\n$p")
-      }
-    } finally spark.listenerManager.unregister(listener)
   }
 
   test("round-11 per-source rollups (readability / dedup_normalized / media_qa) are partial-agg passes, no cartesian, no corpus window") {

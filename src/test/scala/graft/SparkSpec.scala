@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toFile.deleteOnExit()
     d.toString
   }
+
+  /** Audit surface for operators that pin: `body`'s frame, run to
+   *  completion, and the plans that EXECUTED while it was built and
+   *  run, as flattened by [[PlanDump.executedPlans]]. A pinned frame's
+   *  own plan is a scan over checkpointed blocks and proves nothing. */
+  def executedPlans(body: => DataFrame): (DataFrame, Seq[SparkPlan]) =
+    PlanDump.executedPlans(spark) { val df = body; df.collect(); df }
 }
 
 object SparkSpec {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -461,9 +462,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("no cartesian product in any near-dup plan") {
-    for (df <- Seq(Dedup.dedupMinhash(docs), Dedup.dedupSimhash(docs),
-        Dedup.dedupNgram(docs))) {
-      val plan = df.queryExecution.executedPlan.toString
+    for ((_, plans) <- Seq(executedPlans(Dedup.dedupMinhash(docs)),
+        executedPlans(Dedup.dedupSimhash(docs)),
+        executedPlans(Dedup.dedupNgram(docs)))) {
+      val plan = plans.mkString("\n")
+      // the candidate pair join must be among the executed plans
+      assert(plans.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])), plan)
       assert(!plan.contains("CartesianProduct"), plan.linesIterator.take(5).mkString("\n"))
     }
   }
@@ -475,21 +480,17 @@ class PipelineSpec extends SparkSpec {
       (2L, Array.tabulate(64)(i => if (i % 2 == 0) 1.0f else -1.0f), 1)
     ).toDF("vec_id", "embedding", "label")
     // r16: withJaccard pins the candidate frame (localCheckpoint), so
-    // under default pins the salted candidate join is executed inside
-    // the checkpoint job and no longer visible in the FINAL plan —
-    // audit the lazy composed shape via the pin seam instead (the
-    // PlanAuditSpec withLazyPins discipline).
-    spark.conf.set("graft.pin.results", "false")
-    try {
-      for (df <- Seq(Dedup.dedupMinhash(docs), Dedup.dedupSimhash(docs),
-          Embeddings.dedupEmbedding(emb))) {
-        val plan = df.queryExecution.executedPlan.toString
-        // saltedBucketPairs signature: pmod(xxhash64(id)) on the left,
-        // an exploded salt sequence on the right, salt in the join key.
-        assert(plan.contains("pmod(xxhash64("), "salt column missing:\n" +
-          plan.linesIterator.take(8).mkString("\n"))
-      }
-    } finally spark.conf.unset("graft.pin.results")
+    // the salted candidate join executes inside the checkpoint job and
+    // is no longer visible in the FINAL plan — audit what executed.
+    for ((_, plans) <- Seq(executedPlans(Dedup.dedupMinhash(docs)),
+        executedPlans(Dedup.dedupSimhash(docs)),
+        executedPlans(Embeddings.dedupEmbedding(emb)))) {
+      val plan = plans.mkString("\n")
+      // saltedBucketPairs signature: pmod(xxhash64(id)) on the left,
+      // an exploded salt sequence on the right, salt in the join key.
+      assert(plan.contains("pmod(xxhash64("), "salt column missing:\n" +
+        plan.linesIterator.take(8).mkString("\n"))
+    }
   }
 
   test("scale-mode minhash (poly ids) finds the same verified pairs") {
@@ -1362,9 +1363,56 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("curate corpus plan: no cartesian, quality filter fused before any exchange") {
-    val p = Curation.curateCorpus(docs).queryExecution.executedPlan.toString
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the survivor ids and the near-dup joins are pinned mid-operator:
+    // audit every plan that executed, and first show the quality gate
+    // and the joins are among them. Parquet-backed input: over a local
+    // fixture the optimizer folds the gate into the LocalRelation and
+    // no Filter ever executes.
+    val dir = tmpDir("curate-audit") + "/docs"
+    docs.write.parquet(dir)
+    val (_, plans) = executedPlans(Curation.curateCorpus(spark.read.parquet(dir)))
+    val p = plans.mkString("\n")
+    val gates = plans.flatMap(_.collect {
+      case f: FilterExec if f.condition.sql.contains(">= 0.6") => f
+    })
+    assert(gates.nonEmpty, p)
+    assert(plans.exists(_.exists(_.isInstanceOf[BaseJoinExec])), p)
+    gates.foreach(g => assert(!g.exists(_.isInstanceOf[Exchange]), g.toString))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
+  test("pinned operators leave no CacheManager entry behind") {
+    // the "nothing cached outlives the call" contract of the pin
+    // brackets: each operator caches only inside its own bracket
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val sf = "/root/testdata/sf0.001"
+    val corpus = spark.read.parquet(s"$sf/documents.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val queries = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 2000)
+    val cands = Seq((0L, 1L), (0L, 3L), (1L, 3L)).toDF("doc_a", "doc_b")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "withDetectorPairSets (dedupTokenSavings)" -> (() => Dedup.dedupTokenSavings(docs)),
+      "pinnedVerify" -> (() => Dedup.pinnedVerify(cands, Dedup.shingles(docs)) {
+        (c, touched) => Dedup.withJaccard(c, touched, restrict = false) }),
+      "withJaccard" -> (() => Dedup.withJaccard(cands, Dedup.shingles(docs))),
+      "cdcChunkDedupIncremental" -> (() => Dedup.cdcChunkDedupIncremental(
+        corpus.filter(col("doc_id") < 400), corpus.filter(col("doc_id") >= 400))),
+      "componentsAuto" -> (() => Clustering.componentsAuto(cands)),
+      "knnPagerank" -> (() => Embeddings.knnPagerank(emb)),
+      "matryoshkaRecall" -> (() => Embeddings.matryoshkaRecall(emb, queries)),
+      "bqRecall" -> (() => Embeddings.bqRecall(emb, queries)),
+      "int8Recall" -> (() => Embeddings.int8Recall(emb, queries)))
+    val leaks = ops.filter { case (_, op) =>
+      spark.catalog.clearCache()
+      op().collect()
+      !cache.isEmpty
+    }.map(_._1)
+    assert(leaks.isEmpty, s"cached relations left behind by: ${leaks.mkString(", ")}")
   }
 
   test("multimodal stub features are pure functions of payload bytes") {
