@@ -6,6 +6,7 @@ import graft.pipeline.{Dedup, Embeddings, TextAnalysis}
 import graft.streaming.{StreamingCdcDedup, StreamingClusters, StreamingDedup,
   StreamingEmbeddingDedup, StreamingExactDedup, StreamingMinhashDedup,
   StreamingSimhashDedup, StreamingSpanDedup}
+import graft.obs.{Work, WorkLedger}
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: times every SparkEntry query at
@@ -21,21 +22,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR, not WARN: the bounded-frame global windows in a few
     // operators emit a benign WindowExec WARN per plan, and dozens of
     // them flood the ~2000-char stdout tail the harness keeps,
     // crowding out the one JSON line this main exists to print.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.local("ERROR")
 
     // ONE bench-scoped temp root: every helper's scratch (seeded
     // streaming state, shared stores, synthetic ingest logs) nests
@@ -44,24 +35,25 @@ object Bench {
     // the host (round-8 ADVICE). The finally covers every exit path:
     // a failed ingest probe or artifact write leaves nothing behind.
     val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench")
-    try run(spark, sfDir, cpus, benchRoot)
+    try run(spark, sfDir, DevSession.cpus, benchRoot)
     finally {
       spark.stop()
       org.apache.commons.io.FileUtils.deleteDirectory(benchRoot.toFile)
     }
   }
 
-  private def run(spark: SparkSession, sfDir: String, cpus: String,
+  private def run(spark: SparkSession, sfDir: String, cpus: Int,
                   benchRoot: java.nio.file.Path): Unit = {
-    def runNoop(name: String): Double = {
+    val ledger = WorkLedger.install(spark)
+    /** One timed run of a query: its work, wall time included; None
+      * when it failed. */
+    def runNoop(name: String): Option[Work] = {
       spark.catalog.clearCache() // operators cache intermediates; isolate queries
       System.gc() // settle heap so one query's garbage isn't billed to the next
-      val t0 = System.nanoTime()
-      try noop(SparkEntry.queries(name)(spark, sfDir))
+      try Some(ledger.measure(noop(SparkEntry.queries(name)(spark, sfDir)))._2)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
-      (System.nanoTime() - t0) / 1e9
     }
 
     /** Median-of-N with (min, max) spread: a single timed run is
@@ -79,8 +71,6 @@ object Bench {
     // document the intent by using 3 or 5.
     val reps = math.max(1, sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(3))
-    def runMedian(name: String): (Double, Double, Double) =
-      median((0 until reps).map(_ => runNoop(name)))
 
     // Warmup: run every query once at the smallest scale factor so
     // Janino compilation + JIT of the generated code is NOT billed to
@@ -88,7 +78,7 @@ object Bench {
     // factors; only the data volume changes). Standard warmup practice
     // — the timed numbers then reflect data-proportional work.
     val warmDir = "/root/testdata/sf0.001"
-    val ctx = new Ctx(spark, sfDir, warmDir, benchRoot)
+    val ctx = new Ctx(spark, ledger, sfDir, warmDir, benchRoot)
     // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run to named keys
     // (a scenario row runs when either of its keys is named). Round
     // artifacts are always produced with the variable unset.
@@ -106,47 +96,13 @@ object Bench {
     // writes bench_local_c<cpus>.json instead.
     val artifact =
       if (only.isDefined) "bench_local_only.json"
-      else if (cpus == SurveyCpus.toString) "bench_local_last.json"
+      else if (cpus == SurveyCpus) "bench_local_last.json"
       else s"bench_local_c$cpus.json"
-    /** Canary: a pinned set of cheap, code-stable queries timed
-      * before AND after the full suite in the same JVM (full rationale
-      * at the canary pass below). Declared once, here, because the
-      * warm loop below must also cover it — a canary key edited in one
-      * list but not the other would run its first timed sample cold
-      * and bill Janino/JIT, exactly the artifact it exists to catch. */
-    val canaryKeys = Seq("app_list", "resource_usage", "text_stats",
-      "quality_score", "lang_id", "split_assign")
-    // forced canaries (SPARK_GRAFT_CANARY=1 under an ONLY filter) must
-    // warm too, or their first timed sample bills Janino/JIT
-    val warmNames = (names ++ (if (sys.env.get("SPARK_GRAFT_CANARY")
-      .contains("1")) canaryKeys else Seq.empty)).distinct
-    for (n <- warmNames) {
+    for (n <- names) {
       spark.catalog.clearCache()
       try noop(SparkEntry.queries(n)(spark, warmDir))
       catch { case _: Throwable => () }
     }
-
-    /** Canary: a pinned set of cheap, code-stable queries timed
-      * before AND after the full suite in the same JVM. Round 8
-      * showed untouched queries drifting ~1.3x round-over-round from
-      * long-lived-JVM heap/host noise; the canary pair quantifies
-      * exactly that drift WITHIN a run (`canary_drift` ~1.0 = the
-      * suite's numbers are comparable front to back; >>1 = later
-      * queries ran in a degraded JVM and cross-round deltas on them
-      * are noise until re-measured). Cross-round normalization:
-      * divide a query's median by the SAME round's canary_before
-      * sum before comparing rounds. (canaryKeys declared above the
-      * warm loop, which must cover it.) */
-    // SPARK_GRAFT_CANARY=1 forces the canary series even under a
-    // SPARK_GRAFT_ONLY filter — the sf1 runner's setting (round-12 sf1
-    // artifacts had canary_drift -1 and were uninterpretable under
-    // host drift).
-    val forceCanary = sys.env.get("SPARK_GRAFT_CANARY").contains("1")
-    val runCanaries = only.isEmpty || forceCanary
-    def canaryPass(): Seq[(String, Double)] =
-      if (!runCanaries) Seq.empty
-      else canaryKeys.map(k => k -> runMedian(k)._1)
-    val canaryBefore = canaryPass()
 
     // Every scenario row: warm once (absorbs codegen/JIT like every
     // other query), then `reps` timed calls, in table order.
@@ -157,193 +113,73 @@ object Bench {
         s -> (0 until reps).map(_ => s.timed(ctx))
       }
 
-    /** Three full passes over the suite, each in a DIFFERENT
+    /** `reps` full passes over the suite, each in a DIFFERENT
       * deterministic shuffled order, median per query ACROSS passes
       * (not back-to-back samples): round 8/9 showed untouched-file
-      * queries moving 2-3x round-over-round while the canary
-      * improved — back-to-back sampling bills whatever JVM phase
-      * (heap shape, C2 recompile, host noise) a query's fixed slot
-      * lands in to that query in EVERY sample, so the median can't
-      * average it away. Randomizing the slot per pass decorrelates
-      * query identity from JVM phase; the cross-pass median is then
-      * comparable round-over-round. Canary timings interleave
-      * between passes (see canaryMid). Seeds are fixed constants so
-      * two runs of the same build time the identical schedule. */
-    val canaryMid = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val passTimes: Seq[Map[String, Double]] = (0 until reps).map { rep =>
+      * queries moving 2-3x round-over-round — back-to-back sampling
+      * bills whatever JVM phase (heap shape, C2 recompile, host noise)
+      * a query's fixed slot lands in to that query in EVERY sample, so
+      * the median can't average it away. Randomizing the slot per pass
+      * decorrelates query identity from JVM phase; the cross-pass
+      * median is then comparable round-over-round. Seeds are fixed
+      * constants so two runs of the same build time the identical
+      * schedule. */
+    val passRuns: Seq[Map[String, Option[Work]]] = (0 until reps).map { rep =>
       val order = new scala.util.Random(7919L * (rep + 1)).shuffle(names)
-      val t = order.map(n => n -> runNoop(n)).toMap
-      // one-sample canary sum after each pass: a monotone rise across
-      // entries = the JVM degraded DURING the suite and cross-round
-      // deltas on late-pass medians are suspect
-      if (runCanaries) canaryMid +=
-        canaryKeys.map(k => runNoop(k)).filter(_ >= 0).sum
-      t
+      order.map(n => n -> runNoop(n)).toMap
     }
-    val suiteResults = names.map(n => n -> median(passTimes.map(_(n))))
-    val results = suiteResults ++ scenarioRuns.flatMap { case (s, runs) =>
-      Seq(s.keys._1 -> median(runs.map(_._1)),
-        s.keys._2 -> median(runs.map(_._2)))
+    val runs: Seq[(String, Seq[Option[Work]])] =
+      names.map(n => n -> passRuns.map(_(n))) ++ scenarioRuns.flatMap {
+        case (s, rs) => Seq(s.keys._1 -> rs.map(_._1), s.keys._2 -> rs.map(_._2))
+      }
+    val results = runs.map { case (k, rs) =>
+      k -> median(rs.map(_.fold(-1.0)(_.wallMs / 1e3)))
     }
-    val canaryAfter = canaryPass()
-    val canaryDrift = {
-      val b = canaryBefore.map(_._2).filter(_ >= 0).sum
-      val a = canaryAfter.map(_._2).filter(_ >= 0).sum
-      if (b <= 0) -1.0 else a / b
+    // Work counters of every key whose runs all succeeded, each the
+    // median across reps. Unlike wall time they barely move when the
+    // host drifts, so they are what the trigger rule compares.
+    val counters = runs.collect {
+      case (k, rs) if rs.forall(_.isDefined) => k -> counterMedians(rs.flatten)
     }
     def r3(x: Double): String =
       if (x < 0) "-1" else BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def num(x: Double): String = if (x == math.rint(x)) x.toLong.toString else r3(x)
+    def jobj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val eps = ingestEventsPerSec(spark, ctx.tmp("graft-ingest"))
-    // Full-precision medians + (min,max) spreads go to a local artifact
-    // (committed per round as bench_local_r*.json); stdout gets a COMPACT
-    // line — the harness that collects BENCH_r*.json keeps only the last
-    // ~2000 chars of output, and rounds 1-5 proved a full-precision line
-    // with spreads overflows that window and is dropped unparsed. With
-    // 177 keys even the 3-decimal full map is ~4.5k chars (the r06-r08
-    // "parsed": null), so stdout carries a PINNED HEADLINE SUBSET plus
-    // the suite total; the committed local artifact stays complete.
-    def jmap(kv: Seq[(String, Double)], fmt: Double => String): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // Trigger-cost regression gate (round-10 lesson: the uncached-
     // candidates regression shipped green through every correctness
     // gate and only a cross-round bench diff could see it): before
-    // overwriting the previous full-suite artifact, compare this
-    // run's incremental/trigger keys against it and flag any key
-    // beyond 1.5x — the alert rides the stdout JSON AND stderr so a
-    // round summary cannot miss it. Canary-normalized: a host that
-    // merely got slower moves every key, so ratios divide out the
-    // canary drift when the previous artifact recorded one.
-    val prevArtifact = java.nio.file.Paths.get(artifact)
-    val prevRoot: Option[com.fasterxml.jackson.databind.JsonNode] =
-      if (only.isDefined || !java.nio.file.Files.exists(prevArtifact)) None
-      else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readAllBytes(prevArtifact))).toOption
-    /** One `{key: seconds}` object of the previous artifact. */
-    def prevMap(field: String): Map[String, Double] = prevRoot
-      .flatMap(r => Option(r.get(field)))
-      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap)
-      .getOrElse(Map.empty)
-    val prevQueries = prevMap("queries")
-    def isTriggerKey(k: String) = k.contains("_incr") || k.contains("_trigger_")
-    // Cross-round HOST normalization (round-11 lesson: the gate fired
-    // on unchanged code because the previous artifact was recorded on
-    // a host running ~2x faster — in-run canaryDrift cannot see that).
-    // The previous artifact's canary_before map gives the same pinned
-    // cheap queries ON THE OLD HOST; the per-key ratio current/previous
-    // is the host's speed change, its median the host factor every
-    // trigger ratio divides out, and its min/max spread the NOISE BAND
-    // the alert threshold widens by (canaries disagreeing 2x among
-    // themselves means per-key ratios carry that much noise, so a
-    // 1.6x trigger ratio is not yet code signal).
-    val prevCanary = prevMap("canary_before")
-    val canaryRatios = canaryBefore.flatMap { case (k, v) =>
-      prevCanary.get(k).filter(_ > 0).flatMap(p =>
-        if (v > 0) Some(v / p) else None)
-    }.sorted
-    val hostFactor =
-      if (canaryRatios.isEmpty) 1.0 else canaryRatios(canaryRatios.size / 2)
-    // Multiplicative canary disagreement, capped: an envelope > 2x is
-    // a host too unstable to adjudicate — the alert still fires, the
-    // adjudication string says re-run (the CLAUDE.md worktree A/B).
-    val noiseEnvelope =
-      if (canaryRatios.isEmpty) 1.0
-      else math.min(2.0,
-        math.sqrt(canaryRatios.last / math.max(canaryRatios.head, 1e-9)))
-    val alertThreshold = 1.5 * noiseEnvelope
-    // BOTH conditions must hold: the host-normalized ratio beyond the
-    // envelope-widened threshold AND the raw ratio beyond 1.5. A pure
-    // host slowdown moves raw but not normalized (the r11 false
-    // positive); a host SPEED-UP divides flat keys by a factor < 1
-    // and inflates their normalized ratio while raw stays ~1 (the
-    // r12 winnow_overlap_incr false positive, raw 1.26 normalized
-    // 2.12 after a 1.7x intra-day host swing) — a real code
-    // regression moves both.
-    val regressions = results.flatMap {
-      case (k, (med, _, _)) if isTriggerKey(k) && med > 0 =>
-        prevQueries.get(k).filter(_ > 0)
-          .map(p => (k, (med / p) / math.max(hostFactor, 0.25), med / p))
-      case _ => None
-    }.filter { case (_, norm, raw) => norm > alertThreshold && raw > 1.5 }
-      .map { case (k, norm, _) => k -> norm }
-    val adjudication =
-      if (regressions.isEmpty) ""
-      else if (noiseEnvelope >= 1.9)
-        "canary envelope saturated (host unstable this round) - " +
-          "adjudicate with the CLAUDE.md same-host worktree A/B"
-      else s"host-normalized (factor ${r3(hostFactor)}, envelope " +
-        s"${r3(noiseEnvelope)}) - ratios above are code-attributed"
+    // overwriting the previous artifact, compare this run's
+    // incremental/trigger keys' counters against it — the alert rides
+    // the stdout JSON AND stderr so a round summary cannot miss it.
+    val regressions = triggerRegressions(counters.toMap.map {
+      case (k, cs) => k -> cs.toMap
+    }, prevCounters(artifact, sfDir))
+    val regJson = jobj(regressions.map { case (k, moved) =>
+      k -> jobj(moved.map { case (c, was, now) => c -> s"[${num(was)},${num(now)}]" })
+    })
     if (regressions.nonEmpty)
-      System.err.println("[bench] TRIGGER-COST REGRESSION vs previous " +
-        "artifact (" + adjudication + "): " + regressions.map { case (k, r) =>
-          k + " " + r3(r) + "x" }.mkString(", "))
-    val regJson = jmap(regressions, r3)
-    /** MACHINE-RUN standalone adjudication (round-12 lesson, automated):
-      * an in-suite trigger number from a run whose canary drifted is
-      * not code signal — a standalone re-measure at the SAME HEAD in
-      * the same JVM, outside the suite's parallel pressure, settles
-      * which. When the two-condition alert fires, re-measure each
-      * flagged key in a fresh isolated block RIGHT HERE and write both
-      * numbers + the verdict into the artifact: standalone
-      * reproducing the committed cost (raw ratio <= 1.5) means the
-      * in-suite number was suite-pressure artifact; standalone staying
-      * elevated means code (or cross-round host drift — then the
-      * CLAUDE.md worktree A/B is the tiebreak, and the verdict string
-      * says so). */
-    def standaloneThunk(k: String): Option[() => Double] =
-      remeasure(k).map(f => () => f(ctx))
-        .orElse(Option.when(SparkEntry.queries.contains(k))(() => runNoop(k)))
-    val resultMap = results.toMap
-    val standaloneAdjudications: Seq[(String, Double, String)] =
-      regressions.map { case (k, norm) =>
-        val sMed = standaloneThunk(k)
-          .map(th => median((0 until reps).map(_ => th()))._1)
-          .getOrElse(-1.0)
-        val prev = prevQueries.getOrElse(k, -1.0)
-        val inSuite = resultMap.get(k).map(_._1).getOrElse(-1.0)
-        val sRaw = if (sMed > 0 && prev > 0) sMed / prev else -1.0
-        val pressureArtifact = sMed > 0 && sRaw >= 0 && sRaw <= 1.5
-        val verdict =
-          if (sMed < 0) "standalone-remeasure-failed"
-          else if (pressureArtifact)
-            "in-suite-pressure-artifact: standalone reproduces committed" +
-              " (standalone median written as the canonical cost)"
-          else "standalone-elevated: code-attributed (or cross-round " +
-            "host drift - tiebreak with the CLAUDE.md worktree A/B)"
-        (k, if (pressureArtifact) sMed else -1.0,
-          s"""{"in_suite":${r3(inSuite)},"standalone":${r3(sMed)},""" +
-            s""""prev":${r3(prev)},"norm_ratio":${r3(norm)},""" +
-            s""""standalone_ratio":${r3(sRaw)},"verdict":"$verdict"}""")
-      }
-    val standaloneJson = standaloneAdjudications
-      .map { case (k, _, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    if (standaloneAdjudications.nonEmpty)
-      System.err.println("[bench] standalone adjudication: " + standaloneJson)
-    // r17 (VERDICT item 7): when the two-condition alert fired AND the
-    // machine-run standalone re-measure reproduced the committed cost,
-    // the in-suite median is a KNOWN measurement artifact (suite
-    // cache/heap pressure — recurred r12, r14, r16 and burned a manual
-    // adjudication each time). Write the standalone median as the
-    // key's canonical cost in `queries`; BOTH numbers stay recorded in
-    // trigger_standalone (in_suite + standalone), so nothing is lost.
-    // Keys whose standalone stayed elevated keep the in-suite number —
-    // a real regression cannot hide behind this substitution.
-    val canon: Map[String, Double] = standaloneAdjudications
-      .collect { case (k, s, _) if s > 0 => k -> s }.toMap
-    val resultsCanon = results.map { case (k, (med, lo, hi)) =>
-      canon.get(k).map(s => (k, (s, math.min(lo, s), math.max(hi, s))))
-        .getOrElse((k, (med, lo, hi)))
-    }
-    val total = resultsCanon.map(_._2._1).filter(_ >= 0).sum
-    // from resultsCanon: a substituted standalone median widens its
-    // key's spread, so every reported median lies inside its spread
-    val spread = resultsCanon.map { case (k, (_, lo, hi)) =>
-      "\"" + k + "\":[" + lo + "," + hi + "]"
-    }.mkString("{", ",", "}")
-    val qsFull = jmap(resultsCanon.map { case (k, (med, _, _)) => k -> med },
-      _.toString)
+      System.err.println("[bench] TRIGGER-COST REGRESSION vs previous artifact " +
+        "(counters as [previous, now]): " + regJson)
+    val total = results.map(_._2._1).filter(_ >= 0).sum
+    // Full-precision medians + (min,max) spreads + counters go to a
+    // local artifact (committed per round as bench_local_r*.json);
+    // stdout gets a COMPACT line — the harness that collects
+    // BENCH_r*.json keeps only the last ~2000 chars of output, and
+    // rounds 1-5 proved a full-precision line with spreads overflows
+    // that window and is dropped unparsed. With 177 keys even the
+    // 3-decimal full map is ~4.5k chars (the r06-r08 "parsed": null),
+    // so stdout carries a PINNED HEADLINE SUBSET plus the suite total;
+    // the committed local artifact stays complete.
+    val spread = jobj(results.map { case (k, (_, lo, hi)) => k -> s"[$lo,$hi]" })
+    val qsFull = jobj(results.map { case (k, (med, _, _)) => k -> med.toString })
+    val countersJson = jobj(counters.map { case (k, cs) =>
+      k -> jobj(cs.map { case (c, v) => c -> num(v) })
+    })
     java.nio.file.Files.write(
       java.nio.file.Paths.get(artifact),
-      (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"query_spread":$spread,"canary_before":${jmap(canaryBefore, _.toString)},"canary_after":${jmap(canaryAfter, _.toString)},"canary_mid":${canaryMid.mkString("[", ",", "]")},"canary_drift":$canaryDrift,"host_factor":${r3(hostFactor)},"noise_envelope":${r3(noiseEnvelope)},"regression_adjudication":"$adjudication","ingest_events_per_sec":$eps,"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir"}""" + "\n")
+      (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"query_spread":$spread,"counters":$countersJson,"ingest_events_per_sec":$eps,"trigger_regressions":$regJson,"sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))
     val headlineKeys = Seq("events_parse", "app_list", "task_quantiles",
       "critical_path", "dedup_exact", "dedup_ngram", "dedup_minhash",
@@ -356,11 +192,49 @@ object Bench {
       "stream_minhash_trigger_full_corpus",
       "stream_emb_trigger_full_corpus",
       "stream_cluster_trigger_full_corpus").toSet
-    val hl = if (only.isDefined) resultsCanon
-      else resultsCanon.filter(kv => headlineKeys.contains(kv._1))
-    val qs = jmap(hl.map { case (k, (med, _, _)) => k -> med }, r3)
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"canary_drift":${r3(canaryDrift)},"host_factor":${r3(hostFactor)},"ingest_events_per_sec":$eps,"trigger_regression_alert":${regressions.nonEmpty},"trigger_regressions":$regJson,"trigger_standalone":$standaloneJson,"sf":"$sfDir","full":"$artifact"}""")
+    val hl = if (only.isDefined) results
+      else results.filter(kv => headlineKeys.contains(kv._1))
+    val qs = jobj(hl.map { case (k, (med, _, _)) => k -> r3(med) })
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"ingest_events_per_sec":$eps,"trigger_regression_alert":${regressions.nonEmpty},"trigger_regressions":$regJson,"sf":"$sfDir","full":"$artifact"}""")
   }
+
+  /** Per counter, the median across `ws` (upper-middle for even N). */
+  private[graft] def counterMedians(ws: Seq[Work]): Seq[(String, Double)] =
+    ws.map(_.counters).transpose.map(cs => cs.head._1 -> cs.map(_._2).sorted.apply(cs.size / 2))
+
+  /** How far each work counter may rise before the trigger rule flags
+    * it: any rise in job count, task CPU or shuffle bytes beyond 1.5x. */
+  private val RegressionFactors = Seq("jobs" -> 1.0, "task_cpu_ms" -> 1.5,
+    "shuffle_bytes" -> 1.5)
+
+  /** The trigger-cost rule: each `_incr`/`_trigger_` key of `now` whose
+    * counters moved past [[RegressionFactors]] against `prev`, with the
+    * moved counters as (name, previous, now). Counters alone decide:
+    * wall time, and the driver gap derived from it, follow the host. A
+    * key without a baseline in `prev` is not flagged. */
+  private[graft] def triggerRegressions(now: Map[String, Map[String, Double]],
+      prev: Map[String, Map[String, Double]]): Seq[(String, Seq[(String, Double, Double)])] =
+    now.toSeq.sortBy(_._1).flatMap { case (k, cs) =>
+      prev.get(k).filter(_ => k.contains("_incr") || k.contains("_trigger_")).map { p =>
+        k -> RegressionFactors.collect {
+          case (c, f) if p.contains(c) && cs.get(c).exists(_ > f * p(c)) => (c, p(c), cs(c))
+        }
+      }
+    }.filter(_._2.nonEmpty)
+
+  /** The previous artifact's `counters`, when it exists and was taken
+    * at the same scale factor (counters scale with the data). */
+  private def prevCounters(artifact: String, sfDir: String): Map[String, Map[String, Double]] =
+    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(artifact))))
+      .toOption
+      .filter(r => Option(r.get("sf")).exists(_.asText == sfDir))
+      .flatMap(r => Option(r.get("counters")))
+      .map(_.properties().asScala.map { e =>
+        e.getKey -> e.getValue.properties().asScala
+          .map(c => c.getKey -> c.getValue.asDouble).toMap
+      }.toMap)
+      .getOrElse(Map.empty)
 
   /** Median with (min, max) spread; one failed sample (-1) fails the
     * key. Even N reports the upper-middle sample. */
@@ -372,9 +246,11 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   /** What a scenario call needs from the running bench: the session,
-    * the timed and the warm-up scale factor, and the bench temp root. */
-  private[graft] final class Ctx(val spark: SparkSession, val sfDir: String,
-                                 val warmDir: String, root: java.nio.file.Path) {
+    * its work ledger, the timed and the warm-up scale factor, and the
+    * bench temp root. */
+  private[graft] final class Ctx(val spark: SparkSession, val ledger: WorkLedger,
+                                 val sfDir: String, val warmDir: String,
+                                 root: java.nio.file.Path) {
     /** A fresh dir under the bench root. */
     def tmp(prefix: String): String =
       java.nio.file.Files.createTempDirectory(root, prefix).toString
@@ -385,14 +261,12 @@ object Bench {
   }
 
   /** One bench scenario outside `SparkEntry.queries`: two result keys,
-    * a warm-up call, and the timed call giving one seconds value per
-    * key (-1 = failed). `remeasure` times one key alone for the
-    * standalone adjudication; trigger rows fill it. */
+    * a warm-up call, and the timed call giving one measured run per key
+    * (None = failed). */
   private[graft] final case class Scenario(
       keys: (String, String),
       warm: Ctx => Unit,
-      timed: Ctx => (Double, Double),
-      remeasure: Map[String, Ctx => Double] = Map.empty)
+      timed: Ctx => (Option[Work], Option[Work]))
 
   /** The three calls of a trigger row: `Warm` absorbs codegen/JIT,
     * `Quarter` and `Full` are the two timed seed sizes. */
@@ -404,28 +278,24 @@ object Bench {
   /** A trigger row: `once(c, point)` seeds the state and times ONE
     * trigger; the quarter and full seeds are timed back to back. */
   private def triggerRow(quarterKey: String, fullKey: String)(
-      once: (Ctx, Point) => Double): Scenario = {
-    val quarter = (c: Ctx) => once(c, Quarter)
-    val full = (c: Ctx) => once(c, Full)
+      once: (Ctx, Point) => Option[Work]): Scenario =
     Scenario((quarterKey, fullKey), c => once(c, Warm),
-      c => (quarter(c), full(c)), Map(quarterKey -> quarter, fullKey -> full))
-  }
+      c => (once(c, Quarter), once(c, Full)))
 
   /** The one trigger harness: clear the cache, settle the heap, let
     * `seed` write the state stores under a fresh dir and hand back the
-    * trigger call, then time that call alone. Any failure gives -1. */
+    * trigger call, then measure that call alone. Any failure gives
+    * None. */
   private def timeTrigger(c: Ctx, label: String)(
-      seed: String => (() => Unit)): Double = {
+      seed: String => (() => Unit)): Option[Work] = {
     c.spark.catalog.clearCache()
     System.gc()
     try {
       val trigger = seed(c.tmp(s"graft-$label"))
-      val t0 = System.nanoTime()
-      trigger()
-      (System.nanoTime() - t0) / 1e9
+      Some(c.ledger.measure(trigger())._2)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $label failed: ${e.getMessage}")
-      -1.0
+      None
     }
   }
 
@@ -463,31 +333,26 @@ object Bench {
   private def storeRow(writeKey: String, familyKey: String, table: String)(
       write: (DataFrame, String) => Unit)(
       family: (DataFrame, Option[DataFrame]) => Unit): Scenario = {
-    def once(c: Ctx, dir: String): (Double, Double) = {
+    def once(c: Ctx, dir: String): (Option[Work], Option[Work]) = {
       c.spark.catalog.clearCache()
       System.gc()
       val store = c.store(writeKey)
       try {
         val rows = c.spark.read.parquet(s"$dir/$table.parquet")
-        val t0 = System.nanoTime()
-        write(rows, store)
-        val tWrite = (System.nanoTime() - t0) / 1e9
+        val (_, tWrite) = c.ledger.measure(write(rows, store))
         val pre = Some(c.spark.read.parquet(store))
-        val t1 = System.nanoTime()
-        family(rows, pre)
-        (tWrite, (System.nanoTime() - t1) / 1e9)
+        (Some(tWrite), Some(c.ledger.measure(family(rows, pre))._2))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $familyKey failed: ${e.getMessage}")
-        (-1.0, -1.0)
+        (None, None)
       }
     }
     Scenario((writeKey, familyKey), c => once(c, c.warmDir), c => once(c, c.sfDir))
   }
 
   /** Every bench scenario beyond `SparkEntry.queries`, in run order.
-    * `run` gates, warms, times and reports each row with one loop, and
-    * re-measures a flagged trigger key through its row, so adding a
-    * scenario is adding a row. */
+    * `run` gates, warms, measures and reports each row with one loop,
+    * so adding a scenario is adding a row. */
   private[graft] val Scenarios: Seq[Scenario] = Seq(
     // The streaming CLUSTER fold: seed a label store of `seedN` docs
     // (paired into 2-clusters), then time ONE processPairs of a fixed
@@ -671,10 +536,6 @@ object Bench {
       noop(Embeddings.knnGraph(emb, precomputedQuantized = qv))
       noop(Embeddings.embOutliers(emb, precomputedQuantized = qv))
     })
-
-  /** The standalone re-measure of a scenario key, if its row has one. */
-  private[graft] def remeasure(key: String): Option[Ctx => Double] =
-    Scenarios.flatMap(_.remeasure.get(key)).headOption
 
   /** Event-log ingest throughput: parse 256k synthetic SparkListener
     * JSON lines through the real parser path (text read -> from_json

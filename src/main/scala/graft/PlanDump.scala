@@ -1,9 +1,10 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graft.BusAccess
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -16,27 +17,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * key's frame was built (the pinned operators' cache/checkpoint
   * brackets, see [[executedPlans]]) to `<outDir>/<key>_<suffix>_executed.txt`
   * — the before/after plan evidence the optimization rounds commit
-  * under plans/r16 etc. Runs at the bench's core count/shuffle settings
-  * so plan shapes (broadcast decisions, AQE) match what the bench times.
+  * under plans/r16 etc. Runs in the bench's session ([[DevSession]]) so
+  * plan shapes (broadcast decisions, AQE) match what the bench times.
   *
   * Usage: runMain graft.PlanDump <keys> <sfDir> <outDir> <suffix> */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 2) args(2) else "plans/r16"
-    val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    if (args.length < 4) {
+      System.err.println("usage: runMain graft.PlanDump <keys> <sfDir> <outDir> <suffix>")
+      sys.exit(2)
+    }
+    val Array(keyList, sfDir, outDir, suffix) = args.take(4)
+    val keys = keyList.split(",").map(_.trim).filter(_.nonEmpty)
+    val spark = DevSession.local("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     def write(name: String, text: String): Unit = {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outDir, name), text)
@@ -70,28 +63,21 @@ object PlanDump {
    *  materializes once however often it is read, so later scans of it
    *  stay leaves, as does a reused exchange).
    *
-   *  Listener delivery is asynchronous, so after `body` one marker
-   *  query runs and the call waits until the listener has seen it:
-   *  the queue delivers in order, so every earlier completion has been
-   *  recorded by then. */
+   *  Listener delivery is asynchronous: every query of `body` posts
+   *  its completion before returning, so once the listener bus has
+   *  drained, every one has been recorded. */
   def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
-    val marker = spark.range(1)
-    val markerSeen = new CountDownLatch(1)
     val completed = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        if (qe eq marker.queryExecution) markerSeen.countDown()
-        else completed.add(qe)
+                             durationNs: Long): Unit = completed.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     val result = try {
       val r = body
-      marker.collect()
-      require(markerSeen.await(60, TimeUnit.SECONDS),
-        "query listener did not deliver the marker query within 60 s")
+      BusAccess.drain(spark.sparkContext)
       r
     } finally spark.listenerManager.unregister(listener)
     (result, completed.asScala.toSeq.map(qe => flatten(qe.executedPlan,

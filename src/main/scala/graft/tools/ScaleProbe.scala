@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scale probe for the IVF-bucketed ANN family: measures
   * knnGraph / semanticClusters on a stress corpus (tools/make_sf1.py)
   * at the harness default K=32 centroids vs the sqrt(N) sizing the
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.DevSession.local("WARN")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = emb.count()
     val sqrtK = math.max(32, math.sqrt(n.toDouble).toInt)

@@ -1,0 +1,13 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+
+/** The listener bus delivers events asynchronously; whatever reads
+ *  what a listener recorded waits for it to drain first. `listenerBus`
+ *  is `private[spark]`, so the accessor lives in a sub-package of
+ *  `org.apache.spark`. */
+object BusAccess {
+  /** Returns once every event posted before the call has been
+   *  delivered to every listener (60 s bound). */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}

@@ -1,13 +1,15 @@
 package graft
 
+import graft.obs.Work
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** `Bench.Scenarios` is the one declaration of every bench key outside
-  * `SparkEntry.queries`: gating, warm-up, timed runs, results and the
-  * standalone re-measure all derive from it. These checks enumerate
-  * the table without starting Spark, so a dropped or renamed scenario
-  * fails here instead of silently vanishing from the bench artifact. */
+  * `SparkEntry.queries`: gating, warm-up, measured runs and results
+  * all derive from it. These checks enumerate the table without
+  * starting Spark, so a dropped or renamed scenario fails here instead
+  * of silently vanishing from the bench artifact. The trigger rule is
+  * checked on hand-built counters. */
 class BenchScenariosSpec extends AnyFunSuite {
   private val tableKeys =
     Bench.Scenarios.flatMap(s => Seq(s.keys._1, s.keys._2))
@@ -26,10 +28,25 @@ class BenchScenariosSpec extends AnyFunSuite {
     assert(tableKeys.filter(SparkEntry.queries.contains).isEmpty)
   }
 
-  test("every trigger key has a standalone re-measure") {
-    val triggers = tableKeys.filter(_.contains("_trigger_"))
-    assert(triggers.size === 20)
-    assert(triggers.filter(Bench.remeasure(_).isEmpty).isEmpty)
+  test("trigger rule flags moved work counters, not wall time, and only against a baseline") {
+    def work(wallMs: Double, jobs: Long, cpuMs: Double, shuffle: Long): Map[String, Double] =
+      Bench.counterMedians(Seq(Work(wallMs, jobs, stages = 2 * jobs, tasks = 8 * jobs,
+        cpuMs, shuffle, spillBytes = 0L, inputBytes = 1L << 20,
+        driverGapMs = wallMs / 2))).toMap
+    val k = "stream_trigger_full_corpus"
+    val prev = Map(k -> work(1000, 5, 800, 4096))
+    def flagged(now: Map[String, Double]) = Bench.triggerRegressions(Map(k -> now), prev)
+
+    assert(flagged(work(1000, 6, 800, 4096)) === Seq(k -> Seq(("jobs", 5.0, 6.0))))
+    assert(flagged(work(1000, 5, 1300, 4096)) === Seq(k -> Seq(("task_cpu_ms", 800.0, 1300.0))))
+    assert(flagged(work(1000, 5, 800, 8192)) === Seq(k -> Seq(("shuffle_bytes", 4096.0, 8192.0))))
+    assert(flagged(work(1000, 5, 1100, 6000)).isEmpty, "within 1.5x")
+    assert(flagged(work(3000, 5, 800, 4096)).isEmpty, "wall time and driver gap tripled")
+    assert(Bench.triggerRegressions(
+      Map("stream_cdc_trigger_full_corpus" -> work(1000, 9, 5000, 1 << 20)), prev).isEmpty,
+      "no baseline")
+    assert(Bench.triggerRegressions(Map("dedup_ngram" -> work(1000, 9, 800, 4096)),
+      Map("dedup_ngram" -> work(1000, 5, 800, 4096))).isEmpty, "not a trigger key")
   }
 
   test("median reports the middle sample and fails on any failed sample") {
