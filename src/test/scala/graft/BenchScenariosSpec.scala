@@ -28,7 +28,7 @@ class BenchScenariosSpec extends AnyFunSuite {
     assert(tableKeys.filter(SparkEntry.queries.contains).isEmpty)
   }
 
-  test("trigger rule flags moved work counters, not wall time, and only against a baseline") {
+  test("trigger rule flags moved work counters, not wall time, against a baseline") {
     def work(wallMs: Double, jobs: Long, cpuMs: Double, shuffle: Long): Map[String, Double] =
       Bench.counterMedians(Seq(Work(wallMs, jobs, stages = 2 * jobs, tasks = 8 * jobs,
         cpuMs, shuffle, spillBytes = 0L, inputBytes = 1L << 20,
