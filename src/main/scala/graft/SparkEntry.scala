@@ -150,8 +150,12 @@ ORDER BY event_id"""
     "winnow_fingerprints_expr" -> ((s, d) =>
       TextAnalysis.winnowFingerprints(docs(s, d))),
     "winnow_overlap" -> ((s, d) => TextAnalysis.winnowOverlap(docs(s, d))),
+    // Every *_incr key builds its corpus state from text with the
+    // state's own builder and pins it once (localCheckpoint), the
+    // stand-in for a maintained store: operators take state only.
     "winnow_overlap_incr" -> ((s, d) => TextAnalysis.winnowOverlapIncremental(
-      docs(s, d).filter(col("doc_id") < 400),
+      TextAnalysis.winnowFingerprints(docs(s, d).filter(col("doc_id") < 400))
+        .localCheckpoint(),
       docs(s, d).filter(col("doc_id") >= 400))),
     "tfidf_terms" -> ((s, d) => TextAnalysis.tfidfTerms(docs(s, d))),
     "template_prefixes" -> ((s, d) => TextAnalysis.templatePrefixes(docs(s, d))),
@@ -210,8 +214,9 @@ ORDER BY event_id"""
     // decontamination harness split: docs % 20 == 0 play the eval
     // benchmark, the rest are training candidates
     "contamination" -> ((s, d) => Decontamination.benchmarkOverlap(
-      docs(s, d).filter(col("doc_id") % 20 =!= 0),
-      docs(s, d).filter(col("doc_id") % 20 === 0))),
+      Dedup.shingles(docs(s, d).filter(col("doc_id") % 20 === 0))
+        .localCheckpoint(),
+      docs(s, d).filter(col("doc_id") % 20 =!= 0))),
     "contamination_normalized" -> ((s, d) =>
       Decontamination.benchmarkOverlapNormalized(
         docs(s, d).filter(col("doc_id") % 20 =!= 0),
@@ -234,20 +239,20 @@ ORDER BY event_id"""
     "dsir_select" -> ((s, d) => TextAnalysis.dsirSelect(docs(s, d))),
     "span_trim" -> ((s, d) => TextAnalysis.spanTrim(docs(s, d))),
     "span_dedup_incr" -> ((s, d) => TextAnalysis.spanDedupIncremental(
-      docs(s, d).filter(col("doc_id") < 400),
+      TextAnalysis.spanGramCounts(docs(s, d).filter(col("doc_id") < 400))
+        .localCheckpoint(),
       docs(s, d).filter(col("doc_id") >= 400))),
-    // Maintained-store path: corpus text never re-shingled — counts
-    // come from an append-only (gram, cnt) store, split in two delta
-    // pieces on purpose to prove the SUM-fold is exact; must
-    // hash-match the same full-run-restricted oracle.
+    // Maintained-store shape: counts come from an append-only
+    // (gram, cnt) store, split in two delta pieces on purpose to prove
+    // the SUM-fold is exact; must hash-match the same
+    // full-run-restricted oracle.
     "span_dedup_incr_store" -> ((s, d) => {
       val corpus = docs(s, d).filter(col("doc_id") < 400)
       val deltas = TextAnalysis.spanGramCounts(corpus.filter(col("doc_id") < 200))
         .unionByName(TextAnalysis.spanGramCounts(
           corpus.filter(col("doc_id") >= 200)))
-      TextAnalysis.spanDedupIncremental(
-        corpus.limit(0), docs(s, d).filter(col("doc_id") >= 400),
-        corpusGramCounts = Some(deltas))
+      TextAnalysis.spanDedupIncremental(deltas,
+        docs(s, d).filter(col("doc_id") >= 400))
     }),
     "surprisal_buckets" -> ((s, d) => TextAnalysis.surprisalBuckets(docs(s, d))),
     "dedup_exact" -> ((s, d) => Dedup.dedupExact(docs(s, d))),
@@ -260,29 +265,17 @@ ORDER BY event_id"""
     "cdc_chunk_trim" -> ((s, d) => Dedup.cdcChunkTrim(docs(s, d))),
     "cdc_chunk_size_hist" -> ((s, d) => Dedup.cdcChunkSizeHist(docs(s, d))),
     // Incremental CDC: batch = the dedup_exact_incr harness transform
-    // (verbatim copies of %5==0 docs + tail-perturbed %5==1 docs,
-    // id-shifted above the corpus so keep-first favors the corpus)
+    // ([[arrivals]])
     "cdc_chunk_dedup_incr" -> ((s, d) => {
       val dd = docs(s, d)
-      val batch = dd.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(dd.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat(col("text"), lit(" zzz")).as("text")))
-      Dedup.cdcChunkDedupIncremental(dd, batch)
+      Dedup.cdcChunkDedupIncremental(Dedup.cdcChunkStore(dd).localCheckpoint(),
+        arrivals(dd))
     }),
-    // Maintained-store path: the (fp, len) chunk store is built first
-    // and corpus text is NOT an input to the dedup call — must
-    // hash-match the identical full-run-restricted oracle.
+    // Maintained-store shape: the (fp, len) chunk store unpinned —
+    // must hash-match the identical full-run-restricted oracle.
     "cdc_chunk_dedup_incr_store" -> ((s, d) => {
       val dd = docs(s, d)
-      val batch = dd.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(dd.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat(col("text"), lit(" zzz")).as("text")))
-      Dedup.cdcChunkDedupIncremental(dd.limit(0), batch,
-        corpusChunks = Some(Dedup.cdcChunkStore(dd)))
+      Dedup.cdcChunkDedupIncremental(Dedup.cdcChunkStore(dd), arrivals(dd))
     }),
     "dedup_threshold_sweep" -> ((s, d) => Dedup.dedupThresholdSweep(docs(s, d))),
     "minhash_calibration" -> ((s, d) => Dedup.minhashCalibration(docs(s, d))),
@@ -299,65 +292,50 @@ ORDER BY event_id"""
     "gram_df_spectrum" -> ((s, d) => Dedup.gramDfSpectrum(docs(s, d))),
     "dup_degree_hist" -> ((s, d) => Dedup.dupDegreeHist(docs(s, d))),
     "source_gram_overlap" -> ((s, d) => Dedup.sourceGramOverlap(docs(s, d))),
-    "dedup_ngram_incr" -> ((s, d) => Dedup.dedupNgramIncremental(
-      docs(s, d).filter(col("doc_id") < 400),
-      docs(s, d).filter(col("doc_id") >= 400))),
-    // Exact-dup arrival harness: batch = verbatim shifted-id copies of
-    // every 5th doc (true dups) + tail-perturbed copies of the next
-    // residue class (non-dups); corpus = the full table.
+    "dedup_ngram_incr" -> ((s, d) => {
+      val corpusSh = Dedup.shingles(docs(s, d).filter(col("doc_id") < 400))
+        .localCheckpoint()
+      Dedup.dedupNgramIncremental(corpusSh, Dedup.gramDfDelta(corpusSh),
+        docs(s, d).filter(col("doc_id") >= 400))
+    }),
+    // Exact-dup arrival harness: batch = [[arrivals]]; corpus = the
+    // full table.
     "dedup_exact_incr" -> ((s, d) => {
       val dd = docs(s, d)
-      val batch = dd.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(dd.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat(col("text"), lit(" zzz")).as("text")))
-      Dedup.dedupExactIncremental(dd, batch)
+      Dedup.dedupExactIncremental(Dedup.bloomWords(dd).localCheckpoint(),
+        Dedup.contentHashes(dd).localCheckpoint(), arrivals(dd))
     }),
-    // Maintained-store path of the same operator: the bloom words and
-    // the hash store are materialized first and corpus text is NOT an
-    // input to the dedup call — hash-matched against the identical
-    // full-run oracle (the dedup_ngram_incr_store discipline).
+    // Maintained-store shape of the same operator (unpinned state) —
+    // hash-matched against the identical full-run oracle.
     "dedup_exact_incr_store" -> ((s, d) => {
       val dd = docs(s, d)
-      val batch = dd.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(dd.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 2000000L).as("doc_id"),
-            concat(col("text"), lit(" zzz")).as("text")))
-      Dedup.dedupExactIncremental(dd.limit(0), batch,
-        corpusWords = Some(Dedup.bloomWords(dd)),
-        corpusHashes = Some(dd.select(col("doc_id"),
-          md5(col("text")).as("content_hash"))))
+      Dedup.dedupExactIncremental(Dedup.bloomWords(dd),
+        Dedup.contentHashes(dd), arrivals(dd))
     }),
-    "dedup_minhash_incr" -> ((s, d) => Dedup.dedupMinhashIncremental(
-      docs(s, d).filter(col("doc_id") < 400),
-      docs(s, d).filter(col("doc_id") >= 400))),
-    // Signature-store path: corpus text never re-read or re-signed;
-    // must hash-match the same full-run-restricted oracle.
+    "dedup_minhash_incr" -> ((s, d) => {
+      val corpus = docs(s, d).filter(col("doc_id") < 400)
+      Dedup.dedupMinhashIncremental(Dedup.shingles(corpus).localCheckpoint(),
+        Dedup.minhashSignatures(corpus).localCheckpoint(),
+        docs(s, d).filter(col("doc_id") >= 400))
+    }),
+    // Signature-store shape (unpinned state); must hash-match the same
+    // full-run-restricted oracle.
     "dedup_minhash_incr_store" -> ((s, d) => {
       val corpus = docs(s, d).filter(col("doc_id") < 400)
-      Dedup.dedupMinhashIncremental(
-        corpus.limit(0), docs(s, d).filter(col("doc_id") >= 400),
-        corpusShingles = Some(Dedup.shingles(corpus)),
-        corpusSignatures = Some(Dedup.minhashSignatures(corpus)))
+      Dedup.dedupMinhashIncremental(Dedup.shingles(corpus),
+        Dedup.minhashSignatures(corpus), docs(s, d).filter(col("doc_id") >= 400))
     }),
-    // Same incremental split, but through the MAINTAINED-STORE path
-    // (precomputed corpus shingles + append-only gram-df deltas — the
-    // StreamingDedup per-trigger shape): corpus text is never
-    // shingled, and the result must still hash-match the full-run
-    // oracle. The df frame is split in two delta pieces on purpose,
-    // proving the SUM-fold of an append-only store is exact.
+    // Same incremental split in the StreamingDedup per-trigger shape
+    // (corpus shingles + append-only gram-df deltas, unpinned): the
+    // result must still hash-match the full-run oracle. The df frame
+    // is split in two delta pieces on purpose, proving the SUM-fold
+    // of an append-only store is exact.
     "dedup_ngram_incr_store" -> ((s, d) => {
-      val corpus = docs(s, d).filter(col("doc_id") < 400)
-      val corpusSh = Dedup.shingles(corpus)
-      val dfDeltas = corpusSh.filter(col("doc_id") < 200)
-        .groupBy("gram").agg(count(lit(1)).as("df_cnt"))
-        .unionByName(corpusSh.filter(col("doc_id") >= 200)
-          .groupBy("gram").agg(count(lit(1)).as("df_cnt")))
-      Dedup.dedupNgramIncremental(
-        corpus.limit(0), docs(s, d).filter(col("doc_id") >= 400),
-        corpusShingles = Some(corpusSh), corpusGramDf = Some(dfDeltas))
+      val corpusSh = Dedup.shingles(docs(s, d).filter(col("doc_id") < 400))
+      val dfDeltas = Dedup.gramDfDelta(corpusSh.filter(col("doc_id") < 200))
+        .unionByName(Dedup.gramDfDelta(corpusSh.filter(col("doc_id") >= 200)))
+      Dedup.dedupNgramIncremental(corpusSh, dfDeltas,
+        docs(s, d).filter(col("doc_id") >= 400))
     }),
     "dedup_minhash" -> ((s, d) => Dedup.dedupMinhash(docs(s, d))),
     // Scale mode (codegen'd poly_hash gram ids — digest-free AND
@@ -386,18 +364,15 @@ ORDER BY event_id"""
     "dedup_simhash_expr" -> ((s, d) =>
       Dedup.dedupSimhash(docs(s, d), idFamily = "poly")),
     "dedup_simhash_incr" -> ((s, d) => Dedup.dedupSimhashIncremental(
-      docs(s, d).filter(col("doc_id") < 400),
+      Dedup.simhashFingerprints(docs(s, d).filter(col("doc_id") < 400))
+        .localCheckpoint(),
       docs(s, d).filter(col("doc_id") >= 400))),
-    // Fingerprint-store path: the corpus contributes ONE long per doc
-    // (no shingle store — simhash verifies from fingerprints), corpus
-    // text never re-read; must hash-match the full-run-restricted
-    // oracle.
-    "dedup_simhash_incr_store" -> ((s, d) => {
-      val corpus = docs(s, d).filter(col("doc_id") < 400)
-      Dedup.dedupSimhashIncremental(
-        corpus.limit(0), docs(s, d).filter(col("doc_id") >= 400),
-        corpusFingerprints = Some(Dedup.simhashFingerprints(corpus)))
-    }),
+    // Fingerprint-store shape (unpinned state): the corpus contributes
+    // ONE long per doc (no shingle store — simhash verifies from
+    // fingerprints); must hash-match the full-run-restricted oracle.
+    "dedup_simhash_incr_store" -> ((s, d) => Dedup.dedupSimhashIncremental(
+      Dedup.simhashFingerprints(docs(s, d).filter(col("doc_id") < 400)),
+      docs(s, d).filter(col("doc_id") >= 400))),
     // Duplicate GROUPS: connected components over the verified
     // near-dup pair graph (survivor = min doc_id per component).
     "dedup_clusters" -> ((s, d) => Clustering.dedupClusters(docs(s, d))),
@@ -420,18 +395,16 @@ ORDER BY event_id"""
     "cluster_canonical" -> ((s, d) => Clustering.clusterCanonical(docs(s, d))),
     "dedup_embedding" -> ((s, d) => Embeddings.dedupEmbedding(emb(s, d))),
     "dedup_embedding_incr" -> ((s, d) => Embeddings.dedupEmbeddingIncremental(
-      emb(s, d).filter(col("vec_id") < 400),
+      Embeddings.quantizedIndex(emb(s, d).filter(col("vec_id") < 400))
+        .localCheckpoint(),
       emb(s, d).filter(col("vec_id") >= 400))),
-    // Quantized-store path: the corpus contributes the SAME persisted
-    // index frame the whole ANN family reads ([[writeQuantizedStore]]);
-    // corpus embeddings never re-quantized (limit(0) proves it); must
-    // hash-match the full-run-restricted oracle.
-    "dedup_embedding_incr_store" -> ((s, d) => {
-      val corpus = emb(s, d).filter(col("vec_id") < 400)
-      Embeddings.dedupEmbeddingIncremental(
-        corpus.limit(0), emb(s, d).filter(col("vec_id") >= 400),
-        corpusQuantized = Some(Embeddings.quantizedIndex(corpus)))
-    }),
+    // Quantized-store shape (unpinned state): the corpus contributes
+    // the SAME index frame the whole ANN family reads
+    // ([[writeQuantizedStore]]); must hash-match the
+    // full-run-restricted oracle.
+    "dedup_embedding_incr_store" -> ((s, d) => Embeddings.dedupEmbeddingIncremental(
+      Embeddings.quantizedIndex(emb(s, d).filter(col("vec_id") < 400)),
+      emb(s, d).filter(col("vec_id") >= 400))),
     // The kNN/SemDeDup family defaults to AutoCentroids (sqrt-N cell
     // sizing); the harness pins 32 so the oracle's 32-cell codebook
     // CTE stays byte-stable at every scale factor.
@@ -520,6 +493,15 @@ ORDER BY event_id"""
     s.read.parquet(s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
+  /** The exact/CDC arrival batch: verbatim shifted-id copies of every
+    * 5th doc (true dups) + tail-perturbed copies of the next residue
+    * class (non-dups), ids above the corpus so keep-first favors it. */
+  private def arrivals(dd: DataFrame): DataFrame =
+    dd.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .unionByName(dd.filter(col("doc_id") % 5 === 1)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat(col("text"), lit(" zzz")).as("text")))
   /** The harness's bounded ANN query set: every 100th vector, capped
     * at the first 2000 ids — a FIXED-SIZE (≤20) query set at any
     * corpus scale, not a fixed fraction (round-11 verdict: a

@@ -26,16 +26,15 @@ object Decontamination {
 
   /** (doc_id, bench_id, inter_n, bench_n, overlap) for every candidate
    *  x benchmark pair at benchmark-containment >= minOverlap.
-   *  `docs` = training candidates, `bench` = benchmark documents (both
-   *  documents-shaped); a doc appearing in both frames is not compared
-   *  with itself. */
-  def benchmarkOverlap(docs: DataFrame, bench: DataFrame,
-                       minOverlap: Double = 0.3,
-                       precomputedShingles: Option[DataFrame] = None,
-                       precomputedBenchShingles: Option[DataFrame] = None): DataFrame = {
-    val shDocs = precomputedShingles.getOrElse(Dedup.shingles(docs))
-    val shBench = precomputedBenchShingles
-      .getOrElse(Dedup.shingles(bench))
+   *  `benchShingles` = the benchmark side as state (the
+   *  [[Dedup.shingles]] frame of the benchmark documents, or a
+   *  [[Dedup.writeShingleStore]] store of it), `docs` = training
+   *  candidates (documents-shaped); a doc id appearing on both sides
+   *  is not compared with itself. */
+  def benchmarkOverlap(benchShingles: DataFrame, docs: DataFrame,
+                       minOverlap: Double = 0.3): DataFrame = {
+    val shDocs = Dedup.shingles(docs)
+    val shBench = benchShingles
       .select(col("doc_id").as("bench_id"), col("gram"))
     val benchSizes = shBench.groupBy("bench_id").agg(count(lit(1)).as("bench_n"))
     shDocs.join(broadcast(shBench), "gram")
@@ -63,7 +62,7 @@ object Decontamination {
     def norm(df: DataFrame) = df.select(col("doc_id"),
       trim(regexp_replace(regexp_replace(lower(col("text")),
         "[^a-z0-9 ]", ""), " +", " ")).as("text"))
-    benchmarkOverlap(norm(docs), norm(bench), minOverlap)
+    benchmarkOverlap(Dedup.shingles(norm(bench)), norm(docs), minOverlap)
   }
 
   /** [[benchmarkOverlapOracle]] over a normalized-documents CTE (the
@@ -179,7 +178,7 @@ ORDER BY i.doc_id, i.bench_id"""
    *  mass, flagged token mass, and both rates. */
   def contaminationSourceRates(docs: DataFrame, bench: DataFrame,
                                minOverlap: Double = 0.3): DataFrame = {
-    val flagged = benchmarkOverlap(docs, bench, minOverlap)
+    val flagged = benchmarkOverlap(Dedup.shingles(bench), docs, minOverlap)
       .select("doc_id").distinct()
       .withColumn("flagged", lit(1L))
     docs.select(col("doc_id"), col("source"),

@@ -371,6 +371,13 @@ ORDER BY n.source"""
   def writeShingleStore(docs: DataFrame, path: String, n: Int = 3): Unit =
     shingles(docs, n).write.mode("overwrite").parquet(path)
 
+  /** Per-gram document counts `(gram, df_cnt)` of a shingle frame —
+   *  the append-only delta [[dedupNgramIncremental]] folds by SUM (one
+   *  delta per ingested batch: the streaming n-gram loop's gram-df
+   *  store). Shingles are distinct per doc, so the row count is df. */
+  def gramDfDelta(sh: DataFrame): DataFrame =
+    sh.groupBy("gram").agg(count(lit(1)).as("df_cnt"))
+
   /** The multi-consumer shingle frame: a locally-built fallback is
    *  `.cache()`d (consumed by both the sketch path and the Jaccard
    *  verify), but a caller-supplied `precomputedShingles` — a
@@ -1859,53 +1866,35 @@ ORDER BY c.doc_a, c.doc_b"""
    *  Output is exactly the full-run pair set restricted to
    *  batch-touching pairs.
    *
-   *  Repeated-invocation mode (the [[graft.streaming.StreamingDedup]]
-   *  loop, or a daily ingest job): re-shingling the corpus TEXT on
-   *  every call is O(corpus) work per call, which diverges as the
-   *  corpus grows. Pass `corpusShingles` (the maintained
-   *  [[writeShingleStore]] frame — `corpus` text is then NEVER read)
-   *  and `corpusGramDf` (a maintained `(gram, df_cnt)` frame; delta
-   *  rows with duplicate grams are fine — they are folded by SUM, so
-   *  an append-only per-batch delta store is a valid input) and the
-   *  per-call work drops to O(batch shingles + store scans): no
+   *  The corpus enters as state only: `corpusShingles` (the
+   *  [[writeShingleStore]] frame) and `corpusGramDf` (a `(gram,
+   *  df_cnt)` frame of [[gramDfDelta]] rows; duplicate grams are
+   *  folded by SUM, so an append-only per-batch delta store is a valid
+   *  input). Per-call work is O(batch shingles + store scans): no
    *  `word_ngrams` pass over the corpus, no corpus-wide re-count. */
-  def dedupNgramIncremental(corpus: DataFrame, batch: DataFrame,
+  def dedupNgramIncremental(corpusShingles: DataFrame, corpusGramDf: DataFrame,
+                            batch: DataFrame,
                             maxDf: Long = 5L,
-                            minJaccard: Double = 0.2,
-                            corpusShingles: Option[DataFrame] = None,
-                            corpusGramDf: Option[DataFrame] = None): DataFrame = {
-    val batchDocs = batch.select("doc_id", "text")
+                            minJaccard: Double = 0.2): DataFrame = {
     // Cache the BATCH shingles (bounded by the incremental contract,
     // consumed by grams/df/candidates) — but NEVER the corpus-side
-    // store union: in store mode the shingle store is already
-    // materialized parquet, and caching state-cardinality gram rows
-    // per call re-materializes O(state) strings into executor memory
-    // (the sf10 probe measured the trigger 3.1x per 4x state — the
-    // cache write + heap pressure, not the columnar scans it saved;
-    // the round-8 store-vs-cache lesson again). Text mode (no store)
-    // still caches: there the union subtree re-SHINGLES corpus text
-    // per consumer, which is worse than the cache.
-    val batchSh = shingles(batchDocs).cache()
-    val shCached = corpusShingles.isEmpty
-    val sh = corpusShingles match {
-      case Some(cs) => cs.select("doc_id", "gram").unionByName(batchSh)
-      case None => shingles(
-        corpus.select("doc_id", "text").unionByName(batchDocs)).cache()
-    }
+    // store union: the shingle state is already materialized, and
+    // caching state-cardinality gram rows per call re-materializes
+    // O(state) strings into executor memory (the sf10 probe measured
+    // the trigger 3.1x per 4x state — the cache write + heap pressure,
+    // not the columnar scans it saved; the round-8 store-vs-cache
+    // lesson again).
+    val batchSh = shingles(batch.select("doc_id", "text")).cache()
+    val sh = corpusShingles.select("doc_id", "gram").unionByName(batchSh)
     // Every candidate pair shares a BATCH gram, so df is only ever
-    // consulted at the batch's grams: restrict the fold (store-delta
-    // or counted) to them up front — the df term drops from
-    // O(|vocab|) to O(|batch vocab|) per call, identical results.
+    // consulted at the batch's grams: restrict the store-delta fold to
+    // them up front — the df term drops from O(|vocab|) to
+    // O(|batch vocab|) per call, identical results.
     val batchGrams = batchSh.select("gram").distinct()
-    val df = corpusGramDf match {
-      case Some(cdf) => cdf.select(col("gram"), col("df_cnt"))
-        .join(broadcast(batchGrams), Seq("gram"), "left_semi")
-        .unionByName(batchSh
-          .groupBy("gram").agg(count(lit(1)).as("df_cnt")))
-        .groupBy("gram").agg(sum("df_cnt").as("df_cnt"))
-      case None => sh.join(broadcast(batchGrams), Seq("gram"), "left_semi")
-        .groupBy("gram").agg(count(lit(1)).as("df_cnt"))
-    }
+    val df = corpusGramDf.select(col("gram"), col("df_cnt"))
+      .join(broadcast(batchGrams), Seq("gram"), "left_semi")
+      .unionByName(gramDfDelta(batchSh))
+      .groupBy("gram").agg(sum("df_cnt").as("df_cnt"))
     // rare-AND-in-batch grams: batch-bounded, so the state shingle
     // frame is scanned + broadcast-filtered, never exchanged at state
     // cardinality on the gram key.
@@ -1958,7 +1947,6 @@ ORDER BY c.doc_a, c.doc_b"""
         .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
         .orderBy("doc_a", "doc_b")
     }
-    if (shCached) sh.unpersist()
     shTouch.unpersist()
     batchSh.unpersist()
     out
@@ -1978,34 +1966,31 @@ ORDER BY c.doc_a, c.doc_b"""
    *  pair join (the O(old²) bulk never enumerates); verification is
    *  the same exact-Jaccard pass.
    *
-   *  Maintained-store mode: pass `corpusShingles` (the
+   *  The corpus enters as state only: `corpusShingles` (the
    *  [[writeShingleStore]] frame, for verification) and
-   *  `corpusSignatures` (the [[writeMinhashStore]] frame) and the
-   *  per-call cost is O(batch) compute + two store scans — corpus
-   *  TEXT is never read, and unlike the n-gram store there is no
-   *  df-delta store to fold: the signature store appends
-   *  per-document rows, the simplest possible incremental state. */
-  def dedupMinhashIncremental(corpus: DataFrame, batch: DataFrame,
+   *  `corpusSignatures` (the [[writeMinhashStore]] frame); per-call
+   *  cost is O(batch) compute + two store scans, and unlike the
+   *  n-gram state there is no df-delta store to fold: the signature
+   *  store appends per-document rows, the simplest possible
+   *  incremental state. */
+  def dedupMinhashIncremental(corpusShingles: DataFrame,
+                              corpusSignatures: DataFrame,
+                              batch: DataFrame,
                               minJaccard: Double = 0.2,
-                              idFamily: String = "md5",
-                              corpusShingles: Option[DataFrame] = None,
-                              corpusSignatures: Option[DataFrame] = None): DataFrame = {
+                              idFamily: String = "md5"): DataFrame = {
     val batchSh = shingles(batch.select("doc_id", "text")).cache()
-    // Store mode never caches the corpus shingles: the store is
-    // materialized parquet, scanned at most twice, and caching
-    // O(state) gram strings per call is the heap-pressure term the
-    // sf10 probe billed to this trigger (see dedupNgramIncremental).
-    val corpusShCached = corpusShingles.isEmpty
-    val corpusSh = corpusShingles.map(_.select("doc_id", "gram"))
-      .getOrElse(shingles(corpus.select("doc_id", "text")).cache())
+    // The corpus shingles are never cached: the state is materialized,
+    // scanned at most twice, and caching O(state) gram strings per
+    // call is the heap-pressure term the sf10 probe billed to this
+    // trigger (see dedupNgramIncremental).
+    val corpusSh = corpusShingles.select("doc_id", "gram")
     // r16: consumed twice (the union side of allBands AND the
     // broadcast batch-band side of the candidate join) — uncached,
     // the batch's shingle-id + 16-min signature agg ran twice per
     // call. Batch-bounded (one row per batch doc).
     val batchSig = minhashSigWide(shingleIds(batchSh, idFamily)).cache()
     val corpusSig = corpusSignatures
-      .map(_.select(col("doc_id") +: (0 until NumHashes).map(j => col(s"mh$j")): _*))
-      .getOrElse(minhashSigWide(shingleIds(corpusSh, idFamily)))
+      .select(col("doc_id") +: (0 until NumHashes).map(j => col(s"mh$j")): _*)
     val allBands = minhashBandSig(corpusSig.unionByName(batchSig))
     val batchBands = minhashBandSig(batchSig)
     // The batch side is the DELTA — bounded by the incremental
@@ -2026,15 +2011,14 @@ ORDER BY c.doc_a, c.doc_b"""
         .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
         .orderBy("doc_a", "doc_b")
     }
-    if (corpusShCached) corpusSh.unpersist()
     batchSig.unpersist()
     batchSh.unpersist()
     out
   }
 
   /** The per-doc wide signature frame (`doc_id, mh0..mh15`) — the
-   *  append-only state [[dedupMinhashIncremental]]'s maintained-store
-   *  mode reads instead of re-signing the corpus. */
+   *  append-only state [[dedupMinhashIncremental]] reads instead of
+   *  re-signing the corpus. */
   def minhashSignatures(docs: DataFrame, idFamily: String = "md5"): DataFrame =
     minhashSigWide(shingleIds(shingles(docs.select("doc_id", "text")), idFamily))
 
@@ -2702,8 +2686,8 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
       .orderBy("doc_a", "doc_b")
 
   /** The per-doc fingerprint frame (`doc_id, fp`) — the append-only
-   *  state [[dedupSimhashIncremental]]'s maintained-store mode reads
-   *  instead of re-fingerprinting the corpus. ONE long per document:
+   *  state [[dedupSimhashIncremental]] reads instead of
+   *  re-fingerprinting the corpus. ONE long per document:
    *  the cheapest incremental near-dup state in the family (minhash
    *  keeps 16 longs + the shingle store for verify; simhash verifies
    *  from the fingerprints themselves, so this frame is the WHOLE
@@ -2769,12 +2753,12 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  the result is bit-identical to the full run restricted to
    *  batch-touching pairs.
    *
-   *  Maintained-store mode: pass `corpusFingerprints` (the
-   *  [[writeSimhashStore]] frame) and corpus TEXT is never read. */
-  def dedupSimhashIncremental(corpus: DataFrame, batch: DataFrame,
+   *  The corpus enters as state only: `corpusFingerprints` (the
+   *  [[writeSimhashStore]] frame, written at the same family and
+   *  width). */
+  def dedupSimhashIncremental(corpusFingerprints: DataFrame, batch: DataFrame,
                               maxHamming: Int = 3,
                               idFamily: String = "md5",
-                              corpusFingerprints: Option[DataFrame] = None,
                               fpBits: Int = SimBits,
                               batchFingerprints: Option[TaggedFingerprints] = None): DataFrame = {
     val bandBits = fpBits / SimBands
@@ -2796,9 +2780,8 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
         tf.frame.select(col("doc_id"), col("fp"))
       }
       .getOrElse(simhashFingerprints(batch, idFamily, fpBits)).cache()
-    val corpusFp = corpusFingerprints.map(_.select("doc_id", "fp"))
-      .getOrElse(simhashFingerprints(corpus, idFamily, fpBits))
-    val allFp = corpusFp.unionByName(batchFp).cache()
+    val allFp = corpusFingerprints.select("doc_id", "fp")
+      .unionByName(batchFp).cache()
     // Batch nibbles broadcast (delta-bounded); the fingerprint store
     // side is scanned map-side, never exchanged at state cardinality
     // — and the verify reads only candidate endpoints' fingerprints.
@@ -3050,6 +3033,12 @@ GROUP BY t.hamming ORDER BY t.hamming"""
       .groupBy("word_idx").agg(expr("bit_or(mask)").as("word"))
   }
 
+  /** The hash state [[dedupExactIncremental]] count-folds: one
+   *  `(doc_id, content_hash)` row per corpus doc (the layout of the
+   *  streaming exact loop's hash store). */
+  def contentHashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text")).as("content_hash"))
+
   /** Bloom false-positive CALIBRATION — "measure, don't guess" for
    *  the family's bloom geometry (the [[bloomWords]] scaladoc sizes
    *  by the fp~(1-e^(-kn/m))^k rule of thumb; this MEASURES the curve
@@ -3177,20 +3166,17 @@ ORDER BY g.m_bits"""
    *  the final answer is independent of the filter, which is why this
    *  operator keeps a plain SQL oracle despite the xxhash64 probes.
    *
-   *  Steady-state ingest shape at 100 TB: both state frames are
-   *  incrementally maintained — the hash store by appending each
-   *  accepted batch's hashes, the bloom by appending the batch's
-   *  delta words (bit_or-fold on read) — so per-trigger cost is
-   *  O(batch) probes + a verify join over the pruned candidate set;
-   *  pass the maintained frames via `corpusWords` (must have been
-   *  built with the SAME mBits/probes) and `corpusHashes`. Corpus
-   *  text is scanned only when a state frame is missing (the
-   *  from-scratch query form below). */
-  def dedupExactIncremental(corpus: DataFrame, batch: DataFrame,
-                            mBits: Int = BloomBits, probes: Int = BloomProbes,
-                            corpusWords: Option[DataFrame] = None,
-                            corpusHashes: Option[DataFrame] = None): DataFrame = {
-    val words = corpusWords.getOrElse(bloomWords(corpus, mBits, probes))
+   *  The corpus enters as state only, both frames incrementally
+   *  maintained at 100 TB: `corpusWords` ([[bloomWords]] deltas,
+   *  bit_or-folded here; built with the SAME mBits/probes) and
+   *  `corpusHashes` ([[contentHashes]] rows, one per accepted doc,
+   *  count-folded here). Per-trigger cost is O(batch) probes + a
+   *  verify join over the pruned candidate set. */
+  def dedupExactIncremental(corpusWords: DataFrame, corpusHashes: DataFrame,
+                            batch: DataFrame,
+                            mBits: Int = BloomBits,
+                            probes: Int = BloomProbes): DataFrame = {
+    val words = corpusWords
       .groupBy("word_idx").agg(expr("bit_or(word)").as("word"))
     val b = batch.select(col("doc_id"), col("text"),
       xxhash64(col("text")).as("h1"), xxhash64(col("text"), lit(1)).as("h2"))
@@ -3209,12 +3195,7 @@ ORDER BY g.m_bits"""
       .select("doc_id")
     val candidates = b.join(hits, "doc_id")
       .select(col("doc_id"), md5(col("text")).as("content_hash"))
-    // maintained store form: one (doc_id, content_hash) row per
-    // accepted corpus doc, count-folded here — corpus TEXT is not an
-    // input when both state frames are supplied
-    val hashCounts = corpusHashes
-      .map(_.select("content_hash"))
-      .getOrElse(corpus.select(md5(col("text")).as("content_hash")))
+    val hashCounts = corpusHashes.select("content_hash")
       .groupBy("content_hash").agg(count(lit(1)).as("n_corpus_copies"))
     val verified = candidates.join(hashCounts, "content_hash")
       .select(col("doc_id"), col("n_corpus_copies"))
@@ -3848,13 +3829,11 @@ FROM scd_per ORDER BY source"""
    *  Scale shape: chunking cost is O(batch) (projection + per-doc
    *  windows); the store probe is one hash join keyed on (fp, len) —
    *  the exact-dedup shuffle class — with the batch side bounded by
-   *  the incremental contract. Maintained-store mode: pass
-   *  `corpusChunks` ([[cdcChunkStore]]'s frame, distinct-folded here)
-   *  and corpus text is not an input at all. */
-  def cdcChunkDedupIncremental(corpus: DataFrame, batch: DataFrame,
-                               avgChunk: Int = 8,
-                               corpusChunks: Option[DataFrame] = None): DataFrame = {
-    val store = corpusChunks.getOrElse(cdcChunkStore(corpus, avgChunk))
+   *  the incremental contract. The corpus enters as state only:
+   *  `corpusChunks`, [[cdcChunkStore]]'s frame at the same
+   *  `avgChunk` (membership semantics — duplicate rows are harmless). */
+  def cdcChunkDedupIncremental(corpusChunks: DataFrame, batch: DataFrame,
+                               avgChunk: Int = 8): DataFrame = {
     // The batch occurrence frame is consumed three times (canonical
     // keys, probe keys, the flag join) and is bounded by the batch —
     // pin it once instead of re-running the chunking per consumer
@@ -3877,7 +3856,7 @@ FROM scd_per ORDER BY source"""
     // rows harmless, and distinct-folding the store per trigger would
     // itself shuffle it.
     val batchKeys = occ.select("fp", "len").distinct()
-    val dupKeys = store.select("fp", "len")
+    val dupKeys = corpusChunks.select("fp", "len")
       .join(broadcast(batchKeys), Seq("fp", "len"), "left_semi")
       .distinct()
     val flagged = occ

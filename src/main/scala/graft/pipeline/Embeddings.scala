@@ -315,8 +315,8 @@ ORDER BY query_id, rank"""
 
   /** The per-vector sign fingerprint frame `(vec_id, fp)` at the FULL
    *  wide width — the append-only banding state
-   *  [[dedupEmbeddingIncremental]]'s maintained-store mode reads
-   *  instead of re-deriving fingerprints from the quantized store.
+   *  [[dedupEmbeddingIncremental]] reads, when present, instead of
+   *  re-deriving fingerprints from the quantized state.
    *  Why it exists: "fingerprints stay derived" is elegant but costs
    *  O(state × planes) qdot projections PER TRIGGER — the sf10 probe
    *  measured the trigger cost tracking exactly a×state×planes
@@ -709,19 +709,22 @@ ORDER BY threshold"""
    *  nibbles against only the batch's nibbles — the batch restriction
    *  below the pair join, O(old²) never enumerates — and the result
    *  is bit-identical to the full run restricted to batch-touching
-   *  pairs (fingerprints are per-vector). */
-  /** `planes` = [[NumPlanesWide]] is the corpus-scale banding (the
-   *  quantized STORE is width-agnostic — fingerprints are a pure
-   *  projection over qarr — so a store serves either width; the
-   *  S-curve shift is the measured trade, see [[nibbles]]). */
-  def dedupEmbeddingIncremental(emb: DataFrame, batch: DataFrame,
+   *  pairs (fingerprints are per-vector).
+   *
+   *  The corpus enters as state only: `corpusQuantized` (the
+   *  [[quantizedIndex]] frame) for verify, and `corpusFingerprints`
+   *  (the [[embFingerprints]] frame) for banding when the caller has
+   *  it — absent, banding derives from the quantized state at the
+   *  O(state × planes) cost that frame exists to avoid.
+   *  `planes` = [[NumPlanesWide]] is the corpus-scale banding (the
+   *  quantized state is width-agnostic — fingerprints are a pure
+   *  projection over qarr — so it serves either width; the S-curve
+   *  shift is the measured trade, see [[nibbles]]). */
+  def dedupEmbeddingIncremental(corpusQuantized: DataFrame, batch: DataFrame,
                                 minCosine: Double = 0.4,
-                                corpusQuantized: Option[DataFrame] = None,
                                 planes: Int = NumPlanes,
                                 corpusFingerprints: Option[DataFrame] = None): DataFrame = {
-    val corpusQv = corpusQuantized
-      .map(_.select(col("vec_id"), col("qarr"), col("nq")))
-      .getOrElse(quantized(emb))
+    val corpusQv = corpusQuantized.select(col("vec_id"), col("qarr"), col("nq"))
     // r16: batch-bounded frames consumed twice each (batchQv by the
     // allQv union AND the fp derivation; batchNib by the union side
     // AND the broadcast side of the candidate join) — uncached, the
@@ -729,10 +732,10 @@ ORDER BY threshold"""
     // Delta-sized caches (the pinnedVerify class), dropped below.
     val batchQv = quantized(batch).cache()
     val allQv = corpusQv.unionByName(batchQv).cache()
-    // Corpus banding side: the maintained fp store when provided (an
+    // Corpus banding side: the fp state when provided (an
     // 8-byte-per-vector scan — see [[embFingerprints]] for why the
-    // derive-per-trigger default is the O(state × planes) term), else
-    // derived from the quantized frame. Batch fps always derive
+    // derive-per-trigger fallback is the O(state × planes) term), else
+    // derived from the quantized state. Batch fps always derive
     // (O(batch)).
     val batchNib = nibblesFromFp(signFp(batchQv, NumPlanesWide)
       .select(col("vec_id"), col("fp")), planes).cache()

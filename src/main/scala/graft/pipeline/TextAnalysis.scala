@@ -962,15 +962,13 @@ ORDER BY doc_a, doc_b"""
    *  partial agg over the fp frames, no text), so the output is
    *  BIT-IDENTICAL to the full [[winnowOverlap]] run restricted to
    *  pairs with a batch endpoint; old-old pairs are never enumerated
-   *  (batch side of the join is batch fps only). `corpusFps` accepts a
-   *  persisted fingerprint store ([[winnowFingerprints]] output read
-   *  back); the canonicalize+distinct collapses the two orientations a
-   *  batch-batch pair generates. */
-  def winnowOverlapIncremental(corpus: DataFrame, batch: DataFrame,
-                               maxDf: Long = 5L, minShared: Long = 2L,
-                               corpusFps: Option[DataFrame] = None): DataFrame = {
-    val cf = corpusFps.getOrElse(winnowFingerprints(corpus))
-      .select("doc_id", "fp_hash").distinct()
+   *  (batch side of the join is batch fps only). The corpus enters as
+   *  state only: `corpusFps`, the [[winnowFingerprints]] frame (or a
+   *  persisted store of it); the canonicalize+distinct collapses the
+   *  two orientations a batch-batch pair generates. */
+  def winnowOverlapIncremental(corpusFps: DataFrame, batch: DataFrame,
+                               maxDf: Long = 5L, minShared: Long = 2L): DataFrame = {
+    val cf = corpusFps.select("doc_id", "fp_hash").distinct()
     val bf = winnowFingerprints(batch)
       .select("doc_id", "fp_hash").distinct()
     val all = cf.union(bf)
@@ -2667,19 +2665,18 @@ ORDER BY d.doc_id"""
 
   /** Incremental [[spanDedup]] — span-account a NEW batch against an
    *  already-ingested corpus without re-shingling corpus text: the
-   *  batch's grams look their corpus-wide occurrence counts up in a
-   *  maintained `(gram, cnt)` store (`corpusGramCounts`, append-only
-   *  deltas folded by SUM at read — the gram-df-store discipline the
-   *  streaming dedup family uses) and add their own batch deltas, so
-   *  per-call cost tracks the BATCH, not the corpus. Bit-identical to
-   *  the full run restricted to batch docs: a batch doc's span stats
-   *  depend only on the total counts of its own grams. (The usual
-   *  count-maintained asymmetry applies: a new batch can raise an OLD
-   *  doc's counts — old docs' stats refresh on the next full run,
-   *  batch docs' never change retroactively.) Without the store the
-   *  corpus frame is shingled once (the cold path). */
-  def spanDedupIncremental(corpus: DataFrame, batch: DataFrame, k: Int = 5,
-                           corpusGramCounts: Option[DataFrame] = None): DataFrame = {
+   *  batch's grams look their corpus-wide occurrence counts up in the
+   *  corpus state `corpusGramCounts` ([[spanGramCounts]] `(gram, cnt)`
+   *  rows, append-only deltas folded by SUM at read — the
+   *  gram-df-store discipline the streaming dedup family uses) and add
+   *  their own batch deltas, so per-call cost tracks the BATCH, not
+   *  the corpus. Bit-identical to the full run restricted to batch
+   *  docs: a batch doc's span stats depend only on the total counts of
+   *  its own grams. (The usual count-maintained asymmetry applies: a
+   *  new batch can raise an OLD doc's counts — old docs' stats refresh
+   *  on the next full run, batch docs' never change retroactively.) */
+  def spanDedupIncremental(corpusGramCounts: DataFrame, batch: DataFrame,
+                           k: Int = 5): DataFrame = {
     val (base, grams) = spanGrams(batch, k)
     // A batch doc's verdicts consult counts ONLY at the batch's own
     // grams, so the store fold is restricted to them BEFORE the SUM:
@@ -2690,11 +2687,8 @@ ORDER BY d.doc_id"""
     // through a left join keyed on batch grams.
     val batchGramKeys = grams.select("gram").distinct()
     val corpusCnt = corpusGramCounts
-      .map(_.join(broadcast(batchGramKeys), Seq("gram"), "left_semi")
-        .groupBy("gram").agg(sum("cnt").as("c_corpus")))
-      .getOrElse(spanGrams(corpus, k)._2
-        .join(broadcast(batchGramKeys), Seq("gram"), "left_semi")
-        .groupBy("gram").agg(count(lit(1)).as("c_corpus")))
+      .join(broadcast(batchGramKeys), Seq("gram"), "left_semi")
+      .groupBy("gram").agg(sum("cnt").as("c_corpus"))
     val batchCnt = grams.groupBy("gram").agg(count(lit(1)).as("c_batch"))
     val total = batchCnt.join(corpusCnt, Seq("gram"), "left")
       .select(col("gram"),

@@ -46,8 +46,8 @@ object StreamingCdcDedup {
    *  audit): [[Dedup.cdcChunkDedupIncremental]]'s output shape. */
   def triggerFlags(spark: SparkSession, batch: DataFrame,
                    chunksDir: String, avgChunk: Int = 8): DataFrame =
-    Dedup.cdcChunkDedupIncremental(batch.limit(0), batch, avgChunk,
-      corpusChunks = Some(StateStores.read(spark, chunksDir, chunkSchema)))
+    Dedup.cdcChunkDedupIncremental(
+      StateStores.read(spark, chunksDir, chunkSchema), batch, avgChunk)
 
   /** One micro-batch of the loop: ledger from the store, drop docs
    *  with `dup_tokens == n_tokens` (fully reconstructible — an exact

@@ -49,9 +49,7 @@ object StreamingDecontamination {
                      benchShingleDir: String,
                      minOverlap: Double): DataFrame =
     Decontamination.benchmarkOverlap(
-      batch, batch.limit(0), minOverlap,
-      precomputedBenchShingles =
-        Some(StateStores.read(spark, benchShingleDir, shingleSchema)))
+      StateStores.read(spark, benchShingleDir, shingleSchema), batch, minOverlap)
 
   /** One micro-batch: flag, persist the contamination ledger, admit
    *  only clean docs. All work is O(batch); no state advances. */

@@ -68,9 +68,8 @@ object StreamingDedup {
   def triggerPairs(spark: SparkSession, batch: DataFrame, shingleDir: String,
                    gramDfDir: String, maxDf: Long, minJaccard: Double): DataFrame =
     Dedup.dedupNgramIncremental(
-      batch.limit(0), batch, maxDf, minJaccard,
-      corpusShingles = Some(StateStores.read(spark, shingleDir, shingleSchema)),
-      corpusGramDf = Some(StateStores.read(spark, gramDfDir, gramDfSchema)))
+      StateStores.read(spark, shingleDir, shingleSchema),
+      StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf, minJaccard)
 
   /** The survivor rule (see the header) of a batch keyed by `<key>_id`
    *  against its (`<key>_a` < `<key>_b`)-oriented pairs: `<key>_b` of
@@ -107,7 +106,7 @@ object StreamingDedup {
       Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
       storeDir -> survivors,
       shingleDir -> survivorSh,
-      gramDfDir -> survivorSh.groupBy("gram").agg(count(lit(1)).as("df_cnt")))
+      gramDfDir -> Dedup.gramDfDelta(survivorSh))
     survivorSh.unpersist()
     survivors.unpersist()
     pairs.unpersist()

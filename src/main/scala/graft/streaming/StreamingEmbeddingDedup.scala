@@ -108,28 +108,24 @@ object StreamingEmbeddingDedup {
   private def fpOf(qvDir: String) = qvDir + "_fp"
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
-   *  maintained quantized index + the batch itself — corpus embeddings
-   *  are not an input (audited in PlanAuditSpec: the plan's only file
-   *  scan is the quantized store). */
+   *  maintained quantized index, its `<qvDir>_fp` sibling and the
+   *  batch itself — corpus embeddings are not an input (audited in
+   *  PlanAuditSpec: the plan's only file scans are those stores). */
   def triggerPairs(spark: SparkSession, batch: DataFrame, qvDir: String,
                    minCosine: Double,
                    planes: Int = PlanesAuto,
-                   fpDir: String = null,
                    autoWideAt: Long = AutoWideVectors): DataFrame = {
-    val resolvedPlanes = resolvePlanes(spark, planes, qvDir,
-      Option(fpDir).getOrElse(fpOf(qvDir)), autoWideAt)
+    val fpDir = fpOf(qvDir)
     // Banding side: the maintained fp store (8 B/vector scan) when it
     // exists; a store created before the fp sibling landed falls back
     // to deriving fingerprints from the quantized rows — correct at
     // the measured O(state x planes) cost — until compactState (which
     // rebuilds the sibling) or the next seeded restart.
-    val fps = Option(fpDir).filter(StateStores.exists(spark, _))
+    val fps = Some(fpDir).filter(StateStores.exists(spark, _))
       .map(spark.read.schema(fpSchema).parquet(_))
     Embeddings.dedupEmbeddingIncremental(
-      batch.limit(0), batch, minCosine,
-      corpusQuantized = Some(StateStores.read(spark, qvDir, qvSchema)),
-      planes = resolvedPlanes,
-      corpusFingerprints = fps)
+      StateStores.read(spark, qvDir, qvSchema), batch, minCosine,
+      resolvePlanes(spark, planes, qvDir, fpDir, autoWideAt), fps)
   }
 
   /** One micro-batch: detect pairs, append the surviving raw vectors
@@ -139,13 +135,11 @@ object StreamingEmbeddingDedup {
                    pairsDir: String, qvDir: String,
                    minCosine: Double,
                    planes: Int = PlanesAuto,
-                   fpDir: String = null,
                    autoWideAt: Long = AutoWideVectors): Unit = {
     val spark = batch.sparkSession
-    val dir = Option(fpDir).getOrElse(fpOf(qvDir))
     val b = batch.select("vec_id", "embedding")
-    val pairs = triggerPairs(spark, b, qvDir, minCosine, planes, dir,
-      autoWideAt).cache()
+    val pairs = triggerPairs(spark, b, qvDir, minCosine, planes, autoWideAt)
+      .cache()
     pairs.count() // read by the ledger append and the survivor chain
     val survivors = StreamingDedup.pairSurvivors(b, pairs, "vec").cache()
     // The qv and fp appends both read the survivors' quantized rows:
@@ -158,7 +152,7 @@ object StreamingEmbeddingDedup {
       Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
       storeDir -> survivors,
       qvDir -> survQv,
-      dir -> Embeddings.embFingerprintsFromQuantized(survQv))
+      fpOf(qvDir) -> Embeddings.embFingerprintsFromQuantized(survQv))
     survQv.unpersist()
     survivors.unpersist()
     pairs.unpersist()

@@ -53,9 +53,8 @@ object StreamingExactDedup {
   def triggerFlags(spark: SparkSession, batch: DataFrame, hashDir: String,
                    wordsDir: String, mBits: Int, probes: Int): DataFrame =
     Dedup.dedupExactIncremental(
-      batch.limit(0), batch, mBits, probes,
-      corpusWords = Some(StateStores.read(spark, wordsDir, wordSchema)),
-      corpusHashes = Some(StateStores.read(spark, hashDir, hashSchema)))
+      StateStores.read(spark, wordsDir, wordSchema),
+      StateStores.read(spark, hashDir, hashSchema), batch, mBits, probes)
 
   /** One micro-batch of the loop: flag corpus dups, collapse
    *  batch-internal copies (smallest doc_id wins — the

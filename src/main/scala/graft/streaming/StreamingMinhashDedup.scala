@@ -48,9 +48,8 @@ object StreamingMinhashDedup {
                    sigDir: String, minJaccard: Double,
                    idFamily: String): DataFrame =
     Dedup.dedupMinhashIncremental(
-      batch.limit(0), batch, minJaccard, idFamily,
-      corpusShingles = Some(StateStores.read(spark, shingleDir, shingleSchema)),
-      corpusSignatures = Some(StateStores.read(spark, sigDir, sigSchema)))
+      StateStores.read(spark, shingleDir, shingleSchema),
+      StateStores.read(spark, sigDir, sigSchema), batch, minJaccard, idFamily)
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
    *  extend the shingle + signature stores with the survivors' rows.

@@ -51,9 +51,8 @@ object StreamingSimhashDedup {
                    fpBits: Int = Dedup.SimBitsWide,
                    batchFingerprints: Option[Dedup.TaggedFingerprints] = None): DataFrame =
     Dedup.dedupSimhashIncremental(
-      batch.limit(0), batch, maxHamming, idFamily,
-      corpusFingerprints = Some(StateStores.read(spark, fpDir, fpSchema)),
-      fpBits = fpBits, batchFingerprints = batchFingerprints)
+      StateStores.read(spark, fpDir, fpSchema), batch, maxHamming, idFamily,
+      fpBits, batchFingerprints)
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
    *  append the survivors' fingerprints to the fp store. Both appends

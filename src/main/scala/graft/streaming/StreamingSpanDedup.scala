@@ -51,8 +51,7 @@ object StreamingSpanDedup {
   def triggerStats(spark: SparkSession, batch: DataFrame,
                    gramCntDir: String, k: Int): DataFrame =
     TextAnalysis.spanDedupIncremental(
-      batch.limit(0), batch, k,
-      corpusGramCounts = Some(StateStores.read(spark, gramCntDir, gramCntSchema)))
+      StateStores.read(spark, gramCntDir, gramCntSchema), batch, k)
 
   /** One micro-batch: span-account, persist the per-doc stats ledger,
    *  reject mostly-verbatim docs, append survivors + their gram-count

@@ -170,8 +170,10 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val corpus = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
-    val (_, plans) = executedPlans(
-      graft.pipeline.Dedup.dedupNgramIncremental(corpus, batch))
+    val corpusSh = graft.pipeline.Dedup.shingles(corpus)
+      .localCheckpoint() // stand-in for the parquet store read
+    val (_, plans) = executedPlans(graft.pipeline.Dedup.dedupNgramIncremental(
+      corpusSh, graft.pipeline.Dedup.gramDfDelta(corpusSh), batch))
     def joins(p: SparkPlan) = p.collect { case j: BaseJoinExec => j }
     def keyRefs(j: BaseJoinExec) = (j.leftKeys ++ j.rightKeys).flatMap(_.references)
     // The gram-keyed pair join must contain, inside one of its inputs,
@@ -215,8 +217,8 @@ class PlanAuditSpec extends SparkSpec {
   test("decontamination broadcasts the benchmark side — corpus shingles never shuffle for the join") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val p = plan(graft.pipeline.Decontamination.benchmarkOverlap(
-      docs.filter(col("doc_id") % 20 =!= 0),
-      docs.filter(col("doc_id") % 20 === 0)))
+      graft.pipeline.Dedup.shingles(docs.filter(col("doc_id") % 20 === 0)),
+      docs.filter(col("doc_id") % 20 =!= 0)))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
@@ -242,8 +244,7 @@ class PlanAuditSpec extends SparkSpec {
     val store = graft.pipeline.Dedup.cdcChunkStore(corpus)
       .localCheckpoint() // stand-in for the parquet store read
     val (_, plans) = executedPlans(graft.pipeline.Dedup.cdcChunkDedupIncremental(
-      corpus.limit(0), docs.filter(col("doc_id") >= 400),
-      corpusChunks = Some(store)))
+      store, docs.filter(col("doc_id") >= 400)))
     val p = plans.mkString("\n")
     assert(plans.exists(q => "BroadcastHashJoin".r.findAllIn(q.toString).size >= 2), p)
     assert(!p.contains("CartesianProduct"), p)
@@ -498,6 +499,7 @@ class PlanAuditSpec extends SparkSpec {
       .filter(_.contains("Location")).toSeq
     assert(locations.nonEmpty, p)
     assert(locations.forall(_.contains("qvstore")), locations.toString)
+    assert(!locations.exists(_.contains("qvstore_fp")), locations.toString)
     assert(!p.contains("corpusvecs"), p)
     // identical vector => cosine 1.0 vs stored 0
     val got = pairs.select("vec_a", "vec_b").collect()
@@ -506,16 +508,15 @@ class PlanAuditSpec extends SparkSpec {
     // the maintained-FP-STORE shape (the scale path — deriving
     // fingerprints per trigger was the measured O(state x planes)
     // term): banding scans the 8-byte fp store, verify the qv store,
-    // corpus embeddings still never read
-    graft.pipeline.Embeddings.writeEmbFingerprintStore(
-      corpus, base + "/fpstore")
+    // corpus embeddings still never read. The trigger finds the fp
+    // store at its fixed `<qvDir>_fp` sibling.
+    graft.pipeline.Embeddings.writeEmbFingerprintStore(corpus, qvDir + "_fp")
     val (pairs2, p2) = executedPlan(graft.streaming.StreamingEmbeddingDedup.triggerPairs(
-      spark, batch, qvDir, 0.4, fpDir = base + "/fpstore"))
+      spark, batch, qvDir, 0.4))
     val locs2 = p2.linesIterator
       .filter(_.contains("Location")).toSeq
-    assert(locs2.exists(_.contains("fpstore")), locs2.toString)
-    assert(locs2.forall(l => l.contains("qvstore") || l.contains("fpstore")),
-      locs2.toString)
+    assert(locs2.exists(_.contains("qvstore_fp")), locs2.toString)
+    assert(locs2.forall(_.contains("qvstore")), locs2.toString)
     assert(!p2.contains("corpusvecs"), p2)
     val got2 = pairs2.select("vec_a", "vec_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -540,12 +541,10 @@ class PlanAuditSpec extends SparkSpec {
     graft.pipeline.TextAnalysis.spanGramCounts(corpus)
       .write.mode("overwrite").parquet(storeDir)
     val p = plan(graft.pipeline.TextAnalysis.spanDedupIncremental(
-      corpus.limit(0), docs.filter(col("doc_id") >= 400),
-      corpusGramCounts = Some(spark.read.parquet(storeDir))))
-    // the store is a parquet read; lazy getOrElse must not graft the
-    // corpus shingle pipeline into the plan: every scan that reads
-    // document TEXT carries the batch pushdown (doc_id >= 400) — the
-    // corpus store contributes via its parquet scan only
+      spark.read.parquet(storeDir), docs.filter(col("doc_id") >= 400)))
+    // every scan that reads document TEXT carries the batch pushdown
+    // (doc_id >= 400) — the corpus store contributes via its parquet
+    // scan only
     val textScans = p.linesIterator
       .filter(l => l.contains("FileScan") && l.contains("documents.parquet")
         && l.contains("text")).toList
@@ -921,7 +920,9 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val batch = docs.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val p = plan(graft.pipeline.Dedup.dedupExactIncremental(docs, batch))
+    val p = plan(graft.pipeline.Dedup.dedupExactIncremental(
+      graft.pipeline.Dedup.bloomWords(docs),
+      graft.pipeline.Dedup.contentHashes(docs), batch))
     // the probe side joins the <=m/64-row word frame by broadcast, and
     // the md5 verify join's batch input is gated by the all-probes-set
     // filter (n_hits = probes) — the full batch never reaches it

@@ -34,7 +34,8 @@ class BloomDedupSpec extends SparkSpec {
       (1001L, "twice"),                      // two corpus copies
       (1002L, "never seen before"),          // clean
       (1003L, "corpus doc number 7 body")))  // batch-internal repeat of a dup
-    val got = Dedup.dedupExactIncremental(corpus, batch, mBits = 1 << 12)
+    val got = Dedup.dedupExactIncremental(Dedup.bloomWords(corpus, mBits = 1 << 12),
+        Dedup.contentHashes(corpus), batch, mBits = 1 << 12)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === brute(corpus, batch))
     assert(got === Set((1000L, 1L, 1L), (1001L, 1L, 2L), (1002L, 0L, 0L),
@@ -47,7 +48,8 @@ class BloomDedupSpec extends SparkSpec {
     val corpus = frame((0L until 500L).map(i => (i, s"saturate $i")))
     val batch = frame((0L until 100L).map(i =>
       if (i % 2 == 0) (5000L + i, s"saturate $i") else (5000L + i, s"fresh $i")))
-    val got = Dedup.dedupExactIncremental(corpus, batch, mBits = 256)
+    val got = Dedup.dedupExactIncremental(Dedup.bloomWords(corpus, mBits = 256),
+        Dedup.contentHashes(corpus), batch, mBits = 256)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === brute(corpus, batch))
   }
@@ -57,8 +59,8 @@ class BloomDedupSpec extends SparkSpec {
     val batch = frame((0L until 1000L).map(i => (10000L + i, s"right $i")))
     val words = Dedup.bloomWords(corpus, mBits = Dedup.BloomBits)
     assert(words.count() <= Dedup.BloomBits / 64)
-    val survivors = Dedup.dedupExactIncremental(corpus, batch,
-      corpusWords = Some(words))
+    val survivors = Dedup.dedupExactIncremental(words,
+      Dedup.contentHashes(corpus), batch)
     assert(survivors.filter(col("is_dup") === 1L).count() === 0L)
     // fp-pruning check on the candidate stage itself: re-run the probe
     // logic by diffing against a corpus that CONTAINS the batch — at
@@ -66,18 +68,19 @@ class BloomDedupSpec extends SparkSpec {
     val selfWords = Dedup.bloomWords(batch, mBits = Dedup.BloomBits)
     val merged = words.unionByName(selfWords)
     val allDup = Dedup.dedupExactIncremental(
-      corpus.unionByName(batch), batch, corpusWords = Some(merged))
+      merged, Dedup.contentHashes(corpus.unionByName(batch)), batch)
     assert(allDup.filter(col("is_dup") === 1L).count() === 1000L)
   }
 
   test("delta-store fold: appended word frames equal the one-shot bloom") {
     val a = frame((0L until 300L).map(i => (i, s"part a $i")))
     val b = frame((300L until 600L).map(i => (i, s"part b $i")))
-    val oneShot = Dedup.dedupExactIncremental(a.unionByName(b),
-      frame(Seq((9000L, "part a 5"), (9001L, "part b 599"), (9002L, "neither"))))
-    val folded = Dedup.dedupExactIncremental(a.unionByName(b),
-      frame(Seq((9000L, "part a 5"), (9001L, "part b 599"), (9002L, "neither"))),
-      corpusWords = Some(Dedup.bloomWords(a).unionByName(Dedup.bloomWords(b))))
+    val probe = frame(Seq((9000L, "part a 5"), (9001L, "part b 599"), (9002L, "neither")))
+    val hashes = Dedup.contentHashes(a.unionByName(b))
+    val oneShot = Dedup.dedupExactIncremental(
+      Dedup.bloomWords(a.unionByName(b)), hashes, probe)
+    val folded = Dedup.dedupExactIncremental(
+      Dedup.bloomWords(a).unionByName(Dedup.bloomWords(b)), hashes, probe)
     assert(oneShot.collect().toSeq === folded.collect().toSeq)
   }
 }

@@ -561,14 +561,16 @@ class PipelineSpec extends SparkSpec {
     val full = Dedup.dedupMinhash(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = full.filter { case (a, b) => a >= 3 || b >= 3 }
-    val incr = Dedup.dedupMinhashIncremental(corpus, batch).collect()
+    val incr = Dedup.dedupMinhashIncremental(Dedup.shingles(corpus),
+        Dedup.minhashSignatures(corpus), batch).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(incr === wantPairs)
-    // store path: corpus text never consulted (limit(0) proves it)
-    val store = Dedup.dedupMinhashIncremental(
-      corpus.limit(0), batch,
-      corpusShingles = Some(Dedup.shingles(corpus)),
-      corpusSignatures = Some(Dedup.minhashSignatures(corpus))).collect()
+    // the same state read back from parquet stores
+    val dir = tmpDir("mh-incr")
+    Dedup.writeShingleStore(corpus, dir + "/sh")
+    Dedup.writeMinhashStore(corpus, dir + "/sig")
+    val store = Dedup.dedupMinhashIncremental(spark.read.parquet(dir + "/sh"),
+        spark.read.parquet(dir + "/sig"), batch).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(store === wantPairs)
   }
@@ -579,16 +581,75 @@ class PipelineSpec extends SparkSpec {
     val full = Dedup.dedupSimhash(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = full.filter { case (a, b) => a >= 3 || b >= 3 }
-    val incr = Dedup.dedupSimhashIncremental(corpus, batch).collect()
+    val incr = Dedup.dedupSimhashIncremental(
+        Dedup.simhashFingerprints(corpus), batch).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(incr === wantPairs)
-    // store path: the ENTIRE corpus state is one (doc_id, fp) long per
-    // doc — corpus text never consulted (limit(0) proves it)
-    val store = Dedup.dedupSimhashIncremental(
-      corpus.limit(0), batch,
-      corpusFingerprints = Some(Dedup.simhashFingerprints(corpus))).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the same state read back from a parquet store: the ENTIRE corpus
+    // state is one (doc_id, fp) long per doc
+    val dir = tmpDir("sim-incr") + "/fp"
+    Dedup.writeSimhashStore(corpus, dir)
+    val store = Dedup.dedupSimhashIncremental(spark.read.parquet(dir), batch)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(store === wantPairs)
+  }
+
+  test("incremental n-gram past the rare-gram pushdown bound falls back to the gram-keyed semi-join") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // 30 distinct tokens per doc -> 28 distinct 3-grams at df 1-2: a
+    // 60-doc batch carries ~1.7k rare batch grams, past the In-list
+    // bound. Batch docs 100-109 near-dup corpus docs 0-9 (last word
+    // changed), 150-159 near-dup batch docs 140-149 (first word).
+    def words(d: Long) = (0 until 30).map(j => s"w${d}x$j")
+    val corpusRows = (0L until 40L).map(d => (d, words(d).mkString(" ")))
+    val batchRows = (100L until 160L).map { d =>
+      val ws =
+        if (d < 110L) words(d - 100L).updated(29, "changed")
+        else if (d >= 150L) words(d - 10L).updated(0, "changed")
+        else words(d)
+      (d, ws.mkString(" "))
+    }
+    // parquet-backed, so the pushdown In filter (if taken) cannot fold
+    // into a LocalRelation and vanish from the executed plans
+    val dir = tmpDir("ngram-overbound")
+    corpusRows.toDF("doc_id", "text").write.parquet(dir + "/corpus")
+    batchRows.toDF("doc_id", "text").write.parquet(dir + "/batch")
+    val corpus = spark.read.parquet(dir + "/corpus")
+    val batch = spark.read.parquet(dir + "/batch")
+    val all = corpus.unionByName(batch)
+    val rareBatchGrams = Dedup.shingles(batch).select("gram").distinct()
+      .join(Dedup.gramDfDelta(Dedup.shingles(all)).filter(col("df_cnt") <= 5L), "gram")
+      .count()
+    assert(rareBatchGrams > Dedup.RareGramPushdownMax, rareBatchGrams)
+    val wantPairs = Dedup.dedupNgram(all, maxDf = 5L, minJaccard = 0.2).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .filter { case (a, b) => a >= 100L || b >= 100L }.toSet
+    assert(wantPairs.size === 20, wantPairs)
+    val corpusSh = Dedup.shingles(corpus)
+    val (incr, plans) = executedPlans(Dedup.dedupNgramIncremental(
+      corpusSh, Dedup.gramDfDelta(corpusSh), batch, maxDf = 5L, minJaccard = 0.2))
+    assert(incr.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === wantPairs)
+    val p = plans.mkString("\n")
+    // the shingle side (doc_id, gram) restricted by a gram-keyed
+    // left-semi join ...
+    assert(plans.exists(_.exists {
+      case j: BaseJoinExec =>
+        val keys = (j.leftKeys ++ j.rightKeys).flatMap(_.references)
+        j.joinType == LeftSemi && keys.nonEmpty && keys.forall(_.name == "gram") &&
+          j.output.exists(_.name == "doc_id")
+      case _ => false
+    }), p)
+    // ... and never by the pushed-down In list
+    assert(!plans.exists(_.exists {
+      case f: FilterExec => f.condition.exists {
+        case _: In | _: InSet => true
+        case _ => false
+      }
+      case _ => false
+    }), p)
   }
 
   test("precomputed shingle store yields identical near-dup output") {
@@ -724,7 +785,8 @@ class PipelineSpec extends SparkSpec {
     // full-run reference: per-source ledger cannot be compared directly
     // (different grain), so recompute the restriction by hand from the
     // incremental output's invariants instead:
-    val incr = Dedup.cdcChunkDedupIncremental(corpus, batch).collect()
+    val incr = Dedup.cdcChunkDedupIncremental(Dedup.cdcChunkStore(corpus), batch)
+      .collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     // exact copies of a corpus doc dedup completely
     assert(incr(10L).getAs[Double]("dup_token_share") === 1.0)
@@ -734,11 +796,11 @@ class PipelineSpec extends SparkSpec {
     // shifted copy still dedups most of its mass against the corpus
     val c11 = incr(11L)
     assert(c11.getAs[Long]("dup_tokens") * 10 > c11.getAs[Long]("n_tokens") * 5)
-    // store path: corpus text never consulted (limit(0) proves it)
-    val viaStore = Dedup.cdcChunkDedupIncremental(
-      corpus.limit(0), batch,
-      corpusChunks = Some(Dedup.cdcChunkStore(corpus))).collect()
-      .map(r => r.toSeq).toSet
+    // the same state read back from a parquet chunk store
+    val dir = tmpDir("cdc-incr") + "/chunks"
+    Dedup.writeCdcChunkStore(corpus, dir)
+    val viaStore = Dedup.cdcChunkDedupIncremental(spark.read.parquet(dir), batch)
+      .collect().map(r => r.toSeq).toSet
     assert(viaStore === incr.values.map(_.toSeq).toSet)
   }
 
@@ -813,15 +875,20 @@ class PipelineSpec extends SparkSpec {
     val full = Embeddings.dedupEmbedding(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = full.filter { case (a, b) => a >= 10 || b >= 10 }
-    val incr = Embeddings.dedupEmbeddingIncremental(corpus, batch).collect()
+    val incr = Embeddings.dedupEmbeddingIncremental(
+        Embeddings.quantizedIndex(corpus), batch).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(incr === wantPairs)
     // the corpus-internal pair (0,1) exists but must NOT be re-reported
     assert(full.contains((0L, 1L)) && !incr.contains((0L, 1L)))
-    // store path: corpus embeddings never consulted (limit(0) proves it)
+    // the same state read back from parquet stores, banding off the
+    // fingerprint store
+    val dir = tmpDir("emb-incr")
+    Embeddings.writeQuantizedStore(corpus, dir + "/qv")
+    Embeddings.writeEmbFingerprintStore(corpus, dir + "/fp")
     val store = Embeddings.dedupEmbeddingIncremental(
-      corpus.limit(0), batch,
-      corpusQuantized = Some(Embeddings.quantizedIndex(corpus))).collect()
+        spark.read.parquet(dir + "/qv"), batch,
+        corpusFingerprints = Some(spark.read.parquet(dir + "/fp"))).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(store === wantPairs)
   }
@@ -1401,7 +1468,8 @@ class PipelineSpec extends SparkSpec {
         (c, touched) => Dedup.withJaccard(c, touched, restrict = false) }),
       "withJaccard" -> (() => Dedup.withJaccard(cands, Dedup.shingles(docs))),
       "cdcChunkDedupIncremental" -> (() => Dedup.cdcChunkDedupIncremental(
-        corpus.filter(col("doc_id") < 400), corpus.filter(col("doc_id") >= 400))),
+        Dedup.cdcChunkStore(corpus.filter(col("doc_id") < 400)),
+        corpus.filter(col("doc_id") >= 400))),
       "componentsAuto" -> (() => Clustering.componentsAuto(cands)),
       "knnPagerank" -> (() => Embeddings.knnPagerank(emb)),
       "matryoshkaRecall" -> (() => Embeddings.matryoshkaRecall(emb, queries)),
@@ -1522,21 +1590,21 @@ class PipelineSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val full = TextAnalysis.spanDedup(corpus.unionByName(batch))
       .filter(col("doc_id") >= 400).collect().map(_.toSeq)
-    val incr = TextAnalysis.spanDedupIncremental(corpus, batch)
+    val counts = TextAnalysis.spanGramCounts(corpus)
+    val incr = TextAnalysis.spanDedupIncremental(counts, batch)
       .collect().map(_.toSeq)
     assert(incr.toSeq === full.toSeq)
-    // maintained-store path: corpus frame EMPTY, counts from split
-    // deltas — same result
+    // counts from split append-only deltas (SUM-folded) — same result
     val deltas = TextAnalysis.spanGramCounts(corpus.filter(col("doc_id") < 2))
       .unionByName(TextAnalysis.spanGramCounts(corpus.filter(col("doc_id") >= 2)))
-    val store = TextAnalysis.spanDedupIncremental(corpus.limit(0), batch,
-      corpusGramCounts = Some(deltas)).collect().map(_.toSeq)
+    val store = TextAnalysis.spanDedupIncremental(deltas, batch)
+      .collect().map(_.toSeq)
     assert(store.toSeq === full.toSeq)
     // batch-internal duplication alone must also count: two identical
     // batch docs vs a disjoint corpus
     val selfBatch = Seq((410L, "m1 m2 m3 m4 m5 tail1"), (411L, "m1 m2 m3 m4 m5 tail2"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.spanDedupIncremental(corpus, selfBatch).collect()
+    val out = TextAnalysis.spanDedupIncremental(counts, selfBatch).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("dup_tokens")).toMap
     assert(out === Map(410L -> 5L, 411L -> 5L))
   }

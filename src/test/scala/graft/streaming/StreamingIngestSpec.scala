@@ -464,7 +464,7 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def pairsAt(planes: Int, autoAt: Long): Set[(Long, Long)] =
       StreamingEmbeddingDedup.triggerPairs(spark, batch, qvDir, 0.4,
-          planes, null, autoAt)
+          planes, autoAt)
         .select("vec_a", "vec_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val narrow = pairsAt(graft.pipeline.Embeddings.NumPlanes, 1L)

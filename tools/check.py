@@ -41,6 +41,11 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     n_pass = n_fail = 0
+    # a subset key with no oracle (mistyped, or not dumped by Verify)
+    # was checked by nothing: count it as a failure, never skip it
+    for name in sorted((ONLY or set()) - oracle.keys()):
+        print(f"FAIL {name}: not in oracle_sql.json")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         if ONLY is not None and name not in ONLY:
             continue
