@@ -143,12 +143,13 @@ ORDER BY event_id"""
     "quality_score" -> ((s, d) => TextAnalysis.qualityScore(docs(s, d))),
     "quality_sweep" -> ((s, d) => TextAnalysis.qualitySweep(docs(s, d))),
     "fingerprint" -> ((s, d) => TextAnalysis.fingerprint(docs(s, d))),
-    "winnow_fingerprints" -> ((s, d) => TextAnalysis.winnowFingerprints(docs(s, d))),
+    "winnow_fingerprints" -> ((s, d) =>
+      TextAnalysis.winnowFingerprints(docs(s, d)).orderBy("doc_id", "fp_pos")),
     "winnow_density" -> ((s, d) => TextAnalysis.winnowDensity(docs(s, d))),
     // kept key: runs the same native winnow_fps path as
     // winnow_fingerprints, against the same oracle
     "winnow_fingerprints_expr" -> ((s, d) =>
-      TextAnalysis.winnowFingerprints(docs(s, d))),
+      TextAnalysis.winnowFingerprints(docs(s, d)).orderBy("doc_id", "fp_pos")),
     "winnow_overlap" -> ((s, d) => TextAnalysis.winnowOverlap(docs(s, d))),
     // Every *_incr key builds its corpus state from text with the
     // state's own builder and pins it once (localCheckpoint), the

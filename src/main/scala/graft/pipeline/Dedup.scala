@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.streaming.StateStores
 import graft.util.Round.r4
 
 /**
@@ -727,6 +731,26 @@ shid AS (
    *  take the pushdown path. */
   val RareGramPushdownMax: Int = 1024
 
+  /** Bound on the batch rows a dedup trigger collects to the driver —
+   *  shingle rows for [[dedupNgramIncremental]], probe rows (docs x
+   *  probes) for [[dedupExactIncremental]]; a doc's text rides on its
+   *  first row only, so the bound also bounds the collected bytes. At
+   *  or below it a trigger takes the bounded plan: the batch collected
+   *  once, each state store probed once at batch keys
+   *  ([[StateStores.probe]]), everything else on the driver, a handful
+   *  of jobs in all. Above it the distributed plan runs unchanged.
+   *  MEASURED (sf0.1 corpus, 400-doc store, batches of k shifted copies
+   *  of the other 4,600 docs, local[4]; median of 3, bounded vs
+   *  distributed): the exact trigger's driver work overtakes the
+   *  distributed plan's fixed cost at about 92k probe rows (23k: 593
+   *  vs 777 ms; 46k: 546 vs 738; 92k: 485 vs 470; 253k: 1000 vs 644).
+   *  The n-gram trigger's bounded plan was 3x faster at every size
+   *  measured (244k shingle rows: 1.7 vs 6.1 s; 975k: 2.3 vs 6.4 s),
+   *  but its driver heap peaked 585 MB above baseline at 244k rows, so
+   *  the same bound keeps it in the low hundreds of MB; a batch of
+   *  1000-executor size takes the distributed plan. */
+  val LocalTriggerMax: Int = 100000
+
   /** [[saltedBucketPairs]] with a HARD per-bucket pair bound — the
    *  skew guard for bucket families whose key has no df-cap (the IVF
    *  `cent_id` cell family above all: a million near-identical
@@ -812,19 +836,23 @@ shid AS (
    *  endpoint of `cands`. Verification is candidate-driven end to
    *  end, so handing a verify the FULL state frame makes it shuffle
    *  O(state) rows (size aggregates, doc-keyed joins) for docs no
-   *  candidate touches; after this left-semi the state store is only
-   *  SCANNED, never exchanged at state cardinality — the endpoint
-   *  list is candidate-bounded and AQE broadcasts it. Identical
-   *  results by construction: every downstream use keys on
+   *  candidate touches. With `broadcastEnds` (batch-bounded
+   *  candidates: the incremental verifies) the endpoint list joins
+   *  broadcast, so the state store is only SCANNED, never exchanged
+   *  at state cardinality; left to AQE, the join is planned as a
+   *  sort-merge join over a state of unknown size and the state side
+   *  is hash-partitioned before AQE turns it into a broadcast join.
+   *  Identical results by construction: every downstream use keys on
    *  `cands`' endpoints. */
   private[pipeline] def endpointRestrict(state: DataFrame, cands: DataFrame,
                                          idCol: String = "doc_id",
                                          aCol: String = "doc_a",
-                                         bCol: String = "doc_b"): DataFrame =
-    state.join(
-      cands.select(col(aCol).as(idCol))
-        .union(cands.select(col(bCol).as(idCol))).distinct(),
-      Seq(idCol), "left_semi")
+                                         bCol: String = "doc_b",
+                                         broadcastEnds: Boolean = false): DataFrame = {
+    val ends = cands.select(col(aCol).as(idCol))
+      .union(cands.select(col(bCol).as(idCol))).distinct()
+    state.join(if (broadcastEnds) broadcast(ends) else ends, Seq(idCol), "left_semi")
+  }
 
   /** Pin bracket for the incremental/streaming near-dup verifies: the
    *  candidate frame and the endpoint-restricted state frame are each
@@ -847,12 +875,17 @@ shid AS (
       bCol: String = "doc_b")(
       verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val c = cands.cache()
-    val touched = endpointRestrict(state, c, idCol, aCol, bCol).cache()
+    val touched = endpointRestrict(state, c, idCol, aCol, bCol,
+      broadcastEnds = true).cache()
     val out = verify(c, touched).localCheckpoint()
     touched.unpersist()
     c.unpersist()
     out
   }
+
+  /** Unrounded Jaccard of a pair from its intersection and set sizes. */
+  private val jaccardOf: Column =
+    col("inter_n") * lit(1.0) / (col("n_a") + col("n_b") - col("inter_n"))
 
   private[pipeline] def withJaccard(cands: DataFrame, sh: DataFrame,
                                     restrict: Boolean = true): DataFrame = {
@@ -891,8 +924,7 @@ shid AS (
     val composed = c.join(inter, Seq("doc_a", "doc_b"))
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("inter_n") * lit(1.0) / (col("n_a") + col("n_b") - col("inter_n")))
+      .withColumn("jaccard", jaccardOf)
     if (!restrict) composed
     else {
       val out = composed.localCheckpoint()
@@ -1871,11 +1903,144 @@ ORDER BY c.doc_a, c.doc_b"""
    *  df_cnt)` frame of [[gramDfDelta]] rows; duplicate grams are
    *  folded by SUM, so an append-only per-batch delta store is a valid
    *  input). Per-call work is O(batch shingles + store scans): no
-   *  `word_ngrams` pass over the corpus, no corpus-wide re-count. */
+   *  `word_ngrams` pass over the corpus, no corpus-wide re-count.
+   *
+   *  Plan choice: a batch of at most `localMax` shingle rows
+   *  ([[LocalTriggerMax]]) takes the bounded plan
+   *  ([[ngramPairsBounded]]: the batch collected once, each store
+   *  probed at batch keys, the rest on the driver); a larger one (or a
+   *  negative `localMax`) takes the distributed plan. Both return the
+   *  same rows. */
   def dedupNgramIncremental(corpusShingles: DataFrame, corpusGramDf: DataFrame,
                             batch: DataFrame,
                             maxDf: Long = 5L,
-                            minJaccard: Double = 0.2): DataFrame = {
+                            minJaccard: Double = 0.2,
+                            localMax: Int = LocalTriggerMax): DataFrame =
+    shingledBatch(batch, localMax)
+      .map(ngramPairsBounded(corpusShingles, corpusGramDf, _, maxDf, minJaccard))
+      .getOrElse(ngramPairsDistributed(corpusShingles, corpusGramDf, batch,
+        maxDf, minJaccard))
+
+  /** One batch doc of a bounded n-gram trigger: its id, text and
+   *  distinct shingles (its [[shingles]] rows). */
+  private[graft] final case class ShingledDoc(id: Long, text: String,
+                                              grams: Array[String])
+
+  /** The batch side of a bounded n-gram trigger, collected in one pass
+   *  (shingled by the same `word_ngrams` expression [[shingles]]
+   *  explodes) — or None when it has more than `localMax` rows. */
+  private[graft] def shingledBatch(batch: DataFrame,
+                                   localMax: Int): Option[Seq[ShingledDoc]] =
+    explodedBatch(batch, Seq(col("text")),
+        call_function("word_ngrams", col("text"), lit(3)), localMax)
+      .map(_.map { case (d, items) =>
+        ShingledDoc(d.getLong(0), d.getString(1), items.map(_.toString).toArray)
+      })
+
+  /** `batch`'s docs collected as one row per element of `items` (a doc
+   *  whose `items` are empty or null is one row), the doc's id and
+   *  `heads` riding on its first row only: at most `localMax` + 1 rows
+   *  reach the driver however long the docs are. Per doc, its
+   *  `(doc_id, heads…)` row and its items; None when the batch has
+   *  more than `localMax` rows, or `localMax` is negative. */
+  private def explodedBatch(batch: DataFrame, heads: Seq[Column], items: Column,
+                            localMax: Int): Option[Seq[(Row, Seq[Any])]] =
+    if (localMax < 0) None
+    else {
+      val hs = (col("doc_id").cast("long") +: heads).zipWithIndex
+        .map { case (h, i) => h.as(s"h$i") }
+      val first = col("pos").isNull || col("pos") === 0
+      val rows = batch.select(hs :+ items.as("items"): _*)
+        .select(posexplode_outer(col("items")) +: hs.indices.map(i => col(s"h$i")): _*)
+        .select(col("pos") +: col("col") +:
+          hs.indices.map(i => when(first, col(s"h$i")).as(s"h$i")): _*)
+        .take(math.min(localMax, Int.MaxValue - 1) + 1)
+      if (rows.length > localMax) None
+      else {
+        val docs = mutable.ArrayBuffer.empty[(Row, mutable.ArrayBuffer[Any])]
+        for (r <- rows) {
+          if (r.isNullAt(0) || r.getInt(0) == 0)
+            docs += (Row.fromSeq(r.toSeq.drop(2)) -> mutable.ArrayBuffer.empty[Any])
+          if (!r.isNullAt(0)) docs.last._2 += r.get(1)
+        }
+        Some(docs.toSeq.map { case (d, xs) => d -> xs.toSeq })
+      }
+    }
+
+  /** A store probe ([[StateStores.probe]]) collected; no keys, no job. */
+  private def probeRows(store: DataFrame, key: String, keys: Seq[Any]): Array[Row] =
+    if (keys.isEmpty) Array.empty[Row]
+    else StateStores.probe(store, key, keys).collect()
+
+  private val pairCountSchema = StructType(Seq(
+    StructField("doc_a", LongType), StructField("doc_b", LongType),
+    StructField("inter_n", LongType), StructField("n_a", LongType),
+    StructField("n_b", LongType)))
+
+  /** [[dedupNgramIncremental]]'s bounded plan over a collected batch.
+   *  Each store is probed at batch keys and its rows collected: the
+   *  gram-df store at the batch's grams, the shingle store at the rare
+   *  batch grams and then at the candidate endpoints. The df fold,
+   *  rarity cut, candidate generation and intersection counts run on
+   *  the driver with the distributed plan's multiset semantics — the
+   *  batch's rows are added to the store's, so a replayed batch whose
+   *  rows are already stored counts twice in df, sizes and
+   *  intersections. The Jaccard cut and its rounding are the same
+   *  Catalyst expressions, projected over the `LocalRelation` of pair
+   *  counts (folded on the driver, no job), so both plans agree bit
+   *  for bit. Rows come out in (doc_a, doc_b) order. */
+  private[graft] def ngramPairsBounded(corpusShingles: DataFrame,
+                                       corpusGramDf: DataFrame,
+                                       docs: Seq[ShingledDoc], maxDf: Long,
+                                       minJaccard: Double): DataFrame = {
+    val batchSh = docs.flatMap(d => d.grams.iterator.map(d.id -> _))
+    val batchIds = docs.iterator.map(_.id).toSet
+    val df = mutable.HashMap.empty[String, Long]
+    batchSh.foreach { case (_, g) => df(g) = df.getOrElse(g, 0L) + 1L }
+    probeRows(corpusGramDf.select("gram", "df_cnt"), "gram", df.keys.toSeq)
+      .foreach(r => if (!r.isNullAt(1)) df(r.getString(0)) += r.getLong(1))
+    val rare = df.iterator.collect { case (g, n) if n <= maxDf => g }.toSet
+    val store = corpusShingles.select("doc_id", "gram")
+    val rareSh = probeRows(store, "gram", rare.toSeq)
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) -> r.getString(1) }
+      .toSeq ++ batchSh.filter(sh => rare(sh._2))
+    // a candidate shares a rare gram with a batch doc, either side of it
+    val cands = rareSh.groupBy(_._2).valuesIterator.flatMap { rows =>
+      val ids = rows.map(_._1)
+      for (a <- ids; n <- ids if a != n && batchIds(n))
+        yield (math.min(a, n), math.max(a, n))
+    }.toSet
+    // per endpoint: its shingle rows (size) and per-gram multiplicity
+    val ends = cands.flatMap(c => Seq(c._1, c._2))
+    val sizes = mutable.HashMap.empty[Long, Long]
+    val grams = mutable.HashMap.empty[Long, mutable.HashMap[String, Long]]
+    def add(d: Long, g: String): Unit = {
+      sizes(d) = sizes.getOrElse(d, 0L) + 1L
+      if (g != null) {
+        val m = grams.getOrElseUpdate(d, mutable.HashMap.empty)
+        m(g) = m.getOrElse(g, 0L) + 1L
+      }
+    }
+    probeRows(store, "doc_id", ends.toSeq)
+      .foreach(r => if (!r.isNullAt(0)) add(r.getLong(0), r.getString(1)))
+    batchSh.foreach { case (d, g) => if (ends(d)) add(d, g) }
+    val none = mutable.HashMap.empty[String, Long]
+    val counts = cands.toSeq.sorted.flatMap { case (a, b) =>
+      val (ga, gb) = (grams.getOrElse(a, none), grams.getOrElse(b, none))
+      val inter = ga.iterator.map { case (g, k) => k * gb.getOrElse(g, 0L) }.sum
+      if (inter == 0L) None else Some(Row(a, b, inter, sizes(a), sizes(b)))
+    }
+    StateStores.local(corpusShingles.sparkSession, counts, pairCountSchema)
+      .withColumn("jaccard", jaccardOf)
+      .filter(col("jaccard") >= minJaccard)
+      .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
+  }
+
+  /** [[dedupNgramIncremental]]'s distributed plan, for batches over its
+   *  bound. */
+  private def ngramPairsDistributed(corpusShingles: DataFrame,
+                                    corpusGramDf: DataFrame, batch: DataFrame,
+                                    maxDf: Long, minJaccard: Double): DataFrame = {
     // Cache the BATCH shingles (bounded by the incremental contract,
     // consumed by grams/df/candidates) — but NEVER the corpus-side
     // store union: the shingle state is already materialized, and
@@ -2780,8 +2945,11 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
         tf.frame.select(col("doc_id"), col("fp"))
       }
       .getOrElse(simhashFingerprints(batch, idFamily, fpBits)).cache()
+    // The store ∪ batch frame stays UNCACHED (a trigger never caches
+    // its store): candidate generation and the endpoint restriction
+    // each scan the fp store once, 16 bytes per stored doc.
     val allFp = corpusFingerprints.select("doc_id", "fp")
-      .unionByName(batchFp).cache()
+      .unionByName(batchFp)
     // Batch nibbles broadcast (delta-bounded); the fingerprint store
     // side is scanned map-side, never exchanged at state cardinality
     // — and the verify reads only candidate endpoints' fingerprints.
@@ -2797,7 +2965,6 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
     val out = pinnedVerify(cands, allFp) { (c, touched) =>
       simhashVerify(c, touched, maxHamming)
     }
-    allFp.unpersist()
     batchFp.unpersist()
     out
   }
@@ -3171,11 +3338,100 @@ ORDER BY g.m_bits"""
    *  bit_or-folded here; built with the SAME mBits/probes) and
    *  `corpusHashes` ([[contentHashes]] rows, one per accepted doc,
    *  count-folded here). Per-trigger cost is O(batch) probes + a
-   *  verify join over the pruned candidate set. */
+   *  verify join over the pruned candidate set.
+   *
+   *  Plan choice as [[dedupNgramIncremental]]'s: a batch of at most
+   *  `localMax` probe rows (docs x probes, [[LocalTriggerMax]]) takes
+   *  the bounded plan
+   *  ([[exactFlagsBounded]]), a larger one (or a negative `localMax`)
+   *  the distributed plan; both return the same rows. */
   def dedupExactIncremental(corpusWords: DataFrame, corpusHashes: DataFrame,
                             batch: DataFrame,
                             mBits: Int = BloomBits,
-                            probes: Int = BloomProbes): DataFrame = {
+                            probes: Int = BloomProbes,
+                            localMax: Int = LocalTriggerMax): DataFrame =
+    hashedBatch(batch, mBits, probes, localMax)
+      .map(exactFlagsBounded(corpusWords, corpusHashes, _, probes))
+      .getOrElse(exactFlagsDistributed(corpusWords, corpusHashes, batch,
+        mBits, probes))
+
+  /** One batch doc of a bounded exact trigger: its id, text, md5
+   *  content hash and bloom probe positions. */
+  private[graft] final case class HashedDoc(id: Long, text: String,
+                                            hash: String, pos: Array[Long])
+
+  /** The batch side of a bounded exact trigger, collected in one pass:
+   *  the md5 and the `probes` bloom positions of each doc are computed
+   *  by the same expressions ([[probePos]]) [[bloomWords]] builds with
+   *  — or None when it has more than `localMax` rows (one per probe
+   *  position). */
+  private[graft] def hashedBatch(batch: DataFrame, mBits: Int, probes: Int,
+                                 localMax: Int): Option[Seq[HashedDoc]] = {
+    val (h1, h2) = (xxhash64(col("text")), xxhash64(col("text"), lit(1)))
+    explodedBatch(batch, Seq(col("text"), md5(col("text"))),
+        array((0 until probes).map(i => probePos(h1, h2, lit(i), mBits)): _*),
+        localMax)
+      .map(_.map { case (d, pos) => HashedDoc(d.getLong(0), d.getString(1),
+        d.getString(2), pos.map(_.asInstanceOf[Long]).toArray)
+      })
+  }
+
+  /** The bloom word and bit of a probe position. */
+  private[graft] def bloomBit(pos: Long): (Int, Long) =
+    ((pos / 64).toInt, 1L << (pos % 64).toInt)
+
+  private val copiesSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("n_corpus_copies", LongType)))
+
+  /** The dup verdict columns over (doc_id, n_corpus_copies), the count
+   *  null where no stored copy verified. */
+  private def exactVerdict(verified: DataFrame): DataFrame =
+    verified.select(col("doc_id"),
+      when(coalesce(col("n_corpus_copies"), lit(0L)) > 0L, 1L)
+        .otherwise(0L).as("is_dup"),
+      coalesce(col("n_corpus_copies"), lit(0L)).as("n_corpus_copies"))
+
+  /** [[dedupExactIncremental]]'s bounded plan over a collected batch:
+   *  the bloom store is probed at the batch's word indexes and the hash
+   *  store at the bloom-positive docs' hashes, each once, and the
+   *  bit_or fold, all-probes test and copy count run on the driver with
+   *  the distributed plan's multiset semantics (a doc id twice in the
+   *  batch sums its probe hits, as the doc-keyed aggregate does). The
+   *  verdict columns are the same expressions, projected over the
+   *  `LocalRelation` of counts. Rows come out in doc_id order. */
+  private[graft] def exactFlagsBounded(corpusWords: DataFrame,
+                                       corpusHashes: DataFrame,
+                                       docs: Seq[HashedDoc],
+                                       probes: Int): DataFrame = {
+    val words = mutable.HashMap.empty[Int, Long]
+    probeRows(corpusWords.select("word_idx", "word"), "word_idx",
+        docs.flatMap(_.pos.map(bloomBit(_)._1)).distinct)
+      .foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1))
+        words(r.getInt(0)) = words.getOrElse(r.getInt(0), 0L) | r.getLong(1))
+    val hits = docs.groupMapReduce(_.id)(_.pos.count { p =>
+      val (w, bit) = bloomBit(p)
+      words.get(w).exists(x => (x & bit) != 0L)
+    }.toLong)(_ + _)
+    val cands = docs.filter(d => hits(d.id) == probes && d.hash != null)
+    val copies = mutable.HashMap.empty[String, Long]
+    probeRows(corpusHashes.select("content_hash"), "content_hash",
+        cands.map(_.hash).distinct)
+      .foreach(r => if (!r.isNullAt(0))
+        copies(r.getString(0)) = copies.getOrElse(r.getString(0), 0L) + 1L)
+    val verified = cands.flatMap(d => copies.get(d.hash).map(d.id -> _))
+      .groupMap(_._1)(_._2)
+    val rows = docs.sortBy(_.id).flatMap(d => verified.get(d.id) match {
+      case Some(ns) => ns.map(n => Row(d.id, n))
+      case None => Seq(Row(d.id, null))
+    })
+    exactVerdict(StateStores.local(corpusWords.sparkSession, rows, copiesSchema))
+  }
+
+  /** [[dedupExactIncremental]]'s distributed plan, for batches over its
+   *  bound. */
+  private def exactFlagsDistributed(corpusWords: DataFrame,
+                                    corpusHashes: DataFrame, batch: DataFrame,
+                                    mBits: Int, probes: Int): DataFrame = {
     val words = corpusWords
       .groupBy("word_idx").agg(expr("bit_or(word)").as("word"))
     val b = batch.select(col("doc_id"), col("text"),
@@ -3199,11 +3455,7 @@ ORDER BY g.m_bits"""
       .groupBy("content_hash").agg(count(lit(1)).as("n_corpus_copies"))
     val verified = candidates.join(hashCounts, "content_hash")
       .select(col("doc_id"), col("n_corpus_copies"))
-    batch.select("doc_id").join(verified, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(coalesce(col("n_corpus_copies"), lit(0L)) > 0L, 1L)
-          .otherwise(0L).as("is_dup"),
-        coalesce(col("n_corpus_copies"), lit(0L)).as("n_corpus_copies"))
+    exactVerdict(batch.select("doc_id").join(verified, Seq("doc_id"), "left"))
       .orderBy("doc_id")
   }
 

@@ -729,9 +729,12 @@ ORDER BY threshold"""
     // allQv union AND the fp derivation; batchNib by the union side
     // AND the broadcast side of the candidate join) — uncached, the
     // batch's 64-plane qdot fingerprint pass ran twice per call.
-    // Delta-sized caches (the pinnedVerify class), dropped below.
+    // Delta-sized caches (the pinnedVerify class), dropped below. The
+    // store ∪ batch frame stays UNCACHED: its one reader is
+    // pinnedVerify's endpoint restriction, which scans the store once
+    // and caches only the candidate endpoints' vectors.
     val batchQv = quantized(batch).cache()
-    val allQv = corpusQv.unionByName(batchQv).cache()
+    val allQv = corpusQv.unionByName(batchQv)
     // Corpus banding side: the fp state when provided (an
     // 8-byte-per-vector scan — see [[embFingerprints]] for why the
     // derive-per-trigger fallback is the O(state × planes) term), else
@@ -761,7 +764,6 @@ ORDER BY threshold"""
         .select(col("vec_a"), col("vec_b"), r4(col("cosine")).as("cosine"))
         .orderBy("vec_a", "vec_b")
     }
-    allQv.unpersist()
     batchNib.unpersist()
     batchQv.unpersist()
     out

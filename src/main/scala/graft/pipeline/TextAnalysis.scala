@@ -763,9 +763,13 @@ ORDER BY doc_id"""
    *  ([[graft.functions.WinnowFps]]) runs the gram hash, sliding-window
    *  min and distinct in ONE in-row loop, so the plan is scan →
    *  project → explode of the SELECTED set (~2/(w+1) of the grams);
-   *  no exchange before the final ordering, no join, no window, text
-   *  never passes an exchange. The oracle re-derives the selection with
-   *  a doc-partitioned sliding-window MIN. */
+   *  no exchange, no join, no window, text never passes an exchange.
+   *  Rows come out in position order within a doc but unordered across
+   *  docs: the frame is also fingerprint STATE (`winnow_overlap_incr`
+   *  pins it), and no state reader needs a global sort, so the
+   *  `winnow_fingerprints` keys order their own output. The oracle
+   *  re-derives the selection with a doc-partitioned sliding-window
+   *  MIN. */
   def winnowFingerprints(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame =
     docs
       .select(col("doc_id"),
@@ -774,7 +778,6 @@ ORDER BY doc_id"""
       .select(col("doc_id"),
         (col("wmin") % lit(1048576L)).as("fp_pos"),
         expr("wmin div 1048576").as("fp_hash"))
-      .orderBy("doc_id", "fp_pos")
 
   /** Mirrors the packed-min winnowing selection; the recursive `pw`
    *  power table reproduces [[graft.functions.PolyHash]] exactly

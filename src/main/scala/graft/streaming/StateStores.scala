@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 /**
@@ -60,6 +62,29 @@ private[graft] object StateStores {
   def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     if (exists(spark, dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** `store` restricted to the rows whose `key` is one of `keys` — the
+   *  one batch-keyed store probe of the bounded triggers. Up to
+   *  [[graft.pipeline.Dedup.RareGramPushdownMax]] keys become an `In`
+   *  the parquet scan pushes down (row-group skipping on a compacted,
+   *  key-sorted store); more keys become a broadcast left-semi join
+   *  against a `LocalRelation` of them. Either way the store is only
+   *  scanned, never exchanged. */
+  def probe(store: DataFrame, key: String, keys: Seq[Any]): DataFrame =
+    if (keys.length <= graft.pipeline.Dedup.RareGramPushdownMax)
+      store.filter(col(key).isin(keys: _*))
+    else {
+      val keyFrame = local(store.sparkSession, keys.map(Row(_)),
+        StructType(Seq(store.schema(key).copy(nullable = false))))
+      store.join(broadcast(keyFrame), Seq(key), "left_semi")
+        .select(store.columns.toIndexedSeq.map(col): _*)
+    }
+
+  /** `rows` as a `LocalRelation` frame of `schema`: a projection or
+   *  filter over it folds on the driver, without a job. Appended as
+   *  `local(...).coalesce(1)`, a driver-built delta lands as one file. */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** The one write-ordering contract of a trigger:
    *

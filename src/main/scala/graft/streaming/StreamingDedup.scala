@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -14,10 +14,19 @@ import graft.pipeline.Dedup
  * detected pairs land in an audit store.
  *
  * Spark-native shape: `foreachBatch` turns each micro-batch into a
- * bounded frame, which [[graft.pipeline.Dedup.dedupNgramIncremental]]
- * joins against the accumulated state with the batch restriction BELOW
- * the pair join — per batch the pair work is O(batch x matching-grams),
- * never O(corpus²).
+ * bounded frame. A batch within [[graft.pipeline.Dedup.LocalTriggerMax]]
+ * shingle rows is collected once; each state store is then probed once at batch
+ * keys (the gram-df store at the batch grams, the shingle store at the
+ * rare batch grams and at the candidate endpoints) and the df fold,
+ * candidates, Jaccard, survivor rule and deltas run on the driver
+ * ([[graft.pipeline.Dedup.ngramPairsBounded]]); every append is a
+ * one-file `LocalRelation`. A larger batch runs the distributed plan:
+ * [[graft.pipeline.Dedup.dedupNgramIncremental]] joins it against the
+ * accumulated state with the batch restriction BELOW the pair join,
+ * and the survivor and shingle frames it appends are cached for the
+ * appends that share them. Either way the pair work is
+ * O(batch x matching-grams), never O(corpus²), and both plans append
+ * the same rows.
  *
  * Arrival-rate-bound triggers: the loop maintains, next to the corpus
  * document store, a SHINGLE store (`(doc_id, gram)`, the
@@ -56,6 +65,8 @@ object StreamingDedup {
     StructField("doc_id", LongType), StructField("gram", StringType)))
   private val gramDfSchema = StructType(Seq(
     StructField("gram", StringType), StructField("df_cnt", LongType)))
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
 
   private def shinglesOf(storeDir: String) = storeDir + "_shingles"
   private def gramDfOf(storeDir: String) = storeDir + "_gramdf"
@@ -64,12 +75,15 @@ object StreamingDedup {
    *  maintained shingle/gram-df stores + the batch itself — corpus
    *  text is not an input (audited in PlanAuditSpec: the plan's only
    *  file scans are the two stores). Exposed for testing; the
-   *  streaming loop calls it per trigger. */
+   *  streaming loop calls it per trigger. `localMax` is
+   *  [[Dedup.dedupNgramIncremental]]'s plan bound. */
   def triggerPairs(spark: SparkSession, batch: DataFrame, shingleDir: String,
-                   gramDfDir: String, maxDf: Long, minJaccard: Double): DataFrame =
+                   gramDfDir: String, maxDf: Long, minJaccard: Double,
+                   localMax: Int = Dedup.LocalTriggerMax): DataFrame =
     Dedup.dedupNgramIncremental(
       StateStores.read(spark, shingleDir, shingleSchema),
-      StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf, minJaccard)
+      StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf,
+      minJaccard, localMax)
 
   /** The survivor rule (see the header) of a batch keyed by `<key>_id`
    *  against its (`<key>_a` < `<key>_b`)-oriented pairs: `<key>_b` of
@@ -87,19 +101,64 @@ object StreamingDedup {
 
   /** One micro-batch of the dedup loop: detect pairs, append survivors
    *  to the doc store, and advance the shingle + gram-df stores with
-   *  the batch's contribution. All three appends are O(batch). */
+   *  the batch's contribution. All three appends are O(batch). A batch
+   *  within `localMax` ([[Dedup.LocalTriggerMax]]) runs the bounded
+   *  plan; a larger one the distributed plan. */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
                    pairsDir: String, shingleDir: String, gramDfDir: String,
-                   maxDf: Long, minJaccard: Double): Unit = {
-    val spark = batch.sparkSession
+                   maxDf: Long, minJaccard: Double,
+                   localMax: Int = Dedup.LocalTriggerMax): Unit = {
     val b = batch.select("doc_id", "text")
-    val pairs = triggerPairs(spark, b, shingleDir, gramDfDir, maxDf, minJaccard)
-      .cache()
+    Dedup.shingledBatch(b, localMax) match {
+      case Some(docs) => processBounded(docs, b.sparkSession, batchId, storeDir,
+        pairsDir, shingleDir, gramDfDir, maxDf, minJaccard)
+      case None => processDistributed(b, batchId, storeDir, pairsDir,
+        shingleDir, gramDfDir, maxDf, minJaccard)
+    }
+  }
+
+  /** The bounded trigger: the pair frame is a `LocalRelation` (see
+   *  [[Dedup.ngramPairsBounded]]), the survivor rule and the shingle
+   *  and gram-df deltas run on the driver over the collected batch, and
+   *  every append is a one-file `LocalRelation` — store probes plus
+   *  four writes. */
+  private def processBounded(docs: Seq[Dedup.ShingledDoc], spark: SparkSession,
+                             batchId: Long, storeDir: String, pairsDir: String,
+                             shingleDir: String, gramDfDir: String,
+                             maxDf: Long, minJaccard: Double): Unit = {
+    val pairs = Dedup.ngramPairsBounded(
+      StateStores.read(spark, shingleDir, shingleSchema),
+      StateStores.read(spark, gramDfDir, gramDfSchema), docs, maxDf, minJaccard)
+    val batchIds = docs.iterator.map(_.id).toSet
+    val dropped = pairs.select("doc_a", "doc_b").collect().flatMap { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      if (batchIds(b)) Seq(b) else Seq(a, b)
+    }.toSet
+    val survivors = docs.filterNot(d => dropped(d.id))
+    val gramDf = survivors.flatMap(_.grams).groupMapReduce(identity)(_ => 1L)(_ + _)
+    StateStores.commit(
+      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId)).coalesce(1)),
+      storeDir -> StateStores.local(spark,
+        survivors.map(d => Row(d.id, d.text)), docSchema).coalesce(1),
+      shingleDir -> StateStores.local(spark,
+        survivors.flatMap(d => d.grams.map(Row(d.id, _))), shingleSchema).coalesce(1),
+      gramDfDir -> StateStores.local(spark,
+        gramDf.toSeq.map { case (g, n) => Row(g, n) }, gramDfSchema).coalesce(1))
+  }
+
+  /** The distributed trigger, for batches over the bound. */
+  private def processDistributed(b: DataFrame, batchId: Long, storeDir: String,
+                                 pairsDir: String, shingleDir: String,
+                                 gramDfDir: String, maxDf: Long,
+                                 minJaccard: Double): Unit = {
+    val pairs = triggerPairs(b.sparkSession, b, shingleDir, gramDfDir, maxDf,
+      minJaccard, localMax = -1).cache()
     pairs.count() // read by the ledger append and the survivor chain
+    // batch-sized caches, dropped after the commit: the doc append and
+    // the shingle chain both read the survivors; the shingle append and
+    // its per-gram df delta (folded by SUM at read time) both read the
+    // survivors' shingles
     val survivors = pairSurvivors(b, pairs, "doc").cache()
-    // the survivors' shingles extend the shingle store, and their
-    // per-gram counts land as an append-only df delta (folded by SUM
-    // at read time — no store rewrite); both appends read this cache
     val survivorSh = Dedup.shingles(survivors).cache()
     survivorSh.count()
     StateStores.commit(

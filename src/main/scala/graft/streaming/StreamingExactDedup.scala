@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -27,6 +27,13 @@ import graft.pipeline.Dedup
  * an input to a trigger — the only corpus-sized terms are columnar
  * scans of the two state stores, and the bloom store stays <= m/64
  * rows FOREVER (appended deltas OR into the same fixed bit space).
+ * A batch within [[Dedup.LocalTriggerMax]] probe rows (docs x probes)
+ * runs that logic on the driver: collected once with its md5 and probe
+ * positions, it probes
+ * the bloom store at its word indexes and the hash store at its
+ * bloom-positive hashes (one batch-keyed scan each), and every append
+ * is a one-file `LocalRelation`; a larger batch runs the distributed
+ * plan. Both write the same rows.
  *
  * Write ordering is [[StateStores.commit]]'s: the doc append commits
  * before the hash and bloom appends start. A replayed batch
@@ -43,29 +50,76 @@ object StreamingExactDedup {
     StructField("doc_id", LongType), StructField("content_hash", StringType)))
   private val wordSchema = StructType(Seq(
     StructField("word_idx", IntegerType), StructField("word", LongType)))
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
 
   private def hashesOf(storeDir: String) = storeDir + "_hashes"
   private def bloomOf(storeDir: String) = storeDir + "_bloom"
 
   /** One micro-batch's dup verdict, built ONLY from the two state
    *  stores + the batch (exposed for testing and the plan audit):
-   *  (doc_id, is_dup, n_corpus_copies) per batch doc. */
+   *  (doc_id, is_dup, n_corpus_copies) per batch doc. `localMax` is
+   *  [[Dedup.dedupExactIncremental]]'s plan bound. */
   def triggerFlags(spark: SparkSession, batch: DataFrame, hashDir: String,
-                   wordsDir: String, mBits: Int, probes: Int): DataFrame =
+                   wordsDir: String, mBits: Int, probes: Int,
+                   localMax: Int = Dedup.LocalTriggerMax): DataFrame =
     Dedup.dedupExactIncremental(
       StateStores.read(spark, wordsDir, wordSchema),
-      StateStores.read(spark, hashDir, hashSchema), batch, mBits, probes)
+      StateStores.read(spark, hashDir, hashSchema), batch, mBits, probes,
+      localMax)
 
   /** One micro-batch of the loop: flag corpus dups, collapse
    *  batch-internal copies (smallest doc_id wins — the
    *  [[Dedup.dedupExact]] rule applied batch-locally), append
-   *  survivors + their state contributions. */
+   *  survivors + their state contributions. A batch within `localMax`
+   *  ([[Dedup.LocalTriggerMax]]) runs the bounded plan; a larger one
+   *  the distributed plan. */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
                    hashDir: String, wordsDir: String,
-                   mBits: Int, probes: Int): Unit = {
-    val spark = batch.sparkSession
+                   mBits: Int, probes: Int,
+                   localMax: Int = Dedup.LocalTriggerMax): Unit = {
     val b = batch.select("doc_id", "text")
-    val flags = triggerFlags(spark, b, hashDir, wordsDir, mBits, probes)
+    Dedup.hashedBatch(b, mBits, probes, localMax) match {
+      case Some(docs) => processBounded(docs, b.sparkSession, storeDir,
+        hashDir, wordsDir, probes)
+      case None => processDistributed(b, storeDir, hashDir, wordsDir, mBits,
+        probes)
+    }
+  }
+
+  /** The bounded trigger: the verdict is a `LocalRelation` (see
+   *  [[Dedup.exactFlagsBounded]]), the in-batch collapse and the bloom
+   *  delta run on the driver over the collected batch (its probe
+   *  positions are the ones [[Dedup.bloomWords]] would set), and every
+   *  append is a one-file `LocalRelation` — store probes plus three
+   *  writes. */
+  private def processBounded(docs: Seq[Dedup.HashedDoc], spark: SparkSession,
+                             storeDir: String, hashDir: String,
+                             wordsDir: String, probes: Int): Unit = {
+    val flags = Dedup.exactFlagsBounded(
+      StateStores.read(spark, wordsDir, wordSchema),
+      StateStores.read(spark, hashDir, hashSchema), docs, probes)
+    val fresh = flags.filter(col("is_dup") === 0L).select("doc_id").collect()
+      .groupMapReduce(_.getLong(0))(_ => 1)(_ + _)
+    val survivors = docs.flatMap(d => Seq.fill(fresh.getOrElse(d.id, 0))(d))
+      .groupBy(d => Option(d.hash)).values.map(_.minBy(_.id)).toSeq
+    val words = survivors.flatMap(_.pos.map(Dedup.bloomBit))
+      .groupMapReduce(_._1)(_._2)(_ | _)
+    StateStores.commit(None,
+      storeDir -> StateStores.local(spark,
+        survivors.map(d => Row(d.id, d.text)), docSchema).coalesce(1),
+      hashDir -> StateStores.local(spark,
+        survivors.map(d => Row(d.id, d.hash)), hashSchema).coalesce(1),
+      wordsDir -> StateStores.local(spark,
+        words.toSeq.map { case (w, bits) => Row(w, bits) }, wordSchema).coalesce(1))
+  }
+
+  /** The distributed trigger, for batches over the bound. */
+  private def processDistributed(b: DataFrame, storeDir: String,
+                                 hashDir: String, wordsDir: String,
+                                 mBits: Int, probes: Int): Unit = {
+    val flags = triggerFlags(b.sparkSession, b, hashDir, wordsDir, mBits,
+      probes, localMax = -1)
     val w = Window.partitionBy("content_hash").orderBy("doc_id")
     val survivors = b
       .join(flags.filter(col("is_dup") === 0L).select("doc_id"), "doc_id")

@@ -172,8 +172,10 @@ class PlanAuditSpec extends SparkSpec {
     val batch = docs.filter(col("doc_id") >= 400)
     val corpusSh = graft.pipeline.Dedup.shingles(corpus)
       .localCheckpoint() // stand-in for the parquet store read
+    // the distributed plan, forced through the bound (the bounded plan
+    // has no pair join: BoundedTriggerSpec audits its store probes)
     val (_, plans) = executedPlans(graft.pipeline.Dedup.dedupNgramIncremental(
-      corpusSh, graft.pipeline.Dedup.gramDfDelta(corpusSh), batch))
+      corpusSh, graft.pipeline.Dedup.gramDfDelta(corpusSh), batch, localMax = -1))
     def joins(p: SparkPlan) = p.collect { case j: BaseJoinExec => j }
     def keyRefs(j: BaseJoinExec) = (j.leftKeys ++ j.rightKeys).flatMap(_.references)
     // The gram-keyed pair join must contain, inside one of its inputs,
@@ -386,8 +388,10 @@ class PlanAuditSpec extends SparkSpec {
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog tonight"))
       .toDF("doc_id", "text")
+    // the distributed plan, forced through the bound (BoundedTriggerSpec
+    // audits the bounded plan's store probes)
     val (pairs, p) = executedPlan(graft.streaming.StreamingDedup.triggerPairs(
-      spark, batch, shDir, dfDir, 5L, 0.2))
+      spark, batch, shDir, dfDir, 5L, 0.2, localMax = -1))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read: all of them must point at the shingle or
     // gram-df stores, and none at the corpus documents — re-shingling
@@ -813,10 +817,15 @@ class PlanAuditSpec extends SparkSpec {
 
   test("winnowing: in-row selection, no window, no join, no exchange before the final ordering") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(graft.pipeline.TextAnalysis.winnowFingerprints(docs))
+    // the operator itself (also the fingerprint state of
+    // winnow_overlap_incr) has no exchange at all ...
+    val op = plan(graft.pipeline.TextAnalysis.winnowFingerprints(docs))
+    assert(!op.contains("Exchange"), op)
+    // ... and the key that orders its output adds only that ordering:
     // the sliding MIN runs inside winnow_fps, so the fingerprint pass
     // is scan -> project -> explode; the only exchange is the final
     // ORDER BY's range partitioning, above everything else
+    val p = plan(SparkEntry.queries("winnow_fingerprints")(spark, sf))
     assert(!p.contains("Window"), p)
     assert(!p.contains("Join"), p)
     assert(!p.contains("SinglePartition"), p)
@@ -920,9 +929,10 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val batch = docs.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    // the distributed plan, forced through the bound
     val p = plan(graft.pipeline.Dedup.dedupExactIncremental(
       graft.pipeline.Dedup.bloomWords(docs),
-      graft.pipeline.Dedup.contentHashes(docs), batch))
+      graft.pipeline.Dedup.contentHashes(docs), batch, localMax = -1))
     // the probe side joins the <=m/64-row word frame by broadcast, and
     // the md5 verify join's batch input is gated by the all-probes-set
     // filter (n_hits = probes) — the full batch never reaches it

@@ -629,8 +629,11 @@ class PipelineSpec extends SparkSpec {
       .filter { case (a, b) => a >= 100L || b >= 100L }.toSet
     assert(wantPairs.size === 20, wantPairs)
     val corpusSh = Dedup.shingles(corpus)
+    // the distributed plan, forced through the bound (BoundedTriggerSpec
+    // covers the bounded plan over the pushdown bound)
     val (incr, plans) = executedPlans(Dedup.dedupNgramIncremental(
-      corpusSh, Dedup.gramDfDelta(corpusSh), batch, maxDf = 5L, minJaccard = 0.2))
+      corpusSh, Dedup.gramDfDelta(corpusSh), batch, maxDf = 5L, minJaccard = 0.2,
+      localMax = -1))
     assert(incr.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === wantPairs)
     val p = plans.mkString("\n")
     // the shingle side (doc_id, gram) restricted by a gram-keyed

@@ -1,0 +1,338 @@
+package graft.streaming
+
+import graft.SparkSpec
+import graft.obs.WorkLedger
+import graft.pipeline.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions._
+
+/** The bounded plans of the two dedup triggers
+ *  ([[Dedup.ngramPairsBounded]], [[Dedup.exactFlagsBounded]] and the
+ *  `processBatch` that runs them) against the distributed plans they
+ *  stand in for, forced through the `localMax` bound: the same rows in
+ *  the same order, the same store contents, a fixed job budget, and
+ *  only batch-keyed store probes. */
+class BoundedTriggerSpec extends SparkSpec {
+
+  private lazy val ledger = WorkLedger.install(spark)
+
+  private def documents(sf: String) =
+    spark.read.parquet(s"/root/testdata/$sf/documents.parquet").select("doc_id", "text")
+
+  private def stored(dir: String, frame: DataFrame): DataFrame = {
+    frame.write.mode("append").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+
+  private def isLocal(df: DataFrame) =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The n-gram pairs of both plans, asserted equal; the bounded ones. */
+  private def ngramParity(sh: DataFrame, gramDf: DataFrame, batch: DataFrame) = {
+    val bounded = Dedup.dedupNgramIncremental(sh, gramDf, batch)
+    assert(isLocal(bounded), bounded.queryExecution.optimizedPlan)
+    val got = rowsOf(bounded)
+    assert(got === rowsOf(Dedup.dedupNgramIncremental(sh, gramDf, batch, localMax = -1)))
+    got
+  }
+
+  /** The exact verdicts of both plans, asserted equal; the bounded ones. */
+  private def exactParity(words: DataFrame, hashes: DataFrame, batch: DataFrame) = {
+    val bounded = Dedup.dedupExactIncremental(words, hashes, batch)
+    assert(isLocal(bounded), bounded.queryExecution.optimizedPlan)
+    val got = rowsOf(bounded)
+    assert(got === rowsOf(Dedup.dedupExactIncremental(words, hashes, batch,
+      localMax = -1)))
+    got
+  }
+
+  private def ngramStores(dir: String, corpus: DataFrame) = {
+    val sh = stored(dir + "/sh", Dedup.shingles(corpus))
+    (sh, stored(dir + "/df", Dedup.gramDfDelta(sh)))
+  }
+
+  /** The `(doc_id, text)` arrival harness of the exact keys: verbatim
+   *  copies of every 5th doc, tail-perturbed copies of the next residue. */
+  private def arrivals(dd: DataFrame) =
+    dd.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .unionByName(dd.filter(col("doc_id") % 5 === 1)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          concat(col("text"), lit(" zzz")).as("text")))
+
+  private def novel(ids: Seq[Long]) = {
+    import spark.implicits._
+    ids.map(i => (i, (0 until 12).map(w => s"novel${i}w$w").mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  for (sf <- Seq("sf0.001", "sf0.01"))
+    test(s"n-gram bounded plan equals the distributed plan: $sf corpus/batch split") {
+      val docs = documents(sf)
+      val (sh, df) = ngramStores(tmpDir("bt-split"), docs.filter(col("doc_id") < 400))
+      assert(ngramParity(sh, df, docs.filter(col("doc_id") >= 400)).nonEmpty)
+    }
+
+  test("n-gram bounded plan equals the distributed plan: replayed batch already in the stores") {
+    val docs = documents("sf0.001")
+    val batch = docs.filter(col("doc_id") >= 400)
+    // the batch's shingles and df deltas were appended before the replay
+    val (sh, df) = ngramStores(tmpDir("bt-replay"), docs)
+    assert(ngramParity(sh, df, batch).nonEmpty)
+  }
+
+  test("n-gram bounded plan equals the distributed plan: gram df split across delta files") {
+    val docs = documents("sf0.001")
+    val dir = tmpDir("bt-deltas")
+    val sh = stored(dir + "/sh", Dedup.shingles(docs.filter(col("doc_id") < 400)))
+    for ((lo, hi) <- Seq((0L, 150L), (150L, 300L), (300L, 400L)))
+      stored(dir + "/df", Dedup.gramDfDelta(
+        sh.filter(col("doc_id") >= lo && col("doc_id") < hi)))
+    val df = spark.read.parquet(dir + "/df")
+    assert(df.inputFiles.length >= 3)
+    assert(ngramParity(sh, df, docs.filter(col("doc_id") >= 400)).nonEmpty)
+  }
+
+  test("n-gram bounded plan equals the distributed plan: rare grams over the pushdown bound") {
+    import spark.implicits._
+    // 100 stored docs of 30 fresh words each; the batch re-uses them
+    // with one word changed, so every batch gram is rare
+    val words = (d: Long) => (0 until 30).map(w => s"t${d}_$w")
+    val corpus = (0L until 100L).map(d => (d, words(d).mkString(" "))).toDF("doc_id", "text")
+    val batch = (100L until 200L).map(d => (d, words(d - 100L).updated(29, "changed")
+      .mkString(" "))).toDF("doc_id", "text")
+    val (sh, df) = ngramStores(tmpDir("bt-overpush"), corpus)
+    val rareBatchGrams = Dedup.shingles(batch).select("gram").distinct().count()
+    assert(rareBatchGrams > Dedup.RareGramPushdownMax, rareBatchGrams)
+    assert(ngramParity(sh, df, batch).length === 100)
+  }
+
+  test("n-gram bounded plan equals the distributed plan: empty batch and batch with no candidates") {
+    val docs = documents("sf0.001")
+    val (sh, df) = ngramStores(tmpDir("bt-empty"), docs.filter(col("doc_id") < 400))
+    assert(ngramParity(sh, df, docs.filter(lit(false))).isEmpty)
+    assert(ngramParity(sh, df, novel(Seq(1000L, 1001L))).isEmpty)
+  }
+
+  test("the bound counts collected rows: shingle rows (n-gram), probe rows (exact)") {
+    val docs = documents("sf0.001")
+    val dir = tmpDir("bt-bound")
+    val (sh, df) = ngramStores(dir, docs.filter(col("doc_id") < 400))
+    val batch = docs.filter(col("doc_id") >= 400)
+    // a doc without shingles is one row too
+    val rows = batch.select(explode_outer(
+      call_function("word_ngrams", col("text"), lit(3)))).count().toInt
+    assert(isLocal(Dedup.dedupNgramIncremental(sh, df, batch, localMax = rows)))
+    assert(!isLocal(Dedup.dedupNgramIncremental(sh, df, batch, localMax = rows - 1)))
+    val (words, hashes) = (stored(dir + "/w", Dedup.bloomWords(docs)),
+      stored(dir + "/h", Dedup.contentHashes(docs)))
+    val probeRows = batch.count().toInt * Dedup.BloomProbes
+    assert(isLocal(Dedup.dedupExactIncremental(words, hashes, batch,
+      localMax = probeRows)))
+    assert(!isLocal(Dedup.dedupExactIncremental(words, hashes, batch,
+      localMax = probeRows - 1)))
+  }
+
+  for (sf <- Seq("sf0.001", "sf0.01"))
+    test(s"exact bounded plan equals the distributed plan: $sf arrivals") {
+      val docs = documents(sf)
+      val dir = tmpDir("bt-x-split")
+      val got = exactParity(stored(dir + "/w", Dedup.bloomWords(docs)),
+        stored(dir + "/h", Dedup.contentHashes(docs)), arrivals(docs))
+      assert(got.count(_(1) == 1L) === 100)
+    }
+
+  test("exact bounded plan equals the distributed plan: replayed batch already in the stores") {
+    val docs = documents("sf0.001")
+    val batch = arrivals(docs)
+    val all = docs.unionByName(batch)
+    val dir = tmpDir("bt-x-replay")
+    val got = exactParity(stored(dir + "/w", Dedup.bloomWords(all)),
+      stored(dir + "/h", Dedup.contentHashes(all)), batch)
+    assert(got.forall(_(1) == 1L))
+  }
+
+  test("exact bounded plan equals the distributed plan: bloom and hash deltas in several files") {
+    val docs = documents("sf0.001")
+    val dir = tmpDir("bt-x-deltas")
+    for (r <- 0L until 3L) {
+      val part = docs.filter(col("doc_id") % 3L === r)
+      stored(dir + "/w", Dedup.bloomWords(part))
+      stored(dir + "/h", Dedup.contentHashes(part))
+    }
+    val words = spark.read.parquet(dir + "/w")
+    assert(words.inputFiles.length >= 3)
+    exactParity(words, spark.read.parquet(dir + "/h"), arrivals(docs))
+  }
+
+  test("exact bounded plan equals the distributed plan: keys over the pushdown bound") {
+    val docs = documents("sf0.1")
+    val dir = tmpDir("bt-x-overpush")
+    // every doc re-arrives: 5 probe words per doc and one candidate
+    // hash per doc, both far over RareGramPushdownMax
+    val batch = docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    assert(docs.count() > Dedup.RareGramPushdownMax)
+    val got = exactParity(stored(dir + "/w", Dedup.bloomWords(docs)),
+      stored(dir + "/h", Dedup.contentHashes(docs)), batch)
+    assert(got.forall(_(1) == 1L))
+  }
+
+  test("exact bounded plan equals the distributed plan: empty batch and batch with no candidates") {
+    val docs = documents("sf0.001")
+    val dir = tmpDir("bt-x-empty")
+    val words = stored(dir + "/w", Dedup.bloomWords(docs))
+    val hashes = stored(dir + "/h", Dedup.contentHashes(docs))
+    assert(exactParity(words, hashes, docs.filter(lit(false))).isEmpty)
+    assert(exactParity(words, hashes, novel(Seq(1000L, 1001L)))
+      .map(_(1)) === Seq(0L, 0L))
+  }
+
+  /** Every store of the loop rooted at `root`, as sorted row strings. */
+  private def contents(root: String, suffixes: Seq[String]) =
+    suffixes.map(s => s -> spark.read.parquet(root + s).collect()
+      .map(_.toSeq.mkString("|")).sorted.toSeq)
+
+  private def partFiles(dir: String) =
+    new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+
+  // three triggers from an empty store: in-batch and cross-batch
+  // near-dups, then a replay of the second batch
+  private lazy val triggerBatches = {
+    val docs = documents("sf0.001")
+    Seq(docs.filter(col("doc_id") < 200), docs.filter(col("doc_id") >= 200),
+      docs.filter(col("doc_id") >= 200 && col("doc_id") < 350))
+  }
+
+  test("n-gram processBatch: bounded and distributed triggers write the same stores, one file per store per bounded trigger") {
+    val (local, dist) = (tmpDir("bt-pb-l") + "/c", tmpDir("bt-pb-d") + "/c")
+    for ((b, id) <- triggerBatches.zipWithIndex; (root, max) <- Seq(
+        local -> Dedup.LocalTriggerMax, dist -> -1)) {
+      StreamingDedup.processBatch(b, id.toLong, root, root + "_pairs",
+        root + "_shingles", root + "_gramdf", 5L, 0.2, localMax = max)
+      if (max >= 0) for (s <- Seq("", "_pairs", "_shingles", "_gramdf"))
+        assert(partFiles(root + s) === id + 1, s)
+    }
+    val stores = Seq("", "_pairs", "_shingles", "_gramdf")
+    val got = contents(local, stores)
+    assert(got.forall(_._2.nonEmpty))
+    assert(got === contents(dist, stores))
+  }
+
+  test("exact processBatch: bounded and distributed triggers write the same stores, one file per store per bounded trigger") {
+    val (local, dist) = (tmpDir("bt-xpb-l") + "/c", tmpDir("bt-xpb-d") + "/c")
+    val batches = triggerBatches.map(b => b.unionByName(
+      b.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))))
+    for ((b, id) <- batches.zipWithIndex; (root, max) <- Seq(
+        local -> Dedup.LocalTriggerMax, dist -> -1)) {
+      StreamingExactDedup.processBatch(b, id.toLong, root, root + "_hashes",
+        root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes, localMax = max)
+      if (max >= 0) for (s <- Seq("", "_hashes", "_bloom"))
+        assert(partFiles(root + s) === id + 1, s)
+    }
+    val stores = Seq("", "_hashes", "_bloom")
+    val got = contents(local, stores)
+    assert(got.forall(_._2.nonEmpty))
+    assert(got === contents(dist, stores))
+  }
+
+  /** One bounded trigger of each loop against a populated store. */
+  private def populated(name: String) = {
+    val root = tmpDir(name) + "/c"
+    val docs = documents("sf0.001")
+    StreamingExactDedup.processBatch(docs.filter(col("doc_id") < 400), 0L,
+      root + "_xdocs", root + "_hashes", root + "_bloom", Dedup.BloomBits,
+      Dedup.BloomProbes)
+    StreamingDedup.processBatch(docs.filter(col("doc_id") < 400), 0L,
+      root + "_ndocs", root + "_pairs", root + "_shingles", root + "_gramdf",
+      5L, 0.2)
+    (root, docs.filter(col("doc_id") >= 400).localCheckpoint())
+  }
+
+  test("job budget: one bounded trigger of each dedup loop runs a fixed handful of jobs") {
+    val (root, batch) = populated("bt-budget")
+    val (_, ngram) = ledger.measure(StreamingDedup.processBatch(batch, 1L,
+      root + "_n", root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
+    val (_, exact) = ledger.measure(StreamingExactDedup.processBatch(batch, 1L,
+      root + "_x", root + "_hashes", root + "_bloom", Dedup.BloomBits,
+      Dedup.BloomProbes))
+    // n-gram: batch collect, three store probes (two jobs each when a
+    // probe's keys take the broadcast semi-join), four appends;
+    // exact: batch collect, two store probes, three appends
+    assert(ngram.jobs <= 11, ngram)
+    assert(exact.jobs <= 8, exact)
+  }
+
+  /** Every executed plan that scans a file scans one of `stores`,
+   *  restricted by a batch-keyed `In` or a semi-join against a
+   *  `LocalRelation` of batch keys. */
+  private def assertStoreProbes(plans: Seq[SparkPlan], stores: Seq[String]): Unit = {
+    val scanning = plans.filter(_.exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(scanning.nonEmpty, plans.mkString("\n"))
+    for (p <- scanning) {
+      p.collect { case s: FileSourceScanExec => s }.foreach { s =>
+        val paths = s.relation.location.rootPaths.map(_.getName)
+        assert(paths.nonEmpty && paths.forall(stores.contains), p)
+      }
+      val inProbe = p.exists {
+        case f: FilterExec => f.condition.exists {
+          case _: In | _: InSet => true
+          case _ => false
+        }
+        case _ => false
+      }
+      val semiProbe = p.exists {
+        case j: BroadcastHashJoinExec =>
+          j.joinType == LeftSemi && j.right.exists(_.isInstanceOf[LocalTableScanExec])
+        case _ => false
+      }
+      assert(inProbe || semiProbe, p)
+    }
+  }
+
+  test("n-gram bounded trigger: every file scan is a batch-keyed state-store probe") {
+    val (root, batch) = populated("bt-audit-n")
+    val (pairs, plans) = executedPlans(StreamingDedup.triggerPairs(spark, batch,
+      root + "_shingles", root + "_gramdf", 5L, 0.2))
+    assert(isLocal(pairs) && pairs.count() > 0)
+    assertStoreProbes(plans, Seq("c_shingles", "c_gramdf"))
+    // the candidate probes ran: gram-df, rare grams, endpoints
+    assert(plans.count(_.exists(_.isInstanceOf[FileSourceScanExec])) === 3)
+  }
+
+  test("n-gram bounded trigger over the pushdown bound probes by LocalRelation semi-join") {
+    import spark.implicits._
+    val words = (d: Long) => (0 until 30).map(w => s"t${d}_$w")
+    val root = tmpDir("bt-audit-semi") + "/c"
+    StreamingDedup.processBatch((0L until 100L).map(d => (d, words(d).mkString(" ")))
+      .toDF("doc_id", "text"), 0L, root, root + "_pairs", root + "_shingles",
+      root + "_gramdf", 5L, 0.2)
+    val batch = (100L until 200L).map(d => (d, words(d - 100L).updated(29, "changed")
+      .mkString(" "))).toDF("doc_id", "text")
+    val (pairs, plans) = executedPlans(StreamingDedup.triggerPairs(spark, batch,
+      root + "_shingles", root + "_gramdf", 5L, 0.2))
+    assert(pairs.count() === 100)
+    assertStoreProbes(plans, Seq("c_shingles", "c_gramdf"))
+    assert(plans.exists(_.exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+      case _ => false
+    }), plans.mkString("\n"))
+  }
+
+  test("exact bounded trigger: every file scan is a batch-keyed state-store probe") {
+    val (root, _) = populated("bt-audit-x")
+    val batch = arrivals(documents("sf0.001")).localCheckpoint()
+    val (flags, plans) = executedPlans(StreamingExactDedup.triggerFlags(spark,
+      batch, root + "_hashes", root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes))
+    assert(isLocal(flags))
+    assert(flags.filter(col("is_dup") === 1L).count() > 0)
+    assertStoreProbes(plans, Seq("c_hashes", "c_bloom"))
+    assert(plans.count(_.exists(_.isInstanceOf[FileSourceScanExec])) === 2)
+  }
+}

@@ -721,8 +721,10 @@ class StreamingIngestSpec extends SparkSpec {
       .write.parquet(hashDir)
     graft.pipeline.Dedup.bloomWords(corpus).write.parquet(wordsDir)
     val batch = Seq((10L, "alpha beta gamma"), (11L, "novel")).toDF("doc_id", "text")
+    // the distributed plan, forced through the bound (BoundedTriggerSpec
+    // audits the bounded plan's store probes)
     val flags = StreamingExactDedup.triggerFlags(spark, batch, hashDir, wordsDir,
-      graft.pipeline.Dedup.BloomBits, graft.pipeline.Dedup.BloomProbes)
+      graft.pipeline.Dedup.BloomBits, graft.pipeline.Dedup.BloomProbes, localMax = -1)
     val p = flags.queryExecution.executedPlan.toString
     val locations = p.linesIterator.filter(_.contains("Location")).toSeq
     assert(locations.nonEmpty, p)
