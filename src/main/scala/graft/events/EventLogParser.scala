@@ -114,11 +114,13 @@ object EventLogParser {
    *  streaming mode (no windows over unbounded input) `attempt_id` is
    *  only set on the start rows themselves.
    *
-   *  An optional `attempt_hint` input column backstops both modes: a
-   *  caller that KNOWS the file's attempt (e.g. the incremental
-   *  ingester replaying a grown file's tail, whose ApplicationStart
-   *  line was consumed in an earlier scan) passes it per line and it
-   *  fills `attempt_id` wherever no start line is in view. */
+   *  An input that carries an `attempt_hint` column (the incremental
+   *  ingester's tail reads, whose ApplicationStart line was consumed
+   *  in an earlier scan) needs no window: the caller already knows
+   *  the file's attempt, read from its head or its checkpoint, so
+   *  every line takes `coalesce(attempt_raw, attempt_hint)` — the
+   *  start line's own attempt where one is in view, the file's hint
+   *  elsewhere. */
   def parseLines(lines: DataFrame, keepRaw: Boolean = false): DataFrame = {
     import EventModel._
     val e = from_json(col("value"), eventSchema)
@@ -129,6 +131,7 @@ object EventLogParser {
       e("Stage Info")("Completion Time"), e("Stage Info")("Submission Time"),
       e("Completion Time"), e("Submission Time"), e("time"))
     val tsUs = tsMs * 1000L
+    val hinted = lines.columns.contains("attempt_hint")
     // Streaming sources cannot use monotonically_increasing_id; a hash
     // of (file, line) is a stable synthetic id in both modes.
     val eventId =
@@ -225,17 +228,15 @@ object EventLogParser {
           expr("map_from_entries(transform(e.`Spark Properties`, " +
             "p -> struct(p[0] AS key, p[1] AS value)))")).as("spark_props"),
         col("log_file"), col("value"),
-        (if (lines.columns.contains("attempt_hint")) col("attempt_hint")
+        (if (hinted) col("attempt_hint")
          else lit(null).cast("string")).as("attempt_hint"))
     val attributed =
-      if (lines.isStreaming)
+      if (lines.isStreaming || hinted)
         base.withColumn("attempt_id",
           coalesce(col("attempt_raw"), col("attempt_hint")))
       else base.withColumn("attempt_id",
-        coalesce(
-          max("attempt_raw").over(
-            org.apache.spark.sql.expressions.Window.partitionBy("log_file")),
-          col("attempt_hint")))
+        max("attempt_raw").over(
+          org.apache.spark.sql.expressions.Window.partitionBy("log_file")))
     (if (keepRaw) attributed.withColumn("raw", col("value")) else attributed)
       .drop("attempt_raw", "attempt_hint", "log_file", "value")
       .filter(col("event_type").isNotNull)

@@ -3428,7 +3428,9 @@ ORDER BY g.m_bits"""
   }
 
   /** [[dedupExactIncremental]]'s distributed plan, for batches over its
-   *  bound. */
+   *  bound. The hash store is restricted to the candidates' hashes by a
+   *  broadcast left-semi before its copies are counted, so the count
+   *  folds candidate-cardinality rows, never the whole store. */
   private def exactFlagsDistributed(corpusWords: DataFrame,
                                     corpusHashes: DataFrame, batch: DataFrame,
                                     mBits: Int, probes: Int): DataFrame = {
@@ -3452,6 +3454,8 @@ ORDER BY g.m_bits"""
     val candidates = b.join(hits, "doc_id")
       .select(col("doc_id"), md5(col("text")).as("content_hash"))
     val hashCounts = corpusHashes.select("content_hash")
+      .join(broadcast(candidates.select("content_hash")), Seq("content_hash"),
+        "left_semi")
       .groupBy("content_hash").agg(count(lit(1)).as("n_corpus_copies"))
     val verified = candidates.join(hashCounts, "content_hash")
       .select(col("doc_id"), col("n_corpus_copies"))

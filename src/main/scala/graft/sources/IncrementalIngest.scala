@@ -2,8 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import graft.events.EventLogParser
 
 /**
@@ -16,13 +18,18 @@ import graft.events.EventLogParser
  * Reference behavior: src/event_processor.rs:148-527 (new-file
  * detection + per-file offset tracking). Spark-native shape: the
  * checkpoint is a tiny TSV state file; file listing is a driver
- * metadata op; NEW files are parsed as one distributed read; grown
- * files' commit points, attempt ids, and tail bytes are gathered by
- * TWO distributed passes (one tiny-row metadata job, one tail-read
- * job) — a directory of 10k concurrently-growing logs costs two Spark
- * jobs per scan, never 10k+ serial driver round-trips, and tail BYTES
- * go straight from executors into the parser without staging on the
- * driver. For continuous tailing use
+ * metadata op; NEW files are parsed as one distributed read. Grown
+ * files cost one metadata job and the tail read inside `process`:
+ * the per-file seeks (commit point, attempt id) run in executors and
+ * come back to the driver as one collected array of tiny rows (one
+ * per pending file, the size of the checkpoint entries
+ * `loadState()` already holds); the tail read parallelizes the grown
+ * files' rows and its tasks read the tail BYTES straight into the
+ * parser, never through the driver. The tail parse takes each file's
+ * attempt id from those rows, so it needs no per-file window either.
+ * A directory of 10k concurrently-growing logs costs one job plus the
+ * sink's own jobs per scan, never 10k+ serial driver round-trips.
+ * For continuous tailing use
  * [[graft.streaming.StreamingIngest]] which gets the same semantics
  * from Structured Streaming's file-source offset log.
  *
@@ -97,27 +104,22 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
     }
   }
 
-  /** Stream the new checkpoint: carried-over entries from the prior
-   *  state, then the scan's committed rows from `fresh` — which is a
-   *  `toLocalIterator` over the metadata job's output, so per-file
-   *  commit points and attempt ids flow executor → checkpoint file
-   *  one partition at a time and never stage as a driver-side map. */
-  private def saveStateStreaming(carryOver: Iterator[(String, FileState)],
-                                 fresh: Iterator[(String, FileState)]): Unit = {
+  /** Write the new checkpoint: carried-over entries from the prior
+   *  state, then the scan's committed rows. */
+  private def saveState(entries: Iterator[(String, FileState)]): Unit = {
     // tmp-write + rename-swap (graft.streaming.StateStores.swapIn
-    // discipline): `fresh` is a toLocalIterator that runs Spark jobs
-    // BETWEEN writes, so writing the live path directly would leave a
-    // truncated checkpoint if any of those jobs dies mid-commit. The
-    // live file is replaced only after the tmp is complete and
-    // closed; a crash inside the delete→rename window loses the whole
-    // checkpoint (not a torn half), which at-least-once re-ingests.
+    // discipline): the live file is replaced only after the tmp is
+    // complete and closed, so a writer killed mid-commit never leaves
+    // a truncated checkpoint; a crash inside the delete→rename window
+    // loses the whole checkpoint (not a torn half), which
+    // at-least-once re-ingests.
     val p = new Path(checkpointPath)
     val tmp = new Path(checkpointPath + ".tmp")
     val f = fs(p)
     val out = f.create(tmp, true)
     try {
       var first = true
-      (carryOver ++ fresh).foreach { case (k, s) =>
+      entries.foreach { case (k, s) =>
         val line =
           s"$k\t${s.modTime}\t${s.offset}\t${s.seenLen}\t${s.attemptId.getOrElse("")}"
         if (!first) out.write('\n')
@@ -130,6 +132,15 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
       throw new java.io.IOException(
         s"checkpoint swap failed: rename($tmp, $p)")
   }
+
+  /** The Hadoop conf for the executor helpers, shipped once per
+   *  ingester: a copy of the session's conf as of the first scan,
+   *  so custom filesystem settings (s3a credentials, HDFS
+   *  nameservices) reach the executors without every task rebuilding
+   *  a `Configuration` from its default resources. */
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(
+      new Configuration(spark.sparkContext.hadoopConfiguration)))
 
   /** Parse the pending delta and hand it to `process`; the checkpoint
    *  is committed ONLY after `process` returns normally — at-LEAST-once
@@ -168,116 +179,150 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
           len - st.offset <= maxTailBytes)
     }
 
-    // ONE distributed metadata pass over every pending file computes
+    // ONE distributed metadata job over every pending file computes
     // the file's ENTIRE committed row in the executor: commit point
     // (end of last complete line), attempt id, new offset, and — for
     // grown files — the tail byte range. Grown files reuse the
     // checkpointed attempt (pre-attempt 4-field checkpoints recover it
     // from the head once); whole/rewritten files always re-read the
-    // head — a rewrite may carry a NEW attempt id. The rows stay an
-    // RDD end to end: the tail read CHAINS off it (no driver
-    // round-trip of offsets) and the checkpoint write streams it via
-    // toLocalIterator — the per-file metadata never stages as a
-    // driver map.
+    // head — a rewrite may carry a NEW attempt id. The rows are
+    // collected once: the tail read and the checkpoint write both use
+    // this array, so the offsets committed are the ones whose bytes
+    // `process` saw, even if a file changes again meanwhile.
     val wholeSet = whole.map(_._1.toString).toSet
     val metaIn = pending.map { case (p, len, mt) =>
       val st = if (wholeSet(p.toString)) None else seen.get(p.toString)
       (p.toString, len, mt, st.map(_.offset).getOrElse(-1L),
         st.flatMap(_.attemptId))
     }
-    // MEMORY_AND_DISK, not the cache() default: if a partition were
-    // evicted between process(delta) and commitCheckpoint, the
-    // recompute would re-read files that may have changed since
-    // listing, committing offsets over different bytes than process
-    // saw. The rows are tiny; disk spill keeps "capture once" true.
-    val meta = scanRows(spark, hadoopProps(spark), metaIn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val meta = scanRows(spark, hadoopConf, metaIn).collect().toSeq
     val pendingSet = pending.map(_._1.toString).toSet
+    val tails = meta.filter(r => r.tailEnd > r.tailStart)
 
-    val tailCount = meta.filter(r => r.tailEnd > r.tailStart).count()
-    try {
-      if (whole.isEmpty && tailCount == 0L) {
-        // only dangling partial lines moved: remember the new lengths
-        // so unchanged files are skipped next scan, but there is
-        // nothing to hand to `process` (offsets did not advance —
-        // nothing is lost)
-        commitCheckpoint(meta, pendingSet)
-        return Nil
-      }
-
-      val wholeDf: Option[DataFrame] =
-        if (whole.isEmpty) None
-        else Some(EventLogParser.read(spark, whole.map(_._1.toString): _*))
-      val tailDf: Option[DataFrame] =
-        if (tailCount == 0L) None
-        else {
-          import spark.implicits._
-          Some(EventLogParser.parseLines(
-            tailRows(meta, hadoopProps(spark))
-              .toDF("value", "log_file", "attempt_hint")))
-        }
-      val delta = (wholeDf, tailDf) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (Some(a), _) => a
-        case (_, Some(b)) => b
-        case _ => throw new IllegalStateException("unreachable: empty delta")
-      }
-      process(delta)
+    if (whole.isEmpty && tails.isEmpty) {
+      // only dangling partial lines moved: remember the new lengths
+      // so unchanged files are skipped next scan, but there is
+      // nothing to hand to `process` (offsets did not advance —
+      // nothing is lost)
       commitCheckpoint(meta, pendingSet)
-      pending.map(_._1.toString)
-    } finally meta.unpersist()
+      return Nil
+    }
+
+    val wholeDf: Option[DataFrame] =
+      if (whole.isEmpty) None
+      else Some(EventLogParser.read(spark, whole.map(_._1.toString): _*))
+    val tailDf: Option[DataFrame] =
+      if (tails.isEmpty) None
+      else {
+        import spark.implicits._
+        Some(EventLogParser.parseLines(
+          tailRows(spark, hadoopConf, tails)
+            .toDF("value", "log_file", "attempt_hint")))
+      }
+    val delta = (wholeDf, tailDf) match {
+      case (Some(a), Some(b)) => a.unionByName(b)
+      case (Some(a), _) => a
+      case (_, Some(b)) => b
+      case _ => throw new IllegalStateException("unreachable: empty delta")
+    }
+    process(delta)
+    commitCheckpoint(meta, pendingSet)
+    pending.map(_._1.toString)
   }
 
   /** Write the post-scan checkpoint: prior entries whose path this
-   *  scan did not touch carry over; the scan's rows stream in from
-   *  the cached metadata RDD partition by partition. The state is
+   *  scan did not touch carry over, then the scan's rows. The state is
    *  re-loaded here (not reused from scan start) so a `process` that
    *  itself advanced the same checkpoint is not silently rolled
    *  back. */
-  private def commitCheckpoint(meta: RDD[ScanRow],
+  private def commitCheckpoint(meta: Seq[ScanRow],
                                touched: Set[String]): Unit = {
     val carry = loadState().iterator.filterNot(kv => touched(kv._1))
-    saveStateStreaming(carry, meta.toLocalIterator.map(r =>
+    saveState(carry ++ meta.iterator.map(r =>
       r.path -> FileState(r.modTime, r.offset, r.seenLen, r.attemptId)))
   }
 }
 
 /** Executor-side helpers: every function here is called from task
  *  closures, so nothing captures the enclosing class (whose
- *  SparkSession is not serializable). The Hadoop conf travels as a
- *  plain key-value array and is rebuilt per task, so custom
- *  filesystem settings (s3a credentials, HDFS nameservices) reach the
- *  executors. */
+ *  SparkSession is not serializable). The Hadoop conf arrives as one
+ *  broadcast per ingester. */
 object IncrementalIngest {
 
-  private def hadoopProps(spark: SparkSession): Array[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toArray
+  /** Bytes [[headAttemptId]] reads at most. Spark posts
+   *  EnvironmentUpdate (Spark, Hadoop and system properties plus the
+   *  classpath) before ApplicationStart, and on real clusters that one
+   *  line often passes 64 KB; the cap sits far above any real
+   *  preamble and only bounds a file whose start line never comes. */
+  private[sources] val HeadScanMaxBytes: Long = 16L << 20
+
+  /** The part of a line [[headAttemptId]] keeps: the event name and
+   *  ApplicationStart's attempt field sit in its first few hundred
+   *  bytes (Spark writes `Event` first and the attempt before the
+   *  driver logs and attributes). */
+  private val LineHeadBytes = 65536
+
+  /** Events Spark posts only once the application has started: one
+   *  of them in view means no ApplicationStart line is coming. */
+  private val PostStartEvents: Set[String] = {
+    import graft.events.EventModel._
+    Set(AppEnd, JobStart, JobEnd, StageSubmitted, StageCompleted, TaskStart,
+      TaskEnd, SqlExecutionStart, SqlExecutionEnd)
   }
 
-  private def openFs(pathStr: String, props: Array[(String, String)]): (FileSystem, Path) = {
-    val conf = new Configuration()
-    props.foreach { case (k, v) => conf.set(k, v) }
+  private val EventName = """"Event"\s*:\s*"([^"]*)"""".r
+  private val AttemptField = """"App Attempt ID"\s*:\s*"([^"]*)"""".r
+
+  private def openFs(pathStr: String,
+                     conf: Broadcast[SerializableConfiguration]): (FileSystem, Path) = {
     val p = new Path(pathStr)
-    (p.getFileSystem(conf), p)
+    (p.getFileSystem(conf.value.value), p)
   }
 
-  /** Attempt ID from the file's head: ApplicationStart is one of the
-   *  first lines Spark writes, so one bounded read of the head chunk
-   *  finds it without parsing the file. Compressed logs are skipped
-   *  (finalized files never grow, so their tails are never read). */
+  /** Attempt ID from the file's head, read forward line by line until
+   *  the ApplicationStart line, or the first event Spark posts after
+   *  it, or [[HeadScanMaxBytes]]; a line that ends at `len` without a
+   *  newline counts too. Only the first [[LineHeadBytes]] of a line
+   *  are kept, so a multi-MB EnvironmentUpdate is scanned, never
+   *  buffered. Compressed logs are skipped (finalized files never
+   *  grow, so their tails are never read). */
   private[sources] def headAttemptId(f: FileSystem, p: Path, len: Long): Option[String] = {
     if (len == 0 || p.getName.matches(".*\\.(gz|lz4|snappy|zstd)$")) return None
-    val n = math.min(len, 65536L).toInt
-    val buf = new Array[Byte](n)
+    // None: keep reading; Some(a): the scan has its answer
+    def verdict(head: String): Option[Option[String]] =
+      EventName.findFirstMatchIn(head).map(_.group(1)) match {
+        case Some(graft.events.EventModel.AppStart) =>
+          Some(AttemptField.findFirstMatchIn(head).map(_.group(1)).filter(_.nonEmpty))
+        case Some(e) if PostStartEvents(e) => Some(None)
+        case _ => None
+      }
+    val limit = math.min(len, HeadScanMaxBytes)
+    val chunk = new Array[Byte](65536)
+    val line = new java.io.ByteArrayOutputStream()
+    var found: Option[Option[String]] = None
+    var pos = 0L
     val in = f.open(p)
-    try { in.seek(0); in.readFully(buf, 0, n) } finally in.close()
-    val re = """"App Attempt ID"\s*:\s*"([^"]*)"""".r
-    new String(buf, "UTF-8").linesIterator
-      .find(_.contains("SparkListenerApplicationStart"))
-      .flatMap(l => re.findFirstMatchIn(l).map(_.group(1)))
-      .filter(_.nonEmpty)
+    try {
+      while (found.isEmpty && pos < limit) {
+        val n = in.read(chunk, 0, math.min(chunk.length.toLong, limit - pos).toInt)
+        if (n < 0) pos = limit
+        else {
+          var i = 0
+          while (found.isEmpty && i < n) {
+            var end = i
+            while (end < n && chunk(end) != '\n') end += 1
+            line.write(chunk, i, math.min(end - i, LineHeadBytes - line.size).max(0))
+            if (end < n) {
+              found = verdict(line.toString("UTF-8"))
+              line.reset()
+            }
+            i = end + 1
+          }
+          pos += n
+        }
+      }
+    } finally in.close()
+    found.getOrElse(if (line.size > 0) verdict(line.toString("UTF-8")).flatten else None)
   }
 
   /** Byte position after the LAST '\n' at or before `len` (0 if none):
@@ -318,16 +363,14 @@ object IncrementalIngest {
    *  seeks (commit point, head attempt sniff) run in executors, in
    *  parallel. Input per file: (path, len, mtime, prevOffset — -1 for
    *  whole/rewritten reads — and the checkpointed attempt id, whose
-   *  presence skips the head read). The result is consumed as an RDD
-   *  by both the tail read and the checkpoint write — per-file
-   *  metadata never collects into a driver map. */
-  private def scanRows(spark: SparkSession, props: Array[(String, String)],
+   *  presence skips the head read). */
+  private def scanRows(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
                        files: Seq[(String, Long, Long, Long, Option[String])])
       : RDD[ScanRow] =
     spark.sparkContext
       .parallelize(files, math.min(files.size, 64).max(1))
       .map { case (pathStr, len, mt, prevOffset, known) =>
-        val (f, p) = openFs(pathStr, props)
+        val (f, p) = openFs(pathStr, conf)
         val lineEnd = lastLineEnd(f, p, len)
         val att = known.orElse(headAttemptId(f, p, len))
         if (prevOffset < 0L) // whole/rewritten: parsed by the file reader
@@ -337,15 +380,17 @@ object IncrementalIngest {
             prevOffset, math.max(lineEnd, prevOffset))
       }
 
-  /** Distributed tail read, CHAINED off the metadata rows: each grown
-   *  file's task seeks and reads its byte range in an executor and
-   *  emits the lines directly into the parser's input — neither the
-   *  offsets nor the tail bytes ever stage on the driver. */
-  private def tailRows(meta: RDD[ScanRow], props: Array[(String, String)])
-      : RDD[(String, String, String)] =
-    meta.filter(r => r.tailEnd > r.tailStart)
+  /** Distributed tail read over the grown files' collected rows: each
+   *  task seeks and reads its files' byte ranges in an executor and
+   *  emits the lines, stamped with the file's attempt id, directly
+   *  into the parser's input — the tail bytes never stage on the
+   *  driver. */
+  private def tailRows(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
+                       tails: Seq[ScanRow]): RDD[(String, String, String)] =
+    spark.sparkContext
+      .parallelize(tails, math.min(tails.size, 64).max(1))
       .flatMap { r =>
-        val (f, p) = openFs(r.path, props)
+        val (f, p) = openFs(r.path, conf)
         val buf = new Array[Byte]((r.tailEnd - r.tailStart).toInt)
         val in = f.open(p)
         try { in.seek(r.tailStart); in.readFully(buf) } finally in.close()

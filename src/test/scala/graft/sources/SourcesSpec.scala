@@ -1,10 +1,31 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.events.EventLogFixture
+import graft.events.{EventLogFixture, EventLogParser}
+import graft.obs.WorkLedger
 import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
+
+  private lazy val ledger = WorkLedger.install(spark)
+
+  private val ts = 1700000000000L
+  private def appStart(app: String, attempt: String) =
+    s"""{"Event":"SparkListenerApplicationStart","App Name":"a","App ID":"$app","App Attempt ID":"$attempt","Timestamp":$ts,"User":"u","Spark Version":"3.5.1"}"""
+  private def taskEnd(t: Int) =
+    s"""{"Event":"SparkListenerTaskEnd","Task Info":{"Task ID":$t,"Stage ID":0,"Executor ID":"1","Host":"h","Launch Time":${ts + t},"Finish Time":${ts + t + 5}},"Task Metrics":{"Executor Run Time":5}}"""
+  /** An EnvironmentUpdate line of at least `bytes` bytes, as real
+   *  clusters write it: many properties plus the classpath. */
+  private def bigEnvironment(bytes: Int) = {
+    val entries = Iterator.from(0)
+      .map(i => s"""["/srv/spark/jars/dependency-$i.jar","System Classpath"]""")
+    val cp = new StringBuilder
+    while (cp.length < bytes) { if (cp.nonEmpty) cp += ','; cp ++= entries.next() }
+    s"""{"Event":"SparkListenerEnvironmentUpdate","Spark Properties":[["spark.version","3.5.1"]],"Classpath Entries":[$cp]}"""
+  }
+  private def append(p: java.nio.file.Path, lines: Seq[String]): Unit =
+    java.nio.file.Files.writeString(p, lines.mkString("", "\n", "\n"),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
 
   test("listLogs lists only log-shaped files") {
     val d = tmpDir("srclist")
@@ -187,16 +208,18 @@ class SourcesSpec extends SparkSpec {
     ing.ingest(s"file://$d")(df => cnt = df.count())
     assert(cnt === 2L * n)
     // every file grows by one event; the re-scan must ingest exactly
-    // the 1000 tails — two Spark jobs (metadata + tail read), with the
-    // per-file seeks running in executors, not a driver loop
+    // the 1000 tails — two Spark jobs (metadata collect + the collect
+    // that reads the tails), with the per-file seeks running in
+    // executors, not a driver loop
     for (i <- 0 until n)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(d, f"app-f$i%04d.json"), taskEnd(i, 1) + "\n",
         java.nio.file.StandardOpenOption.APPEND)
     var tails: Array[org.apache.spark.sql.Row] = Array.empty
-    ing.ingest(s"file://$d")(df =>
-      tails = df.select("app_id", "attempt_id").collect())
+    val (_, work) = ledger.measure(ing.ingest(s"file://$d")(df =>
+      tails = df.select("app_id", "attempt_id").collect()))
     assert(tails.length === n)
+    assert(work.jobs <= 2, work)
     // attempt ids come from the checkpoint written by the first scan —
     // each tail row is stamped with ITS OWN file's attempt
     assert(tails.map(_.getString(1)).distinct.length === n)
@@ -261,5 +284,73 @@ class SourcesSpec extends SparkSpec {
       lines(0).takeWhile(_ != '\t') + "\n" + lines(1))
     dropCrc()
     intercept[Exception] { ing.ingest(s"file://$d")(_ => ()) }
+  }
+
+  test("a grown-only round runs the same jobs for 4 and for 64 files, at most 2") {
+    def grownRoundJobs(files: Int): Long = {
+      val d = tmpDir(s"incr-jobs$files")
+      val ing = new IncrementalIngest(spark, tmpDir(s"incr-jobs$files-ckpt") + "/state.tsv")
+      val paths = (0 until files).map(i => java.nio.file.Paths.get(d, f"app-j$i%03d.json"))
+      for ((p, i) <- paths.zipWithIndex) append(p, Seq(appStart(s"app-j$i", "1"), taskEnd(0)))
+      ing.ingest(s"file://$d")(_.count())
+      paths.foreach(append(_, Seq(taskEnd(1), taskEnd(2))))
+      val (touched, work) = ledger.measure(ing.ingest(s"file://$d")(
+        _.write.format("noop").mode("overwrite").save()))
+      assert(touched.size === files)
+      work.jobs
+    }
+    val (few, many) = (grownRoundJobs(4), grownRoundJobs(64))
+    assert(few === many)
+    assert(many <= 2L, many)
+  }
+
+  test("headAttemptId reads past a large EnvironmentUpdate and stops after the start") {
+    val d = tmpDir("incr-head")
+    def attempt(name: String, lines: Seq[String], partialTail: String = "") = {
+      val p = java.nio.file.Paths.get(d, name)
+      java.nio.file.Files.writeString(p, lines.mkString("", "\n", "\n") + partialTail)
+      val hp = new org.apache.hadoop.fs.Path(p.toUri)
+      val f = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      IncrementalIngest.headAttemptId(f, hp, java.nio.file.Files.size(p))
+    }
+    val env = bigEnvironment(300 << 10)
+    assert(env.length > (200 << 10))
+    val preamble = Seq("""{"Event":"SparkListenerLogStart","Spark Version":"3.5.1"}""", env)
+    assert(attempt("big.json", preamble ++ Seq(appStart("app-h", "3"), taskEnd(0))) === Some("3"))
+    // a start line that has no newline yet still counts
+    assert(attempt("partial.json", preamble, appStart("app-h", "4")) === Some("4"))
+    // no start line before the first job: no attempt, and no scan to the cap
+    assert(attempt("nostart.json", preamble ++ Seq(
+      """{"Event":"SparkListenerJobStart","Job ID":0,"Timestamp":1}""",
+      appStart("app-h", "5"))) === None)
+  }
+
+  test("tail deltas equal a whole-file parse of the appended lines, attempt_id included") {
+    val d = tmpDir("incr-parity")
+    val ckpt = tmpDir("incr-parity-ckpt") + "/state.tsv"
+    val p = java.nio.file.Paths.get(d, "app-par.json")
+    val env = bigEnvironment(256 << 10)
+    assert(env.length > (200 << 10))
+    // the first scan sees only the preamble; the start line arrives in
+    // the first tail, later tails carry neither start nor environment
+    val rounds = Seq(
+      Seq("""{"Event":"SparkListenerLogStart","Spark Version":"3.5.1"}""", env),
+      Seq(appStart("app-par", "7")) ++ EventLogFixture.appLog("app-par").slice(1, 6),
+      EventLogFixture.appLog("app-par").slice(6, 11),
+      Seq(taskEnd(40), taskEnd(41)))
+    val ing = new IncrementalIngest(spark, ckpt)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.drop("event_id").collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((lines, r) <- rounds.zipWithIndex) {
+      append(p, lines)
+      var delta: Seq[String] = Nil
+      ing.ingest(s"file://$d")(df => delta = rowsOf(df))
+      val whole = EventLogParser.parseLines(spark.read.textFile(p.toString).toDF("value")
+          .withColumn("log_file", input_file_name()), keepRaw = true)
+        .filter(col("raw").isin(lines: _*)).drop("raw")
+      assert(delta === rowsOf(whole), s"round $r")
+      assert(delta.size === lines.size, s"round $r")
+      if (r > 0) assert(whole.filter(col("attempt_id") === "7").count() === lines.size)
+    }
   }
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
@@ -192,6 +194,34 @@ class BoundedTriggerSpec extends SparkSpec {
     assert(exactParity(words, hashes, docs.filter(lit(false))).isEmpty)
     assert(exactParity(words, hashes, novel(Seq(1000L, 1001L)))
       .map(_(1)) === Seq(0L, 0L))
+  }
+
+  test("exact distributed plan: the hash store is scanned and semi-joined below its count") {
+    val docs = documents("sf0.001")
+    val dir = tmpDir("bt-x-dist")
+    val words = stored(dir + "/w", Dedup.bloomWords(docs))
+    val hashes = stored(dir + "/h", Dedup.contentHashes(docs))
+    val batch = arrivals(docs)
+    val (flags, plans) = executedPlans(Dedup.dedupExactIncremental(words, hashes,
+      batch, localMax = -1))
+    assert(rowsOf(flags) === rowsOf(Dedup.dedupExactIncremental(words, hashes, batch)))
+    def scansHashes(p: SparkPlan) = p.exists {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == "h")
+      case _ => false
+    }
+    def storeSemi(p: SparkPlan) = p.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi && scansHashes(j.left) => j
+    }
+    val semis = plans.flatMap(storeSemi)
+    assert(semis.nonEmpty, plans.mkString("\n"))
+    // below the semi-join the store is only scanned: no exchange, no fold
+    for (j <- semis) assert(!j.left.exists {
+      case _: Exchange | _: BaseAggregateExec => true
+      case _ => false
+    }, j)
+    // and every aggregate over the store counts semi-joined rows only
+    for (p <- plans; a <- p.collect { case a: BaseAggregateExec if scansHashes(a) => a })
+      assert(storeSemi(a).nonEmpty, a)
   }
 
   /** Every store of the loop rooted at `root`, as sorted row strings. */
