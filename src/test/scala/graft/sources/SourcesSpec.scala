@@ -169,12 +169,7 @@ class SourcesSpec extends SparkSpec {
     val d = tmpDir("incr-att")
     val ckpt = tmpDir("incr-att-ckpt") + "/state.tsv"
     val p = java.nio.file.Paths.get(d, "app-att.json")
-    val ts = 1700000000000L
-    val start =
-      s"""{"Event":"SparkListenerApplicationStart","App Name":"a","App ID":"app-att","App Attempt ID":"2","Timestamp":$ts,"User":"u","Spark Version":"3.5.1"}"""
-    def taskEnd(i: Int) =
-      s"""{"Event":"SparkListenerTaskEnd","Task Info":{"Task ID":$i,"Stage ID":0,"Executor ID":"1","Host":"h","Launch Time":${ts + i},"Finish Time":${ts + i + 5}},"Task Metrics":{"Executor Run Time":5}}"""
-    java.nio.file.Files.writeString(p, start + "\n" + taskEnd(0) + "\n")
+    append(p, Seq(appStart("app-att", "2"), taskEnd(0)))
     val ing = new IncrementalIngest(spark, ckpt)
     var atts: Seq[String] = Nil
     def run(): Unit = ing.ingest(s"file://$d")(df => atts =
@@ -183,8 +178,7 @@ class SourcesSpec extends SparkSpec {
     assert(atts.toSet === Set("2")) // whole-file read: window attribution
     // the appended tail has no ApplicationStart in view — the attempt
     // must come from the checkpoint, not default to null
-    java.nio.file.Files.writeString(p, taskEnd(1) + "\n" + taskEnd(2) + "\n",
-      java.nio.file.StandardOpenOption.APPEND)
+    append(p, Seq(taskEnd(1), taskEnd(2)))
     run()
     assert(atts.size === 2)
     assert(atts.toSet === Set("2"))
@@ -193,16 +187,9 @@ class SourcesSpec extends SparkSpec {
   test("one scan handles 1k concurrently-grown tails without per-file driver serialization") {
     val d = tmpDir("incr-fleet")
     val ckpt = tmpDir("incr-fleet-ckpt") + "/state.tsv"
-    val ts = 1700000000000L
-    def start(i: Int) =
-      s"""{"Event":"SparkListenerApplicationStart","App Name":"a$i","App ID":"app-f$i","App Attempt ID":"$i","Timestamp":$ts,"User":"u","Spark Version":"3.5.1"}"""
-    def taskEnd(i: Int, t: Int) =
-      s"""{"Event":"SparkListenerTaskEnd","Task Info":{"Task ID":$t,"Stage ID":0,"Executor ID":"1","Host":"h","Launch Time":${ts + t},"Finish Time":${ts + t + 5}},"Task Metrics":{"Executor Run Time":5}}"""
     val n = 1000
-    for (i <- 0 until n)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d, f"app-f$i%04d.json"),
-        start(i) + "\n" + taskEnd(i, 0) + "\n")
+    val paths = (0 until n).map(i => java.nio.file.Paths.get(d, f"app-f$i%04d.json"))
+    for ((p, i) <- paths.zipWithIndex) append(p, Seq(appStart(s"app-f$i", s"$i"), taskEnd(0)))
     val ing = new IncrementalIngest(spark, ckpt)
     var cnt = 0L
     ing.ingest(s"file://$d")(df => cnt = df.count())
@@ -211,10 +198,7 @@ class SourcesSpec extends SparkSpec {
     // the 1000 tails — two Spark jobs (metadata collect + the collect
     // that reads the tails), with the per-file seeks running in
     // executors, not a driver loop
-    for (i <- 0 until n)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d, f"app-f$i%04d.json"), taskEnd(i, 1) + "\n",
-        java.nio.file.StandardOpenOption.APPEND)
+    paths.foreach(append(_, Seq(taskEnd(1))))
     var tails: Array[org.apache.spark.sql.Row] = Array.empty
     val (_, work) = ledger.measure(ing.ingest(s"file://$d")(df =>
       tails = df.select("app_id", "attempt_id").collect()))
