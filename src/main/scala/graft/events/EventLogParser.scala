@@ -46,6 +46,8 @@ object EventLogParser {
     StructField("Spark Version", StringType),
     StructField("Executor ID", StringType),
     StructField("Removed Reason", StringType),
+    // SparkListenerTaskStart/TaskEnd
+    StructField("Stage ID", LongType),
     StructField("Stage Info", StructType(Seq(
       StructField("Stage ID", LongType),
       StructField("Submission Time", LongType),
@@ -90,8 +92,8 @@ object EventLogParser {
       StructField("Host", StringType),
       StructField("Port", LongType)))),
     StructField("Maximum Memory", LongType),
-    // SparkListenerEnvironmentUpdate ([[k,v],...] pairs)
-    StructField("Spark Properties", ArrayType(ArrayType(StringType))),
+    // SparkListenerEnvironmentUpdate (a JSON object of properties)
+    StructField("Spark Properties", MapType(StringType, StringType)),
     // SQL execution events
     StructField("executionId", LongType),
     StructField("time", LongType)
@@ -99,6 +101,23 @@ object EventLogParser {
 
   /** Parse raw event-log lines (column `value` + `log_file`) into the
    *  canonical frame.
+   *
+   *  Parse once: a line is tokenized by ONE `from_json` (the `e`
+   *  column of the child projection), and every canonical column reads
+   *  fields of that parsed struct. The canonical projection holds no
+   *  JSON and no lambda, so it runs inside whole-stage codegen. A
+   *  field derived from a `from_json` Column value instead of `e`
+   *  would be inlined by the optimizer as its own pruned parse, once
+   *  per use (a `coalesce` branch each), and would drop the projection
+   *  out of codegen (`JsonToStructs` and higher-order functions are
+   *  `CodegenFallback`).
+   *
+   *  Field mapping follows what Spark writes: task events carry
+   *  `Stage ID` at the top level (a `Task Info.Stage ID` is the
+   *  fallback), and EnvironmentUpdate writes `Spark Properties` as a
+   *  JSON object, parsed as a string map. A line without `App ID`
+   *  takes the log's file name less its extension, codec and
+   *  `.inprogress` suffixes.
    *
    *  `keepRaw = true` carries the original JSON line through as a `raw`
    *  column (reference stores raw_data next to the typed columns and
@@ -123,14 +142,16 @@ object EventLogParser {
    *  elsewhere. */
   def parseLines(lines: DataFrame, keepRaw: Boolean = false): DataFrame = {
     import EventModel._
-    val e = from_json(col("value"), eventSchema)
+    val e = col("e")
     val evtType = e("Event")
     val isTask = evtType.isin(TaskStart, TaskEnd)
+    val isTaskEnd = evtType === TaskEnd
     val tsMs = coalesce(e("Timestamp"),
       e("Task Info")("Finish Time"), e("Task Info")("Launch Time"),
       e("Stage Info")("Completion Time"), e("Stage Info")("Submission Time"),
       e("Completion Time"), e("Submission Time"), e("time"))
     val tsUs = tsMs * 1000L
+    val props = e("Spark Properties")
     val hinted = lines.columns.contains("attempt_hint")
     // Streaming sources cannot use monotonically_increasing_id; a hash
     // of (file, line) is a stable synthetic id in both modes.
@@ -138,95 +159,80 @@ object EventLogParser {
       if (lines.isStreaming) xxhash64(col("log_file"), col("value"))
       else monotonically_increasing_id()
     val base = lines
-      .withColumn("e", e)
+      .withColumn("e", from_json(col("value"), eventSchema))
       .select(
         eventId.as("event_id"),
-        coalesce(col("e")("App ID"),
+        coalesce(e("App ID"),
           regexp_replace(element_at(split(col("log_file"), "/"), -1),
-            "\\.(json|log|txt)(\\.gz|\\.lz4|\\.snappy)?$", "")).as("app_id"),
-        col("e")("Event").as("event_type"),
+            "(\\.(json|log|txt)(\\.gz|\\.lz4|\\.snappy)?)?(\\.inprogress)?$", ""))
+          .as("app_id"),
+        evtType.as("event_type"),
         timestamp_micros(tsUs).as("event_time"),
         tsUs.as("event_time_us"),
         date_format(timestamp_micros(tsUs), "yyyy-MM-dd").as("event_date"),
-        when(col("e")("Event").isin(JobStart, JobEnd), col("e")("Job ID")).as("job_id"),
-        when(col("e")("Event").isin(StageSubmitted, StageCompleted),
-          col("e")("Stage Info")("Stage ID"))
-          .when(col("e")("Event").isin(TaskStart, TaskEnd),
-            col("e")("Task Info")("Stage ID")).as("stage_id"),
-        when(col("e")("Event").isin(TaskStart, TaskEnd),
-          col("e")("Task Info")("Task ID")).as("task_id"),
-        when(col("e")("Event").isin(SqlExecutionStart, SqlExecutionEnd),
-          col("e")("executionId")).as("sql_execution_id"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Executor Run Time")).as("duration_ms"),
-        when(col("e")("Event").isin(TaskStart, TaskEnd),
-          col("e")("Task Info")("Executor ID"))
-          .when(col("e")("Event").isin(ExecutorAdded, ExecutorRemoved),
-            col("e")("Executor ID"))
-          .when(col("e")("Event").isin(BlockManagerAdded, BlockManagerRemoved),
-            col("e")("Block Manager ID")("Executor ID")).as("executor_id"),
-        when(col("e")("Event").isin(TaskStart, TaskEnd),
-          col("e")("Task Info")("Host"))
-          .when(col("e")("Event") === ExecutorAdded,
-            col("e")("Executor Info")("Host"))
-          .when(col("e")("Event").isin(BlockManagerAdded, BlockManagerRemoved),
-            col("e")("Block Manager ID")("Host")).as("host"),
-        when(col("e")("Event") === ExecutorAdded,
-          col("e")("Executor Info")("Total Cores").cast("int")).as("cores"),
-        when(col("e")("Event") === ExecutorAdded,
-          col("e")("Executor Info")("Max Memory"))
-          .when(col("e")("Event") === BlockManagerAdded,
-            col("e")("Maximum Memory")).as("max_memory"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Executor Run Time")).as("run_time_ms"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Executor CPU Time")).as("cpu_time_ns"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("JVM GC Time")).as("gc_time_ms"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Input Metrics")("Bytes Read")).as("input_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Output Metrics")("Bytes Written")).as("output_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          coalesce(col("e")("Task Metrics")("Shuffle Read Metrics")("Total Bytes Read"),
-            col("e")("Task Metrics")("Shuffle Read Metrics")("Remote Bytes Read")
-              + col("e")("Task Metrics")("Shuffle Read Metrics")("Local Bytes Read")))
+        when(evtType.isin(JobStart, JobEnd), e("Job ID")).as("job_id"),
+        when(evtType.isin(StageSubmitted, StageCompleted),
+          e("Stage Info")("Stage ID"))
+          .when(isTask, coalesce(e("Stage ID"), e("Task Info")("Stage ID")))
+          .as("stage_id"),
+        when(isTask, e("Task Info")("Task ID")).as("task_id"),
+        when(evtType.isin(SqlExecutionStart, SqlExecutionEnd),
+          e("executionId")).as("sql_execution_id"),
+        when(isTaskEnd, e("Task Metrics")("Executor Run Time")).as("duration_ms"),
+        when(isTask, e("Task Info")("Executor ID"))
+          .when(evtType.isin(ExecutorAdded, ExecutorRemoved), e("Executor ID"))
+          .when(evtType.isin(BlockManagerAdded, BlockManagerRemoved),
+            e("Block Manager ID")("Executor ID")).as("executor_id"),
+        when(isTask, e("Task Info")("Host"))
+          .when(evtType === ExecutorAdded, e("Executor Info")("Host"))
+          .when(evtType.isin(BlockManagerAdded, BlockManagerRemoved),
+            e("Block Manager ID")("Host")).as("host"),
+        when(evtType === ExecutorAdded,
+          e("Executor Info")("Total Cores").cast("int")).as("cores"),
+        when(evtType === ExecutorAdded, e("Executor Info")("Max Memory"))
+          .when(evtType === BlockManagerAdded, e("Maximum Memory")).as("max_memory"),
+        when(isTaskEnd, e("Task Metrics")("Executor Run Time")).as("run_time_ms"),
+        when(isTaskEnd, e("Task Metrics")("Executor CPU Time")).as("cpu_time_ns"),
+        when(isTaskEnd, e("Task Metrics")("JVM GC Time")).as("gc_time_ms"),
+        when(isTaskEnd,
+          e("Task Metrics")("Input Metrics")("Bytes Read")).as("input_bytes"),
+        when(isTaskEnd,
+          e("Task Metrics")("Output Metrics")("Bytes Written")).as("output_bytes"),
+        when(isTaskEnd,
+          coalesce(e("Task Metrics")("Shuffle Read Metrics")("Total Bytes Read"),
+            e("Task Metrics")("Shuffle Read Metrics")("Remote Bytes Read")
+              + e("Task Metrics")("Shuffle Read Metrics")("Local Bytes Read")))
           .as("shuffle_read_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          coalesce(col("e")("Task Metrics")("Shuffle Write Metrics")("Shuffle Bytes Written"),
-            col("e")("Task Metrics")("Shuffle Write Metrics")("Bytes Written")))
+        when(isTaskEnd,
+          coalesce(e("Task Metrics")("Shuffle Write Metrics")("Shuffle Bytes Written"),
+            e("Task Metrics")("Shuffle Write Metrics")("Bytes Written")))
           .as("shuffle_write_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Memory Bytes Spilled")).as("memory_spilled_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Disk Bytes Spilled")).as("disk_spilled_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Metrics")("Peak Execution Memory")).as("peak_memory_bytes"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task Executor Metrics")("JVMHeapMemory")).as("jvm_heap_bytes"),
-        when(isTask, col("e")("Task Info")("Locality")).as("locality"),
-        when(col("e")("Event") === TaskEnd,
-          col("e")("Task End Reason")("Reason")).as("end_reason"),
-        when(col("e")("Event") === ExecutorRemoved,
-          col("e")("Removed Reason")).as("removed_reason"),
-        when(col("e")("Event") === AppStart, col("e")("User")).as("app_user"),
+        when(isTaskEnd,
+          e("Task Metrics")("Memory Bytes Spilled")).as("memory_spilled_bytes"),
+        when(isTaskEnd,
+          e("Task Metrics")("Disk Bytes Spilled")).as("disk_spilled_bytes"),
+        when(isTaskEnd,
+          e("Task Metrics")("Peak Execution Memory")).as("peak_memory_bytes"),
+        when(isTaskEnd,
+          e("Task Executor Metrics")("JVMHeapMemory")).as("jvm_heap_bytes"),
+        when(isTask, e("Task Info")("Locality")).as("locality"),
+        when(isTaskEnd, e("Task End Reason")("Reason")).as("end_reason"),
+        when(evtType === ExecutorRemoved, e("Removed Reason")).as("removed_reason"),
+        when(evtType === AppStart, e("User")).as("app_user"),
         // Spark version: from ApplicationStart, else from the
-        // EnvironmentUpdate property pairs (reference:
-        // src/storage/event_log.rs:143-161).
-        when(col("e")("Event") === AppStart, col("e")("Spark Version"))
-          .when(col("e")("Event") === EnvironmentUpdate,
-            expr("filter(e.`Spark Properties`, " +
-              "p -> p[0] IN ('spark.app.version', 'spark.version'))[0][1]"))
+        // EnvironmentUpdate properties, `spark.app.version` first
+        // (reference: src/storage/event_log.rs:143-161).
+        when(evtType === AppStart, e("Spark Version"))
+          .when(evtType === EnvironmentUpdate,
+            coalesce(element_at(props, "spark.app.version"),
+              element_at(props, "spark.version")))
           .as("spark_version"),
-        when(col("e")("Event") === AppStart, col("e")("App Name")).as("app_name"),
-        when(col("e")("Event") === AppStart, col("e")("App Attempt ID"))
-          .as("attempt_raw"),
+        when(evtType === AppStart, e("App Name")).as("app_name"),
+        when(evtType === AppStart, e("App Attempt ID")).as("attempt_raw"),
         // Full Spark-properties map from EnvironmentUpdate (reference
         // parses these at src/storage/event_log.rs:143-161; the API
         // route is src/api.rs:43-45).
-        when(col("e")("Event") === EnvironmentUpdate,
-          expr("map_from_entries(transform(e.`Spark Properties`, " +
-            "p -> struct(p[0] AS key, p[1] AS value)))")).as("spark_props"),
+        when(evtType === EnvironmentUpdate, props).as("spark_props"),
         col("log_file"), col("value"),
         (if (hinted) col("attempt_hint")
          else lit(null).cast("string")).as("attempt_hint"))

@@ -67,11 +67,14 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
    *  complete line already handed to a successful `process`; `seenLen`
    *  = the file length at that scan (so an unchanged file — even one
    *  with a dangling partial line — is skipped without reopening);
-   *  `attemptId` = the App Attempt ID of the file's ApplicationStart
-   *  line, persisted so TAIL reads (which never see that start line
-   *  again) can stamp attempts identically to a whole-file parse. */
+   *  `head` = what the file's head said about its attempt: `None`
+   *  while the ApplicationStart line is not yet in view, else
+   *  `Some(the App Attempt ID, if the start line has one)`, persisted
+   *  so TAIL reads (which never see that start line again) can stamp
+   *  attempts identically to a whole-file parse, and so a resolved
+   *  head is never read again. */
   private case class FileState(modTime: Long, offset: Long, seenLen: Long,
-                               attemptId: Option[String] = None)
+                               head: Option[Option[String]])
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -85,11 +88,14 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
       val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
       val lines = txt.linesIterator.filter(_.nonEmpty).toVector
       lines.zipWithIndex.flatMap { case (line, i) =>
-        // 5-field TSV; 4-field lines (pre-attempt checkpoints) still load
+        // 6-field TSV; a 5-field line (no head flag) counts its head as
+        // resolved only when it holds an attempt, a 4-field line (no
+        // attempt field) never
         val parts = line.split("\t", -1)
+        val attempt = parts.lift(4).filter(_.nonEmpty)
         try Some(parts(0) -> FileState(parts(1).toLong, parts(2).toLong,
           parts(3).toLong,
-          if (parts.length > 4 && parts(4).nonEmpty) Some(parts(4)) else None))
+          if (parts.lift(5).contains("1")) Some(attempt) else attempt.map(Some(_))))
         catch {
           // A torn FINAL line (a writer killed mid-commit before the
           // tmp-swap discipline existed, or a torn copy) is dropped —
@@ -120,8 +126,8 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
     try {
       var first = true
       entries.foreach { case (k, s) =>
-        val line =
-          s"$k\t${s.modTime}\t${s.offset}\t${s.seenLen}\t${s.attemptId.getOrElse("")}"
+        val line = s"$k\t${s.modTime}\t${s.offset}\t${s.seenLen}\t" +
+          s"${s.head.flatten.getOrElse("")}\t${if (s.head.isDefined) "1" else "0"}"
         if (!first) out.write('\n')
         out.write(line.getBytes("UTF-8"))
         first = false
@@ -183,9 +189,10 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
     // the file's ENTIRE committed row in the executor: commit point
     // (end of last complete line), attempt id, new offset, and — for
     // grown files — the tail byte range. Grown files reuse the
-    // checkpointed attempt (pre-attempt 4-field checkpoints recover it
-    // from the head once); whole/rewritten files always re-read the
-    // head — a rewrite may carry a NEW attempt id. The rows are
+    // checkpointed head verdict and read the head only until it is
+    // resolved (the start line, or an event posted after it, in view);
+    // whole/rewritten files always re-read the head — a rewrite may
+    // carry a NEW attempt id. The rows are
     // collected once: the tail read and the checkpoint write both use
     // this array, so the offsets committed are the ones whose bytes
     // `process` saw, even if a file changes again meanwhile.
@@ -193,7 +200,7 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
     val metaIn = pending.map { case (p, len, mt) =>
       val st = if (wholeSet(p.toString)) None else seen.get(p.toString)
       (p.toString, len, mt, st.map(_.offset).getOrElse(-1L),
-        st.flatMap(_.attemptId))
+        st.flatMap(_.head))
     }
     val meta = scanRows(spark, hadoopConf, metaIn).collect().toSeq
     val pendingSet = pending.map(_._1.toString).toSet
@@ -239,7 +246,7 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
                                touched: Set[String]): Unit = {
     val carry = loadState().iterator.filterNot(kv => touched(kv._1))
     saveState(carry ++ meta.iterator.map(r =>
-      r.path -> FileState(r.modTime, r.offset, r.seenLen, r.attemptId)))
+      r.path -> FileState(r.modTime, r.offset, r.seenLen, r.head)))
   }
 }
 
@@ -279,15 +286,21 @@ object IncrementalIngest {
     (p.getFileSystem(conf.value.value), p)
   }
 
-  /** Attempt ID from the file's head, read forward line by line until
-   *  the ApplicationStart line, or the first event Spark posts after
-   *  it, or [[HeadScanMaxBytes]]; a line that ends at `len` without a
-   *  newline counts too. Only the first [[LineHeadBytes]] of a line
-   *  are kept, so a multi-MB EnvironmentUpdate is scanned, never
+  /** The file head's verdict on its attempt, read forward line by line
+   *  until the ApplicationStart line (`Some(its App Attempt ID, if
+   *  any)`), or the first event Spark posts after it (`Some(None)`).
+   *  `None` means neither is in view yet: the caller reads the head
+   *  again once the file grows. A line that ends at `len` without a
+   *  newline may still be mid-write, so it decides only when it
+   *  carries an attempt. The scan stops at [[HeadScanMaxBytes]]; a
+   *  head that fills the cap is resolved as it stands, since appends
+   *  never change it. Only the first [[LineHeadBytes]] of a line are
+   *  kept, so a multi-MB EnvironmentUpdate is scanned, never
    *  buffered. Compressed logs are skipped (finalized files never
    *  grow, so their tails are never read). */
-  private[sources] def headAttemptId(f: FileSystem, p: Path, len: Long): Option[String] = {
-    if (len == 0 || p.getName.matches(".*\\.(gz|lz4|snappy|zstd)$")) return None
+  private[sources] def headAttemptId(f: FileSystem, p: Path, len: Long): Option[Option[String]] = {
+    if (len == 0) return None
+    if (p.getName.matches(".*\\.(gz|lz4|snappy|zstd)$")) return Some(None)
     // None: keep reading; Some(a): the scan has its answer
     def verdict(head: String): Option[Option[String]] =
       EventName.findFirstMatchIn(head).map(_.group(1)) match {
@@ -322,21 +335,32 @@ object IncrementalIngest {
         }
       }
     } finally in.close()
-    found.getOrElse(if (line.size > 0) verdict(line.toString("UTF-8")).flatten else None)
+    val capped = limit < len
+    found
+      .orElse(Option.when(line.size > 0)(verdict(line.toString("UTF-8"))).flatten
+        .filter(a => a.isDefined || capped))
+      .orElse(Option.when(capped)(None))
   }
+
+  /** Bytes [[lastLineEnd]] reads in its first window; each further
+   *  window doubles, up to [[LastLineMaxWindow]]. */
+  private[sources] val LastLineFirstWindow = 1024
+  private val LastLineMaxWindow = 65536
 
   /** Byte position after the LAST '\n' at or before `len` (0 if none):
    *  the only safe commit point — everything past it is a partial
-   *  line. Scans backwards in bounded chunks from the end, so the cost
-   *  is one seek + a few KB even on a multi-GB file. */
+   *  line. Scans backwards from the end in windows that start small
+   *  and grow: on an append-only log the newline is almost always the
+   *  last byte, so the usual cost is one seek + [[LastLineFirstWindow]]
+   *  bytes, and a long partial line costs a few growing reads. */
   private[sources] def lastLineEnd(f: FileSystem, p: Path, len: Long): Long = {
     if (len == 0) return 0L
     val in = f.open(p)
     try {
-      val chunk = 65536
+      var window = LastLineFirstWindow
       var end = len
       while (end > 0) {
-        val start = math.max(0L, end - chunk)
+        val start = math.max(0L, end - window)
         val buf = new Array[Byte]((end - start).toInt)
         in.seek(start)
         in.readFully(buf)
@@ -346,6 +370,7 @@ object IncrementalIngest {
           i -= 1
         }
         end = start
+        window = math.min(window * 2, LastLineMaxWindow)
       }
       0L
     } finally in.close()
@@ -356,27 +381,27 @@ object IncrementalIngest {
    *  owes the parser (tailStart == tailEnd for whole/rewritten files
    *  and for growth with no complete new line yet). */
   private[sources] case class ScanRow(path: String, modTime: Long,
-      offset: Long, seenLen: Long, attemptId: Option[String],
+      offset: Long, seenLen: Long, head: Option[Option[String]],
       tailStart: Long, tailEnd: Long)
 
   /** Distributed metadata pass: ONE job of tiny rows — the per-file
    *  seeks (commit point, head attempt sniff) run in executors, in
    *  parallel. Input per file: (path, len, mtime, prevOffset — -1 for
-   *  whole/rewritten reads — and the checkpointed attempt id, whose
+   *  whole/rewritten reads — and the checkpointed head verdict, whose
    *  presence skips the head read). */
   private def scanRows(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
-                       files: Seq[(String, Long, Long, Long, Option[String])])
+                       files: Seq[(String, Long, Long, Long, Option[Option[String]])])
       : RDD[ScanRow] =
     spark.sparkContext
       .parallelize(files, math.min(files.size, 64).max(1))
       .map { case (pathStr, len, mt, prevOffset, known) =>
         val (f, p) = openFs(pathStr, conf)
         val lineEnd = lastLineEnd(f, p, len)
-        val att = known.orElse(headAttemptId(f, p, len))
+        val head = known.orElse(headAttemptId(f, p, len))
         if (prevOffset < 0L) // whole/rewritten: parsed by the file reader
-          ScanRow(pathStr, mt, lineEnd, len, att, 0L, 0L)
+          ScanRow(pathStr, mt, lineEnd, len, head, 0L, 0L)
         else // grown: tail range [prevOffset, lineEnd) when it advanced
-          ScanRow(pathStr, mt, math.max(lineEnd, prevOffset), len, att,
+          ScanRow(pathStr, mt, math.max(lineEnd, prevOffset), len, head,
             prevOffset, math.max(lineEnd, prevOffset))
       }
 
@@ -395,6 +420,6 @@ object IncrementalIngest {
         val in = f.open(p)
         try { in.seek(r.tailStart); in.readFully(buf) } finally in.close()
         new String(buf, "UTF-8").linesIterator
-          .filter(_.nonEmpty).map(l => (l, r.path, r.attemptId.orNull)).toList
+          .filter(_.nonEmpty).map(l => (l, r.path, r.head.flatten.orNull)).toList
       }
 }

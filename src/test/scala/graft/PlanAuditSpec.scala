@@ -121,6 +121,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(agg.count() === 2)
   }
 
+  test("event-log parse: one from_json per line, canonical projection in whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, JsonToStructs}
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, WholeStageCodegenExec}
+    // the nodes a codegen stage compiles: its subtree down to its inputs
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case o => o.children.flatMap(stageNodes)
+    })
+    def audit(what: String, plans: Seq[SparkPlan]): Unit = {
+      val shown = s"$what:\n${plans.mkString("\n")}"
+      val parses = plans.flatMap(_.collect { case n => n.expressions }.flatten)
+        .flatMap(_.collect { case j: JsonToStructs => j })
+      assert(parses.size === 1, shown)
+      val canonical = plans.flatMap(_.collect {
+        case p: ProjectExec if p.projectList.exists {
+          case a: Alias => a.name == "event_time_us"
+          case _ => false
+        } => p
+      })
+      assert(canonical.size === 1, shown)
+      val compiled = plans.flatMap(_.collect {
+        case w: WholeStageCodegenExec => stageNodes(w.child)
+      }).flatten
+      assert(compiled.exists(_ eq canonical.head), shown)
+    }
+    val logs = tmpDir("parse-once-logs")
+    val log = java.nio.file.Paths.get(logs, "app-po1.json")
+    val lines = graft.events.EventLogFixture.appLog("app-po1")
+    java.nio.file.Files.writeString(log, lines.take(8).mkString("", "\n", "\n"))
+    audit("whole-file read",
+      executedPlans(graft.sources.EventLogSource.readDirectory(spark, logs))._2)
+    // a grown file's tail: the attempt comes as a hint, no window
+    val ing = new graft.sources.IncrementalIngest(spark,
+      tmpDir("parse-once-ckpt") + "/state.tsv")
+    ing.ingest(logs)(_.count())
+    java.nio.file.Files.writeString(log, lines.drop(8).mkString("", "\n", "\n"),
+      java.nio.file.StandardOpenOption.APPEND)
+    val (tail, tailPlans) = PlanDump.executedPlans(spark) {
+      var n = 0
+      ing.ingest(logs)(df => n = df.collect().length)
+      n
+    }
+    assert(tail === 4)
+    audit("tail read", tailPlans)
+  }
+
   test("whole-stage codegen covers the canonical projection") {
     // codegen'd stages carry the `*(n)` prefix in the plan string
     val p = plan(canon)

@@ -124,4 +124,26 @@ class EventLogParserSpec extends SparkSpec {
     assert(es("2").getAs[Long]("total_cores") === 8L)
     assert(es("2").getAs[Long]("total_duration") === 1500L)
   }
+
+  test("an .inprogress log keeps one app id; Spark's task and environment fields parse") {
+    val d = tmpDir("inprogress-logs")
+    val app = "app-20240101-0003"
+    // Spark writes the stage id at the top level of task events; a line
+    // with it only under Task Info (older writers) still resolves
+    val legacyTask = """{"Event":"SparkListenerTaskStart","Task Info":{"Task ID":9,"Stage ID":5,"Executor ID":"1","Host":"worker-a","Launch Time":1700000003000}}"""
+    val env = """{"Event":"SparkListenerEnvironmentUpdate","Spark Properties":{"spark.master":"yarn","spark.version":"3.5.7","spark.app.version":"4.1.2"}}"""
+    java.nio.file.Files.write(java.nio.file.Paths.get(d, s"$app.inprogress"),
+      (EventLogFixture.appLog(app) ++ Seq(legacyTask, env)).mkString("\n").getBytes("UTF-8"))
+    val c = EventLogParser.read(spark, d).cache()
+    assert(c.select("app_id").distinct().collect().map(_.getString(0)).toSeq === Seq(app))
+    val stages = c.filter(col("event_type").isin(EventModel.TaskStart, EventModel.TaskEnd))
+      .select("task_id", "stage_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stages === Map(0L -> 0L, 1L -> 0L, 9L -> 5L))
+    val e = c.filter(col("event_type") === EventModel.EnvironmentUpdate).collect()
+    assert(e.length === 1)
+    // spark.app.version takes priority over spark.version
+    assert(e(0).getAs[String]("spark_version") === "4.1.2")
+    assert(e(0).getAs[scala.collection.Map[String, String]]("spark_props") === Map(
+      "spark.master" -> "yarn", "spark.version" -> "3.5.7", "spark.app.version" -> "4.1.2"))
+  }
 }

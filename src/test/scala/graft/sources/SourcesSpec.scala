@@ -3,7 +3,31 @@ package graft.sources
 import graft.SparkSpec
 import graft.events.{EventLogFixture, EventLogParser}
 import graft.obs.WorkLedger
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
+
+/** The local file system under the `headcount` scheme: records the name
+ *  of every file read from byte 0 (its head); otherwise the local FS. */
+class HeadCountFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("headcount:///")
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    new FSDataInputStream(new FSInputStream {
+      private def note(): Unit = if (in.getPos == 0L) HeadCountFs.headReads.add(f.getName)
+      override def seek(pos: Long): Unit = in.seek(pos)
+      override def getPos: Long = in.getPos
+      override def seekToNewSource(target: Long): Boolean = false
+      override def read(): Int = { note(); in.read() }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = { note(); in.read(b, off, len) }
+      override def close(): Unit = in.close()
+    })
+  }
+}
+
+object HeadCountFs {
+  val headReads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 class SourcesSpec extends SparkSpec {
 
@@ -13,7 +37,7 @@ class SourcesSpec extends SparkSpec {
   private def appStart(app: String, attempt: String) =
     s"""{"Event":"SparkListenerApplicationStart","App Name":"a","App ID":"$app","App Attempt ID":"$attempt","Timestamp":$ts,"User":"u","Spark Version":"3.5.1"}"""
   private def taskEnd(t: Int) =
-    s"""{"Event":"SparkListenerTaskEnd","Task Info":{"Task ID":$t,"Stage ID":0,"Executor ID":"1","Host":"h","Launch Time":${ts + t},"Finish Time":${ts + t + 5}},"Task Metrics":{"Executor Run Time":5}}"""
+    s"""{"Event":"SparkListenerTaskEnd","Stage ID":0,"Task Info":{"Task ID":$t,"Executor ID":"1","Host":"h","Launch Time":${ts + t},"Finish Time":${ts + t + 5}},"Task Metrics":{"Executor Run Time":5}}"""
   /** An EnvironmentUpdate line of at least `bytes` bytes, as real
    *  clusters write it: many properties plus the classpath. */
   private def bigEnvironment(bytes: Int) = {
@@ -21,7 +45,7 @@ class SourcesSpec extends SparkSpec {
       .map(i => s"""["/srv/spark/jars/dependency-$i.jar","System Classpath"]""")
     val cp = new StringBuilder
     while (cp.length < bytes) { if (cp.nonEmpty) cp += ','; cp ++= entries.next() }
-    s"""{"Event":"SparkListenerEnvironmentUpdate","Spark Properties":[["spark.version","3.5.1"]],"Classpath Entries":[$cp]}"""
+    s"""{"Event":"SparkListenerEnvironmentUpdate","Spark Properties":{"spark.version":"3.5.1"},"Classpath Entries":[$cp]}"""
   }
   private def append(p: java.nio.file.Path, lines: Seq[String]): Unit =
     java.nio.file.Files.writeString(p, lines.mkString("", "\n", "\n"),
@@ -300,13 +324,17 @@ class SourcesSpec extends SparkSpec {
     val env = bigEnvironment(300 << 10)
     assert(env.length > (200 << 10))
     val preamble = Seq("""{"Event":"SparkListenerLogStart","Spark Version":"3.5.1"}""", env)
-    assert(attempt("big.json", preamble ++ Seq(appStart("app-h", "3"), taskEnd(0))) === Some("3"))
+    assert(attempt("big.json", preamble ++ Seq(appStart("app-h", "3"), taskEnd(0))) ===
+      Some(Some("3")))
     // a start line that has no newline yet still counts
-    assert(attempt("partial.json", preamble, appStart("app-h", "4")) === Some("4"))
-    // no start line before the first job: no attempt, and no scan to the cap
+    assert(attempt("partial.json", preamble, appStart("app-h", "4")) === Some(Some("4")))
+    // no start line before the first job: resolved with no attempt, and
+    // no scan to the cap
     assert(attempt("nostart.json", preamble ++ Seq(
       """{"Event":"SparkListenerJobStart","Job ID":0,"Timestamp":1}""",
-      appStart("app-h", "5"))) === None)
+      appStart("app-h", "5"))) === Some(None))
+    // only the preamble so far: unresolved, the start line is still to come
+    assert(attempt("preamble.json", preamble) === None)
   }
 
   test("tail deltas equal a whole-file parse of the appended lines, attempt_id included") {
@@ -335,6 +363,60 @@ class SourcesSpec extends SparkSpec {
       assert(delta === rowsOf(whole), s"round $r")
       assert(delta.size === lines.size, s"round $r")
       if (r > 0) assert(whole.filter(col("attempt_id") === "7").count() === lines.size)
+    }
+  }
+
+  test("lastLineEnd finds a newline past its first window; a file with none commits 0") {
+    val d = tmpDir("incr-lastline")
+    def lastLineEnd(name: String, body: String): Long = {
+      val p = java.nio.file.Paths.get(d, name)
+      java.nio.file.Files.writeString(p, body)
+      val hp = new Path(p.toUri)
+      IncrementalIngest.lastLineEnd(hp.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        hp, java.nio.file.Files.size(p))
+    }
+    val first = IncrementalIngest.LastLineFirstWindow
+    val head = taskEnd(0) + "\n"
+    // a partial line several windows long: the scan grows past it
+    assert(lastLineEnd("long.json", head + "x" * (5 * first)) === head.length)
+    assert(lastLineEnd("ends.json", head + taskEnd(1) + "\n") === (head + taskEnd(1) + "\n").length)
+    assert(lastLineEnd("none.json", "x" * (3 * first)) === 0L)
+    assert(lastLineEnd("empty.json", "") === 0L)
+  }
+
+  test("a non-YARN log's resolved head is read once, not on every grown round") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.headcount.impl", classOf[HeadCountFs].getName)
+    val d = tmpDir("incr-headonce")
+    val ckpt = tmpDir("incr-headonce-ckpt") + "/state.tsv"
+    val p = java.nio.file.Paths.get(d, "app-h1.inprogress")
+    // a start line without an attempt id; the file is longer than
+    // lastLineEnd's first window, so only the head scan reads byte 0
+    append(p, s"""{"Event":"SparkListenerApplicationStart","App Name":"a","App ID":"app-h1","Timestamp":$ts,"User":"u","Spark Version":"3.5.1"}""" +:
+      (0 until 10).map(taskEnd))
+    val ing = new IncrementalIngest(spark, ckpt)
+    val uri = s"headcount://$d"
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    def round(next: Int): Int = {
+      append(p, Seq(taskEnd(next)))
+      HeadCountFs.headReads.clear()
+      ing.ingest(uri)(df => rows = df.select("app_id", "attempt_id").collect().toSeq)
+      assert(rows.map(_.getString(0)) === Seq("app-h1"))
+      assert(rows.head.isNullAt(1))
+      HeadCountFs.headReads.size
+    }
+    ing.ingest(uri)(df => assert(df.count() === 11))
+    assert(round(10) === 0)
+    assert(round(11) === 0)
+    // checkpoints written before the head flag: a 5-field line with no
+    // attempt, or a 4-field one, loads and reads the head once more
+    val ck = java.nio.file.Paths.get(ckpt)
+    for ((fields, r) <- Seq(5, 4).zip(Seq(12, 14))) {
+      java.nio.file.Files.writeString(ck, java.nio.file.Files.readString(ck)
+        .split("\n").map(_.split("\t", -1).take(fields).mkString("\t")).mkString("\n"))
+      java.nio.file.Files.deleteIfExists(ck.getParent.resolve("." + ck.getFileName + ".crc"))
+      assert(round(r) === 1, s"$fields-field checkpoint")
+      assert(round(r + 1) === 0, s"$fields-field checkpoint")
     }
   }
 }
