@@ -65,7 +65,9 @@ object PlanDump {
    *
    *  Listener delivery is asynchronous: every query of `body` posts
    *  its completion before returning, so once the listener bus has
-   *  drained, every one has been recorded. */
+   *  drained, every one has been recorded. The bus is drained before
+   *  the listener registers too, so a query that completed before
+   *  `body` but was delivered late is not recorded as `body`'s. */
   def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
     val completed = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
@@ -74,6 +76,7 @@ object PlanDump {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
+    BusAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val result = try {
       val r = body

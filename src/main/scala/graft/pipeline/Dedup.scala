@@ -1928,49 +1928,34 @@ ORDER BY c.doc_a, c.doc_b"""
 
   /** The batch side of a bounded n-gram trigger, collected in one pass
    *  (shingled by the same `word_ngrams` expression [[shingles]]
-   *  explodes) — or None when it has more than `localMax` rows. */
+   *  explodes) as one row per shingle (a doc without shingles is one
+   *  row), the doc's id and text riding on its first row only: at most
+   *  `localMax` + 1 rows reach the driver however long the docs are.
+   *  None when the batch has more than `localMax` rows, or `localMax`
+   *  is negative. */
   private[graft] def shingledBatch(batch: DataFrame,
                                    localMax: Int): Option[Seq[ShingledDoc]] =
-    explodedBatch(batch, Seq(col("text")),
-        call_function("word_ngrams", col("text"), lit(3)), localMax)
-      .map(_.map { case (d, items) =>
-        ShingledDoc(d.getLong(0), d.getString(1), items.map(_.toString).toArray)
-      })
-
-  /** `batch`'s docs collected as one row per element of `items` (a doc
-   *  whose `items` are empty or null is one row), the doc's id and
-   *  `heads` riding on its first row only: at most `localMax` + 1 rows
-   *  reach the driver however long the docs are. Per doc, its
-   *  `(doc_id, heads…)` row and its items; None when the batch has
-   *  more than `localMax` rows, or `localMax` is negative. */
-  private def explodedBatch(batch: DataFrame, heads: Seq[Column], items: Column,
-                            localMax: Int): Option[Seq[(Row, Seq[Any])]] =
     if (localMax < 0) None
     else {
-      val hs = (col("doc_id").cast("long") +: heads).zipWithIndex
-        .map { case (h, i) => h.as(s"h$i") }
       val first = col("pos").isNull || col("pos") === 0
-      val rows = batch.select(hs :+ items.as("items"): _*)
-        .select(posexplode_outer(col("items")) +: hs.indices.map(i => col(s"h$i")): _*)
-        .select(col("pos") +: col("col") +:
-          hs.indices.map(i => when(first, col(s"h$i")).as(s"h$i")): _*)
+      val rows = batch.select(col("doc_id").cast("long").as("id"), col("text"),
+          call_function("word_ngrams", col("text"), lit(3)).as("grams"))
+        .select(posexplode_outer(col("grams")), col("id"), col("text"))
+        .select(col("pos"), col("col"), when(first, col("id")).as("id"),
+          when(first, col("text")).as("text"))
         .take(math.min(localMax, Int.MaxValue - 1) + 1)
       if (rows.length > localMax) None
       else {
-        val docs = mutable.ArrayBuffer.empty[(Row, mutable.ArrayBuffer[Any])]
+        val docs = mutable.ArrayBuffer.empty[(Long, String, mutable.ArrayBuffer[String])]
         for (r <- rows) {
           if (r.isNullAt(0) || r.getInt(0) == 0)
-            docs += (Row.fromSeq(r.toSeq.drop(2)) -> mutable.ArrayBuffer.empty[Any])
-          if (!r.isNullAt(0)) docs.last._2 += r.get(1)
+            docs += ((r.getLong(2), r.getString(3), mutable.ArrayBuffer.empty[String]))
+          if (!r.isNullAt(0)) docs.last._3 += r.getString(1)
         }
-        Some(docs.toSeq.map { case (d, xs) => d -> xs.toSeq })
+        Some(docs.toSeq.map { case (id, text, grams) =>
+          ShingledDoc(id, text, grams.toArray) })
       }
     }
-
-  /** A store probe ([[StateStores.probe]]) collected; no keys, no job. */
-  private def probeRows(store: DataFrame, key: String, keys: Seq[Any]): Array[Row] =
-    if (keys.isEmpty) Array.empty[Row]
-    else StateStores.probe(store, key, keys).collect()
 
   private val pairCountSchema = StructType(Seq(
     StructField("doc_a", LongType), StructField("doc_b", LongType),
@@ -1997,11 +1982,12 @@ ORDER BY c.doc_a, c.doc_b"""
     val batchIds = docs.iterator.map(_.id).toSet
     val df = mutable.HashMap.empty[String, Long]
     batchSh.foreach { case (_, g) => df(g) = df.getOrElse(g, 0L) + 1L }
-    probeRows(corpusGramDf.select("gram", "df_cnt"), "gram", df.keys.toSeq)
+    StateStores.probeRows(corpusGramDf.select("gram", "df_cnt"), "gram",
+        df.keys.toSeq)
       .foreach(r => if (!r.isNullAt(1)) df(r.getString(0)) += r.getLong(1))
     val rare = df.iterator.collect { case (g, n) if n <= maxDf => g }.toSet
     val store = corpusShingles.select("doc_id", "gram")
-    val rareSh = probeRows(store, "gram", rare.toSeq)
+    val rareSh = StateStores.probeRows(store, "gram", rare.toSeq)
       .collect { case r if !r.isNullAt(0) => r.getLong(0) -> r.getString(1) }
       .toSeq ++ batchSh.filter(sh => rare(sh._2))
     // a candidate shares a rare gram with a batch doc, either side of it
@@ -2021,7 +2007,7 @@ ORDER BY c.doc_a, c.doc_b"""
         m(g) = m.getOrElse(g, 0L) + 1L
       }
     }
-    probeRows(store, "doc_id", ends.toSeq)
+    StateStores.probeRows(store, "doc_id", ends.toSeq)
       .foreach(r => if (!r.isNullAt(0)) add(r.getLong(0), r.getString(1)))
     batchSh.foreach { case (d, g) => if (ends(d)) add(d, g) }
     val none = mutable.HashMap.empty[String, Long]
@@ -3360,21 +3346,28 @@ ORDER BY g.m_bits"""
   private[graft] final case class HashedDoc(id: Long, text: String,
                                             hash: String, pos: Array[Long])
 
-  /** The batch side of a bounded exact trigger, collected in one pass:
-   *  the md5 and the `probes` bloom positions of each doc are computed
-   *  by the same expressions ([[probePos]]) [[bloomWords]] builds with
-   *  — or None when it has more than `localMax` rows (one per probe
-   *  position). */
+  /** The batch side of a bounded exact trigger, collected in one pass
+   *  as one row per doc: its md5 and its `probes` bloom positions are
+   *  computed by the same expressions ([[probePos]]) [[bloomWords]]
+   *  builds with. None when the batch has more than `localMax` probe
+   *  rows (docs x probes), or `localMax` is negative. Every doc has
+   *  exactly `probes` positions, so the row bound is a doc bound, and
+   *  the collect is a plain projection: a `LocalRelation` batch folds
+   *  on the driver, without a job. */
   private[graft] def hashedBatch(batch: DataFrame, mBits: Int, probes: Int,
-                                 localMax: Int): Option[Seq[HashedDoc]] = {
-    val (h1, h2) = (xxhash64(col("text")), xxhash64(col("text"), lit(1)))
-    explodedBatch(batch, Seq(col("text"), md5(col("text"))),
-        array((0 until probes).map(i => probePos(h1, h2, lit(i), mBits)): _*),
-        localMax)
-      .map(_.map { case (d, pos) => HashedDoc(d.getLong(0), d.getString(1),
-        d.getString(2), pos.map(_.asInstanceOf[Long]).toArray)
-      })
-  }
+                                 localMax: Int): Option[Seq[HashedDoc]] =
+    if (localMax < 0) None
+    else {
+      val maxDocs = math.min(localMax / math.max(1, probes), Int.MaxValue - 1)
+      val (h1, h2) = (xxhash64(col("text")), xxhash64(col("text"), lit(1)))
+      val docs = batch.select(col("doc_id").cast("long"), col("text"),
+          md5(col("text")),
+          array((0 until probes).map(i => probePos(h1, h2, lit(i), mBits)): _*))
+        .take(maxDocs + 1)
+      if (docs.length > maxDocs) None
+      else Some(docs.toSeq.map(d => HashedDoc(d.getLong(0), d.getString(1),
+        d.getString(2), d.getSeq[Long](3).toArray)))
+    }
 
   /** The bloom word and bit of a probe position. */
   private[graft] def bloomBit(pos: Long): (Int, Long) =
@@ -3404,7 +3397,7 @@ ORDER BY g.m_bits"""
                                        docs: Seq[HashedDoc],
                                        probes: Int): DataFrame = {
     val words = mutable.HashMap.empty[Int, Long]
-    probeRows(corpusWords.select("word_idx", "word"), "word_idx",
+    StateStores.probeRows(corpusWords.select("word_idx", "word"), "word_idx",
         docs.flatMap(_.pos.map(bloomBit(_)._1)).distinct)
       .foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1))
         words(r.getInt(0)) = words.getOrElse(r.getInt(0), 0L) | r.getLong(1))
@@ -3414,7 +3407,7 @@ ORDER BY g.m_bits"""
     }.toLong)(_ + _)
     val cands = docs.filter(d => hits(d.id) == probes && d.hash != null)
     val copies = mutable.HashMap.empty[String, Long]
-    probeRows(corpusHashes.select("content_hash"), "content_hash",
+    StateStores.probeRows(corpusHashes.select("content_hash"), "content_hash",
         cands.map(_.hash).distinct)
       .foreach(r => if (!r.isNullAt(0))
         copies(r.getString(0)) = copies.getOrElse(r.getString(0), 0L) + 1L)

@@ -1,13 +1,19 @@
 package graft.streaming
 
+import java.util.UUID
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import scala.language.implicitConversions
 import scala.util.{Failure, Success, Try}
 
 /**
@@ -20,6 +26,8 @@ import scala.util.{Failure, Success, Try}
  *  - [[read]]: schema-on-read of a store, an empty frame of the schema
  *    while the store does not exist yet;
  *  - [[commit]]: the per-trigger write-ordering contract;
+ *  - [[writeRows]]: a delta already on the driver appended as one
+ *    file, with no Spark job;
  *  - [[swapIn]]: crash-safe tmp-write + rename compaction;
  *  - [[availableNow]]: the `foreachBatch` + `AvailableNow` wiring.
  *
@@ -35,9 +43,22 @@ import scala.util.{Failure, Success, Try}
  */
 private[graft] object StateStores {
 
-  /** One store append: `frame` appended to the parquet store at the
+  /** One store append: its delta appended to the parquet store at the
    *  directory. */
-  type Append = (String, DataFrame)
+  type Append = (String, Delta)
+
+  /** What one append writes: a distributed [[Frame]], or [[Rows]] a
+   *  bounded trigger already holds on the driver. A frame converts
+   *  implicitly, so `dir -> frame` is an append. */
+  sealed trait Delta
+  object Delta {
+    implicit def fromFrame(frame: DataFrame): Delta = Frame(frame)
+  }
+  /** Written through `DataFrame.write`: a Spark job, one file or more. */
+  final case class Frame(frame: DataFrame) extends Delta
+  /** Written by [[writeRows]]: one file, no job. */
+  final case class Rows(spark: SparkSession, rows: Seq[Row],
+                        schema: StructType) extends Delta
 
   private val TmpSuffix = ".compact-tmp"
   private val OldSuffix = ".compact-old"
@@ -80,9 +101,16 @@ private[graft] object StateStores {
         .select(store.columns.toIndexedSeq.map(col): _*)
     }
 
+  /** A store probe ([[probe]]) collected; no keys, no job. */
+  def probeRows(store: DataFrame, key: String, keys: Seq[Any]): Array[Row] =
+    if (keys.isEmpty) Array.empty[Row]
+    else probe(store, key, keys).collect()
+
   /** `rows` as a `LocalRelation` frame of `schema`: a projection or
-   *  filter over it folds on the driver, without a job. Appended as
-   *  `local(...).coalesce(1)`, a driver-built delta lands as one file. */
+   *  filter over it folds on the driver, without a job. A delta to
+   *  append is not built this way but handed to [[commit]] as [[Rows]]:
+   *  writing even a folded `LocalRelation` pays analysis, planning and
+   *  a write job. */
   def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
@@ -92,8 +120,10 @@ private[graft] object StateStores {
    *  2. then the `state` appends run concurrently with each other;
    *  3. the optional pairs/stats `ledger` append runs alongside both.
    *
-   *  Concurrent appends are independent driver jobs, so one write's
-   *  task tail back-fills with the next write's tasks. A frame that
+   *  A [[Frame]] append is a `DataFrame.write` job; a [[Rows]] append
+   *  is [[writeRows]]' one driver-written file. Concurrent frame
+   *  appends are independent driver jobs, so one write's task tail
+   *  back-fills with the next write's tasks. A frame that
    *  several appends read should be cached and materialized by the
    *  caller first (the `docs` append itself fills a cache the state
    *  appends read), or the concurrent jobs race to fill it.
@@ -128,7 +158,39 @@ private[graft] object StateStores {
     }
   }
 
-  private def append(w: Append): Unit = w._2.write.mode("append").parquet(w._1)
+  private def append(w: Append): Unit = w._2 match {
+    case Frame(frame) => frame.write.mode("append").parquet(w._1)
+    case Rows(spark, rows, schema) => writeRows(spark, w._1, rows, schema)
+  }
+
+  /** Appends `rows` of `schema` to the parquet store at `dir` as ONE
+   *  file, written on the driver by Spark's own parquet writer
+   *  (`ParquetFileFormat.prepareWrite`, the session's parquet confs):
+   *  no plan is analysed and no job runs. The file is written hidden
+   *  (`.part-….tmp`, which no reader lists) and renamed to its `part-`
+   *  name once closed, both through the Hadoop `FileSystem` of `dir`;
+   *  a failed write or rename deletes it, so a store never shows a
+   *  partial file. Empty `rows` write a file of the schema alone, as
+   *  `DataFrame.write` does for an empty partition. */
+  def writeRows(spark: SparkSession, dir: String, rows: Seq[Row],
+                schema: StructType): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val (path, tmp) = (new Path(dir, name), new Path(dir, s".$name.tmp"))
+    val fs = path.getFileSystem(job.getConfiguration)
+    var installed = false
+    try {
+      val writer = factory.newInstance(tmp.toString, schema, ctx)
+      try {
+        val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+        rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+      } finally writer.close()
+      installed = fs.rename(tmp, path)
+      if (!installed) throw new java.io.IOException(s"cannot rename $tmp to $path")
+    } finally if (!installed) fs.delete(tmp, false)
+  }
 
   /** Compact the store at `dir`: `write` puts the compacted store at
    *  the tmp path it is given, which then replaces the store by two

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.pipeline.Clustering
+import graft.pipeline.{Clustering, Dedup}
 
 /**
  * Streaming duplicate-CLUSTER maintenance — the state-folding half the
@@ -20,7 +20,10 @@ import graft.pipeline.Clustering
  * contract to prior labels, components run over the batch-sized
  * contracted edge list, old EDGES are never stored or re-read at all
  * (the label frame subsumes them) — and appends one delta row per
- * label that CHANGED or appeared, stamped with the batch id.
+ * label that CHANGED or appeared, stamped with the batch id. A batch
+ * within [[Dedup.LocalTriggerMax]] pairs runs the bounded-trigger
+ * kernel (see [[processPairs]]): two batch-keyed store probes, the
+ * fold on the driver, one driver-written delta file, no write job.
  *
  * State = ONE append-only `(doc_id, label, batch_id)` store folded by
  * LATEST-BATCH-WINS at read (`max_by(label, batch_id)`): the
@@ -54,32 +57,31 @@ object StreamingClusters {
    *  trigger's output: (doc_a, doc_b), batch-touching) into the label
    *  store. Appends ONLY changed/new labels, stamped `batchId`.
    *
-   *  The fold is TOUCHED-ONLY and runs in exactly TWO passes over the
-   *  delta store (the only O(state) terms — no full-store `max_by`
-   *  fold ever runs in a trigger):
+   *  A batch of at most `localMax` pairs ([[Dedup.LocalTriggerMax]])
+   *  runs the bounded-trigger kernel: the pairs are collected once and
+   *  the label store is probed exactly twice at batch keys
+   *  ([[StateStores.probe]] — no full-store `max_by` fold ever runs in
+   *  a trigger), each probe's rows folded latest-batch-wins on the
+   *  driver, with no exchange:
    *
-   *  1. endpoint probe — one broadcast-semi-join scan folds the batch
-   *     endpoints' current labels; the result is batch-bounded, so it
-   *     collects, the batch pairs CONTRACT to those labels locally,
-   *     and components run as a driver union-find
-   *     ([[graft.pipeline.Clustering.connectedComponentsBounded]] —
-   *     everything collected is bounded by the ARRIVING batch, never
-   *     the corpus; batches past its guard fall back to the
-   *     distributed incremental fold).
-   *  2. member probe — one broadcast-semi-join scan keyed on the
-   *     labels the union-find CHANGED folds those clusters' members
-   *     straight to their current label. Probing by label is exact,
-   *     not heuristic: a store label that is current for ONE member
-   *     is current for the WHOLE component (labels are component
-   *     minima; components never split, so a superseded label never
-   *     recurs), so the fold over label-matched rows always sees each
-   *     member's latest row.
+   *  1. endpoint probe — the batch endpoints' current labels; the batch
+   *     pairs CONTRACT to them, and components run as a driver
+   *     union-find (min-id root = new label) over edges bounded by the
+   *     ARRIVING batch, never the corpus;
+   *  2. member probe — keyed on the labels the union-find CHANGED, it
+   *     folds those clusters' members straight to their current label.
+   *     Probing by label is exact, not heuristic: a store label that is
+   *     current for ONE member is current for the WHOLE component
+   *     (labels are component minima; components never split, so a
+   *     superseded label never recurs), so the fold over label-matched
+   *     rows always sees each member's latest row.
    *
-   *  Untouched clusters match neither probe and contribute no rows;
-   *  per-trigger shuffle volume is bounded by |batch endpoints| +
-   *  |members of changed clusters|. */
+   *  The delta (changed members, then new endpoints) is ONE
+   *  driver-written file ([[StateStores.writeRows]]); untouched
+   *  clusters match neither probe and contribute no rows. A larger
+   *  batch (or a negative `localMax`) runs [[processPairsDistributed]]. */
   def processPairs(batchPairs: DataFrame, batchId: Long,
-                   labelDir: String, localMax: Int = 4000000): Unit = {
+                   labelDir: String, localMax: Int = Dedup.LocalTriggerMax): Unit = {
     val spark = batchPairs.sparkSession
     import spark.implicits._
     val pairs = batchPairs
@@ -90,10 +92,7 @@ object StreamingClusters {
     }
     val store = StateStores.read(spark, labelDir, labelSchema)
     val endIds = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val endLabels = store
-      .join(broadcast(endIds.toSeq.toDF("doc_id")), "doc_id")
-      .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val endLabels = latestLabels(StateStores.probeRows(store, "doc_id", endIds.toSeq))
     // union-find over the contracted edges; min-id root = new label
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -109,30 +108,29 @@ object StreamingClusters {
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
     val changed = endLabels.valuesIterator.toSet.iterator
-      .map((l: Long) => l -> find(l)).filter { case (o, n) => o != n }.toSeq
-    val deltaNew = endIds.filterNot(endLabels.contains)
-      .map(d => (d, find(d), batchId)).toSeq
+      .map((l: Long) => l -> find(l)).filter { case (o, n) => o != n }.toMap
+    val deltaNew = endIds.filterNot(endLabels.contains).sorted
+      .map(d => Row(d, find(d), batchId))
     // A no-op trigger (every endpoint already co-clustered: no new
     // ids, no label change) writes NOTHING — both emptiness checks
     // are driver-side values, so the skip is free, and it stops
     // empty part files from growing the store's file count (and the
     // two O(state) probe scans above) until compactState runs.
     if (deltaNew.isEmpty && changed.isEmpty) return
-    val deltaNewDf = deltaNew.toDF("doc_id", "label", "batch_id")
-    val delta = if (changed.isEmpty) deltaNewDf else {
-      val changedMap = changed.toDF("label", "new_label")
-      val deltaPrior = store.join(broadcast(changedMap.select("label")), "label")
-        .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
-        .join(broadcast(changedMap), "label")
-        .select(col("doc_id"), col("new_label").as("label"),
-          lit(batchId).as("batch_id"))
-      deltaPrior.unionByName(deltaNewDf)
-    }
-    delta.write.mode("append").parquet(labelDir)
+    val deltaPrior = latestLabels(
+        StateStores.probeRows(store, "label", changed.keys.toSeq))
+      .toSeq.sorted.map { case (d, l) => Row(d, changed(l), batchId) }
+    StateStores.writeRows(spark, labelDir, deltaPrior ++ deltaNew, labelSchema)
   }
 
+  /** The latest-batch-wins fold (`max_by(label, batch_id)` per doc) of
+   *  label-store rows, on the driver. */
+  private def latestLabels(rows: Array[Row]): Map[Long, Long] =
+    rows.filterNot(_.anyNull).groupBy(_.getLong(0))
+      .map { case (d, rs) => d -> rs.maxBy(_.getLong(2)).getLong(1) }
+
   /** Distributed fallback for a batch past [[processPairs]]'s
-   *  `localMax` guard: the three-probe shape (endpoint fold →
+   *  `localMax` bound: the three-probe shape (endpoint fold →
    *  touched-cluster members → touched fold) feeding the distributed
    *  incremental component fold. Same delta, same store contract. */
   private def processPairsDistributed(batchPairs: DataFrame, batchId: Long,

@@ -19,8 +19,9 @@ import graft.pipeline.Dedup
  * keys (the gram-df store at the batch grams, the shingle store at the
  * rare batch grams and at the candidate endpoints) and the df fold,
  * candidates, Jaccard, survivor rule and deltas run on the driver
- * ([[graft.pipeline.Dedup.ngramPairsBounded]]); every append is a
- * one-file `LocalRelation`. A larger batch runs the distributed plan:
+ * ([[graft.pipeline.Dedup.ngramPairsBounded]]); every append is one
+ * file the driver writes ([[StateStores.Rows]]), with no job. A larger
+ * batch runs the distributed plan:
  * [[graft.pipeline.Dedup.dedupNgramIncremental]] joins it against the
  * accumulated state with the batch restriction BELOW the pair join,
  * and the survivor and shingle frames it appends are cached for the
@@ -118,10 +119,11 @@ object StreamingDedup {
   }
 
   /** The bounded trigger: the pair frame is a `LocalRelation` (see
-   *  [[Dedup.ngramPairsBounded]]), the survivor rule and the shingle
-   *  and gram-df deltas run on the driver over the collected batch, and
-   *  every append is a one-file `LocalRelation` — store probes plus
-   *  four writes. */
+   *  [[Dedup.ngramPairsBounded]]) collected without a job, the survivor
+   *  rule and the shingle and gram-df deltas run on the driver over the
+   *  collected batch, and the four appends (the pairs ledger is the
+   *  collected pairs plus `batch_id`) are driver-written files — the
+   *  batch collect and the store probes are its only jobs. */
   private def processBounded(docs: Seq[Dedup.ShingledDoc], spark: SparkSession,
                              batchId: Long, storeDir: String, pairsDir: String,
                              shingleDir: String, gramDfDir: String,
@@ -129,21 +131,24 @@ object StreamingDedup {
     val pairs = Dedup.ngramPairsBounded(
       StateStores.read(spark, shingleDir, shingleSchema),
       StateStores.read(spark, gramDfDir, gramDfSchema), docs, maxDf, minJaccard)
+    val pairRows = pairs.collect()
     val batchIds = docs.iterator.map(_.id).toSet
-    val dropped = pairs.select("doc_a", "doc_b").collect().flatMap { r =>
+    val dropped = pairRows.flatMap { r =>
       val (a, b) = (r.getLong(0), r.getLong(1))
       if (batchIds(b)) Seq(b) else Seq(a, b)
     }.toSet
     val survivors = docs.filterNot(d => dropped(d.id))
     val gramDf = survivors.flatMap(_.grams).groupMapReduce(identity)(_ => 1L)(_ + _)
     StateStores.commit(
-      Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId)).coalesce(1)),
-      storeDir -> StateStores.local(spark,
-        survivors.map(d => Row(d.id, d.text)), docSchema).coalesce(1),
-      shingleDir -> StateStores.local(spark,
-        survivors.flatMap(d => d.grams.map(Row(d.id, _))), shingleSchema).coalesce(1),
-      gramDfDir -> StateStores.local(spark,
-        gramDf.toSeq.map { case (g, n) => Row(g, n) }, gramDfSchema).coalesce(1))
+      Some(pairsDir -> StateStores.Rows(spark,
+        pairRows.toSeq.map(r => Row.fromSeq(r.toSeq :+ batchId)),
+        pairs.schema.add(StructField("batch_id", LongType, nullable = false)))),
+      storeDir -> StateStores.Rows(spark,
+        survivors.map(d => Row(d.id, d.text)), docSchema),
+      shingleDir -> StateStores.Rows(spark,
+        survivors.flatMap(d => d.grams.map(Row(d.id, _))), shingleSchema),
+      gramDfDir -> StateStores.Rows(spark,
+        gramDf.toSeq.map { case (g, n) => Row(g, n) }, gramDfSchema))
   }
 
   /** The distributed trigger, for batches over the bound. */

@@ -28,12 +28,12 @@ import graft.pipeline.Dedup
  * scans of the two state stores, and the bloom store stays <= m/64
  * rows FOREVER (appended deltas OR into the same fixed bit space).
  * A batch within [[Dedup.LocalTriggerMax]] probe rows (docs x probes)
- * runs that logic on the driver: collected once with its md5 and probe
- * positions, it probes
- * the bloom store at its word indexes and the hash store at its
- * bloom-positive hashes (one batch-keyed scan each), and every append
- * is a one-file `LocalRelation`; a larger batch runs the distributed
- * plan. Both write the same rows.
+ * runs that logic on the driver: collected once, one row per doc with
+ * its md5 and probe positions, it probes the bloom store at its word
+ * indexes and the hash store at its bloom-positive hashes (one
+ * batch-keyed scan each), and every append is one file the driver
+ * writes ([[StateStores.Rows]]), with no job; a larger batch runs the
+ * distributed plan. Both write the same rows.
  *
  * Write ordering is [[StateStores.commit]]'s: the doc append commits
  * before the hash and bloom appends start. A replayed batch
@@ -90,9 +90,10 @@ object StreamingExactDedup {
   /** The bounded trigger: the verdict is a `LocalRelation` (see
    *  [[Dedup.exactFlagsBounded]]), the in-batch collapse and the bloom
    *  delta run on the driver over the collected batch (its probe
-   *  positions are the ones [[Dedup.bloomWords]] would set), and every
-   *  append is a one-file `LocalRelation` — store probes plus three
-   *  writes. */
+   *  positions are the ones [[Dedup.bloomWords]] would set), and the
+   *  three appends are driver-written files — the batch collect (none
+   *  for a `LocalRelation` batch) and the store probes are its only
+   *  jobs. */
   private def processBounded(docs: Seq[Dedup.HashedDoc], spark: SparkSession,
                              storeDir: String, hashDir: String,
                              wordsDir: String, probes: Int): Unit = {
@@ -106,12 +107,12 @@ object StreamingExactDedup {
     val words = survivors.flatMap(_.pos.map(Dedup.bloomBit))
       .groupMapReduce(_._1)(_._2)(_ | _)
     StateStores.commit(None,
-      storeDir -> StateStores.local(spark,
-        survivors.map(d => Row(d.id, d.text)), docSchema).coalesce(1),
-      hashDir -> StateStores.local(spark,
-        survivors.map(d => Row(d.id, d.hash)), hashSchema).coalesce(1),
-      wordsDir -> StateStores.local(spark,
-        words.toSeq.map { case (w, bits) => Row(w, bits) }, wordSchema).coalesce(1))
+      storeDir -> StateStores.Rows(spark,
+        survivors.map(d => Row(d.id, d.text)), docSchema),
+      hashDir -> StateStores.Rows(spark,
+        survivors.map(d => Row(d.id, d.hash)), hashSchema),
+      wordsDir -> StateStores.Rows(spark,
+        words.toSeq.map { case (w, bits) => Row(w, bits) }, wordSchema))
   }
 
   /** The distributed trigger, for batches over the bound. */

@@ -293,8 +293,14 @@ class PropertySpec extends SparkSpec {
   test("streaming cluster folds over random batch sequences equal full CC, any arrival order") {
     import graft.streaming.StreamingClusters
     import graft.pipeline.Clustering
+    def rows(dir: String) =
+      if (!new java.io.File(dir).exists()) Seq.empty[String]
+      else spark.read.parquet(dir).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def partFiles(dir: String) = Option(new java.io.File(dir).listFiles())
+      .map(_.count(_.getName.startsWith("part-"))).getOrElse(0)
     for (seed <- 1L to 5L) {
       val labels = tmpDir(s"cluster-prop-$seed") + "/labels"
+      val dist = tmpDir(s"cluster-prop-d-$seed") + "/labels"
       // random edges over a small id space (ids arrive in ARBITRARY
       // order across batches, so a later batch can carry a smaller id
       // than any stored label — the label-decrease path)
@@ -302,8 +308,18 @@ class PropertySpec extends SparkSpec {
         Gen.zip(Gen.chooseNum(0L, 25L), Gen.chooseNum(0L, 25L))), seed)
         .filter { case (a, b) => a != b }
       val batches = edges.grouped(math.max(1, edges.size / 4)).toSeq
-      batches.zipWithIndex.foreach { case (b, i) =>
+      // each trigger runs bounded and distributed (`localMax = -1`):
+      // the same label rows, and one file per non-empty bounded delta;
+      // the last batch replays the first, a trigger that changes nothing
+      var deltas = 0
+      (batches :+ batches.head).zipWithIndex.foreach { case (b, i) =>
+        val before = rows(labels).length
         StreamingClusters.processPairs(b.toDF("doc_a", "doc_b"), i.toLong, labels)
+        StreamingClusters.processPairs(b.toDF("doc_a", "doc_b"), i.toLong, dist,
+          localMax = -1)
+        if (rows(labels).length > before) deltas += 1
+        assert(partFiles(labels) === deltas, s"seed=$seed batch=$i")
+        assert(rows(labels) === rows(dist), s"seed=$seed batch=$i")
       }
       val folded = StreamingClusters.readLabels(spark, labels)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

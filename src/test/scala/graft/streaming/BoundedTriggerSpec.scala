@@ -286,17 +286,32 @@ class BoundedTriggerSpec extends SparkSpec {
   }
 
   test("job budget: one bounded trigger of each dedup loop runs a fixed handful of jobs") {
+    import spark.implicits._
     val (root, batch) = populated("bt-budget")
     val (_, ngram) = ledger.measure(StreamingDedup.processBatch(batch, 1L,
       root + "_n", root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
     val (_, exact) = ledger.measure(StreamingExactDedup.processBatch(batch, 1L,
       root + "_x", root + "_hashes", root + "_bloom", Dedup.BloomBits,
       Dedup.BloomProbes))
-    // n-gram: batch collect, three store probes (two jobs each when a
-    // probe's keys take the broadcast semi-join), four appends;
-    // exact: batch collect, two store probes, three appends
-    assert(ngram.jobs <= 11, ngram)
-    assert(exact.jobs <= 8, exact)
+    // cluster: clusters {10, 11} and {20, 21} stored; the batch bridges
+    // them (20's cluster relabels to 10) and adds the new ids 5 and 30
+    val labels = root + "_labels"
+    StreamingClusters.processPairs(Seq((10L, 11L), (20L, 21L)).toDF("doc_a", "doc_b"),
+      0L, labels)
+    // one pairs file, as a bounded n-gram trigger writes its ledger
+    val pairs = stored(root + "_cpairs",
+      Seq((11L, 20L), (5L, 30L)).toDF("doc_a", "doc_b").coalesce(1))
+    val (_, cluster) = ledger.measure(StreamingClusters.processPairs(pairs, 1L, labels))
+    assert(StreamingClusters.readLabels(spark, labels).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L, 5L -> 5L, 30L -> 5L))
+    // the appends run no job: n-gram: batch collect, three store probes
+    // (two jobs each when a probe's keys take the broadcast semi-join);
+    // exact: batch collect, two store probes; cluster: pairs collect,
+    // endpoint probe, changed-label probe
+    assert(ngram.jobs <= 7, ngram)
+    assert(exact.jobs <= 5, exact)
+    assert(cluster.jobs <= 3, cluster)
   }
 
   /** Every executed plan that scans a file scans one of `stores`,

@@ -4,8 +4,11 @@ import graft.SparkSpec
 import graft.pipeline.Dedup
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The local file system under the `faulty` scheme. Creating a file
  *  under [[FaultyFs.failUnder]] fails; reads, listings and renames
@@ -162,6 +165,81 @@ class StateStoresSpec extends SparkSpec {
         assert(expected(n), s"append to $k failed: df($g) = $n")
       }
     }
+  }
+
+  private val deltaSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("text", StringType),
+    StructField("n", IntegerType),
+    StructField("score", DoubleType, nullable = false),
+    StructField("tags", ArrayType(StringType))))
+
+  private val deltaRows = (0 until 50).map(i => Row(i.toLong,
+    if (i % 7 == 0) null else s"text $i",
+    if (i % 5 == 0) null else i,
+    i / 3.0,
+    if (i % 4 == 0) null else Seq.tabulate(i % 3)(j => if (j == 1) null else s"t$j")))
+
+  /** The files of `dir` a reader lists, and the hidden rest. */
+  private def files(dir: String): (Seq[String], Seq[String]) =
+    Option(new java.io.File(new Path(dir).toUri.getPath).listFiles())
+      .map(_.map(_.getName).toSeq).getOrElse(Nil)
+      .partition(n => !n.startsWith(".") && !n.startsWith("_"))
+
+  private def footer(dir: String) = {
+    val part = files(dir)._1.filter(_.startsWith("part-")).head
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, part),
+      spark.sparkContext.hadoopConfiguration))
+    try in.getFooter.getFileMetaData finally in.close()
+  }
+
+  test("a driver-written delta reads back as DataFrame.write's: rows, nulls, footer schema") {
+    val (driver, written) = (tmpDir("rows-driver") + "/s", tmpDir("rows-write") + "/s")
+    StateStores.writeRows(spark, driver, deltaRows, deltaSchema)
+    StateStores.local(spark, deltaRows, deltaSchema).coalesce(1)
+      .write.mode("append").parquet(written)
+    assert(read(driver).collect().toSeq === read(written).collect().toSeq)
+    assert(read(driver).schema === read(written).schema)
+    val (d, w) = (footer(driver), footer(written))
+    assert(d.getSchema === w.getSchema)
+    assert(d.getSchema.getType(0).isRepetition(
+      org.apache.parquet.schema.Type.Repetition.REQUIRED))
+    assert(d.getKeyValueMetaData === w.getKeyValueMetaData)
+    // an empty delta is a file of the schema alone
+    val empty = tmpDir("rows-empty") + "/s"
+    StateStores.writeRows(spark, empty, Nil, deltaSchema)
+    assert(read(empty).count() === 0L)
+    assert(footer(empty).getSchema === w.getSchema)
+  }
+
+  test("each driver-written append leaves exactly one visible part- file and nothing hidden") {
+    val dir = tmpDir("rows-files") + "/s"
+    for (k <- 1 to 3) {
+      StateStores.commit(None, dir -> StateStores.Rows(spark,
+        deltaRows.take(10 * k), deltaSchema))
+      val (visible, hidden) = files(dir)
+      assert(visible.length === k && visible.forall(_.startsWith("part-")), visible)
+      assert(!hidden.exists(_.endsWith(".tmp")), hidden)
+    }
+    assert(read(dir).count() === 60L)
+  }
+
+  test("a failed driver-written append leaves no file, and the commit error names the store") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val root = "faulty://" + tmpDir("rows-fault")
+    val (docs, state) = (root + "/docs", root + "/state")
+    FaultyFs.failUnder = Some(new Path(state).toUri.getPath)
+    val err = try intercept[java.io.IOException](StateStores.commit(None,
+        docs -> StateStores.Rows(spark, deltaRows, deltaSchema),
+        state -> StateStores.Rows(spark, deltaRows, deltaSchema)))
+      finally FaultyFs.failUnder = None
+    assert(err.getMessage.startsWith(s"state commit failed: $state;"), err.getMessage)
+    assert(err.getMessage.contains(s"committed: $docs;"), err.getMessage)
+    assert(String.valueOf(err.getCause.getMessage).contains("injected fault"))
+    assert(files(state) === ((Nil, Nil)))
+    assert(files(docs)._1.length === 1)
+    assert(read(docs).count() === deltaRows.length.toLong)
   }
 
   test("a compaction cut between its two renames: the next trigger sees the prior state") {
