@@ -731,10 +731,13 @@ shid AS (
    *  take the pushdown path. */
   val RareGramPushdownMax: Int = 1024
 
-  /** Bound on the batch rows a dedup trigger collects to the driver —
+  /** Bound on the batch rows a bounded trigger collects to the driver —
    *  shingle rows for [[dedupNgramIncremental]], probe rows (docs x
-   *  probes) for [[dedupExactIncremental]]; a doc's text rides on its
-   *  first row only, so the bound also bounds the collected bytes. At
+   *  probes) for [[dedupExactIncremental]], pair rows (and the member
+   *  rows of the clusters they relabel) for
+   *  [[graft.streaming.StreamingClusters.processPairs]]; a doc's text
+   *  rides on its first row only, so the bound also bounds the
+   *  collected bytes. At
    *  or below it a trigger takes the bounded plan: the batch collected
    *  once, each state store probed once at batch keys
    *  ([[StateStores.probe]]), everything else on the driver, a handful
@@ -748,7 +751,18 @@ shid AS (
    *  measured (244k shingle rows: 1.7 vs 6.1 s; 975k: 2.3 vs 6.4 s),
    *  but its driver heap peaked 585 MB above baseline at 244k rows, so
    *  the same bound keeps it in the low hundreds of MB; a batch of
-   *  1000-executor size takes the distributed plan. */
+   *  1000-executor size takes the distributed plan. The cluster fold
+   *  (two longs a pair, no text) behaves like the n-gram trigger —
+   *  MEASURED (400k-doc label store in clusters of 4, batches of k
+   *  pairs, half between new ids and half bridging a new id to a
+   *  stored one, local[4], -Xmx4g; bounded vs distributed wall, 2-3
+   *  runs): 1k pairs 0.7-1.8 vs 4.9-9.2 s; 100k: 1.8-3.4 vs 9.1-15.0
+   *  s; 400k: 6.2-7.0 vs 21.9-23.0 s; 1M: 11.5-14.7 vs 31.6-42.4 s.
+   *  Its driver heap peak (sum of the heap pools' peaks over the
+   *  pre-trigger heap) grew 0.27-0.40 GB at 100k, 0.8-1.1 GB at 400k
+   *  and 1.4-2.2 GB at 1M pairs, so the shared bound holds it at the
+   *  n-gram trigger's level; a batch past it pays the distributed
+   *  fold's 3-4x wall time, not a driver heap in the GBs. */
   val LocalTriggerMax: Int = 100000
 
   /** [[saltedBucketPairs]] with a HARD per-bucket pair bound — the

@@ -101,10 +101,33 @@ private[graft] object StateStores {
         .select(store.columns.toIndexedSeq.map(col): _*)
     }
 
-  /** A store probe ([[probe]]) collected; no keys, no job. */
+  /** A store probe ([[probe]]) collected; no keys, no job. For keys
+   *  whose rows are bounded by the batch, as a doc-keyed probe is. */
   def probeRows(store: DataFrame, key: String, keys: Seq[Any]): Array[Row] =
     if (keys.isEmpty) Array.empty[Row]
     else probe(store, key, keys).collect()
+
+  /** A store probe ([[probe]]) collected in one job if it holds at most
+   *  `max` rows, else `None`: for keys whose rows the batch does not
+   *  bound. Each task returns at most `max + 1` rows, and the driver
+   *  keeps rows only while their total stays within `max`, so the
+   *  driver never holds more than about `max` rows plus the task
+   *  results in flight. No keys, no job. */
+  def probeRowsWithin(store: DataFrame, key: String, keys: Seq[Any],
+                      max: Int): Option[Array[Row]] =
+    if (keys.isEmpty) Some(Array.empty[Row])
+    else {
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var over = false
+      store.sparkSession.sparkContext.runJob(probe(store, key, keys).rdd,
+        (rows: Iterator[Row]) => rows.take(max + 1).toArray,
+        (_: Int, rows: Array[Row]) =>
+          if (!over) {
+            if (kept.length + rows.length > max) { over = true; kept.clear() }
+            else kept ++= rows
+          })
+      if (over) None else Some(kept.toArray)
+    }
 
   /** `rows` as a `LocalRelation` frame of `schema`: a projection or
    *  filter over it folds on the driver, without a job. A delta to
@@ -180,16 +203,26 @@ private[graft] object StateStores {
     val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
     val (path, tmp) = (new Path(dir, name), new Path(dir, s".$name.tmp"))
     val fs = path.getFileSystem(job.getConfiguration)
-    var installed = false
     try {
       val writer = factory.newInstance(tmp.toString, schema, ctx)
       try {
         val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
         rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
-      } finally writer.close()
-      installed = fs.rename(tmp, path)
-      if (!installed) throw new java.io.IOException(s"cannot rename $tmp to $path")
-    } finally if (!installed) fs.delete(tmp, false)
+      } catch {
+        case e: Throwable =>
+          Try(writer.close()).failed.foreach(e.addSuppressed)
+          throw e
+      }
+      writer.close()
+      if (!fs.rename(tmp, path))
+        throw new java.io.IOException(s"cannot rename $tmp to $path")
+    } catch {
+      // the write's or rename's own failure is the error; a failed
+      // close or delete of the temp file rides along as suppressed
+      case e: Throwable =>
+        Try(fs.delete(tmp, false)).failed.foreach(e.addSuppressed)
+        throw e
+    }
   }
 
   /** Compact the store at `dir`: `write` puts the compacted store at

@@ -23,7 +23,9 @@ import graft.pipeline.{Clustering, Dedup}
  * label that CHANGED or appeared, stamped with the batch id. A batch
  * within [[Dedup.LocalTriggerMax]] pairs runs the bounded-trigger
  * kernel (see [[processPairs]]): two batch-keyed store probes, the
- * fold on the driver, one driver-written delta file, no write job.
+ * fold on the driver, one driver-written delta file, no write job —
+ * unless a changed cluster holds more than that many stored rows,
+ * whose members then fold distributed.
  *
  * State = ONE append-only `(doc_id, label, batch_id)` store folded by
  * LATEST-BATCH-WINS at read (`max_by(label, batch_id)`): the
@@ -78,7 +80,12 @@ object StreamingClusters {
    *
    *  The delta (changed members, then new endpoints) is ONE
    *  driver-written file ([[StateStores.writeRows]]); untouched
-   *  clusters match neither probe and contribute no rows. A larger
+   *  clusters match neither probe and contribute no rows. The member
+   *  probe is the one collect the batch does not bound — one pair can
+   *  bridge a cluster of millions — so it collects at most `localMax`
+   *  rows ([[StateStores.probeRowsWithin]]); past that, the members
+   *  fold distributed (semi-join, `max_by`, relabel) into a frame
+   *  append, and the new endpoints follow as driver rows. A larger
    *  batch (or a negative `localMax`) runs [[processPairsDistributed]]. */
   def processPairs(batchPairs: DataFrame, batchId: Long,
                    labelDir: String, localMax: Int = Dedup.LocalTriggerMax): Unit = {
@@ -117,10 +124,30 @@ object StreamingClusters {
     // empty part files from growing the store's file count (and the
     // two O(state) probe scans above) until compactState runs.
     if (deltaNew.isEmpty && changed.isEmpty) return
-    val deltaPrior = latestLabels(
-        StateStores.probeRows(store, "label", changed.keys.toSeq))
-      .toSeq.sorted.map { case (d, l) => Row(d, changed(l), batchId) }
-    StateStores.writeRows(spark, labelDir, deltaPrior ++ deltaNew, labelSchema)
+    // The changed clusters' members are bounded by their size, not by
+    // the batch: past `localMax` stored rows they fold distributed.
+    StateStores.probeRowsWithin(store, "label", changed.keys.toSeq, localMax) match {
+      case Some(members) =>
+        val deltaPrior = latestLabels(members).toSeq.sorted
+          .map { case (d, l) => Row(d, changed(l), batchId) }
+        StateStores.writeRows(spark, labelDir, deltaPrior ++ deltaNew, labelSchema)
+      case None =>
+        // Two appends; a crash between them leaves a store whose
+        // replay folds to the same labels (each half is a relabel to
+        // the component minimum the replay recomputes).
+        val changedMap = StateStores.local(spark,
+          changed.toSeq.map { case (o, n) => Row(o, n) },
+          StructType(Seq(StructField("label", LongType, nullable = false),
+            StructField("new_label", LongType, nullable = false))))
+        StateStores.probe(store, "label", changed.keys.toSeq)
+          .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
+          .join(broadcast(changedMap), "label")
+          .select(col("doc_id"), col("new_label").as("label"),
+            lit(batchId).as("batch_id"))
+          .write.mode("append").parquet(labelDir)
+        if (deltaNew.nonEmpty)
+          StateStores.writeRows(spark, labelDir, deltaNew, labelSchema)
+    }
   }
 
   /** The latest-batch-wins fold (`max_by(label, batch_id)` per doc) of

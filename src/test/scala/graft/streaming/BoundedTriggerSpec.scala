@@ -314,6 +314,32 @@ class BoundedTriggerSpec extends SparkSpec {
     assert(cluster.jobs <= 3, cluster)
   }
 
+  test("cluster bounded trigger: a changed cluster past localMax folds distributed, to the distributed run's labels") {
+    import spark.implicits._
+    def rows(dir: String) =
+      spark.read.parquet(dir).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val root = tmpDir("bt-cluster-big")
+    val (bounded, dist) = (root + "/bounded", root + "/dist")
+    // stored: the 12-member cluster 100..111 and the cluster {5, 6}
+    val stored = ((100L until 111L).map(i => (i, i + 1)) :+ ((5L, 6L)))
+      .toDF("doc_a", "doc_b")
+    StreamingClusters.processPairs(stored, 0L, bounded)
+    StreamingClusters.processPairs(stored, 0L, dist, localMax = -1)
+    // two pairs, within localMax = 2: one bridges the big cluster into
+    // the lower label 5, one adds the new ids 3 and 4
+    val batch = Seq((6L, 100L), (3L, 4L)).toDF("doc_a", "doc_b")
+    StreamingClusters.processPairs(batch, 1L, bounded, localMax = 2)
+    StreamingClusters.processPairs(batch, 1L, dist, localMax = -1)
+    assert(rows(bounded) === rows(dist))
+    // the members took the distributed fold: a frame append besides
+    // the driver-written file of the new ids (trigger 0 wrote one file)
+    assert(new java.io.File(bounded).listFiles()
+      .count(_.getName.startsWith("part-")) >= 3)
+    assert(StreamingClusters.readLabels(spark, bounded).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      ((100L to 111L).map(_ -> 5L) ++ Seq(5L -> 5L, 6L -> 5L, 3L -> 3L, 4L -> 3L)).toMap)
+  }
+
   /** Every executed plan that scans a file scans one of `stores`,
    *  restricted by a batch-keyed `In` or a semi-join against a
    *  `LocalRelation` of batch keys. */

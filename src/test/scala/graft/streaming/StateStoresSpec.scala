@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The local file system under the `faulty` scheme. Creating a file
- *  under [[FaultyFs.failUnder]] fails; reads, listings and renames
+ *  under [[FaultyFs.failUnder]] fails, and so does deleting one there
+ *  while [[FaultyFs.failDelete]] is set; reads, listings and renames
  *  behave as on the local FS. */
 class FaultyFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("faulty:///")
@@ -28,10 +29,18 @@ class FaultyFs extends RawLocalFileSystem {
       f: Path, append: Boolean, permission: FsPermission): java.io.OutputStream = {
     check(f); super.createOutputStreamWithMode(f, append, permission)
   }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    if (FaultyFs.failDelete) FaultyFs.failUnder.foreach { dir =>
+      if (f.toUri.getPath.startsWith(dir + "/"))
+        throw new java.io.IOException(s"injected fault: delete $f")
+    }
+    super.delete(f, recursive)
+  }
 }
 
 object FaultyFs {
   @volatile var failUnder: Option[String] = None
+  @volatile var failDelete: Boolean = false
 }
 
 class StateStoresSpec extends SparkSpec {
@@ -240,6 +249,34 @@ class StateStoresSpec extends SparkSpec {
     assert(files(state) === ((Nil, Nil)))
     assert(files(docs)._1.length === 1)
     assert(read(docs).count() === deltaRows.length.toLong)
+  }
+
+  test("a failed driver-written append whose clean-up fails too keeps the write's error") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val state = "faulty://" + tmpDir("rows-fault-delete") + "/state"
+    FaultyFs.failUnder = Some(new Path(state).toUri.getPath)
+    FaultyFs.failDelete = true
+    val err = try intercept[java.io.IOException](
+        StateStores.writeRows(spark, state, deltaRows, deltaSchema))
+      finally { FaultyFs.failUnder = None; FaultyFs.failDelete = false }
+    assert(err.getMessage.contains("injected fault: create"), err.getMessage)
+    assert(err.getSuppressed.map(_.getMessage).exists(
+      _.contains("injected fault: delete")), err.getSuppressed.toSeq)
+    assert(files(state) === ((Nil, Nil)))
+  }
+
+  test("a bounded probe collects within its bound and reports a probe past it") {
+    import spark.implicits._
+    val dir = tmpDir("probe-within") + "/s"
+    (1L to 10L).map(i => (i, i % 2)).toDF("doc_id", "label")
+      .write.parquet(dir)
+    val store = spark.read.parquet(dir)
+    val odd = StateStores.probeRowsWithin(store, "label", Seq(1L), 5)
+    assert(odd.map(_.map(_.getLong(0)).sorted.toSeq) === Some(Seq(1L, 3L, 5L, 7L, 9L)))
+    assert(StateStores.probeRowsWithin(store, "label", Seq(1L), 4) === None)
+    assert(StateStores.probeRowsWithin(store, "label", Seq(0L, 1L), 9) === None)
+    assert(StateStores.probeRowsWithin(store, "label", Nil, 0).map(_.length) === Some(0))
   }
 
   test("a compaction cut between its two renames: the next trigger sees the prior state") {
