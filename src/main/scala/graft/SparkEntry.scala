@@ -146,10 +146,6 @@ ORDER BY event_id"""
     "winnow_fingerprints" -> ((s, d) =>
       TextAnalysis.winnowFingerprints(docs(s, d)).orderBy("doc_id", "fp_pos")),
     "winnow_density" -> ((s, d) => TextAnalysis.winnowDensity(docs(s, d))),
-    // kept key: runs the same native winnow_fps path as
-    // winnow_fingerprints, against the same oracle
-    "winnow_fingerprints_expr" -> ((s, d) =>
-      TextAnalysis.winnowFingerprints(docs(s, d)).orderBy("doc_id", "fp_pos")),
     "winnow_overlap" -> ((s, d) => TextAnalysis.winnowOverlap(docs(s, d))),
     // Every *_incr key builds its corpus state from text with the
     // state's own builder and pins it once (localCheckpoint), the
@@ -243,25 +239,10 @@ ORDER BY event_id"""
       TextAnalysis.spanGramCounts(docs(s, d).filter(col("doc_id") < 400))
         .localCheckpoint(),
       docs(s, d).filter(col("doc_id") >= 400))),
-    // Maintained-store shape: counts come from an append-only
-    // (gram, cnt) store, split in two delta pieces on purpose to prove
-    // the SUM-fold is exact; must hash-match the same
-    // full-run-restricted oracle.
-    "span_dedup_incr_store" -> ((s, d) => {
-      val corpus = docs(s, d).filter(col("doc_id") < 400)
-      val deltas = TextAnalysis.spanGramCounts(corpus.filter(col("doc_id") < 200))
-        .unionByName(TextAnalysis.spanGramCounts(
-          corpus.filter(col("doc_id") >= 200)))
-      TextAnalysis.spanDedupIncremental(deltas,
-        docs(s, d).filter(col("doc_id") >= 400))
-    }),
     "surprisal_buckets" -> ((s, d) => TextAnalysis.surprisalBuckets(docs(s, d))),
     "dedup_exact" -> ((s, d) => Dedup.dedupExact(docs(s, d))),
     "dedup_curve" -> ((s, d) => Dedup.dedupCurve(docs(s, d))),
     "cdc_chunk_dedup" -> ((s, d) => Dedup.cdcChunkDedup(docs(s, d))),
-    // kept key: runs the same native cdc_chunks path as
-    // cdc_chunk_dedup, against the same oracle
-    "cdc_chunk_dedup_expr" -> ((s, d) => Dedup.cdcChunkDedup(docs(s, d))),
     "boilerplate_chunks" -> ((s, d) => Dedup.boilerplateChunks(docs(s, d))),
     "cdc_chunk_trim" -> ((s, d) => Dedup.cdcChunkTrim(docs(s, d))),
     "cdc_chunk_size_hist" -> ((s, d) => Dedup.cdcChunkSizeHist(docs(s, d))),
@@ -271,12 +252,6 @@ ORDER BY event_id"""
       val dd = docs(s, d)
       Dedup.cdcChunkDedupIncremental(Dedup.cdcChunkStore(dd).localCheckpoint(),
         arrivals(dd))
-    }),
-    // Maintained-store shape: the (fp, len) chunk store unpinned —
-    // must hash-match the identical full-run-restricted oracle.
-    "cdc_chunk_dedup_incr_store" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.cdcChunkDedupIncremental(Dedup.cdcChunkStore(dd), arrivals(dd))
     }),
     "dedup_threshold_sweep" -> ((s, d) => Dedup.dedupThresholdSweep(docs(s, d))),
     "minhash_calibration" -> ((s, d) => Dedup.minhashCalibration(docs(s, d))),
@@ -306,36 +281,10 @@ ORDER BY event_id"""
       Dedup.dedupExactIncremental(Dedup.bloomWords(dd).localCheckpoint(),
         Dedup.contentHashes(dd).localCheckpoint(), arrivals(dd))
     }),
-    // Maintained-store shape of the same operator (unpinned state) —
-    // hash-matched against the identical full-run oracle.
-    "dedup_exact_incr_store" -> ((s, d) => {
-      val dd = docs(s, d)
-      Dedup.dedupExactIncremental(Dedup.bloomWords(dd),
-        Dedup.contentHashes(dd), arrivals(dd))
-    }),
     "dedup_minhash_incr" -> ((s, d) => {
       val corpus = docs(s, d).filter(col("doc_id") < 400)
       Dedup.dedupMinhashIncremental(Dedup.shingles(corpus).localCheckpoint(),
         Dedup.minhashSignatures(corpus).localCheckpoint(),
-        docs(s, d).filter(col("doc_id") >= 400))
-    }),
-    // Signature-store shape (unpinned state); must hash-match the same
-    // full-run-restricted oracle.
-    "dedup_minhash_incr_store" -> ((s, d) => {
-      val corpus = docs(s, d).filter(col("doc_id") < 400)
-      Dedup.dedupMinhashIncremental(Dedup.shingles(corpus),
-        Dedup.minhashSignatures(corpus), docs(s, d).filter(col("doc_id") >= 400))
-    }),
-    // Same incremental split in the StreamingDedup per-trigger shape
-    // (corpus shingles + append-only gram-df deltas, unpinned): the
-    // result must still hash-match the full-run oracle. The df frame
-    // is split in two delta pieces on purpose, proving the SUM-fold
-    // of an append-only store is exact.
-    "dedup_ngram_incr_store" -> ((s, d) => {
-      val corpusSh = Dedup.shingles(docs(s, d).filter(col("doc_id") < 400))
-      val dfDeltas = Dedup.gramDfDelta(corpusSh.filter(col("doc_id") < 200))
-        .unionByName(Dedup.gramDfDelta(corpusSh.filter(col("doc_id") >= 200)))
-      Dedup.dedupNgramIncremental(corpusSh, dfDeltas,
         docs(s, d).filter(col("doc_id") >= 400))
     }),
     "dedup_minhash" -> ((s, d) => Dedup.dedupMinhash(docs(s, d))),
@@ -360,19 +309,9 @@ ORDER BY event_id"""
     // family): fingerprints/bands/hamming re-derived in SQL at width 64
     "dedup_simhash_wide" -> ((s, d) =>
       Dedup.dedupSimhash(docs(s, d), idFamily = "poly", fpBits = 64)),
-    // kept key: runs the same path as dedup_simhash_fast, against the
-    // same oracle
-    "dedup_simhash_expr" -> ((s, d) =>
-      Dedup.dedupSimhash(docs(s, d), idFamily = "poly")),
     "dedup_simhash_incr" -> ((s, d) => Dedup.dedupSimhashIncremental(
       Dedup.simhashFingerprints(docs(s, d).filter(col("doc_id") < 400))
         .localCheckpoint(),
-      docs(s, d).filter(col("doc_id") >= 400))),
-    // Fingerprint-store shape (unpinned state): the corpus contributes
-    // ONE long per doc (no shingle store — simhash verifies from
-    // fingerprints); must hash-match the full-run-restricted oracle.
-    "dedup_simhash_incr_store" -> ((s, d) => Dedup.dedupSimhashIncremental(
-      Dedup.simhashFingerprints(docs(s, d).filter(col("doc_id") < 400)),
       docs(s, d).filter(col("doc_id") >= 400))),
     // Duplicate GROUPS: connected components over the verified
     // near-dup pair graph (survivor = min doc_id per component).
@@ -398,13 +337,6 @@ ORDER BY event_id"""
     "dedup_embedding_incr" -> ((s, d) => Embeddings.dedupEmbeddingIncremental(
       Embeddings.quantizedIndex(emb(s, d).filter(col("vec_id") < 400))
         .localCheckpoint(),
-      emb(s, d).filter(col("vec_id") >= 400))),
-    // Quantized-store shape (unpinned state): the corpus contributes
-    // the SAME index frame the whole ANN family reads
-    // ([[writeQuantizedStore]]); must hash-match the
-    // full-run-restricted oracle.
-    "dedup_embedding_incr_store" -> ((s, d) => Embeddings.dedupEmbeddingIncremental(
-      Embeddings.quantizedIndex(emb(s, d).filter(col("vec_id") < 400)),
       emb(s, d).filter(col("vec_id") >= 400))),
     // The kNN/SemDeDup family defaults to AutoCentroids (sqrt-N cell
     // sizing); the harness pins 32 so the oracle's 32-cell codebook
@@ -582,7 +514,6 @@ ORDER BY event_id"""
     "fingerprint" -> TextAnalysis.fingerprintOracle,
     "winnow_fingerprints" -> TextAnalysis.winnowFingerprintsOracle,
     "winnow_density" -> TextAnalysis.winnowDensityOracle,
-    "winnow_fingerprints_expr" -> TextAnalysis.winnowFingerprintsOracle,
     "winnow_overlap" -> TextAnalysis.winnowOverlapOracle,
     "winnow_overlap_incr" -> TextAnalysis.winnowOverlapIncrementalOracle,
     "tfidf_terms" -> TextAnalysis.tfidfTermsOracle,
@@ -640,17 +571,14 @@ ORDER BY event_id"""
     "dsir_select" -> TextAnalysis.dsirSelectOracle,
     "span_trim" -> TextAnalysis.spanTrimOracle,
     "span_dedup_incr" -> TextAnalysis.spanDedupIncrementalOracle,
-    "span_dedup_incr_store" -> TextAnalysis.spanDedupIncrementalOracle,
     "surprisal_buckets" -> TextAnalysis.surprisalBucketsOracle,
     "dedup_exact" -> Dedup.dedupExactOracle,
     "dedup_curve" -> Dedup.dedupCurveOracle,
     "cdc_chunk_dedup" -> Dedup.cdcChunkDedupOracle,
-    "cdc_chunk_dedup_expr" -> Dedup.cdcChunkDedupOracle,
     "boilerplate_chunks" -> Dedup.boilerplateChunksOracle,
     "cdc_chunk_trim" -> Dedup.cdcChunkTrimOracle,
     "cdc_chunk_size_hist" -> Dedup.cdcChunkSizeHistOracle,
     "cdc_chunk_dedup_incr" -> Dedup.cdcChunkDedupIncrementalOracle,
-    "cdc_chunk_dedup_incr_store" -> Dedup.cdcChunkDedupIncrementalOracle,
     "minhash_calibration" -> Dedup.minhashCalibrationOracle,
     "minhash_scurve" -> Dedup.minhashScurveOracle,
     "dedup_ngram_fast" -> Dedup.dedupNgramFastOracle,
@@ -666,12 +594,8 @@ ORDER BY event_id"""
     "dedup_ngram_incr" -> Dedup.dedupNgramIncrementalOracle,
     "dedup_exact_incr" -> Dedup.dedupExactIncrementalOracle,
     "dedup_threshold_sweep" -> Dedup.dedupThresholdSweepOracle,
-    "dedup_exact_incr_store" -> Dedup.dedupExactIncrementalOracle,
     "dedup_minhash_incr" -> Dedup.dedupMinhashIncrementalOracle,
-    "dedup_minhash_incr_store" -> Dedup.dedupMinhashIncrementalOracle,
     "dedup_simhash_incr" -> Dedup.dedupSimhashIncrementalOracle,
-    "dedup_simhash_incr_store" -> Dedup.dedupSimhashIncrementalOracle,
-    "dedup_ngram_incr_store" -> Dedup.dedupNgramIncrementalOracle,
     "dedup_minhash" -> Dedup.dedupMinhashOracle,
     "dedup_minhash_fast" -> Dedup.dedupMinhashFastOracle,
     "dedup_minhash_expr" -> Dedup.dedupMinhashFastOracle,
@@ -679,7 +603,6 @@ ORDER BY event_id"""
     "dedup_simhash" -> Dedup.dedupSimhashOracle,
     "dedup_simhash_fast" -> Dedup.dedupSimhashFastOracle,
     "dedup_simhash_wide" -> Dedup.dedupSimhashWideOracle,
-    "dedup_simhash_expr" -> Dedup.dedupSimhashFastOracle,
     "dedup_clusters" -> Clustering.dedupClustersOracle,
     "cluster_weights" -> Clustering.clusterWeightsOracle,
     "kmv_cardinality" -> Dedup.kmvCardinalityOracle,
@@ -724,7 +647,6 @@ ORDER BY event_id"""
     "ivf_probe_sweep" -> Embeddings.ivfProbeSweepOracle,
     "dedup_embedding" -> Embeddings.dedupEmbeddingOracle,
     "dedup_embedding_incr" -> Embeddings.dedupEmbeddingIncrementalOracle,
-    "dedup_embedding_incr_store" -> Embeddings.dedupEmbeddingIncrementalOracle,
     "emb_label_stats" -> Embeddings.labelStatsOracle,
     "emb_principal" -> Embeddings.principalDirectionOracle,
     "diversity_sample" -> Embeddings.diversitySampleOracle,

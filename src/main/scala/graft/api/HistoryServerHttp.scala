@@ -61,8 +61,14 @@ class HistoryServerHttp(spark: SparkSession, canon: DataFrame, port: Int = 0,
       }
     }
 
+  /** A request parameter no route can serve: answered 400, not 500. */
+  private final class BadRequest(msg: String) extends Exception(msg)
+
+  /** A non-negative integer parameter (`limit`), or `dflt` when absent. */
   private def intParam(ex: HttpExchange, name: String, dflt: Int): Int =
-    param(ex, name).map(_.toInt).getOrElse(dflt)
+    param(ex, name).map(v => v.toIntOption.filter(_ >= 0).getOrElse(
+      throw new BadRequest(s"$name must be a non-negative integer, got: $v")))
+      .getOrElse(dflt)
 
   /** One JSON array, one object per row — the shape the reference's
    *  Vec<T> serde serialization produces. `to_json` with
@@ -264,6 +270,8 @@ ${htmlTable("Cost Optimization", costDf.columns, cost)}
         case None => respond(ex, 404, """{"error":"not found"}""")
       }
     } catch {
+      case e: BadRequest =>
+        respond(ex, 400, s"""{"error":${ujsonString(e.getMessage)}}""")
       case e: Throwable =>
         respond(ex, 500,
           s"""{"error":${ujsonString(e.toString)}}""")

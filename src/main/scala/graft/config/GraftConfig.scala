@@ -12,7 +12,11 @@ import scala.io.Source
  * a dependency-free parser covering the subset the reference's own
  * settings files use: `[dotted.tables]`, `key = value` with quoted
  * strings, integers, and booleans, `#` comments. CLI precedence
- * matches main.rs: a flag beats the file beats the default.
+ * matches main.rs: a flag beats the file beats the default. Only the
+ * values the server reads are typed; the reference's other keys
+ * (`max_applications`, `update_interval_seconds`, the
+ * `circuit_breaker` table, read timeouts, the kerberos realm, ...)
+ * still parse and are ignored, so a reference settings file loads.
  *
  * Spark-land scoping (SURVEY §2 row 4 precedent): Kerberos fields are
  * parsed into a typed [[Settings.kerberosLogin]] plan; when both
@@ -26,17 +30,14 @@ import scala.io.Source
  */
 object GraftConfig {
 
-  case class ServerConfig(host: String = "0.0.0.0", port: Int = 18080,
-                          maxApplications: Int = 1000)
+  case class ServerConfig(host: String = "0.0.0.0", port: Int = 18080)
 
   case class KerberosConfig(principal: String,
                             keytabPath: Option[String] = None,
-                            krb5ConfigPath: Option[String] = None,
-                            realm: Option[String] = None)
+                            krb5ConfigPath: Option[String] = None)
 
   case class HdfsConfig(namenodeUrl: String,
                         connectionTimeoutMs: Option[Long] = None,
-                        readTimeoutMs: Option[Long] = None,
                         kerberos: Option[KerberosConfig] = None)
 
   case class S3Config(bucketName: String,
@@ -45,26 +46,11 @@ object GraftConfig {
                       accessKeyId: Option[String] = None,
                       secretAccessKey: Option[String] = None,
                       sessionToken: Option[String] = None,
-                      connectionTimeoutMs: Option[Long] = None,
-                      readTimeoutMs: Option[Long] = None)
-
-  /** Defaults mirror config.rs:123-133. */
-  case class CircuitBreakerConfig(enabled: Boolean = true,
-                                  failureThreshold: Int = 10,
-                                  successThreshold: Int = 5,
-                                  timeoutDurationSecs: Long = 15,
-                                  windowDurationSecs: Long = 60)
+                      connectionTimeoutMs: Option[Long] = None)
 
   case class HistoryConfig(logDirectory: String = "./test-data/spark-events",
-                           maxApplications: Int = 1000,
-                           updateIntervalSeconds: Long = 10,
-                           maxAppsPerRequest: Int = 100,
-                           compressionEnabled: Boolean = true,
-                           databaseDirectory: Option[String] = Some("./data"),
                            hdfs: Option[HdfsConfig] = None,
-                           s3: Option[S3Config] = None,
-                           circuitBreaker: Option[CircuitBreakerConfig] =
-                             Some(CircuitBreakerConfig()))
+                           s3: Option[S3Config] = None)
 
   case class Settings(server: ServerConfig = ServerConfig(),
                       history: HistoryConfig = HistoryConfig()) {
@@ -170,8 +156,6 @@ object GraftConfig {
     t.get(k).map(_.toInt)
   private def lng(t: Map[String, String], k: String): Option[Long] =
     t.get(k).map(_.toLong)
-  private def bool(t: Map[String, String], k: String): Option[Boolean] =
-    t.get(k).map(_.toBoolean)
 
   /** Build Settings from parsed tables, filling reference defaults. */
   private[config] def fromTables(tables: Map[String, Map[String, String]]): Settings = {
@@ -182,13 +166,11 @@ object GraftConfig {
       HdfsConfig(
         namenodeUrl = str(t, "namenode_url").getOrElse("hdfs://localhost:9000"),
         connectionTimeoutMs = lng(t, "connection_timeout_ms"),
-        readTimeoutMs = lng(t, "read_timeout_ms"),
         kerberos = tables.get("history.hdfs.kerberos").map { kt =>
           KerberosConfig(
             principal = str(kt, "principal").getOrElse(""),
             keytabPath = str(kt, "keytab_path"),
-            krb5ConfigPath = str(kt, "krb5_config_path"),
-            realm = str(kt, "realm"))
+            krb5ConfigPath = str(kt, "krb5_config_path"))
         })
     }
     val s3 = tables.get("history.s3").map { t =>
@@ -199,35 +181,15 @@ object GraftConfig {
         accessKeyId = str(t, "access_key_id"),
         secretAccessKey = str(t, "secret_access_key"),
         sessionToken = str(t, "session_token"),
-        connectionTimeoutMs = lng(t, "connection_timeout_ms"),
-        readTimeoutMs = lng(t, "read_timeout_ms"))
+        connectionTimeoutMs = lng(t, "connection_timeout_ms"))
     }
-    val cb = tables.get("history.circuit_breaker").map { t =>
-      val dcb = CircuitBreakerConfig()
-      CircuitBreakerConfig(
-        enabled = bool(t, "enabled").getOrElse(dcb.enabled),
-        failureThreshold = int(t, "failure_threshold").getOrElse(dcb.failureThreshold),
-        successThreshold = int(t, "success_threshold").getOrElse(dcb.successThreshold),
-        timeoutDurationSecs = lng(t, "timeout_duration_secs").getOrElse(dcb.timeoutDurationSecs),
-        windowDurationSecs = lng(t, "window_duration_secs").getOrElse(dcb.windowDurationSecs))
-    }.orElse(d.history.circuitBreaker)
     Settings(
       server = ServerConfig(
         host = str(sv, "host").getOrElse(d.server.host),
-        port = int(sv, "port").getOrElse(d.server.port),
-        maxApplications = int(sv, "max_applications").getOrElse(d.server.maxApplications)),
+        port = int(sv, "port").getOrElse(d.server.port)),
       history = HistoryConfig(
         logDirectory = str(hi, "log_directory").getOrElse(d.history.logDirectory),
-        maxApplications = int(hi, "max_applications").getOrElse(d.history.maxApplications),
-        updateIntervalSeconds = lng(hi, "update_interval_seconds")
-          .getOrElse(d.history.updateIntervalSeconds),
-        maxAppsPerRequest = int(hi, "max_apps_per_request")
-          .getOrElse(d.history.maxAppsPerRequest),
-        compressionEnabled = bool(hi, "compression_enabled")
-          .getOrElse(d.history.compressionEnabled),
-        databaseDirectory = str(hi, "database_directory")
-          .orElse(d.history.databaseDirectory),
-        hdfs = hdfs, s3 = s3, circuitBreaker = cb))
+        hdfs = hdfs, s3 = s3))
   }
 
   /** Load from a settings file; missing file = defaults with a warning
@@ -245,8 +207,8 @@ object GraftConfig {
   }
 
   /** CLI parsing with file+flag precedence (main.rs:20-120): `--config
-   *  PATH` names the file; `--host/--port/--log-directory/
-   *  --update-interval/--max-apps` override its values; `--hdfs-namenode
+   *  PATH` names the file; `--host/--port/--log-directory` override
+   *  its values; `--hdfs-namenode
    *  URL` / `--s3-bucket NAME` switch the storage mode like the
    *  reference's `--hdfs`/`--s3` flags. Unknown flags throw. */
   def fromArgs(args: Array[String]): Settings = {
@@ -262,7 +224,7 @@ object GraftConfig {
       i += 2
     }
     val known = Set("config", "host", "port", "log-directory",
-      "update-interval", "max-apps", "hdfs-namenode", "s3-bucket")
+      "hdfs-namenode", "s3-bucket")
     kv.keys.find(!known.contains(_)).foreach { k =>
       throw new IllegalArgumentException(s"unknown flag: --$k")
     }
@@ -277,10 +239,6 @@ object GraftConfig {
         port = kv.get("port").map(_.toInt).getOrElse(base.server.port)),
       history = base.history.copy(
         logDirectory = kv.getOrElse("log-directory", base.history.logDirectory),
-        updateIntervalSeconds = kv.get("update-interval").map(_.toLong)
-          .getOrElse(base.history.updateIntervalSeconds),
-        maxAppsPerRequest = kv.get("max-apps").map(_.toInt)
-          .getOrElse(base.history.maxAppsPerRequest),
         hdfs = hdfs, s3 = s3))
   }
 }

@@ -38,13 +38,6 @@ object EventModel {
   val SqlExecutionEnd =
     "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
 
-  /** All 15 typed event names the reference recognises. */
-  val knownEventTypes: Seq[String] = Seq(
-    AppStart, AppEnd, JobStart, JobEnd, StageSubmitted, StageCompleted,
-    TaskStart, TaskEnd, ExecutorAdded, ExecutorRemoved,
-    BlockManagerAdded, BlockManagerRemoved, EnvironmentUpdate,
-    SqlExecutionStart, SqlExecutionEnd)
-
   /** Canonical frame schema. `event_time_us` (epoch micros) and
    *  `event_date` (ISO yyyy-MM-dd) are denormalised from `event_time`
    *  so downstream group-bys are pure column refs (and so the DuckDB

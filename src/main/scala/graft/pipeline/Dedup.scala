@@ -48,7 +48,6 @@ object Dedup {
    *  recall with 8×2 or a wider signature without forking. */
   val NumHashes = 16
   val Bands = 4
-  val RowsPerBand = 4
   /** SimHash fingerprint width. 32 bits / 4 bands of 8 means 256
    *  bucket values per band — the hamming<=3 pigeonhole exactness is a
    *  property of the BAND COUNT, not the band width, so widening the
@@ -3076,7 +3075,7 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  exactly, so the scale mode's fingerprints, bands, and hamming
    *  distances are verified bit-for-bit, not just row-counted. The
    *  Spark side fingerprints through the native simhash_fp
-   *  projection; `dedup_simhash_expr` runs the same path. */
+   *  projection. */
   val dedupSimhashFastOracle: String =
     "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
       simhashTailSql

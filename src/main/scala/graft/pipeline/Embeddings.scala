@@ -37,7 +37,6 @@ object Embeddings {
   /** Corpus-scale sign-LSH width: 64 planes / 4 x 16-bit bands — see
    *  [[nibbles]] for the measured saturation-vs-recall trade. */
   val NumPlanesWide = 64
-  val NibbleBands = 4
 
   /** vec_id, qarr (array<long> milli-units), nq (exact squared norm).
    *  Both steps are native codegen'd expressions

@@ -23,9 +23,10 @@ import graft.pipeline.{Clustering, Dedup}
  * label that CHANGED or appeared, stamped with the batch id. A batch
  * within [[Dedup.LocalTriggerMax]] pairs runs the bounded-trigger
  * kernel (see [[processPairs]]): two batch-keyed store probes, the
- * fold on the driver, one driver-written delta file, no write job —
- * unless a changed cluster holds more than that many stored rows,
- * whose members then fold distributed.
+ * fold on the driver, one driver-written delta file, no write job.
+ * Any other batch — more pairs than that, or changed clusters holding
+ * more stored rows than that — runs the distributed fold
+ * ([[processPairsDistributed]]).
  *
  * State = ONE append-only `(doc_id, label, batch_id)` store folded by
  * LATEST-BATCH-WINS at read (`max_by(label, batch_id)`): the
@@ -83,10 +84,13 @@ object StreamingClusters {
    *  clusters match neither probe and contribute no rows. The member
    *  probe is the one collect the batch does not bound — one pair can
    *  bridge a cluster of millions — so it collects at most `localMax`
-   *  rows ([[StateStores.probeRowsWithin]]); past that, the members
-   *  fold distributed (semi-join, `max_by`, relabel) into a frame
-   *  append, and the new endpoints follow as driver rows. A larger
-   *  batch (or a negative `localMax`) runs [[processPairsDistributed]]. */
+   *  rows ([[StateStores.probeRowsWithin]]).
+   *
+   *  Every other case runs [[processPairsDistributed]]: a batch past
+   *  `localMax` pairs (or a negative `localMax`), and a batch whose
+   *  changed clusters hold more than `localMax` stored rows — the
+   *  bounded kernel has written nothing when it finds that out. So the
+   *  fold has two paths, bounded and distributed, one delta contract. */
   def processPairs(batchPairs: DataFrame, batchId: Long,
                    labelDir: String, localMax: Int = Dedup.LocalTriggerMax): Unit = {
     val spark = batchPairs.sparkSession
@@ -125,28 +129,14 @@ object StreamingClusters {
     // two O(state) probe scans above) until compactState runs.
     if (deltaNew.isEmpty && changed.isEmpty) return
     // The changed clusters' members are bounded by their size, not by
-    // the batch: past `localMax` stored rows they fold distributed.
+    // the batch: past `localMax` stored rows nothing is written yet,
+    // so the whole batch folds distributed instead.
     StateStores.probeRowsWithin(store, "label", changed.keys.toSeq, localMax) match {
       case Some(members) =>
         val deltaPrior = latestLabels(members).toSeq.sorted
           .map { case (d, l) => Row(d, changed(l), batchId) }
         StateStores.writeRows(spark, labelDir, deltaPrior ++ deltaNew, labelSchema)
-      case None =>
-        // Two appends; a crash between them leaves a store whose
-        // replay folds to the same labels (each half is a relabel to
-        // the component minimum the replay recomputes).
-        val changedMap = StateStores.local(spark,
-          changed.toSeq.map { case (o, n) => Row(o, n) },
-          StructType(Seq(StructField("label", LongType, nullable = false),
-            StructField("new_label", LongType, nullable = false))))
-        StateStores.probe(store, "label", changed.keys.toSeq)
-          .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
-          .join(broadcast(changedMap), "label")
-          .select(col("doc_id"), col("new_label").as("label"),
-            lit(batchId).as("batch_id"))
-          .write.mode("append").parquet(labelDir)
-        if (deltaNew.nonEmpty)
-          StateStores.writeRows(spark, labelDir, deltaNew, labelSchema)
+      case None => processPairsDistributed(batchPairs, batchId, labelDir)
     }
   }
 
@@ -157,9 +147,10 @@ object StreamingClusters {
       .map { case (d, rs) => d -> rs.maxBy(_.getLong(2)).getLong(1) }
 
   /** Distributed fallback for a batch past [[processPairs]]'s
-   *  `localMax` bound: the three-probe shape (endpoint fold →
-   *  touched-cluster members → touched fold) feeding the distributed
-   *  incremental component fold. Same delta, same store contract. */
+   *  `localMax` bound (in pairs or in changed-cluster members): the
+   *  three-probe shape (endpoint fold → touched-cluster members →
+   *  touched fold) feeding the distributed incremental component
+   *  fold. Same delta, same store contract. */
   private def processPairsDistributed(batchPairs: DataFrame, batchId: Long,
                                       labelDir: String): Unit = {
     val spark = batchPairs.sparkSession

@@ -89,6 +89,21 @@ class HistoryServerHttpSpec extends SparkSpec {
     } finally http.stop()
   }
 
+  test("a limit that is not a non-negative integer is a 400 with a JSON error") {
+    val http = new HistoryServerHttp(spark, canon)
+    val port = http.start()
+    try {
+      for (route <- Seq("/api/v1/applications", "/api/v1/optimization/resource-hogs");
+           bad <- Seq("abc", "-1", "99999999999")) {
+        val (status, body) = get(port, s"$route?limit=$bad")
+        assert(status === 400, s"$route?limit=$bad")
+        assert(body === s"""{"error":"limit must be a non-negative integer, got: $bad"}""")
+      }
+      val (s0, zero) = get(port, "/api/v1/applications?limit=0")
+      assert(s0 === 200 && zero === "[]")
+    } finally http.stop()
+  }
+
   test("store-maintenance surface: stats carry FS counts, compact trigger works, POST-only") {
     def post(port: Int, path: String): (Int, String) = {
       val url = java.net.URI.create(s"http://127.0.0.1:$port$path").toURL

@@ -37,34 +37,51 @@ timeout_duration_secs = 7
     val s = fromTables(parseToml(sample))
     assert(s.server.host === "127.0.0.1")
     assert(s.server.port === 9090)
-    assert(s.server.maxApplications === 50)
     assert(s.history.logDirectory === "/data/spark-events")
-    assert(s.history.updateIntervalSeconds === 30L)
-    assert(!s.history.compressionEnabled)
-    assert(s.history.databaseDirectory === Some("/data/db"))
     val h = s.history.hdfs.get
     assert(h.namenodeUrl === "hdfs://nn:9000")
     assert(h.connectionTimeoutMs === Some(5000L))
     assert(h.kerberos.get.principal === "svc@REALM")
     assert(h.kerberos.get.keytabPath === Some("/etc/krb5.keytab"))
-    // partial circuit-breaker table fills reference defaults
-    val cb = s.history.circuitBreaker.get
-    assert(cb.failureThreshold === 3 && cb.timeoutDurationSecs === 7L)
-    assert(cb.successThreshold === 5 && cb.windowDurationSecs === 60L)
+  }
+
+  test("a reference-style settings file with keys the server does not read still loads") {
+    val s = fromTables(parseToml(sample + """
+[history]
+max_applications = 500
+max_apps_per_request = 20
+
+[history.hdfs]
+namenode_url = "hdfs://nn:9000"
+connection_timeout_ms = 5000
+read_timeout_ms = 60000
+
+[history.hdfs.kerberos]
+principal = "svc@REALM"
+keytab_path = "/etc/krb5.keytab"
+realm = "REALM"
+
+[history.s3]
+bucket_name = "spark-logs"
+region = "us-east-1"
+read_timeout_ms = 30000
+
+[history.circuit_breaker]
+success_threshold = 2
+window_duration_secs = 120
+"""))
+    assert(s.server === ServerConfig("127.0.0.1", 9090))
+    assert(s.history === HistoryConfig(
+      logDirectory = "/data/spark-events",
+      hdfs = Some(HdfsConfig("hdfs://nn:9000", Some(5000L),
+        Some(KerberosConfig("svc@REALM", Some("/etc/krb5.keytab"))))),
+      s3 = Some(S3Config("spark-logs", region = Some("us-east-1")))))
   }
 
   test("missing file yields reference defaults (config.rs:135-156)") {
     val s = GraftConfig.load("/nonexistent/settings.toml")
     assert(s.server.host === "0.0.0.0" && s.server.port === 18080)
-    assert(s.history.maxApplications === 1000)
-    assert(s.history.updateIntervalSeconds === 10L)
-    assert(s.history.maxAppsPerRequest === 100)
-    assert(s.history.compressionEnabled)
     assert(s.history.hdfs.isEmpty && s.history.s3.isEmpty)
-    val cb = s.history.circuitBreaker.get
-    assert(cb.enabled && cb.failureThreshold === 10 &&
-      cb.successThreshold === 5 && cb.timeoutDurationSecs === 15L &&
-      cb.windowDurationSecs === 60L)
   }
 
   test("CLI flags override file values; file overrides defaults") {
@@ -76,7 +93,6 @@ timeout_duration_secs = 7
     assert(s.server.port === 7070)                      // flag wins
     assert(s.server.host === "127.0.0.1")               // file wins
     assert(s.history.logDirectory === "/override")      // flag wins
-    assert(s.history.updateIntervalSeconds === 30L)     // file wins
   }
 
   test("storage-mode flags and eventLogUri composition") {
@@ -96,6 +112,10 @@ timeout_duration_secs = 7
     intercept[IllegalArgumentException](GraftConfig.fromArgs(Array("--bogus", "x")))
     intercept[IllegalArgumentException](GraftConfig.fromArgs(Array("stray")))
     intercept[IllegalArgumentException](GraftConfig.fromArgs(Array("--port")))
+    // the reference flags for settings the server does not read
+    for (flag <- Seq("--update-interval", "--max-apps"))
+      assert(intercept[IllegalArgumentException](GraftConfig.fromArgs(Array(
+        "--config", "/nonexistent.toml", flag, "5"))).getMessage === s"unknown flag: $flag")
   }
 
   test("hadoopOverrides maps S3 credentials onto fs.s3a keys") {
