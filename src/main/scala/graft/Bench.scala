@@ -183,7 +183,7 @@ object Bench {
         .getBytes("UTF-8"))
     val headlineKeys = Seq("events_parse", "app_list", "task_quantiles",
       "critical_path", "dedup_exact", "dedup_ngram", "dedup_minhash",
-      "dedup_minhash_fast", "dedup_simhash", "dedup_embedding",
+      "dedup_simhash", "dedup_embedding",
       "dedup_clusters", "ann_topk", "ann_lsh", "ann_ivf", "ann_pq",
       "knn_graph", "text_stats", "quality_score", "lang_id", "bm25_search",
       "curate_corpus", "shingle_store_write", "dedup_family_shared",
@@ -395,16 +395,16 @@ object Bench {
         s"$base/gramdf", maxDf = 5L, minJaccard = 0.2)
     },
     // The streaming MINHASH member (state = shingle store + per-doc
-    // signature store), seeded under the poly family.
+    // signature store).
     tailRow("stream_minhash_trigger_quarter_corpus",
         "stream_minhash_trigger_full_corpus", Docs) { (seed, base) =>
       Dedup.writeShingleStore(seed, s"$base/shingles")
-      Dedup.minhashSignatures(seed, "poly")
+      Dedup.minhashSignatures(seed)
         .write.mode("overwrite").parquet(s"$base/sig")
     } { (batch, base) =>
       StreamingMinhashDedup.processBatch(batch, 0L,
         s"$base/corpus", s"$base/pairs", s"$base/shingles", s"$base/sig",
-        minJaccard = 0.2, idFamily = "poly")
+        minJaccard = 0.2)
     },
     // The streaming EMBEDDING member (state = the shared ANN quantized
     // index), seeded from a vector prefix.
@@ -438,37 +438,34 @@ object Bench {
         planes = Embeddings.NumPlanesWide)
     },
     // The cheapest-state streaming member, SIMHASH (state = ONE long
-    // per corpus doc): the fp store is seeded under the `poly` family
-    // at 32 bits (the `simhash_fp` projection fingerprint path). The
+    // per corpus doc): the fp store is seeded at 32 bits (the
+    // `simhash_fp` projection fingerprint path). The
     // trigger's only file scan is the fp store, so the quarter-vs-full
     // gap can only come from its columnar scan.
     tailRow("stream_simhash_trigger_quarter_corpus",
         "stream_simhash_trigger_full_corpus", Docs) { (seed, base) =>
-      Dedup.writeSimhashStore(seed, s"$base/fp", idFamily = "poly")
+      Dedup.writeSimhashStore(seed, s"$base/fp")
     } { (batch, base) =>
       // explicitly the LEGACY 32-bit width: the library default
       // flipped to SimBitsWide, but this key IS the 32-bit series
       // (the cliff the pair of keys exists to keep measured)
       StreamingSimhashDedup.processBatch(batch, 0L,
         s"$base/corpus", s"$base/pairs", s"$base/fp",
-        maxHamming = 3, idFamily = "poly",
-        fpBits = Dedup.SimBits)
+        maxHamming = 3, fpBits = Dedup.SimBits)
     },
     // The WIDE (64-bit, 16-bit-band) variant of the simhash trigger —
-    // the corpus-scale setting. Same seed/batch protocol under the
-    // poly gram family (the native simhash_fp expression is 32-bit);
+    // the corpus-scale setting. Same seed/batch protocol, bit votes
+    // over gram ids (the native simhash_fp expression is 32-bit);
     // the pair of keys exists so the 32-vs-64 band-occupancy story is
     // measured, not asserted (the sf10 probe caught the 32-bit
     // trigger growing linearly with the store).
     tailRow("stream_simhash64_trigger_quarter_corpus",
         "stream_simhash64_trigger_full_corpus", Docs) { (seed, base) =>
-      Dedup.writeSimhashStore(seed, s"$base/fp",
-        idFamily = "poly", fpBits = Dedup.SimBitsWide)
+      Dedup.writeSimhashStore(seed, s"$base/fp", fpBits = Dedup.SimBitsWide)
     } { (batch, base) =>
       StreamingSimhashDedup.processBatch(batch, 0L,
         s"$base/corpus", s"$base/pairs", s"$base/fp",
-        maxHamming = 3, idFamily = "poly",
-        fpBits = Dedup.SimBitsWide)
+        maxHamming = 3, fpBits = Dedup.SimBitsWide)
     },
     // The EXACT-dedup ingest loop (state = hash + bloom stores). The
     // bloom store is <= m/64 rows at ANY seed, so the quarter-vs-full
@@ -517,7 +514,9 @@ object Bench {
     // of the store, not just these three) and the from-store family
     // run (`dedup_family_shared`, to compare against the sum of the
     // three cold per-query medians that each pay tokenize+gram
-    // explode themselves).
+    // explode themselves). SimHash's 32-bit fingerprint pass is the
+    // native `simhash_fp` projection over text, so only the n-gram and
+    // MinHash members read the store.
     storeRow("shingle_store_write", "dedup_family_shared", "documents")(
         Dedup.writeShingleStore(_, _)) { (docs, sh) =>
       noop(Dedup.dedupNgram(docs, precomputedShingles = sh))

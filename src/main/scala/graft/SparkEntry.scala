@@ -288,27 +288,20 @@ ORDER BY event_id"""
         docs(s, d).filter(col("doc_id") >= 400))
     }),
     "dedup_minhash" -> ((s, d) => Dedup.dedupMinhash(docs(s, d))),
-    // Scale mode (codegen'd poly_hash gram ids — digest-free AND
-    // SQL-reproducible): bit-exact banded-signature oracle at any SF.
-    "dedup_minhash_fast" -> ((s, d) =>
-      Dedup.dedupMinhash(docs(s, d), idFamily = "poly")),
-    // Scale mode C (native whole-signature expression): signatures as
-    // a pure projection; same oracle as mode B (identical buckets).
+    // Native whole-signature expression: signatures as a pure
+    // projection; same oracle as `dedup_minhash` (identical buckets).
     "dedup_minhash_expr" -> ((s, d) => Dedup.dedupMinhashExpr(docs(s, d))),
     // Wide-signature run (32 hashes / 8 bands): the r10 width
     // parameterization exercised end-to-end at a non-default split.
     "dedup_minhash_wide" -> ((s, d) =>
       Dedup.dedupMinhashExpr(docs(s, d), numHashes = 32, bands = 8)),
+    // At 32 bits the fingerprint pass is the native simhash_fp
+    // projection; the oracle re-derives it from poly gram ids.
     "dedup_simhash" -> ((s, d) => Dedup.dedupSimhash(docs(s, d))),
-    // Scale mode B (codegen'd poly_hash gram ids — digest-free and
-    // SQL-reproducible): full fingerprint-parity oracle. At 32 bits
-    // the fingerprint pass is the native simhash_fp projection.
-    "dedup_simhash_fast" -> ((s, d) =>
-      Dedup.dedupSimhash(docs(s, d), idFamily = "poly")),
-    // 64-bit scale-mode simhash through the FULL hash gate (poly
-    // family): fingerprints/bands/hamming re-derived in SQL at width 64
+    // 64-bit scale-mode simhash through the FULL hash gate:
+    // fingerprints/bands/hamming re-derived in SQL at width 64
     "dedup_simhash_wide" -> ((s, d) =>
-      Dedup.dedupSimhash(docs(s, d), idFamily = "poly", fpBits = 64)),
+      Dedup.dedupSimhash(docs(s, d), fpBits = 64)),
     "dedup_simhash_incr" -> ((s, d) => Dedup.dedupSimhashIncremental(
       Dedup.simhashFingerprints(docs(s, d).filter(col("doc_id") < 400))
         .localCheckpoint(),
@@ -597,11 +590,9 @@ ORDER BY event_id"""
     "dedup_minhash_incr" -> Dedup.dedupMinhashIncrementalOracle,
     "dedup_simhash_incr" -> Dedup.dedupSimhashIncrementalOracle,
     "dedup_minhash" -> Dedup.dedupMinhashOracle,
-    "dedup_minhash_fast" -> Dedup.dedupMinhashFastOracle,
-    "dedup_minhash_expr" -> Dedup.dedupMinhashFastOracle,
+    "dedup_minhash_expr" -> Dedup.dedupMinhashOracle,
     "dedup_minhash_wide" -> Dedup.dedupMinhashWideOracle,
     "dedup_simhash" -> Dedup.dedupSimhashOracle,
-    "dedup_simhash_fast" -> Dedup.dedupSimhashFastOracle,
     "dedup_simhash_wide" -> Dedup.dedupSimhashWideOracle,
     "dedup_clusters" -> Clustering.dedupClustersOracle,
     "cluster_weights" -> Clustering.clusterWeightsOracle,

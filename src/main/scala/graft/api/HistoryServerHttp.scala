@@ -57,7 +57,11 @@ class HistoryServerHttp(spark: SparkSession, canon: DataFrame, port: Int = 0,
     Option(ex.getRequestURI.getRawQuery).flatMap {
       _.split("&").iterator.map(_.split("=", 2)).collectFirst {
         case Array(k, v) if k == name =>
-          java.net.URLDecoder.decode(v, "UTF-8")
+          try java.net.URLDecoder.decode(v, "UTF-8")
+          catch {
+            case _: IllegalArgumentException =>
+              throw new BadRequest(s"$name has a malformed percent escape: $v")
+          }
       }
     }
 

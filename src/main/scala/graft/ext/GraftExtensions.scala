@@ -23,10 +23,10 @@ import graft.functions.{CdcChunks, Int8Milli, MinhashSig, PolyHash, QDot, Quanti
  *    hash mod 1000003, the SQL-reproducible scale-mode gram-id family
  *    ([[graft.functions.PolyHash]]).
  *  - `simhash_fp(array<string>) -> bigint` — codegen'd whole
- *    32-bit SimHash fingerprint of a gram array under the poly
- *    family ([[graft.functions.SimhashFp]]).
+ *    32-bit SimHash fingerprint of a gram array over `poly_hash`
+ *    gram ids ([[graft.functions.SimhashFp]]).
  *  - `minhash_sig(array<string>[, width]) -> array<bigint>` —
- *    codegen'd whole MinHash signature under the poly family, width
+ *    codegen'd whole MinHash signature over `poly_hash` gram ids, width
  *    literal defaulting to 16 ([[graft.functions.MinhashSig]]).
  *  - `winnow_fps(string, int, int) -> array<bigint>` — codegen'd
  *    complete winnowing fingerprint selection (packed hash*2^20+pos)

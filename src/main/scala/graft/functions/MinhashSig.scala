@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /**
  * Native Catalyst expression: `minhash_sig(array<string>[, width]) ->
  * array<bigint>` — the whole `width`-hash MinHash signature of a
- * (distinct) gram array in one in-row loop under the `poly` gram-id
- * family: `sig[j] = min over grams of ((37 + 101 j) * poly_hash(gram)
+ * (distinct) gram array in one in-row loop over [[PolyHash]] gram
+ * ids: `sig[j] = min over grams of ((37 + 101 j) * poly_hash(gram)
  * + 17 + 257 j) mod P`.
  *
  * The signature STAGE of the MinHash pipeline (gram explode →
@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * projection — the [[SimhashFp]] collapse applied to the sketch
  * family. The affine constants and modulus mirror
  * `Dedup.minhashSigWide` exactly at every width, so
- * `dedup_minhash_expr` shares the `poly`-family banded-parity oracle
+ * `dedup_minhash_expr` shares `dedup_minhash`'s banded-parity oracle
  * verbatim (candidate buckets are identical; the exact-Jaccard verify
  * was never signature-dependent).
  *

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /**
  * Native Catalyst expression: `simhash_fp(array<string>) -> bigint` —
  * the WHOLE 32-bit SimHash fingerprint of a (distinct) gram array in
- * one in-row loop, under the `poly` gram-id family
- * ([[PolyHash]], bit votes `((gid * (37 + 101 b) + 17 + 257 b) mod P)
- * mod 2`, bit set when the ±1 vote sum is positive).
+ * one in-row loop over [[PolyHash]] gram ids (bit votes
+ * `((gid * (37 + 101 b) + 17 + 257 b) mod P) mod 2`, bit set when the
+ * ±1 vote sum is positive).
  *
  * This collapses the fingerprint STAGE of the simhash pipeline
  * (explode grams → per-(doc, bit) votes → 32-column partial agg →
@@ -19,11 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
  * pass becomes scan → project with NO explode, NO aggregation and NO
  * exchange — rows stay where the scan put them until banding. The
  * arithmetic is bit-for-bit the aggregation path's
- * (`Dedup.simhashFpWide` over `poly` gram ids), so the existing
- * banded-parity DuckDB oracle verifies this path unchanged. It is the
- * fingerprint pass of every `poly`/32-bit simhash caller
- * (`Dedup.simhashFingerprints`); md5 ids and the 64-bit width keep
- * the aggregation.
+ * (`Dedup.simhashFpWide`), so the existing banded-parity DuckDB
+ * oracle verifies this path unchanged. It is the fingerprint pass of
+ * every 32-bit simhash caller (`Dedup.simhashFingerprints`); the
+ * 64-bit width keeps the aggregation.
  *
  * Empty arrays fingerprint to 0 — the caller must filter gram-less
  * docs (< n tokens) out first, exactly as the aggregation path drops

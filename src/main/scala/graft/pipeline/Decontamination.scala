@@ -108,14 +108,13 @@ ORDER BY i.doc_id, i.bench_id"""
    *  shared by both frames must denote the same document — it is
    *  excluded as a self-pair, matching [[benchmarkOverlap]]). */
   def contaminationMinhash(docs: DataFrame, bench: DataFrame,
-                           minJaccard: Double = 0.2,
-                           idFamily: String = "md5"): DataFrame = {
+                           minJaccard: Double = 0.2): DataFrame = {
     val docSh = Dedup.shingles(docs.select("doc_id", "text")).cache()
     val benchSh = Dedup.shingles(bench.select("doc_id", "text")).cache()
     val docBands = Dedup.minhashBandSig(
-      Dedup.minhashSigWide(Dedup.shingleIds(docSh, idFamily)))
+      Dedup.minhashSigWide(Dedup.shingleIds(docSh)))
     val benchBands = Dedup.minhashBandSig(
-      Dedup.minhashSigWide(Dedup.shingleIds(benchSh, idFamily)))
+      Dedup.minhashSigWide(Dedup.shingleIds(benchSh)))
     val cands = docBands
       .select(col("band"), col("bsig"), col("doc_id").as("doc_a"))
       .join(broadcast(benchBands
@@ -135,8 +134,7 @@ ORDER BY i.doc_id, i.bench_id"""
    *  keeping cross (candidate, benchmark) collisions is exactly the
    *  split-frame run because signatures are per-document. */
   lazy val contaminationMinhashOracle: String =
-    "WITH " + Dedup.shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + Dedup.gramIdSql + " AS gid FROM shingle s)," +
+    "WITH RECURSIVE " + Dedup.shinglesCte.trim + "," + Dedup.polyShidCte + "," +
       Dedup.minhashCandsSql + """
 SELECT CASE WHEN c.doc_a % 20 = 0 THEN c.doc_b ELSE c.doc_a END AS doc_id,
        CASE WHEN c.doc_a % 20 = 0 THEN c.doc_a ELSE c.doc_b END AS bench_id,

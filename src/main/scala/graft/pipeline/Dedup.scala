@@ -26,14 +26,12 @@ import graft.util.Round.r4
  * Cross-engine determinism: shingles get integer ids via a global
  * sorted ROW_NUMBER (mirrored by the DuckDB oracle); hash families are
  * affine maps (a_j*gid + b_j) mod P over those ids — pure integer
- * arithmetic, identical in any engine. At 100 TB the library swaps the
- * md5 digest for the digest-free `idFamily = "poly"` — the codegen'd
- * [[graft.functions.PolyHash]], still SQL-reproducible so the oracle
- * verifies signatures bit-for-bit at any scale; the algorithm is
- * otherwise unchanged. The two families (`md5`, `poly`) are the only
- * gram-id spellings; where a native whole-signature expression exists
- * (`cdc_chunks`, `winnow_fps`, `simhash_fp` at poly/32) it is the ONE
- * path its callers run.
+ * arithmetic, identical in any engine. Gram ids have ONE spelling,
+ * the digest-free codegen'd [[graft.functions.PolyHash]] (`poly_hash`),
+ * SQL-reproducible ([[polyShidCte]]) so the oracle verifies signatures
+ * bit-for-bit at any scale; where a native whole-signature expression
+ * exists (`cdc_chunks`, `winnow_fps`, `simhash_fp` at 32 bits) it is
+ * the ONE path its callers run.
  */
 object Dedup {
 
@@ -65,8 +63,8 @@ object Dedup {
    *  bands multiply band-key cardinality by 256, and hamming <= 3 on
    *  64 bits is also the semantically sane threshold at corpus scale
    *  (3/32 random collisions pass at ~1.3e-6 per pair — thousands of
-   *  false near-dups per 1e12 pairs). Under `idFamily = "poly"` the
-   *  width is hash-gated bit-for-bit (`dedup_simhash_wide`). */
+   *  false near-dups per 1e12 pairs). The width is hash-gated
+   *  bit-for-bit (`dedup_simhash_wide`). */
   val SimBitsWide = 64
 
   /** Exact dedup: first doc_id wins per content hash; emits survivors
@@ -467,7 +465,7 @@ ORDER BY n.source"""
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct().cache()
     val aggCols = minhashMinCols(NumHashes) ++ simhashVoteCols
-    val sigBoth = shingleIds(sh, "md5")
+    val sigBoth = shingleIds(sh)
       .groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*).cache()
     val mhCands = saltedBucketPairs(minhashBandSig(sigBoth),
       Seq("band", "bsig"), "doc_id").cache()
@@ -620,21 +618,13 @@ SELECT source, n_grams, shared_grams,
 FROM per
 ORDER BY source"""
 
-  /** (doc_id, gid) for a shingle frame — a pure per-row PROJECTION in
-   *  every family; there is no vocabulary, no global sort, and no join
-   *  anywhere in gram-id assignment. Families:
-   *
-   *  - `"md5"` (oracle-parity baseline): gid = the first 8 md5 hex
-   *    digits of the gram parsed base-16, mod P — identical arithmetic
-   *    in Spark (`conv(hex, 16, 10)`) and DuckDB
-   *    (`('0x' || hex)::UBIGINT`), so the DuckDB oracle reproduces
-   *    every signature bit-for-bit. Costs one crypto digest + hex
-   *    round-trip per gram.
-   *  - `"poly"` (100 TB mode): the native codegen'd
-   *    [[graft.functions.PolyHash]] (`poly_hash`) — one fused
-   *    multiply-add loop per gram, no digest, no allocation, AND still
-   *    exactly reproducible in DuckDB ([[polyGramIdSql]]), so the
-   *    scale mode keeps a full fingerprint-parity oracle.
+  /** (doc_id, gid) for a shingle frame — a pure per-row PROJECTION:
+   *  there is no vocabulary, no global sort, and no join anywhere in
+   *  gram-id assignment. The id is the native codegen'd
+   *  [[graft.functions.PolyHash]] (`poly_hash`) — one fused
+   *  multiply-add loop per gram, no digest, no allocation, AND exactly
+   *  reproducible in DuckDB ([[polyShidCte]]), so every sketch keeps a
+   *  full fingerprint-parity oracle.
    *
    *  mod P keeps the affine hashes (a*gid+b) inside Long range under
    *  ANSI arithmetic AND non-negative (a raw 64-bit hash would
@@ -642,22 +632,10 @@ ORDER BY source"""
    *  at |vocab| ~ P merge a few grams identically in both engines —
    *  harmless for min-hash/bit-vote statistics and invisible to the
    *  oracle compare. */
-  private[pipeline] def shingleIds(sh: DataFrame, idFamily: String): DataFrame =
-    idFamily match {
-      case "md5" => sh.select(col("doc_id"),
-        (conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long")
-          % Prime).as("gid"))
-      case "poly" => sh.select(col("doc_id"),
-        call_function("poly_hash", col("gram")).as("gid"))
-      case other => throw new IllegalArgumentException(
-        s"unknown gram-id family '$other' (md5|poly)")
-    }
+  private[pipeline] def shingleIds(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), call_function("poly_hash", col("gram")).as("gid"))
 
-  /** DuckDB spelling of the md5 gram id. */
-  val gramIdSql: String =
-    "CAST(CAST(('0x' || substr(md5(s.gram), 1, 8)) AS UBIGINT) % 1000003 AS BIGINT)"
-
-  /** DuckDB mirror of the `"poly"` family ([[graft.functions.PolyHash]]):
+  /** DuckDB mirror of [[shingleIds]] ([[graft.functions.PolyHash]]):
    *  per-code-point power-table sum over the gram's first 64 code
    *  points. Emits `shid(doc_id, gid)` from `shingle`; prepend
    *  `WITH RECURSIVE` (the power table is a recursive CTE).
@@ -668,14 +646,18 @@ ORDER BY source"""
    *  marks, Devanagari clusters, astral-plane emoji, and ZWJ
    *  sequences by `tools/poly_parity.py` (run it against the local
    *  DuckDB whenever either side of the lockstep changes). */
-  val polyShidCte: String = """
+  val polyShidCte: String = polyShidOf("shingle")
+
+  /** [[polyShidCte]] over any `(doc_id, gram)` table — the recall
+   *  oracles id only their sampled shingles. */
+  private def polyShidOf(shingleTable: String): String = s"""
 pw AS (
   SELECT 1 AS i, CAST(1 AS BIGINT) AS v
   UNION ALL
   SELECT i + 1, (v * 31) % 1000003 FROM pw WHERE i < 64),
 pchars AS (
   SELECT s.doc_id, s.gram, p.i, ord(substr(s.gram, p.i, 1)) * p.v AS term
-  FROM shingle s JOIN pw p ON p.i <= LEAST(len(s.gram), 64)),
+  FROM $shingleTable s JOIN pw p ON p.i <= LEAST(len(s.gram), 64)),
 shid AS (
   SELECT doc_id, CAST(SUM(term) % 1000003 AS BIGINT) AS gid
   FROM pchars GROUP BY doc_id, gram)"""
@@ -1235,8 +1217,7 @@ FROM alld GROUP BY degree
 ORDER BY degree"""
 
   /** 100 TB mode of [[dedupNgram]]: candidate BLOCKING keys on the
-   *  8-byte integer gram id (`idFamily`, default the SQL-reproducible
-   *  `"poly"`) instead of the gram string — document frequency,
+   *  8-byte integer gram id ([[shingleIds]]) instead of the gram string — document frequency,
    *  the rare filter, and the inverted-index pair join all shuffle
    *  fixed-width longs, and gram TEXT never enters an exchange until
    *  verification. At corpus scale that is the difference between
@@ -1250,10 +1231,9 @@ ORDER BY degree"""
    *  collisions). */
   def dedupNgramFast(docs: DataFrame, maxDf: Long = 5L,
                      minJaccard: Double = 0.2,
-                     idFamily: String = "poly",
                      precomputedShingles: Option[DataFrame] = None): DataFrame = {
     val sh = cachedOrStore(docs, precomputedShingles)
-    val shId = shingleIds(sh, idFamily)
+    val shId = shingleIds(sh)
     val df = shId.groupBy("gid").agg(count(lit(1)).as("df_cnt"))
     val rare = df.filter(col("df_cnt") <= maxDf).select("gid")
     val rareSh = shId.join(rare, "gid")
@@ -1377,10 +1357,10 @@ ORDER BY c.source_a, c.source_b"""
    *  cardinality, never corpus). Estimator determinism: the sketch
    *  IS the deliverable (not a sampled proxy of one), so the oracle
    *  reproduces it bit-for-bit from the same affine hash family. */
-  def sourceOverlapSketch(docs: DataFrame, idFamily: String = "md5",
+  def sourceOverlapSketch(docs: DataFrame,
                           precomputedShingles: Option[DataFrame] = None): DataFrame = {
     val sh = precomputedShingles.getOrElse(shingles(docs))
-    val sigWide = minhashSigWide(shingleIds(sh, idFamily))
+    val sigWide = minhashSigWide(shingleIds(sh))
     val minCols = (0 until NumHashes).map(j => min(col(s"mh$j")).as(s"mh$j"))
     val srcSig = sigWide
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
@@ -1407,8 +1387,8 @@ ORDER BY c.source_a, c.source_b"""
    *  rolled up per source, pairwise match counting over the K-row
    *  source signatures. `matches/16` has <= 4 binary fraction digits,
    *  so the rounded decimal is exact in both engines. */
-  val sourceOverlapSketchOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + """ AS gid FROM shingle s),
+  val sourceOverlapSketchOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + """,
 hashes AS (
   SELECT j, 37 + 101 * j AS a, 17 + 257 * j AS b
   FROM (SELECT unnest(range(0, 16)) AS j)),
@@ -1495,8 +1475,7 @@ ORDER BY p.source_a, p.source_b"""
    *  verbatim. Shared by [[dedupPairVennOracle]] and
    *  [[dedupTokenSavingsOracle]] so the detector semantics cannot
    *  drift between the two readouts. */
-  private val detChainsCte: String = shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + """ AS gid FROM shingle s),
+  private val detChainsCte: String = shinglesCte.trim + "," + polyShidCte + """,
 ng_dfreq AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS df_cnt FROM shingle GROUP BY gram),
 ng_rare AS (SELECT gram FROM ng_dfreq WHERE df_cnt <= 5),
 ng_raresh AS (SELECT s.doc_id, s.gram FROM shingle s JOIN ng_rare r ON s.gram = r.gram),
@@ -1558,7 +1537,7 @@ sh_pairs AS (
     ON a.band = b.band AND a.nib = b.nib AND a.doc_id < b.doc_id
   WHERE bit_count(xor(a.fp, b.fp)) <= 3)"""
 
-  val dedupPairVennOracle: String = "WITH " + detChainsCte + """,
+  val dedupPairVennOracle: String = "WITH RECURSIVE " + detChainsCte + """,
 tagged AS (
   SELECT 'ngram' AS det, doc_a, doc_b FROM ng_pairs
   UNION ALL SELECT 'minhash', doc_a, doc_b FROM mh_pairs
@@ -1651,7 +1630,7 @@ ORDER BY p.det_a, p.det_b"""
    *  [[Embeddings.planeFpCte]] + the dedupEmbedding tail (re-spelled
    *  with a pr_ prefix against CTE collisions) — every detector's
    *  semantics rides its family oracle. */
-  lazy val detectorSemanticPrOracle: String = "WITH " + detChainsCte + "," +
+  lazy val detectorSemanticPrOracle: String = "WITH RECURSIVE " + detChainsCte + "," +
     Embeddings.planeFpCte + """,
 pr_cands AS (
   SELECT DISTINCT a.vec_id AS doc_a, b.vec_id AS doc_b
@@ -1755,24 +1734,33 @@ ORDER BY d.det"""
     }
   }
 
+  /** The per-detector drop sets `base(det, doc_id)` over
+   *  [[detChainsCte]]: later copies of an exact hash, and the later
+   *  side (`doc_b`) of every family's pairs. The union sits in a
+   *  subquery because DuckDB, under `WITH RECURSIVE`, does not
+   *  de-duplicate a CTE whose body is a top-level `UNION`. */
+  private val detDropsCte: String = """
+eh AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
+efirsts AS (SELECT content_hash, MIN(doc_id) AS first_id FROM eh GROUP BY content_hash),
+base AS (
+  SELECT * FROM (
+    SELECT 'exact' AS det, eh.doc_id
+    FROM eh JOIN efirsts f ON eh.content_hash = f.content_hash
+    WHERE eh.doc_id > f.first_id
+    UNION SELECT 'ngram', doc_b FROM ng_pairs
+    UNION SELECT 'minhash', doc_b FROM mh_pairs
+    UNION SELECT 'simhash', doc_b FROM sh_pairs) u)"""
+
   /** [[detChainsCte]]'s pair sets verbatim + the exact-hash
    *  first-occurrence rule [[dedupExact]] uses; drop-set, token-mass,
    *  and fraction arithmetic mirror the Spark expressions. */
-  val dedupTokenSavingsOracle: String = "WITH " + detChainsCte + """,
+  val dedupTokenSavingsOracle: String =
+    "WITH RECURSIVE " + detChainsCte + "," + detDropsCte + """,
 toks AS (SELECT doc_id, (n_chars + 3) // 4 AS tok FROM documents),
 totals AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_docs_total,
          CAST(SUM(tok) AS BIGINT) AS tokens_total
   FROM toks),
-eh AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
-efirsts AS (SELECT content_hash, MIN(doc_id) AS first_id FROM eh GROUP BY content_hash),
-base AS (
-  SELECT 'exact' AS det, eh.doc_id
-  FROM eh JOIN efirsts f ON eh.content_hash = f.content_hash
-  WHERE eh.doc_id > f.first_id
-  UNION SELECT 'ngram', doc_b FROM ng_pairs
-  UNION SELECT 'minhash', doc_b FROM mh_pairs
-  UNION SELECT 'simhash', doc_b FROM sh_pairs),
 flagged AS (
   SELECT det, doc_id FROM base
   UNION ALL SELECT DISTINCT 'any' AS det, doc_id FROM base),
@@ -1833,17 +1821,9 @@ ORDER BY d.det"""
   /** [[detChainsCte]]'s pair sets + the exact-hash rule; the combo
    *  label is string_agg over the per-doc DISTINCT detector set with
    *  the same lexicographic order as Spark's array_sort. */
-  val dropProvenanceOracle: String = "WITH " + detChainsCte + """,
+  val dropProvenanceOracle: String =
+    "WITH RECURSIVE " + detChainsCte + "," + detDropsCte + """,
 toks AS (SELECT doc_id, (n_chars + 3) // 4 AS tok FROM documents),
-eh AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
-efirsts AS (SELECT content_hash, MIN(doc_id) AS first_id FROM eh GROUP BY content_hash),
-base AS (
-  SELECT 'exact' AS det, eh.doc_id
-  FROM eh JOIN efirsts f ON eh.content_hash = f.content_hash
-  WHERE eh.doc_id > f.first_id
-  UNION SELECT 'ngram', doc_b FROM ng_pairs
-  UNION SELECT 'minhash', doc_b FROM mh_pairs
-  UNION SELECT 'simhash', doc_b FROM sh_pairs),
 combos AS (
   SELECT doc_id, string_agg(det, '+' ORDER BY det) AS combo
   FROM base GROUP BY doc_id)
@@ -2140,8 +2120,7 @@ ORDER BY c.doc_a, c.doc_b"""
   def dedupMinhashIncremental(corpusShingles: DataFrame,
                               corpusSignatures: DataFrame,
                               batch: DataFrame,
-                              minJaccard: Double = 0.2,
-                              idFamily: String = "md5"): DataFrame = {
+                              minJaccard: Double = 0.2): DataFrame = {
     val batchSh = shingles(batch.select("doc_id", "text")).cache()
     // The corpus shingles are never cached: the state is materialized,
     // scanned at most twice, and caching O(state) gram strings per
@@ -2152,7 +2131,7 @@ ORDER BY c.doc_a, c.doc_b"""
     // broadcast batch-band side of the candidate join) — uncached,
     // the batch's shingle-id + 16-min signature agg ran twice per
     // call. Batch-bounded (one row per batch doc).
-    val batchSig = minhashSigWide(shingleIds(batchSh, idFamily)).cache()
+    val batchSig = minhashSigWide(shingleIds(batchSh)).cache()
     val corpusSig = corpusSignatures
       .select(col("doc_id") +: (0 until NumHashes).map(j => col(s"mh$j")): _*)
     val allBands = minhashBandSig(corpusSig.unionByName(batchSig))
@@ -2183,20 +2162,21 @@ ORDER BY c.doc_a, c.doc_b"""
   /** The per-doc wide signature frame (`doc_id, mh0..mh15`) — the
    *  append-only state [[dedupMinhashIncremental]] reads instead of
    *  re-signing the corpus. */
-  def minhashSignatures(docs: DataFrame, idFamily: String = "md5"): DataFrame =
-    minhashSigWide(shingleIds(shingles(docs.select("doc_id", "text")), idFamily))
+  def minhashSignatures(docs: DataFrame,
+                        numHashes: Int = NumHashes): DataFrame =
+    minhashSigWide(shingleIds(shingles(docs.select("doc_id", "text"))),
+      numHashes)
 
   /** Materialize [[minhashSignatures]] as a parquet store. */
-  def writeMinhashStore(docs: DataFrame, path: String,
-                        idFamily: String = "md5"): Unit =
-    minhashSignatures(docs, idFamily).write.mode("overwrite").parquet(path)
+  def writeMinhashStore(docs: DataFrame, path: String): Unit =
+    minhashSignatures(docs).write.mode("overwrite").parquet(path)
 
   /** The FULL-run minhash chain with the batch restriction applied to
    *  the final pair set — valid as the incremental oracle because
    *  signatures are per-document: the incremental run's candidates
    *  and verdicts are exactly the full run's, restricted. */
-  val dedupMinhashIncrementalOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
+  val dedupMinhashIncrementalOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
     minhashCandsSql + """
 SELECT c.doc_a, c.doc_b,
        FLOOR((i.inter_n * 1.0 / (sa.n + sb.n - i.inter_n)) * 10000.0 + 0.5) / 10000.0 AS jaccard
@@ -2242,12 +2222,11 @@ ORDER BY c.doc_a, c.doc_b"""
    *  [[saltedBucketPairs]] so a hot LSH bucket (boilerplate-heavy
    *  corpus) spreads over `salts` reducers instead of melting one. */
   def dedupMinhash(docs: DataFrame, minJaccard: Double = 0.2,
-                   idFamily: String = "md5",
                    precomputedShingles: Option[DataFrame] = None,
                    numHashes: Int = NumHashes,
                    bands: Int = Bands): DataFrame = {
     val sh = cachedOrStore(docs, precomputedShingles)
-    val shId = shingleIds(sh, idFamily)
+    val shId = shingleIds(sh)
     val cands =
       saltedBucketPairs(
         minhashBandSig(minhashSigWide(shId, numHashes), numHashes, bands),
@@ -2259,16 +2238,16 @@ ORDER BY c.doc_a, c.doc_b"""
   }
 
   /** MinHash via the native WHOLE-SIGNATURE expression
-   *  ([[graft.functions.MinhashSig]], `poly` family): signatures are
+   *  ([[graft.functions.MinhashSig]]): signatures are
    *  a pure projection (`word_ngrams` → `minhash_sig` in one
    *  whole-stage-codegen'd Project — no gram explode, no 16-min
    *  partial agg, no exchange), band signatures derive in-row from
    *  the array, and ONLY the exact-Jaccard verify (which was never
    *  signature-dependent) still reads the shingle frame,
-   *  candidate-driven. Buckets are bit-identical to
-   *  `dedupMinhash(idFamily = "poly")` — `dedup_minhash_expr` shares
-   *  [[dedupMinhashFastOracle]] verbatim, and MinhashSigSpec asserts
-   *  per-document signature equality of the two paths. */
+   *  candidate-driven. Buckets are bit-identical to [[dedupMinhash]]'s
+   *  — `dedup_minhash_expr` shares [[dedupMinhashOracle]] verbatim,
+   *  and MinhashSigSpec asserts per-document signature equality of
+   *  the two paths. */
   def dedupMinhashExpr(docs: DataFrame, minJaccard: Double = 0.2,
                        precomputedShingles: Option[DataFrame] = None,
                        numHashes: Int = NumHashes,
@@ -2297,14 +2276,6 @@ ORDER BY c.doc_a, c.doc_b"""
       .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
       .orderBy("doc_a", "doc_b")
   }
-
-  /** The aggregation-path `poly`-family wide signature frame
-   *  (doc_id, mh0..mh{numHashes-1}) — exposed so MinhashSigSpec can
-   *  assert per-document parity between the two signature paths at
-   *  the default AND non-default widths. */
-  def minhashPolySignatures(docs: DataFrame,
-                            numHashes: Int = NumHashes): DataFrame =
-    minhashSigWide(shingleIds(shingles(docs), "poly"), numHashes)
 
   /** The min-hash aggregate columns `mh0..mh{numHashes-1}` — exposed
    *  as a builder so [[withDetectorPairSets]] can co-compute them with
@@ -2356,12 +2327,11 @@ ORDER BY c.doc_a, c.doc_b"""
    *  quadratic bucket — exactly the blowup the sweep exists to warn
    *  about, and the S-curve already prices it analytically. */
   def minhashBandSweep(docs: DataFrame, minJaccard: Double = 0.2,
-                       idFamily: String = "md5",
                        precomputedShingles: Option[DataFrame] = None): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sh = cachedOrStore(docs, precomputedShingles)
-    val sigWide = minhashSigWide(shingleIds(sh, idFamily)).cache()
+    val sigWide = minhashSigWide(shingleIds(sh)).cache()
     // candidate count comes from the candidate frame itself (a
     // zero-intersection band collision IS a candidate the sweep must
     // bill); the verify chain inner-joins intersections, which is fine
@@ -2392,12 +2362,12 @@ ORDER BY c.doc_a, c.doc_b"""
     out
   }
 
-  /** The md5-family signature chain ([[detChainsCte]]'s mh_sig shape)
-   *  swept over band widths 8/4/2 rows via `j // r`; candidates are
+  /** The signature chain ([[detChainsCte]]'s mh_sig shape) swept
+   *  over band widths 8/4/2 rows via `j // r`; candidates are
    *  DISTINCT pairs per config, verification shares one shingle
    *  inter/size chain. */
-  val minhashBandSweepOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + """ AS gid FROM shingle s),
+  val minhashBandSweepOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + """,
 mh_hashes AS (
   SELECT j, 37 + 101 * j AS a, 17 + 257 * j AS b
   FROM (SELECT unnest(range(0, 16)) AS j)),
@@ -2454,7 +2424,6 @@ FROM scored GROUP BY bands ORDER BY bands"""
    *  count at any corpus scale. */
   def minhashRecallSample(docs: DataFrame, sampleSize: Long = 2000L,
                           minJaccard: Double = 0.2,
-                          idFamily: String = "md5",
                           runLen: Long = 50L): DataFrame = {
     // Fixed-SIZE sampling (round-11 verdict): a fixed FRACTION makes
     // the brute-force truth pass O(N²) at 100 TB; instead one corpus
@@ -2482,7 +2451,7 @@ FROM scored GROUP BY bands ORDER BY bands"""
         floor(floor(col("jaccard") * 10000.0 + 0.5) / 1000.0).cast("long")
           .as("j_bucket"))
     val cands = saltedBucketPairs(
-        minhashBandSig(minhashSigWide(shingleIds(sh, idFamily))),
+        minhashBandSig(minhashSigWide(shingleIds(sh))),
         Seq("band", "bsig"), "doc_id")
       .withColumn("hit", lit(1L))
     val out = truth.join(cands, Seq("doc_a", "doc_b"), "left")
@@ -2501,10 +2470,11 @@ FROM scored GROUP BY bands ORDER BY bands"""
    *  the doc sample (fixed-size block stride: k = ceil(N/2000) from
    *  the same COUNT the Spark side broadcasts, runs of 50 ids);
    *  buckets by the identical r4-then-×10 edge rule. */
-  val minhashRecallSampleOracle: String = "WITH " + shinglesCte + """,
+  val minhashRecallSampleOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + """,
 stride AS (SELECT GREATEST((COUNT(*) + 1999) // 2000, 1) AS k FROM documents),
-ssh AS (SELECT doc_id, gram FROM shingle WHERE (doc_id // 50) % (SELECT k FROM stride) = 0),
-sshid AS (SELECT s.doc_id, """ + gramIdSql + """ AS gid FROM ssh s),
+ssh AS (SELECT doc_id, gram FROM shingle WHERE (doc_id // 50) % (SELECT k FROM stride) = 0),""" +
+    polyShidOf("ssh") + """,
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM ssh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS inter_n
@@ -2523,7 +2493,7 @@ mh_hashes AS (
   FROM (SELECT unnest(range(0, 16)) AS j)),
 mh_sig AS (
   SELECT s.doc_id, h.j, MIN((h.a * s.gid + h.b) % 1000003) AS mh
-  FROM sshid s CROSS JOIN mh_hashes h
+  FROM shid s CROSS JOIN mh_hashes h
   GROUP BY s.doc_id, h.j),
 bsig AS (
   SELECT doc_id, j // 4 AS band,
@@ -2553,10 +2523,10 @@ GROUP BY t.j_bucket ORDER BY t.j_bucket"""
    *  projection per pair, the same bucket-join discipline — no
    *  all-pairs scan anywhere. All three scores are single double
    *  expressions over exact integer counts. */
-  def minhashCalibration(docs: DataFrame, idFamily: String = "md5",
+  def minhashCalibration(docs: DataFrame,
                          precomputedShingles: Option[DataFrame] = None): DataFrame = {
     val sh = cachedOrStore(docs, precomputedShingles)
-    val sigWide = minhashSigWide(shingleIds(sh, idFamily)).cache()
+    val sigWide = minhashSigWide(shingleIds(sh)).cache()
     val cands = saltedBucketPairs(minhashBandSig(sigWide),
       Seq("band", "bsig"), "doc_id")
     val aCols = (0 until NumHashes).map(j => col(s"mh$j").as(s"a$j"))
@@ -2654,8 +2624,8 @@ SELECT bands, rows_per_band,
 FROM p
 ORDER BY bands, jaccard"""
 
-  val minhashCalibrationOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
+  val minhashCalibrationOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
     minhashCandsSql + """,
 matches AS (
   SELECT c.doc_a, c.doc_b,
@@ -2676,25 +2646,6 @@ LEFT JOIN inter i ON m.doc_a = i.doc_a AND m.doc_b = i.doc_b
 JOIN sizes sa ON m.doc_a = sa.doc_id
 JOIN sizes sb ON m.doc_b = sb.doc_id
 ORDER BY m.doc_a, m.doc_b"""
-
-  /** Oracle for the SCALE-MODE MinHash (`idFamily = "poly"`): the
-   *  [[polyShidCte]] reproduces the codegen'd poly_hash gram ids
-   *  exactly, so the scale mode's signatures, bands, and verified
-   *  pairs are checked bit-for-bit AT ANY SCALE FACTOR.
-   *
-   *  History: this key previously ran `idFamily = "xxhash"` against
-   *  hash-family-independent ground truth (all pairs at exact
-   *  Jaccard >= 0.2). That oracle silently also asserts 100% LSH
-   *  RECALL on the corpus — true at sf0.01, but at sf0.1 one
-   *  borderline pair (J barely over 0.2, per-band match probability
-   *  ~J^4) missed all 4 bands: 255/256 rows. Banded LSH recall is
-   *  probabilistic BY DESIGN at the threshold, so equality-with-
-   *  ground-truth is the wrong invariant to gate on; family parity is
-   *  exact. The recall floor against brute-force truth lives in
-   *  PipelineSpec instead. */
-  lazy val dedupMinhashFastOracle: String =
-    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
-      minhashTailSql
 
   /** CTE chain from `shid` to the LSH candidate pair set + the
    *  sizes/inter verify inputs — shared by the minhash pair oracles
@@ -2756,9 +2707,25 @@ ORDER BY c.doc_a, c.doc_b"""
     "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
       minhashTailSqlFor(32, 8)
 
-  lazy val dedupMinhashOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
-    minhashTailSql
+  /** The [[polyShidCte]] reproduces the codegen'd poly_hash gram ids
+   *  exactly, so signatures, bands, and verified pairs are checked
+   *  bit-for-bit AT ANY SCALE FACTOR — shared verbatim by the
+   *  aggregation path (`dedup_minhash`) and the native
+   *  [[graft.functions.MinhashSig]] path (`dedup_minhash_expr`).
+   *
+   *  History: MinHash's scale key once ran against
+   *  hash-family-independent ground truth (all pairs at exact
+   *  Jaccard >= 0.2). That oracle silently also asserts 100% LSH
+   *  RECALL on the corpus — true at sf0.01, but at sf0.1 one
+   *  borderline pair (J barely over 0.2, per-band match probability
+   *  ~J^4) missed all 4 bands: 255/256 rows. Banded LSH recall is
+   *  probabilistic BY DESIGN at the threshold, so equality-with-
+   *  ground-truth is the wrong invariant to gate on; family parity is
+   *  exact. The recall floor against brute-force truth lives in
+   *  PipelineSpec instead. */
+  lazy val dedupMinhashOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
+      minhashTailSql
 
   /** SimHash near-dup: `fpBits`-bit majority fingerprint over gram-id
    *  hash bits; candidates share >=1 of 4 bands (exact for
@@ -2766,21 +2733,19 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  bit_count(xor). `fpBits = SimBitsWide` (64) is the corpus-scale
    *  setting — 16-bit bands keep bucket occupancy flat where the
    *  32-bit default's 256-value bands saturate (the sf10 probe,
-   *  STRESS_SF1.md) — and under `idFamily = "poly"` it keeps a full
-   *  bit-for-bit DuckDB oracle ([[dedupSimhashWideOracle]]). At
-   *  poly/32 the fingerprint pass is the native projection of
-   *  [[simhashFingerprints]] (which reads text, not
-   *  `precomputedShingles`); every other (family, width) aggregates
+   *  STRESS_SF1.md) — and keeps a full bit-for-bit DuckDB oracle
+   *  ([[dedupSimhashWideOracle]]). At 32 bits the fingerprint pass is
+   *  the native projection of [[simhashFingerprints]] (which reads
+   *  text, not `precomputedShingles`); wider fingerprints aggregate
    *  bit votes over the shingle frame. */
   def dedupSimhash(docs: DataFrame, maxHamming: Int = 3,
-                   idFamily: String = "md5",
                    precomputedShingles: Option[DataFrame] = None,
                    fpBits: Int = SimBits): DataFrame = {
     require(fpBits % SimBands == 0, s"fpBits must be a multiple of $SimBands")
     val fp = (
-      if (simhashNative(idFamily, fpBits)) simhashFingerprints(docs, idFamily, fpBits)
-      else simhashFpWide(shingleIds(cachedOrStore(docs, precomputedShingles),
-        idFamily), fpBits)
+      if (fpBits == SimBits) simhashFingerprints(docs)
+      else simhashFpWide(shingleIds(cachedOrStore(docs, precomputedShingles)),
+        fpBits)
     ).cache() // used for banding AND the per-side fp lookup below
     val cands = saltedBucketPairs(
       simhashNibbles(fp, fpBits / SimBands), Seq("band", "nib"), "doc_id")
@@ -2857,52 +2822,44 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  from the fingerprints themselves, so this frame is the WHOLE
    *  state).
    *
-   *  At `poly`/[[SimBits]] this is the native
+   *  At [[SimBits]] this is the native
    *  [[graft.functions.SimhashFp]] projection — `word_ngrams` →
    *  `simhash_fp` inside one whole-stage-codegen'd Project, no gram
    *  explode, no per-(doc, bit) vote aggregation, no exchange before
    *  banding. Gram-less docs (< 3 tokens) are filtered, as the vote
    *  aggregation drops them by producing no vote rows. The expression
-   *  is 32-bit only and md5 gram ids are oracle-pinned, so `md5` and
-   *  the 64-bit width aggregate bit votes over gram ids
-   *  ([[simhashFpWide]]). SimhashFpSpec asserts the projection equals
-   *  [[simhashVoteFingerprints]] per doc at poly/32, so fp stores
-   *  written by either path serve the same triggers. */
-  def simhashFingerprints(docs: DataFrame, idFamily: String = "md5",
+   *  is 32-bit only, so the 64-bit width aggregates bit votes over
+   *  gram ids ([[simhashFpWide]]). SimhashFpSpec asserts the
+   *  projection equals [[simhashVoteFingerprints]] per doc at 32 bits,
+   *  so fp stores written by either path serve the same triggers. */
+  def simhashFingerprints(docs: DataFrame,
                           fpBits: Int = SimBits): DataFrame =
-    if (simhashNative(idFamily, fpBits))
+    if (fpBits == SimBits)
       docs
         .select(col("doc_id"),
           call_function("word_ngrams", col("text"), lit(3)).as("grams"))
         .filter(size(col("grams")) > 0)
         .select(col("doc_id"),
           call_function("simhash_fp", col("grams")).as("fp"))
-    else simhashVoteFingerprints(docs, idFamily, fpBits)
-
-  private def simhashNative(idFamily: String, fpBits: Int): Boolean =
-    idFamily == "poly" && fpBits == SimBits
+    else simhashVoteFingerprints(docs, fpBits)
 
   /** The bit-vote aggregation spelling of [[simhashFingerprints]] at
-   *  any (family, width). */
-  private[graft] def simhashVoteFingerprints(docs: DataFrame, idFamily: String,
+   *  any width. */
+  private[graft] def simhashVoteFingerprints(docs: DataFrame,
                                              fpBits: Int): DataFrame =
-    simhashFpWide(shingleIds(shingles(docs.select("doc_id", "text")),
-      idFamily), fpBits)
+    simhashFpWide(shingleIds(shingles(docs.select("doc_id", "text"))), fpBits)
 
   /** Materialize [[simhashFingerprints]] as a parquet store. */
   def writeSimhashStore(docs: DataFrame, path: String,
-                        idFamily: String = "md5",
                         fpBits: Int = SimBits): Unit =
-    simhashFingerprints(docs, idFamily, fpBits)
-      .write.mode("overwrite").parquet(path)
+    simhashFingerprints(docs, fpBits).write.mode("overwrite").parquet(path)
 
   /** A precomputed [[simhashFingerprints]] frame TAGGED with the
-   *  family/width it was produced at, so a consumer can `require()`
-   *  the tag matches its own parameters — a mismatched frame would
-   *  otherwise yield wrong pairs (and, via the streaming path, a
-   *  corrupted fp store) with no failure signal (ADVICE r16). */
-  case class TaggedFingerprints(frame: DataFrame, idFamily: String,
-                                fpBits: Int)
+   *  width it was produced at, so a consumer can `require()` the tag
+   *  matches its own width — a mismatched frame would otherwise yield
+   *  wrong pairs (and, via the streaming path, a corrupted fp store)
+   *  with no failure signal (ADVICE r16). */
+  case class TaggedFingerprints(frame: DataFrame, fpBits: Int)
 
   /** Incremental SimHash near-dup — the third incremental family
    *  member ([[dedupNgramIncremental]], [[dedupMinhashIncremental]]),
@@ -2918,11 +2875,9 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
    *  batch-touching pairs.
    *
    *  The corpus enters as state only: `corpusFingerprints` (the
-   *  [[writeSimhashStore]] frame, written at the same family and
-   *  width). */
+   *  [[writeSimhashStore]] frame, written at the same width). */
   def dedupSimhashIncremental(corpusFingerprints: DataFrame, batch: DataFrame,
                               maxHamming: Int = 3,
-                              idFamily: String = "md5",
                               fpBits: Int = SimBits,
                               batchFingerprints: Option[TaggedFingerprints] = None): DataFrame = {
     val bandBits = fpBits / SimBands
@@ -2934,16 +2889,16 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
     // `batchFingerprints` lets a streaming caller that ALSO appends
     // the batch's fps to its store share ONE fingerprint pass
     // (StreamingSimhashDedup.processBatch) — the [[TaggedFingerprints]]
-    // tag lets this call fail fast on a family/width mismatch instead
-    // of silently producing wrong pairs (ADVICE r16).
+    // tag lets this call fail fast on a width mismatch instead of
+    // silently producing wrong pairs (ADVICE r16).
     val batchFp = batchFingerprints
       .map { tf =>
-        require(tf.idFamily == idFamily && tf.fpBits == fpBits,
-          s"batchFingerprints produced at (${tf.idFamily}, ${tf.fpBits}) " +
-            s"but dedupSimhashIncremental runs at ($idFamily, $fpBits)")
+        require(tf.fpBits == fpBits,
+          s"batchFingerprints produced at ${tf.fpBits} bits " +
+            s"but dedupSimhashIncremental runs at $fpBits")
         tf.frame.select(col("doc_id"), col("fp"))
       }
-      .getOrElse(simhashFingerprints(batch, idFamily, fpBits)).cache()
+      .getOrElse(simhashFingerprints(batch, fpBits)).cache()
     // The store ∪ batch frame stays UNCACHED (a trigger never caches
     // its store): candidate generation and the endpoint restriction
     // each scan the fp store once, 16 bytes per stored doc.
@@ -2968,11 +2923,6 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
     out
   }
 
-  /** Everything downstream of `shid` is family-independent: the bit
-   *  votes, fingerprint, banding, and verify read only (doc_id, gid).
-   *  `candPred` injects an extra candidate predicate (the incremental
-   *  oracle's batch restriction) into the SAME chain, so the full-run
-   *  and incremental oracles can never drift. */
   /** The fingerprint + band CTE prefix (bits → persum → fp → nib)
    *  over a `shid(doc_id, gid)` table — shared by every 32-bit simhash
    *  oracle tail AND [[simhashRecallSampleOracle]] (which swaps in its
@@ -2995,6 +2945,10 @@ nib AS (
   SELECT doc_id, fp, bd.band, (fp >> (8 * bd.band)) & 255 AS nib
   FROM fp, (SELECT unnest(range(0, 4)) AS band) bd)"""
 
+  /** The 32-bit tail over `shid(doc_id, gid)`. `candPred` injects an
+   *  extra candidate predicate (the incremental oracle's batch
+   *  restriction) into the SAME chain, so the full-run and incremental
+   *  oracles can never drift. */
   private def simhashTailSqlWith(candPred: String): String =
     simhashFpNibSql + s""",
 cands AS (
@@ -3050,7 +3004,7 @@ FROM cands
 WHERE bit_count(xor(fp_a, fp_b)) <= 3
 ORDER BY doc_a, doc_b"""
 
-  /** Oracle for the 64-bit scale mode under the `poly` family: the
+  /** Oracle for the 64-bit scale mode: the
    *  fingerprints, 16-bit bands, and hamming verdicts are re-derived
    *  in SQL bit-for-bit — the width that previously had only
    *  spec-level coverage now goes through the hash gate. */
@@ -3062,21 +3016,15 @@ ORDER BY doc_a, doc_b"""
    *  candidate generation — valid as the incremental oracle because
    *  fingerprints are per-document: the incremental run's candidates
    *  and verdicts are exactly the full run's, restricted. */
-  val dedupSimhashIncrementalOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
-    simhashTailSqlWith("\n    AND (a.doc_id >= 400 OR b.doc_id >= 400)")
+  val dedupSimhashIncrementalOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
+      simhashTailSqlWith("\n    AND (a.doc_id >= 400 OR b.doc_id >= 400)")
 
-  val dedupSimhashOracle: String = "WITH " + shinglesCte + """,
-shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
-    simhashTailSql
-
-  /** Oracle for the 100 TB SimHash mode (`idFamily = "poly"`): the
-   *  [[polyShidCte]] reproduces the codegen'd poly_hash gram ids
-   *  exactly, so the scale mode's fingerprints, bands, and hamming
-   *  distances are verified bit-for-bit, not just row-counted. The
-   *  Spark side fingerprints through the native simhash_fp
-   *  projection. */
-  val dedupSimhashFastOracle: String =
+  /** The [[polyShidCte]] reproduces the codegen'd poly_hash gram ids
+   *  exactly, so fingerprints, bands, and hamming distances are
+   *  verified bit-for-bit, not just row-counted. The Spark side
+   *  fingerprints through the native simhash_fp projection. */
+  val dedupSimhashOracle: String =
     "WITH RECURSIVE " + shinglesCte.trim + "," + polyShidCte + "," +
       simhashTailSql
 
@@ -3132,11 +3080,11 @@ shid AS (SELECT s.doc_id, """ + gramIdSql + " AS gid FROM shingle s)," +
   /** Shares the stride rule with [[minhashRecallSampleOracle]] and the
    *  whole fingerprint/banding chain with the dedup oracles
    *  ([[simhashFpNibSql]] verbatim over the sample-restricted shid). */
-  lazy val simhashRecallSampleOracle: String = "WITH " + shinglesCte + """,
+  lazy val simhashRecallSampleOracle: String =
+    "WITH RECURSIVE " + shinglesCte.trim + """,
 stride AS (SELECT GREATEST((COUNT(*) + 1999) // 2000, 1) AS k FROM documents),
-shid AS (SELECT s.doc_id, """ + gramIdSql + """ AS gid FROM shingle s
-         WHERE (s.doc_id // 50) % (SELECT k FROM stride) = 0),""" +
-    simhashFpNibSql + """,
+ssh AS (SELECT doc_id, gram FROM shingle WHERE (doc_id // 50) % (SELECT k FROM stride) = 0),""" +
+    polyShidOf("ssh") + "," + simhashFpNibSql + """,
 truth AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
@@ -3595,7 +3543,7 @@ ORDER BY threshold"""
    *  keeps in a bounded array); stage 2 ranks those ≤256 rows per
    *  source (bounded window, never a corpus sort) and reads the
    *  k-th minimum: est = (k−1)·2³² div h_k — integer-exact, over
-   *  the md5-prefix hash the `"md5"` gram-id family already uses.
+   *  the gram's 32-bit md5 prefix (identical in Spark and DuckDB).
    *  NOTE this is a BUCKETED-MINIMA variant of Bar-Yossef KMV, not
    *  the exact estimator: h_k is the k-th smallest of the per-bucket
    *  minima, so when two of the true k smallest hashes share a

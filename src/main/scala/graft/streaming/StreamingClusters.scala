@@ -150,32 +150,35 @@ object StreamingClusters {
    *  `localMax` bound (in pairs or in changed-cluster members): the
    *  three-probe shape (endpoint fold → touched-cluster members →
    *  touched fold) feeding the distributed incremental component
-   *  fold. Same delta, same store contract. */
+   *  fold. Same delta, same store contract. Both caches are released
+   *  whether or not the store read and the append succeed. */
   private def processPairsDistributed(batchPairs: DataFrame, batchId: Long,
                                       labelDir: String): Unit = {
     val spark = batchPairs.sparkSession
     val store = StateStores.read(spark, labelDir, labelSchema)
     val pairs = batchPairs.select("doc_a", "doc_b").cache()
-    val ends = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val endLabels = store.join(ends, "doc_id")
-      .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
-    val touchedLabelVals = endLabels.select("label").distinct()
-    val memberIds = store.join(touchedLabelVals, "label")
-      .select("doc_id").distinct()
-    val touched = ends.union(memberIds).distinct()
-    val prior = store.join(touched, "doc_id")
-      .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
-      .cache()
-    val next = Clustering.dedupClustersIncremental(prior, pairs)
-      .select(col("doc_id"), col("cluster_id").as("label"))
-    val delta = next.join(prior.withColumnRenamed("label", "old_label"),
-        Seq("doc_id"), "left")
-      .filter(col("old_label").isNull || col("old_label") =!= col("label"))
-      .select(col("doc_id"), col("label"), lit(batchId).as("batch_id"))
-    delta.write.mode("append").parquet(labelDir)
-    prior.unpersist()
-    pairs.unpersist()
+    try {
+      val ends = pairs.select(col("doc_a").as("doc_id"))
+        .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+      val endLabels = store.join(ends, "doc_id")
+        .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
+      val touchedLabelVals = endLabels.select("label").distinct()
+      val memberIds = store.join(touchedLabelVals, "label")
+        .select("doc_id").distinct()
+      val touched = ends.union(memberIds).distinct()
+      val prior = store.join(touched, "doc_id")
+        .groupBy("doc_id").agg(expr("max_by(label, batch_id)").as("label"))
+        .cache()
+      try {
+        val next = Clustering.dedupClustersIncremental(prior, pairs)
+          .select(col("doc_id"), col("cluster_id").as("label"))
+        val delta = next.join(prior.withColumnRenamed("label", "old_label"),
+            Seq("doc_id"), "left")
+          .filter(col("old_label").isNull || col("old_label") =!= col("label"))
+          .select(col("doc_id"), col("label"), lit(batchId).as("batch_id"))
+        delta.write.mode("append").parquet(labelDir)
+      } finally prior.unpersist()
+    } finally pairs.unpersist()
   }
 
   /** Offline state maintenance: fold to one row per doc and rewrite

@@ -45,21 +45,20 @@ object StreamingMinhashDedup {
    *  corpus text is not an input (audited in PlanAuditSpec: the plan's
    *  only file scans are the two stores). */
   def triggerPairs(spark: SparkSession, batch: DataFrame, shingleDir: String,
-                   sigDir: String, minJaccard: Double,
-                   idFamily: String): DataFrame =
+                   sigDir: String, minJaccard: Double): DataFrame =
     Dedup.dedupMinhashIncremental(
       StateStores.read(spark, shingleDir, shingleSchema),
-      StateStores.read(spark, sigDir, sigSchema), batch, minJaccard, idFamily)
+      StateStores.read(spark, sigDir, sigSchema), batch, minJaccard)
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
    *  extend the shingle + signature stores with the survivors' rows.
    *  All three appends are O(batch). */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
                    pairsDir: String, shingleDir: String, sigDir: String,
-                   minJaccard: Double, idFamily: String): Unit = {
+                   minJaccard: Double): Unit = {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text")
-    val pairs = triggerPairs(spark, b, shingleDir, sigDir, minJaccard, idFamily)
+    val pairs = triggerPairs(spark, b, shingleDir, sigDir, minJaccard)
       .cache()
     pairs.count() // read by the ledger append and the survivor chain
     val survivors = StreamingDedup.pairSurvivors(b, pairs, "doc").cache()
@@ -67,7 +66,7 @@ object StreamingMinhashDedup {
       Some(pairsDir -> pairs.withColumn("batch_id", lit(batchId))),
       storeDir -> survivors,
       shingleDir -> Dedup.shingles(survivors),
-      sigDir -> Dedup.minhashSignatures(survivors, idFamily))
+      sigDir -> Dedup.minhashSignatures(survivors))
     survivors.unpersist()
     pairs.unpersist()
   }
@@ -89,9 +88,8 @@ object StreamingMinhashDedup {
    *  include `doc_id` and `text`). The shingle/signature state stores
    *  are siblings of `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
-                       checkpoint: String, minJaccard: Double = 0.2,
-                       idFamily: String = "md5"): StreamingQuery =
+                       checkpoint: String, minJaccard: Double = 0.2): StreamingQuery =
     StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
       processBatch(batch, batchId, storeDir, pairsDir, shinglesOf(storeDir),
-        sigOf(storeDir), minJaccard, idFamily))
+        sigOf(storeDir), minJaccard))
 }

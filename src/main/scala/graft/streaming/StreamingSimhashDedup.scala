@@ -47,11 +47,11 @@ object StreamingSimhashDedup {
    *  not an input (audited in PlanAuditSpec: the plan's only file scan
    *  is the fp store). */
   def triggerPairs(spark: SparkSession, batch: DataFrame, fpDir: String,
-                   maxHamming: Int, idFamily: String,
+                   maxHamming: Int,
                    fpBits: Int = Dedup.SimBitsWide,
                    batchFingerprints: Option[Dedup.TaggedFingerprints] = None): DataFrame =
     Dedup.dedupSimhashIncremental(
-      StateStores.read(spark, fpDir, fpSchema), batch, maxHamming, idFamily,
+      StateStores.read(spark, fpDir, fpSchema), batch, maxHamming,
       fpBits, batchFingerprints)
 
   /** One micro-batch: detect pairs, append survivors to the doc store,
@@ -63,19 +63,18 @@ object StreamingSimhashDedup {
    *  SAME width end-to-end. */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
                    pairsDir: String, fpDir: String,
-                   maxHamming: Int, idFamily: String,
+                   maxHamming: Int,
                    fpBits: Int = Dedup.SimBitsWide): Unit = {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text")
     // r16: ONE fingerprint pass per trigger — the probe and the fp
     // store append previously each fingerprinted the batch from text;
-    // the shared frame is delta-sized and dropped below. At poly/32
+    // the shared frame is delta-sized and dropped below. At 32 bits
     // the pass is the simhash_fp projection, otherwise the
     // shingle+vote aggregation (Dedup.simhashFingerprints).
-    val batchFp = Dedup.simhashFingerprints(b, idFamily, fpBits).cache()
-    val pairs = triggerPairs(spark, b, fpDir, maxHamming, idFamily, fpBits,
-        batchFingerprints =
-          Some(Dedup.TaggedFingerprints(batchFp, idFamily, fpBits)))
+    val batchFp = Dedup.simhashFingerprints(b, fpBits).cache()
+    val pairs = triggerPairs(spark, b, fpDir, maxHamming, fpBits,
+        batchFingerprints = Some(Dedup.TaggedFingerprints(batchFp, fpBits)))
       .cache()
     pairs.count() // read by the ledger append and the survivor chain
     val survivors = StreamingDedup.pairSurvivors(b, pairs, "doc").cache()
@@ -107,9 +106,8 @@ object StreamingSimhashDedup {
    *  `storeDir`. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, maxHamming: Int = 3,
-                       idFamily: String = "md5",
                        fpBits: Int = Dedup.SimBitsWide): StreamingQuery =
     StateStores.availableNow(docs, checkpoint)((batch, batchId) =>
       processBatch(batch, batchId, storeDir, pairsDir, fpOf(storeDir),
-        maxHamming, idFamily, fpBits))
+        maxHamming, fpBits))
 }

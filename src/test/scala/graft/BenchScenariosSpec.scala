@@ -15,13 +15,14 @@ class BenchScenariosSpec extends AnyFunSuite {
     Bench.Scenarios.flatMap(s => Seq(s.keys._1, s.keys._2))
 
   /** `SparkEntry.queries` keys that the committed artifact still times
-    * but that were retired as duplicates (an alias of a base key, or
-    * the unpinned twin of an `_incr` key, against the same oracle). */
+    * but that were retired as duplicates (an alias of a base key, the
+    * unpinned twin of an `_incr` key, or the `poly` gram-id twin of a
+    * base key once `poly` became the only family). */
   private val RetiredKeys = Set(
     "winnow_fingerprints_expr", "cdc_chunk_dedup_expr", "dedup_simhash_expr",
     "span_dedup_incr_store", "cdc_chunk_dedup_incr_store", "dedup_exact_incr_store",
     "dedup_minhash_incr_store", "dedup_ngram_incr_store", "dedup_simhash_incr_store",
-    "dedup_embedding_incr_store")
+    "dedup_embedding_incr_store", "dedup_minhash_fast", "dedup_simhash_fast")
 
   test("scenario keys equal the non-SparkEntry keys of bench_local_last.json") {
     val queries = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -479,7 +479,7 @@ class PlanAuditSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog today"))
       .toDF("doc_id", "text")
     val (pairs, p) = executedPlan(graft.streaming.StreamingSimhashDedup.triggerPairs(
-      spark, batch, fpDir, 3, "md5"))
+      spark, batch, fpDir, 3))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read — and the simhash store is ONE long per
     // corpus doc, the smallest per-trigger state in the family
@@ -511,7 +511,7 @@ class PlanAuditSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank tonight"))
       .toDF("doc_id", "text")
     val (pairs, p) = executedPlan(graft.streaming.StreamingMinhashDedup.triggerPairs(
-      spark, batch, shDir, sigDir, 0.2, "md5"))
+      spark, batch, shDir, sigDir, 0.2))
     // the batch is a LocalRelation, so every file scan in the trigger
     // plan is a store read: band candidates come from the signature
     // store, exact-Jaccard verify from the shingle store — corpus text
@@ -1092,7 +1092,7 @@ class PlanAuditSpec extends SparkSpec {
         .map(_.relation.location.rootPaths.mkString(","))
 
     val (pairs, plans) = executedPlans(graft.streaming.StreamingMinhashDedup
-      .triggerPairs(spark, batch, shDir, sigDir, 0.2, "md5"))
+      .triggerPairs(spark, batch, shDir, sigDir, 0.2))
     val got = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((0L, 10L)))

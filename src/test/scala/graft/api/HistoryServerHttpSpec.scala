@@ -24,6 +24,21 @@ class HistoryServerHttpSpec extends SparkSpec {
     (status, body)
   }
 
+  /** The status of a GET whose request line is sent verbatim:
+   *  `java.net.URI` refuses a malformed percent escape, so the client
+   *  side cannot build one. */
+  private def rawStatus(port: Int, path: String): Int = {
+    val so = new java.net.Socket("127.0.0.1", port)
+    try {
+      so.getOutputStream.write(
+        s"GET $path HTTP/1.1\r\nHost: 127.0.0.1\r\nConnection: close\r\n\r\n"
+          .getBytes("US-ASCII"))
+      val status = scala.io.Source.fromInputStream(so.getInputStream, "UTF-8")
+        .getLines().next()
+      status.split(" ")(1).toInt
+    } finally so.close()
+  }
+
   /** Mirror of the server's serialization: explicit nulls (the
    *  reference serde writes Option::None as null), so the parity
    *  assertion below also pins the null-field contract. */
@@ -101,6 +116,22 @@ class HistoryServerHttpSpec extends SparkSpec {
       }
       val (s0, zero) = get(port, "/api/v1/applications?limit=0")
       assert(s0 === 200 && zero === "[]")
+    } finally http.stop()
+  }
+
+  test("a malformed percent escape in a query value is a 400, never a 500") {
+    val http = new HistoryServerHttp(spark, canon)
+    val port = http.start()
+    try {
+      for (q <- Seq("/api/v1/applications?minDate=%zz",
+                    "/api/v1/applications?limit=%zz",
+                    "/api/v1/capacity/usage-trends?startDate=%2",
+                    "/api/v1/capacity/usage-trends?endDate=2024%"))
+        assert(rawStatus(port, q) === 400, q)
+      // a well-formed escape still decodes to the unescaped value
+      val (s1, escaped) = get(port, "/api/v1/applications?limit=%31")
+      assert(s1 === 200)
+      assert(escaped === fnJson(HistoryServerApi.applications(canon, limit = 1)))
     } finally http.stop()
   }
 

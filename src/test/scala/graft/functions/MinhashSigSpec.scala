@@ -44,7 +44,7 @@ class MinhashSigSpec extends SparkSpec {
         call_function("minhash_sig",
           call_function("word_ngrams", col("text"), lit(3))).as("sig"))
       .filter(col("sig").isNotNull)
-    val aggSig = graft.pipeline.Dedup.minhashPolySignatures(docs)
+    val aggSig = graft.pipeline.Dedup.minhashSignatures(docs)
       .select(col("doc_id"),
         array((0 until 16).map(j => col(s"mh$j")): _*).as("sig_agg"))
     val joined = exprSig.join(aggSig, Seq("doc_id"), "full_outer").collect()
@@ -66,7 +66,7 @@ class MinhashSigSpec extends SparkSpec {
           call_function("word_ngrams", col("text"), lit(3)),
           lit(32)).as("sig"))
       .filter(col("sig").isNotNull)
-    val aggSig = graft.pipeline.Dedup.minhashPolySignatures(docs, numHashes = 32)
+    val aggSig = graft.pipeline.Dedup.minhashSignatures(docs, numHashes = 32)
       .select(col("doc_id"),
         array((0 until 32).map(j => col(s"mh$j")): _*).as("sig_agg"))
     val joined = exprSig.join(aggSig, Seq("doc_id"), "full_outer").collect()
@@ -82,7 +82,7 @@ class MinhashSigSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val agg = pairs(graft.pipeline.Dedup.dedupMinhash(docs,
-      idFamily = "poly", numHashes = 32, bands = 8))
+      numHashes = 32, bands = 8))
     val ex = pairs(graft.pipeline.Dedup.dedupMinhashExpr(docs,
       numHashes = 32, bands = 8))
     assert(agg === ex)

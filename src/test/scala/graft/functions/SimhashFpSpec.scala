@@ -40,11 +40,11 @@ class SimhashFpSpec extends SparkSpec {
   test("expression path fingerprints equal the aggregation path's (poly family) per doc") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    // the fingerprint pass every poly/32 caller runs vs the bit-vote
+    // the fingerprint pass every 32-bit caller runs vs the bit-vote
     // aggregation that wrote fp stores before it took over
-    val exprFp = graft.pipeline.Dedup.simhashFingerprints(docs, "poly")
+    val exprFp = graft.pipeline.Dedup.simhashFingerprints(docs)
       .withColumnRenamed("fp", "fp_expr")
-    val aggFp = graft.pipeline.Dedup.simhashVoteFingerprints(docs, "poly",
+    val aggFp = graft.pipeline.Dedup.simhashVoteFingerprints(docs,
       graft.pipeline.Dedup.SimBits)
     val joined = exprFp.join(aggFp, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("fp_expr"), col("fp"))

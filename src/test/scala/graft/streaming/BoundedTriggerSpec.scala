@@ -341,6 +341,22 @@ class BoundedTriggerSpec extends SparkSpec {
       ((100L to 111L).map(_ -> 5L) ++ Seq(5L -> 5L, 6L -> 5L, 3L -> 3L, 4L -> 3L)).toMap)
   }
 
+  test("cluster distributed fold releases its caches when the label store fails") {
+    import spark.implicits._
+    // a regular file where the label store belongs: the store read
+    // and the append both fail
+    val labels = new java.io.File(tmpDir("bt-cluster-fail"), "labels")
+    java.nio.file.Files.write(labels.toPath, "not parquet".getBytes("UTF-8"))
+    spark.catalog.clearCache()
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val err = intercept[Exception](
+      StreamingClusters.processPairs(pairs, 0L, labels.getPath, localMax = -1))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(chain.exists(_.contains(labels.getName)), chain.mkString("\n"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   /** Every executed plan that scans a file scans one of `stores`,
    *  restricted by a batch-keyed `In` or a semi-join against a
    *  `LocalRelation` of batch keys. */

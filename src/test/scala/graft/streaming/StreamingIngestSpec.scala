@@ -2,9 +2,12 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.events.EventLogFixture
+import graft.obs.WorkLedger
 import org.apache.spark.sql.functions._
 
 class StreamingIngestSpec extends SparkSpec {
+
+  private lazy val ledger = WorkLedger.install(spark)
 
   test("streaming ingest materialises the canonical frame incrementally") {
     val logs = tmpDir("stream-logs")
@@ -234,7 +237,7 @@ class StreamingIngestSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "completely different content about spark data processing at massive scale")
     ).toDF("doc_id", "text")
-    val fps = Dedup.simhashFingerprints(docs, "poly", Dedup.SimBitsWide)
+    val fps = Dedup.simhashFingerprints(docs, Dedup.SimBitsWide)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fps(0L) === fps(1L))
     assert(fps(0L) !== fps(2L))
@@ -243,13 +246,13 @@ class StreamingIngestSpec extends SparkSpec {
     // maintained store and leaves the unrelated doc alone
     val seed = docs.filter($"doc_id" === 0L || $"doc_id" === 2L)
     Dedup.writeSimhashStore(seed.select("doc_id", "text"), root + "/fp",
-      idFamily = "poly", fpBits = Dedup.SimBitsWide)
+      fpBits = Dedup.SimBitsWide)
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (11L, "entirely novel prose with no overlap whatsoever against anything before")
     ).toDF("doc_id", "text")
     StreamingSimhashDedup.processBatch(batch, 0L, root + "/corpus",
-      root + "/pairs", root + "/fp", maxHamming = 3, idFamily = "poly",
+      root + "/pairs", root + "/fp", maxHamming = 3,
       fpBits = Dedup.SimBitsWide)
     val pairs = spark.read.parquet(root + "/pairs").select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -261,9 +264,24 @@ class StreamingIngestSpec extends SparkSpec {
     // the appended store rows carry the wide width too
     val storeFps = spark.read.parquet(root + "/fp")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(storeFps(11L) === Dedup.simhashFingerprints(batch, "poly",
+    assert(storeFps(11L) === Dedup.simhashFingerprints(batch,
       Dedup.SimBitsWide).collect().map(r => r.getLong(0) -> r.getLong(1))
       .toMap.apply(11L))
+  }
+
+  test("fingerprints tagged at one width fail fast at another, before any job") {
+    import spark.implicits._
+    import graft.pipeline.Dedup
+    val docs = Seq(
+      (0L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (1L, "completely different content about spark data processing at massive scale")
+    ).toDF("doc_id", "text")
+    val tagged = Dedup.TaggedFingerprints(Dedup.simhashFingerprints(docs), Dedup.SimBits)
+    val (result, work) = ledger.measure(scala.util.Try(
+      Dedup.dedupSimhashIncremental(Dedup.simhashFingerprints(docs, Dedup.SimBitsWide),
+        docs, fpBits = Dedup.SimBitsWide, batchFingerprints = Some(tagged))))
+    assert(result.failed.get.isInstanceOf[IllegalArgumentException], result)
+    assert(work.jobs === 0L, work)
   }
 
   test("streaming simhash LEGACY 32-bit mode: explicit fpBits=SimBits still serves a 32-bit store") {
@@ -278,8 +296,7 @@ class StreamingIngestSpec extends SparkSpec {
       (0L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "completely different content about spark data processing at massive scale")
     ).toDF("doc_id", "text")
-    Dedup.writeSimhashStore(docs, root + "/fp",
-      idFamily = "poly", fpBits = Dedup.SimBits)
+    Dedup.writeSimhashStore(docs, root + "/fp", fpBits = Dedup.SimBits)
     // a 32-bit store never populates beyond bit 31
     val seeded = spark.read.parquet(root + "/fp")
       .collect().map(_.getLong(1))
@@ -289,7 +306,7 @@ class StreamingIngestSpec extends SparkSpec {
       (11L, "entirely novel prose with no overlap whatsoever against anything before")
     ).toDF("doc_id", "text")
     StreamingSimhashDedup.processBatch(batch, 0L, root + "/corpus",
-      root + "/pairs", root + "/fp", maxHamming = 3, idFamily = "poly",
+      root + "/pairs", root + "/fp", maxHamming = 3,
       fpBits = Dedup.SimBits)
     val pairs = spark.read.parquet(root + "/pairs").select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

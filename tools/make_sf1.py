@@ -38,7 +38,7 @@ def write_parts(df, path, schema=None, n_parts=32):
     file/byte-split-bounded, and the projection-only operator paths
     (e.g. the simhash_fp fingerprint pass) inherit it directly — a
     single-file sf1 serialized them (measured: the simhash_fp path,
-    then keyed dedup_simhash_expr and now run by dedup_simhash_fast,
+    then keyed dedup_simhash_expr and now run by dedup_simhash,
     31.8s single-file vs parallel over parts). A 100 TB corpus is
     thousands of files; mirror that shape."""
     import os

@@ -1,10 +1,9 @@
 #!/usr/bin/env python3
-"""Cross-engine parity check for the "poly" gram-id family.
+"""Cross-engine parity check for the `poly_hash` gram ids.
 
 graft.functions.PolyHash (Scala, code-point loop) and
 graft.pipeline.Dedup.polyShidCte (DuckDB SQL mirror) must stay in
-bit-exact lockstep — the scale-mode MinHash/SimHash oracles depend on
-it. The Scala side is pinned to the definition by PolyHashSpec; this
+bit-exact lockstep — every MinHash/SimHash oracle depends on it. The Scala side is pinned to the definition by PolyHashSpec; this
 script pins the DuckDB side, with non-ASCII inputs the parquet test
 corpora never exercise (combining marks, Devanagari clusters,
 astral-plane emoji, ZWJ sequences).
