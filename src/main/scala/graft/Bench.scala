@@ -515,13 +515,13 @@ object Bench {
     // run (`dedup_family_shared`, to compare against the sum of the
     // three cold per-query medians that each pay tokenize+gram
     // explode themselves). SimHash's 32-bit fingerprint pass is the
-    // native `simhash_fp` projection over text, so only the n-gram and
-    // MinHash members read the store.
+    // native `simhash_fp` projection over text and takes no store, so
+    // only the n-gram and MinHash members read it.
     storeRow("shingle_store_write", "dedup_family_shared", "documents")(
         Dedup.writeShingleStore(_, _)) { (docs, sh) =>
       noop(Dedup.dedupNgram(docs, precomputedShingles = sh))
       noop(Dedup.dedupMinhash(docs, precomputedShingles = sh))
-      noop(Dedup.dedupSimhash(docs, precomputedShingles = sh))
+      noop(Dedup.dedupSimhash(docs))
     },
     // Shared-quantized-store scenario, the embedding-family twin of
     // `dedup_family_shared`: materialize the (vec_id, qarr, nq) ANN

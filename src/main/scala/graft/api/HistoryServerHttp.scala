@@ -53,15 +53,14 @@ class HistoryServerHttp(spark: SparkSession, canon: DataFrame, port: Int = 0,
     pool.shutdown()
   }
 
+  /** The raw query comes from a parsed `java.net.URI`, so every
+   *  percent escape in it is well-formed: the JDK server answers a
+   *  malformed one (`%zz`) with its own 400 before any handler runs. */
   private def param(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).flatMap {
       _.split("&").iterator.map(_.split("=", 2)).collectFirst {
         case Array(k, v) if k == name =>
-          try java.net.URLDecoder.decode(v, "UTF-8")
-          catch {
-            case _: IllegalArgumentException =>
-              throw new BadRequest(s"$name has a malformed percent escape: $v")
-          }
+          java.net.URLDecoder.decode(v, "UTF-8")
       }
     }
 

@@ -364,7 +364,7 @@ ORDER BY n.source"""
       explode(call_function("word_ngrams", col("text"), lit(n))).as("gram"))
 
   /** Materialize the shingle frame once for the whole near-dup family:
-   *  every shingle consumer (`dedupNgram`/`dedupMinhash`/`dedupSimhash`
+   *  every shingle consumer (`dedupNgram`/`dedupMinhash`
    *  /`TextAnalysis.noveltyScore`) accepts it via
    *  `precomputedShingles`, so a pipeline running several near-dup
    *  passes over the same corpus pays the tokenize+gram explode once
@@ -2735,17 +2735,15 @@ ORDER BY c.doc_a, c.doc_b"""
    *  32-bit default's 256-value bands saturate (the sf10 probe,
    *  STRESS_SF1.md) — and keeps a full bit-for-bit DuckDB oracle
    *  ([[dedupSimhashWideOracle]]). At 32 bits the fingerprint pass is
-   *  the native projection of [[simhashFingerprints]] (which reads
-   *  text, not `precomputedShingles`); wider fingerprints aggregate
-   *  bit votes over the shingle frame. */
+   *  the native projection of [[simhashFingerprints]] over text;
+   *  wider fingerprints aggregate bit votes over the shingle frame,
+   *  read once, so neither takes a shingle store. */
   def dedupSimhash(docs: DataFrame, maxHamming: Int = 3,
-                   precomputedShingles: Option[DataFrame] = None,
                    fpBits: Int = SimBits): DataFrame = {
     require(fpBits % SimBands == 0, s"fpBits must be a multiple of $SimBands")
     val fp = (
       if (fpBits == SimBits) simhashFingerprints(docs)
-      else simhashFpWide(shingleIds(cachedOrStore(docs, precomputedShingles)),
-        fpBits)
+      else simhashFpWide(shingleIds(shingles(docs)), fpBits)
     ).cache() // used for banding AND the per-side fp lookup below
     val cands = saltedBucketPairs(
       simhashNibbles(fp, fpBits / SimBands), Seq("band", "nib"), "doc_id")

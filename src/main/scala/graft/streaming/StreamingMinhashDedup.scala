@@ -86,7 +86,9 @@ object StreamingMinhashDedup {
 
   /** Start the loop over a streaming documents frame (schema must
    *  include `doc_id` and `text`). The shingle/signature state stores
-   *  are siblings of `storeDir`. */
+   *  are siblings of `storeDir`; a signature store written over md5
+   *  gram ids must be rebuilt ([[Dedup.writeMinhashStore]]), since its
+   *  signatures never match today's `poly_hash` ones. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, minJaccard: Double = 0.2): StreamingQuery =
     StateStores.availableNow(docs, checkpoint)((batch, batchId) =>

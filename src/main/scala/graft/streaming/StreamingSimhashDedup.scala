@@ -103,7 +103,9 @@ object StreamingSimhashDedup {
 
   /** Start the loop over a streaming documents frame (schema must
    *  include `doc_id` and `text`). The fp state store is a sibling of
-   *  `storeDir`. */
+   *  `storeDir`; an fp store written over md5 gram ids must be rebuilt
+   *  ([[Dedup.writeSimhashStore]]), since its fingerprints are not
+   *  comparable with today's `poly_hash` ones. */
   def dedupedDocStream(docs: DataFrame, storeDir: String, pairsDir: String,
                        checkpoint: String, maxHamming: Int = 3,
                        fpBits: Int = Dedup.SimBitsWide): StreamingQuery =

@@ -120,6 +120,8 @@ class HistoryServerHttpSpec extends SparkSpec {
   }
 
   test("a malformed percent escape in a query value is a 400, never a 500") {
+    // the JDK server refuses such a request target itself, so no
+    // handler ever URL-decodes a malformed escape
     val http = new HistoryServerHttp(spark, canon)
     val port = http.start()
     try {

@@ -50,21 +50,26 @@ class PipelineSpec extends SparkSpec {
     assert(identical.getAs[Double]("abs_err") === 0.0)
     val near = out((0L, 1L)) // one-word difference: high but imperfect
     val jac = near.getAs[Double]("jaccard")
-    assert(jac > 0.8)
+    // 11 of 13 shingles shared; the frame rounds to 4 places
+    assert(math.abs(jac - 11.0 / 13.0) < 1e-4)
     // One pair is one sample of the 16-hash estimator, so its match
-    // count is checked exactly against the affine family recomputed in
-    // plain Scala over poly_hash ids, and its error against the
-    // binomial 3-sigma bound sqrt(J(1-J)/16) * 3.
+    // count is pinned to the signatures rebuilt here from the gram
+    // strings alone: gram id = sum(cp_i * 31^i) mod P over the first 64
+    // code points (poly_hash's definition, in BigInt), then the affine
+    // family min over each doc's ids.
+    def gid(g: String): Long = g.codePoints.toArray.take(64).zipWithIndex
+      .map { case (cp, i) => BigInt(cp) * BigInt(31).pow(i) }.sum
+      .mod(BigInt(Dedup.Prime)).toLong
     val gids = Dedup.shingles(docs.filter(col("doc_id") <= 1L))
-      .select(col("doc_id"), call_function("poly_hash", col("gram")))
       .collect().groupBy(_.getLong(0))
-      .map { case (d, rs) => d -> rs.map(_.getLong(1)).toSeq }
+      .map { case (d, rs) => d -> rs.map(r => gid(r.getString(1))).toSeq }
     def sig(gs: Seq[Long]) = (0 until 16).map(j =>
       gs.map(g => ((37L + 101L * j) * g + 17L + 257L * j) % Dedup.Prime).min)
     val matches = sig(gids(0L)).zip(sig(gids(1L))).count { case (a, b) => a == b }
     assert(near.getAs[Long]("matches") === matches.toLong)
     assert(matches < 16)
-    assert(near.getAs[Double]("abs_err") <= 3 * math.sqrt(jac * (1 - jac) / 16))
+    assert(math.abs(near.getAs[Double]("abs_err") -
+      math.abs(matches / 16.0 - 11.0 / 13.0)) < 1e-4)
   }
 
   test("ngram Jaccard agrees with a hand computation") {
