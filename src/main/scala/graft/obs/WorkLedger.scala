@@ -15,21 +15,30 @@ import org.apache.spark.sql.SparkSession
  *  scope's wall time; `driverGapMs` is the part of it during which no
  *  job of the scope ran (planning, driver-side collects and loops,
  *  waits). Shuffle bytes count reads and writes; spill counts memory
- *  and disk. */
+ *  and disk. `driverOutputBytes` counts the files the driver wrote
+ *  itself ([[DriverOutput]]), which no task's output metrics see. */
 final case class Work(wallMs: Double, jobs: Long, stages: Long, tasks: Long,
                       taskCpuMs: Double, shuffleBytes: Long, spillBytes: Long,
-                      inputBytes: Long, driverGapMs: Double) {
+                      inputBytes: Long, driverGapMs: Double,
+                      driverOutputBytes: Long) {
   /** The work counters, by artifact name. Wall time is not one. */
   def counters: Seq[(String, Double)] = Seq(
     "jobs" -> jobs.toDouble, "stages" -> stages.toDouble,
     "tasks" -> tasks.toDouble, "task_cpu_ms" -> taskCpuMs,
     "shuffle_bytes" -> shuffleBytes.toDouble,
     "spill_bytes" -> spillBytes.toDouble,
-    "input_bytes" -> inputBytes.toDouble, "driver_gap_ms" -> driverGapMs)
+    "input_bytes" -> inputBytes.toDouble, "driver_gap_ms" -> driverGapMs,
+    "driver_output_bytes" -> driverOutputBytes.toDouble)
 }
 
+/** `bytes` written to a file by the driver itself, so no task output
+ *  metric counts them, while the [[WorkLedger.measure]] scope `scope`
+ *  was open on the writing thread (null outside every scope). */
+final case class DriverOutput(bytes: Long, scope: String) extends SparkListenerEvent
+
 /** One `SparkListener` that bills Spark jobs, their stages and their
- *  stages' tasks to the [[measure]] scope that submitted them. The
+ *  stages' tasks, and the bytes the driver writes itself
+ *  ([[DriverOutput]]), to the [[measure]] scope that submitted them. The
  *  scope id travels as a Spark local property, so jobs submitted by
  *  threads started inside the scope (write pools, `Future`s, broadcast
  *  and subquery threads) are billed to it too. Nested scopes bill a
@@ -38,7 +47,7 @@ final class WorkLedger private (sc: SparkContext) extends SparkListener {
   import WorkLedger.ScopeKey
 
   private final class Tally {
-    var jobs, stages, tasks, cpuNs, shuffle, spill, input = 0L
+    var jobs, stages, tasks, cpuNs, shuffle, spill, input, driverOut = 0L
     val jobIntervals = mutable.ArrayBuffer.empty[(Long, Long)]
   }
 
@@ -85,6 +94,12 @@ final class WorkLedger private (sc: SparkContext) extends SparkListener {
       }
     }
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case DriverOutput(bytes, scope) if scope != null =>
+      Option(open.get(scope)).foreach(t => t.synchronized { t.driverOut += bytes })
+    case _ =>
+  }
+
   /** `body`'s result and the work of the jobs it submitted. The
    *  counters are read after the listener bus has drained, so every
    *  event of those jobs has been billed. */
@@ -105,7 +120,8 @@ final class WorkLedger private (sc: SparkContext) extends SparkListener {
         val busyMs = WorkLedger.unionMs(tally.jobIntervals.toSeq,
           startMs, startMs + wallNs / 1000000L)
         Work(wallMs, tally.jobs, tally.stages, tally.tasks, tally.cpuNs / 1e6,
-          tally.shuffle, tally.spill, tally.input, math.max(0.0, wallMs - busyMs))
+          tally.shuffle, tally.spill, tally.input, math.max(0.0, wallMs - busyMs),
+          tally.driverOut)
       })
     } finally {
       sc.setLocalProperty(ScopeKey, outer)
@@ -118,6 +134,11 @@ final class WorkLedger private (sc: SparkContext) extends SparkListener {
 object WorkLedger {
   /** The local property carrying the id of the open scope. */
   val ScopeKey = "graft.obs.scope"
+
+  /** Posts a [[DriverOutput]] of `bytes`, tagged with the scope open
+   *  on the calling thread. */
+  def driverWrote(sc: SparkContext, bytes: Long): Unit =
+    BusAccess.post(sc, DriverOutput(bytes, sc.getLocalProperty(ScopeKey)))
 
   /** A ledger registered on `spark`'s listener bus. */
   def install(spark: SparkSession): WorkLedger = {

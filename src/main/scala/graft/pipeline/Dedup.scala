@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -701,10 +701,14 @@ shid AS (
    *  same trade the IVF cell restriction itself makes. */
   val HotCellCap: Int = 4096
 
-  /** Bound for the driver-collected rare-batch-gram In-pushdown list
-   *  in [[dedupNgramIncremental]]; beyond it the trigger falls back to
-   *  the broadcast left-semi. MEASURED bound, not a memory guard: a
-   *  7.5k-string In literal in the trigger plan cost ~3-5 s of
+  /** Bound on the keys a Catalyst plan embeds as an `In` literal list:
+   *  the driver-collected rare-batch-gram list of the distributed
+   *  n-gram plan ([[dedupNgramIncremental]] over its bound) and the
+   *  DataFrame probe ([[StateStores.probe]], the bounded plans of the
+   *  DataFrame API); beyond it both fall back to a broadcast
+   *  left-semi. A trigger's own store probes ([[StateStores.Store]])
+   *  build no plan and do not read it. MEASURED bound, not a memory
+   *  guard: a 7.5k-string In literal in the trigger plan cost ~3-5 s of
    *  driver-side plan work per trigger (sf0.1 quarter-seed probe) —
    *  plan-embedded literal lists stop paying for themselves long
    *  before driver memory matters, so only compact lists (the
@@ -720,9 +724,11 @@ shid AS (
    *  rides on its first row only, so the bound also bounds the
    *  collected bytes. At
    *  or below it a trigger takes the bounded plan: the batch collected
-   *  once, each state store probed once at batch keys
-   *  ([[StateStores.probe]]), everything else on the driver, a handful
-   *  of jobs in all. Above it the distributed plan runs unchanged.
+   *  once, each state store probed once at batch keys (a trigger's
+   *  [[StateStores.Store]] probe is one parquet-reader job and no
+   *  query; the DataFrame API's is [[StateStores.probe]]), everything
+   *  else on the driver — at most four jobs (n-gram) or three (exact,
+   *  cluster). Above it the distributed plan runs unchanged.
    *  MEASURED (sf0.1 corpus, 400-doc store, batches of k shifted copies
    *  of the other 4,600 docs, local[4]; median of 3, bounded vs
    *  distributed): the exact trigger's driver work overtakes the
@@ -1910,7 +1916,10 @@ ORDER BY c.doc_a, c.doc_b"""
                             minJaccard: Double = 0.2,
                             localMax: Int = LocalTriggerMax): DataFrame =
     shingledBatch(batch, localMax)
-      .map(ngramPairsBounded(corpusShingles, corpusGramDf, _, maxDf, minJaccard))
+      .map(ngramPairsBounded(batch.sparkSession,
+        StateStores.frameProbe(corpusShingles.select("doc_id", "gram")),
+        StateStores.frameProbe(corpusGramDf.select("gram", "df_cnt")), _, maxDf,
+        minJaccard))
       .getOrElse(ngramPairsDistributed(corpusShingles, corpusGramDf, batch,
         maxDf, minJaccard))
 
@@ -1956,9 +1965,12 @@ ORDER BY c.doc_a, c.doc_b"""
     StructField("n_b", LongType)))
 
   /** [[dedupNgramIncremental]]'s bounded plan over a collected batch.
-   *  Each store is probed at batch keys and its rows collected: the
-   *  gram-df store at the batch's grams, the shingle store at the rare
-   *  batch grams and then at the candidate endpoints. The df fold,
+   *  Each store is probed at batch keys ([[StateStores.Probe]]: the
+   *  stores' own file probe in a trigger, the Catalyst probe over the
+   *  DataFrame API's frames), `shingles` as `(doc_id, gram)` rows and
+   *  `gramDf` as `(gram, df_cnt)` rows: the gram-df store at the
+   *  batch's grams, the shingle store at the rare batch grams and then
+   *  at the candidate endpoints. The df fold,
    *  rarity cut, candidate generation and intersection counts run on
    *  the driver with the distributed plan's multiset semantics — the
    *  batch's rows are added to the store's, so a replayed batch whose
@@ -1967,20 +1979,19 @@ ORDER BY c.doc_a, c.doc_b"""
    *  Catalyst expressions, projected over the `LocalRelation` of pair
    *  counts (folded on the driver, no job), so both plans agree bit
    *  for bit. Rows come out in (doc_a, doc_b) order. */
-  private[graft] def ngramPairsBounded(corpusShingles: DataFrame,
-                                       corpusGramDf: DataFrame,
+  private[graft] def ngramPairsBounded(spark: SparkSession,
+                                       shingles: StateStores.Probe,
+                                       gramDf: StateStores.Probe,
                                        docs: Seq[ShingledDoc], maxDf: Long,
                                        minJaccard: Double): DataFrame = {
     val batchSh = docs.flatMap(d => d.grams.iterator.map(d.id -> _))
     val batchIds = docs.iterator.map(_.id).toSet
     val df = mutable.HashMap.empty[String, Long]
     batchSh.foreach { case (_, g) => df(g) = df.getOrElse(g, 0L) + 1L }
-    StateStores.probeRows(corpusGramDf.select("gram", "df_cnt"), "gram",
-        df.keys.toSeq)
+    gramDf.probeRows("gram", df.keys.toSeq)
       .foreach(r => if (!r.isNullAt(1)) df(r.getString(0)) += r.getLong(1))
     val rare = df.iterator.collect { case (g, n) if n <= maxDf => g }.toSet
-    val store = corpusShingles.select("doc_id", "gram")
-    val rareSh = StateStores.probeRows(store, "gram", rare.toSeq)
+    val rareSh = shingles.probeRows("gram", rare.toSeq)
       .collect { case r if !r.isNullAt(0) => r.getLong(0) -> r.getString(1) }
       .toSeq ++ batchSh.filter(sh => rare(sh._2))
     // a candidate shares a rare gram with a batch doc, either side of it
@@ -2000,7 +2011,7 @@ ORDER BY c.doc_a, c.doc_b"""
         m(g) = m.getOrElse(g, 0L) + 1L
       }
     }
-    StateStores.probeRows(store, "doc_id", ends.toSeq)
+    shingles.probeRows("doc_id", ends.toSeq)
       .foreach(r => if (!r.isNullAt(0)) add(r.getLong(0), r.getString(1)))
     batchSh.foreach { case (d, g) => if (ends(d)) add(d, g) }
     val none = mutable.HashMap.empty[String, Long]
@@ -2009,7 +2020,7 @@ ORDER BY c.doc_a, c.doc_b"""
       val inter = ga.iterator.map { case (g, k) => k * gb.getOrElse(g, 0L) }.sum
       if (inter == 0L) None else Some(Row(a, b, inter, sizes(a), sizes(b)))
     }
-    StateStores.local(corpusShingles.sparkSession, counts, pairCountSchema)
+    StateStores.local(spark, counts, pairCountSchema)
       .withColumn("jaccard", jaccardOf)
       .filter(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
@@ -3287,16 +3298,18 @@ ORDER BY g.m_bits"""
    *
    *  Plan choice as [[dedupNgramIncremental]]'s: a batch of at most
    *  `localMax` probe rows (docs x probes, [[LocalTriggerMax]]) takes
-   *  the bounded plan
-   *  ([[exactFlagsBounded]]), a larger one (or a negative `localMax`)
-   *  the distributed plan; both return the same rows. */
+   *  the bounded plan ([[exactCopies]], then [[exactFlags]]), a larger
+   *  one (or a negative `localMax`) the distributed plan; both return
+   *  the same rows. */
   def dedupExactIncremental(corpusWords: DataFrame, corpusHashes: DataFrame,
                             batch: DataFrame,
                             mBits: Int = BloomBits,
                             probes: Int = BloomProbes,
                             localMax: Int = LocalTriggerMax): DataFrame =
     hashedBatch(batch, mBits, probes, localMax)
-      .map(exactFlagsBounded(corpusWords, corpusHashes, _, probes))
+      .map(docs => exactFlags(batch.sparkSession, exactCopies(
+        StateStores.frameProbe(corpusWords.select("word_idx", "word")),
+        StateStores.frameProbe(corpusHashes.select("content_hash")), docs, probes)))
       .getOrElse(exactFlagsDistributed(corpusWords, corpusHashes, batch,
         mBits, probes))
 
@@ -3344,40 +3357,49 @@ ORDER BY g.m_bits"""
       coalesce(col("n_corpus_copies"), lit(0L)).as("n_corpus_copies"))
 
   /** [[dedupExactIncremental]]'s bounded plan over a collected batch:
-   *  the bloom store is probed at the batch's word indexes and the hash
-   *  store at the bloom-positive docs' hashes, each once, and the
-   *  bit_or fold, all-probes test and copy count run on the driver with
-   *  the distributed plan's multiset semantics (a doc id twice in the
-   *  batch sums its probe hits, as the doc-keyed aggregate does). The
-   *  verdict columns are the same expressions, projected over the
-   *  `LocalRelation` of counts. Rows come out in doc_id order. */
-  private[graft] def exactFlagsBounded(corpusWords: DataFrame,
-                                       corpusHashes: DataFrame,
-                                       docs: Seq[HashedDoc],
-                                       probes: Int): DataFrame = {
-    val words = mutable.HashMap.empty[Int, Long]
-    StateStores.probeRows(corpusWords.select("word_idx", "word"), "word_idx",
-        docs.flatMap(_.pos.map(bloomBit(_)._1)).distinct)
+   *  the bloom store is probed at the batch's word indexes (`words`, as
+   *  `(word_idx, word)` rows) and the hash store at the bloom-positive
+   *  docs' hashes (`hashes`, as `(content_hash)` rows), each once, and
+   *  the bit_or fold, all-probes test and copy count run on the driver
+   *  with the distributed plan's multiset semantics (a doc id twice in
+   *  the batch sums its probe hits, as the doc-keyed aggregate does).
+   *  Returns the `(doc_id, n_corpus_copies)` rows the verdict is
+   *  projected from ([[exactFlags]]), in doc_id order, the count None
+   *  where no stored copy verified: a trigger takes its fresh docs from
+   *  them without a query. */
+  private[graft] def exactCopies(words: StateStores.Probe,
+                                 hashes: StateStores.Probe,
+                                 docs: Seq[HashedDoc],
+                                 probes: Int): Seq[(Long, Option[Long])] = {
+    val bloom = mutable.HashMap.empty[Int, Long]
+    words.probeRows("word_idx", docs.flatMap(_.pos.map(bloomBit(_)._1)).distinct)
       .foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1))
-        words(r.getInt(0)) = words.getOrElse(r.getInt(0), 0L) | r.getLong(1))
+        bloom(r.getInt(0)) = bloom.getOrElse(r.getInt(0), 0L) | r.getLong(1))
     val hits = docs.groupMapReduce(_.id)(_.pos.count { p =>
       val (w, bit) = bloomBit(p)
-      words.get(w).exists(x => (x & bit) != 0L)
+      bloom.get(w).exists(x => (x & bit) != 0L)
     }.toLong)(_ + _)
     val cands = docs.filter(d => hits(d.id) == probes && d.hash != null)
     val copies = mutable.HashMap.empty[String, Long]
-    StateStores.probeRows(corpusHashes.select("content_hash"), "content_hash",
-        cands.map(_.hash).distinct)
+    hashes.probeRows("content_hash", cands.map(_.hash).distinct)
       .foreach(r => if (!r.isNullAt(0))
         copies(r.getString(0)) = copies.getOrElse(r.getString(0), 0L) + 1L)
     val verified = cands.flatMap(d => copies.get(d.hash).map(d.id -> _))
       .groupMap(_._1)(_._2)
-    val rows = docs.sortBy(_.id).flatMap(d => verified.get(d.id) match {
-      case Some(ns) => ns.map(n => Row(d.id, n))
-      case None => Seq(Row(d.id, null))
+    docs.sortBy(_.id).flatMap(d => verified.get(d.id) match {
+      case Some(ns) => ns.map(n => d.id -> Some(n))
+      case None => Seq(d.id -> None)
     })
-    exactVerdict(StateStores.local(corpusWords.sparkSession, rows, copiesSchema))
   }
+
+  /** The bounded plan's verdict: the same expressions as the
+   *  distributed plan's ([[exactVerdict]]), projected over the
+   *  `LocalRelation` of [[exactCopies]]' rows (folded on the driver,
+   *  no job). */
+  private[graft] def exactFlags(spark: SparkSession,
+                                copies: Seq[(Long, Option[Long])]): DataFrame =
+    exactVerdict(StateStores.local(spark,
+      copies.map { case (d, n) => Row(d, n.map(Long.box).orNull) }, copiesSchema))
 
   /** [[dedupExactIncremental]]'s distributed plan, for batches over its
    *  bound. The hash store is restricted to the candidates' hashes by a

@@ -22,8 +22,10 @@ import graft.pipeline.{Clustering, Dedup}
  * (the label frame subsumes them) — and appends one delta row per
  * label that CHANGED or appeared, stamped with the batch id. A batch
  * within [[Dedup.LocalTriggerMax]] pairs runs the bounded-trigger
- * kernel (see [[processPairs]]): two batch-keyed store probes, the
- * fold on the driver, one driver-written delta file, no write job.
+ * kernel (see [[processPairs]]): two batch-keyed store probes
+ * ([[StateStores.Store]]: one parquet-reader job each, no query), the
+ * fold on the driver, one driver-written delta file, no write job —
+ * three jobs with the pairs collect.
  * Any other batch — more pairs than that, or changed clusters holding
  * more stored rows than that — runs the distributed fold
  * ([[processPairsDistributed]]).
@@ -62,10 +64,10 @@ object StreamingClusters {
    *
    *  A batch of at most `localMax` pairs ([[Dedup.LocalTriggerMax]])
    *  runs the bounded-trigger kernel: the pairs are collected once and
-   *  the label store is probed exactly twice at batch keys
-   *  ([[StateStores.probe]] — no full-store `max_by` fold ever runs in
-   *  a trigger), each probe's rows folded latest-batch-wins on the
-   *  driver, with no exchange:
+   *  the label store is probed exactly twice at batch keys by its file
+   *  probe ([[StateStores.Store]] — no query, and no full-store
+   *  `max_by` fold ever runs in a trigger), each probe's rows folded
+   *  latest-batch-wins on the driver, with no exchange:
    *
    *  1. endpoint probe — the batch endpoints' current labels; the batch
    *     pairs CONTRACT to them, and components run as a driver
@@ -84,7 +86,7 @@ object StreamingClusters {
    *  clusters match neither probe and contribute no rows. The member
    *  probe is the one collect the batch does not bound — one pair can
    *  bridge a cluster of millions — so it collects at most `localMax`
-   *  rows ([[StateStores.probeRowsWithin]]).
+   *  rows ([[StateStores.Store.probeRowsWithin]]).
    *
    *  Every other case runs [[processPairsDistributed]]: a batch past
    *  `localMax` pairs (or a negative `localMax`), and a batch whose
@@ -101,9 +103,9 @@ object StreamingClusters {
     if (pairs.length > localMax) {
       processPairsDistributed(batchPairs, batchId, labelDir); return
     }
-    val store = StateStores.read(spark, labelDir, labelSchema)
+    val store = StateStores.Store(spark, labelDir, labelSchema)
     val endIds = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val endLabels = latestLabels(StateStores.probeRows(store, "doc_id", endIds.toSeq))
+    val endLabels = latestLabels(store.probeRows("doc_id", endIds.toSeq))
     // union-find over the contracted edges; min-id root = new label
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -131,7 +133,7 @@ object StreamingClusters {
     // The changed clusters' members are bounded by their size, not by
     // the batch: past `localMax` stored rows nothing is written yet,
     // so the whole batch folds distributed instead.
-    StateStores.probeRowsWithin(store, "label", changed.keys.toSeq, localMax) match {
+    store.probeRowsWithin("label", changed.keys.toSeq, localMax) match {
       case Some(members) =>
         val deltaPrior = latestLabels(members).toSeq.sorted
           .map { case (d, l) => Row(d, changed(l), batchId) }

@@ -15,13 +15,16 @@ import graft.pipeline.Dedup
  *
  * Spark-native shape: `foreachBatch` turns each micro-batch into a
  * bounded frame. A batch within [[graft.pipeline.Dedup.LocalTriggerMax]]
- * shingle rows is collected once; each state store is then probed once at batch
- * keys (the gram-df store at the batch grams, the shingle store at the
- * rare batch grams and at the candidate endpoints) and the df fold,
- * candidates, Jaccard, survivor rule and deltas run on the driver
+ * shingle rows is collected once; each state store is then probed at
+ * batch keys by its own file probe ([[StateStores.Store]]: one
+ * parquet-reader job, no query) — the gram-df store at the batch
+ * grams, the shingle store at the rare batch grams and at the
+ * candidate endpoints — and the df fold, candidates, Jaccard, survivor
+ * rule and deltas run on the driver
  * ([[graft.pipeline.Dedup.ngramPairsBounded]]); every append is one
- * file the driver writes ([[StateStores.Rows]]), with no job. A larger
- * batch runs the distributed plan:
+ * file the driver writes ([[StateStores.Rows]]), with no job. The
+ * batch collect and the three probes are the trigger's four jobs. A
+ * larger batch runs the distributed plan:
  * [[graft.pipeline.Dedup.dedupNgramIncremental]] joins it against the
  * accumulated state with the batch restriction BELOW the pair join,
  * and the survivor and shingle frames it appends are cached for the
@@ -74,17 +77,31 @@ object StreamingDedup {
 
   /** The near-dup pair frame for one micro-batch, built ONLY from the
    *  maintained shingle/gram-df stores + the batch itself — corpus
-   *  text is not an input (audited in PlanAuditSpec: the plan's only
-   *  file scans are the two stores). Exposed for testing; the
-   *  streaming loop calls it per trigger. `localMax` is
-   *  [[Dedup.dedupNgramIncremental]]'s plan bound. */
+   *  text is not an input (audited in PlanAuditSpec and
+   *  BoundedTriggerSpec: the only stores read are the two state
+   *  stores). Exposed for testing; the streaming loop calls it per
+   *  trigger. A batch within `localMax`
+   *  ([[Dedup.dedupNgramIncremental]]'s plan bound) probes the stores
+   *  by file ([[StateStores.Store]]); a larger one runs
+   *  [[Dedup.dedupNgramIncremental]]'s distributed plan over them. */
   def triggerPairs(spark: SparkSession, batch: DataFrame, shingleDir: String,
                    gramDfDir: String, maxDf: Long, minJaccard: Double,
                    localMax: Int = Dedup.LocalTriggerMax): DataFrame =
-    Dedup.dedupNgramIncremental(
-      StateStores.read(spark, shingleDir, shingleSchema),
-      StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf,
-      minJaccard, localMax)
+    Dedup.shingledBatch(batch, localMax) match {
+      case Some(docs) =>
+        boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard)
+      case None => Dedup.dedupNgramIncremental(
+        StateStores.read(spark, shingleDir, shingleSchema),
+        StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf,
+        minJaccard, localMax = -1)
+    }
+
+  private def boundedPairs(spark: SparkSession, docs: Seq[Dedup.ShingledDoc],
+                           shingleDir: String, gramDfDir: String, maxDf: Long,
+                           minJaccard: Double): DataFrame =
+    Dedup.ngramPairsBounded(spark,
+      StateStores.Store(spark, shingleDir, shingleSchema),
+      StateStores.Store(spark, gramDfDir, gramDfSchema), docs, maxDf, minJaccard)
 
   /** The survivor rule (see the header) of a batch keyed by `<key>_id`
    *  against its (`<key>_a` < `<key>_b`)-oriented pairs: `<key>_b` of
@@ -123,14 +140,12 @@ object StreamingDedup {
    *  rule and the shingle and gram-df deltas run on the driver over the
    *  collected batch, and the four appends (the pairs ledger is the
    *  collected pairs plus `batch_id`) are driver-written files — the
-   *  batch collect and the store probes are its only jobs. */
+   *  batch collect and the three store probes are its only jobs. */
   private def processBounded(docs: Seq[Dedup.ShingledDoc], spark: SparkSession,
                              batchId: Long, storeDir: String, pairsDir: String,
                              shingleDir: String, gramDfDir: String,
                              maxDf: Long, minJaccard: Double): Unit = {
-    val pairs = Dedup.ngramPairsBounded(
-      StateStores.read(spark, shingleDir, shingleSchema),
-      StateStores.read(spark, gramDfDir, gramDfSchema), docs, maxDf, minJaccard)
+    val pairs = boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard)
     val pairRows = pairs.collect()
     val batchIds = docs.iterator.map(_.id).toSet
     val dropped = pairRows.flatMap { r =>
@@ -184,10 +199,11 @@ object StreamingDedup {
    *  the SUM-fold is exactly what every read does anyway. */
   def compactState(spark: SparkSession, storeDir: String): Unit = {
     val (shDir, dfDir) = (shinglesOf(storeDir), gramDfOf(storeDir))
-    // sortWithinPartitions: tight per-row-group gram min/max, so the
-    // trigger's pushed-down rare-gram In predicate (dedupNgram
-    // Incremental's r17 shape) row-group-skips the non-matching bulk
-    // of a compacted store.
+    // sortWithinPartitions: tight per-row-group gram min/max, so a
+    // trigger's gram probe row-group-skips the non-matching bulk of a
+    // compacted store — the store probe on its pushed-down key range
+    // (StateStores.Store), the DataFrame probe and the distributed
+    // plan on their pushed-down In.
     StateStores.swapIn(spark, shDir)(tmp =>
       spark.read.schema(shingleSchema).parquet(shDir)
         .repartition(32, col("gram"))

@@ -31,9 +31,11 @@ import graft.pipeline.Dedup
  * runs that logic on the driver: collected once, one row per doc with
  * its md5 and probe positions, it probes the bloom store at its word
  * indexes and the hash store at its bloom-positive hashes (one
- * batch-keyed scan each), and every append is one file the driver
- * writes ([[StateStores.Rows]]), with no job; a larger batch runs the
- * distributed plan. Both write the same rows.
+ * parquet-reader job each, [[StateStores.Store]], no query), and every
+ * append is one file the driver writes ([[StateStores.Rows]]), with no
+ * job — at most three jobs, none for a `LocalRelation` batch's
+ * collect; a larger batch runs the distributed plan. Both write the
+ * same rows.
  *
  * Write ordering is [[StateStores.commit]]'s: the doc append commits
  * before the hash and bloom appends start. A replayed batch
@@ -57,16 +59,29 @@ object StreamingExactDedup {
   private def bloomOf(storeDir: String) = storeDir + "_bloom"
 
   /** One micro-batch's dup verdict, built ONLY from the two state
-   *  stores + the batch (exposed for testing and the plan audit):
-   *  (doc_id, is_dup, n_corpus_copies) per batch doc. `localMax` is
-   *  [[Dedup.dedupExactIncremental]]'s plan bound. */
+   *  stores + the batch (exposed for testing and the store audits):
+   *  (doc_id, is_dup, n_corpus_copies) per batch doc. A batch within
+   *  `localMax` ([[Dedup.dedupExactIncremental]]'s plan bound) probes
+   *  the stores by file ([[StateStores.Store]]); a larger one runs
+   *  [[Dedup.dedupExactIncremental]]'s distributed plan over them. */
   def triggerFlags(spark: SparkSession, batch: DataFrame, hashDir: String,
                    wordsDir: String, mBits: Int, probes: Int,
                    localMax: Int = Dedup.LocalTriggerMax): DataFrame =
-    Dedup.dedupExactIncremental(
-      StateStores.read(spark, wordsDir, wordSchema),
-      StateStores.read(spark, hashDir, hashSchema), batch, mBits, probes,
-      localMax)
+    Dedup.hashedBatch(batch, mBits, probes, localMax) match {
+      case Some(docs) =>
+        Dedup.exactFlags(spark, copies(spark, docs, hashDir, wordsDir, probes))
+      case None => Dedup.dedupExactIncremental(
+        StateStores.read(spark, wordsDir, wordSchema),
+        StateStores.read(spark, hashDir, hashSchema), batch, mBits, probes,
+        localMax = -1)
+    }
+
+  /** [[Dedup.exactCopies]] over the two stores' file probes. */
+  private def copies(spark: SparkSession, docs: Seq[Dedup.HashedDoc],
+                     hashDir: String, wordsDir: String, probes: Int) =
+    Dedup.exactCopies(StateStores.Store(spark, wordsDir, wordSchema),
+      StateStores.Store(spark, hashDir, hashSchema).select("content_hash"),
+      docs, probes)
 
   /** One micro-batch of the loop: flag corpus dups, collapse
    *  batch-internal copies (smallest doc_id wins — the
@@ -87,21 +102,20 @@ object StreamingExactDedup {
     }
   }
 
-  /** The bounded trigger: the verdict is a `LocalRelation` (see
-   *  [[Dedup.exactFlagsBounded]]), the in-batch collapse and the bloom
-   *  delta run on the driver over the collected batch (its probe
+  /** The bounded trigger: the fresh docs are the copy counts'
+   *  unverified rows ([[Dedup.exactCopies]]; a verified count is at
+   *  least one, so exactly the rows the verdict flags `is_dup` = 0),
+   *  taken on the driver without a query; the in-batch collapse and the
+   *  bloom delta run on the driver over the collected batch (its probe
    *  positions are the ones [[Dedup.bloomWords]] would set), and the
    *  three appends are driver-written files — the batch collect (none
-   *  for a `LocalRelation` batch) and the store probes are its only
+   *  for a `LocalRelation` batch) and the two store probes are its only
    *  jobs. */
   private def processBounded(docs: Seq[Dedup.HashedDoc], spark: SparkSession,
                              storeDir: String, hashDir: String,
                              wordsDir: String, probes: Int): Unit = {
-    val flags = Dedup.exactFlagsBounded(
-      StateStores.read(spark, wordsDir, wordSchema),
-      StateStores.read(spark, hashDir, hashSchema), docs, probes)
-    val fresh = flags.filter(col("is_dup") === 0L).select("doc_id").collect()
-      .groupMapReduce(_.getLong(0))(_ => 1)(_ + _)
+    val fresh = copies(spark, docs, hashDir, wordsDir, probes)
+      .collect { case (id, None) => id }.groupMapReduce(identity)(_ => 1)(_ + _)
     val survivors = docs.flatMap(d => Seq.fill(fresh.getOrElse(d.id, 0))(d))
       .groupBy(d => Option(d.hash)).values.map(_.minBy(_.id)).toSeq
     val words = survivors.flatMap(_.pos.map(Dedup.bloomBit))

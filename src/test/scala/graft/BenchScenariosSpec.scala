@@ -42,7 +42,7 @@ class BenchScenariosSpec extends AnyFunSuite {
     def work(wallMs: Double, jobs: Long, cpuMs: Double, shuffle: Long): Map[String, Double] =
       Bench.counterMedians(Seq(Work(wallMs, jobs, stages = 2 * jobs, tasks = 8 * jobs,
         cpuMs, shuffle, spillBytes = 0L, inputBytes = 1L << 20,
-        driverGapMs = wallMs / 2))).toMap
+        driverGapMs = wallMs / 2, driverOutputBytes = 0L))).toMap
     val k = "stream_trigger_full_corpus"
     val prev = Map(k -> work(1000, 5, 800, 4096))
     def flagged(now: Map[String, Double]) = Bench.triggerRegressions(Map(k -> now), prev)

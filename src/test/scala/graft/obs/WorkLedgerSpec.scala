@@ -3,7 +3,7 @@ package graft.obs
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.SparkSpec
-import graft.streaming.StateStores
+import graft.streaming.{StateStores, StreamingDedup}
 import org.apache.spark.graft.BusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
@@ -91,5 +91,25 @@ class WorkLedgerSpec extends SparkSpec {
     assert(b.jobs === 1)
     assert(a.jobs + b.jobs === jobs)
     assert(a.tasks === 12 && b.tasks === 6)
+  }
+
+  test("a bounded n-gram trigger bills the bytes of the four files the driver wrote") {
+    import spark.implicits._
+    val root = tmpDir("ledger-driver-out") + "/c"
+    val stores = Seq(root, root + "_pairs", root + "_shingles", root + "_gramdf")
+    def trigger(batch: Seq[(Long, String)], id: Long) =
+      StreamingDedup.processBatch(batch.toDF("doc_id", "text"), id, root,
+        root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2)
+    def partFiles = stores.flatMap(d => new java.io.File(d).listFiles()
+      .filter(_.getName.startsWith("part-")).map(f => f.getPath -> f.length()))
+    trigger(Seq((0L, "alpha beta gamma delta epsilon zeta eta theta")), 0L)
+    val before = partFiles.toMap
+    val (_, w) = ledger.measure(trigger(Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta iota"),
+      (2L, "kappa lambda mu nu xi omicron pi rho")), 1L))
+    val written = partFiles.filterNot(f => before.contains(f._1))
+    assert(written.length === 4, written)
+    assert(w.driverOutputBytes === written.map(_._2).sum, w)
+    assert(w.counters.toMap.get("driver_output_bytes") === Some(w.driverOutputBytes.toDouble))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.obs.WorkLedger
 import graft.pipeline.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -12,13 +12,19 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.graft.BusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
 
 /** The bounded plans of the two dedup triggers
- *  ([[Dedup.ngramPairsBounded]], [[Dedup.exactFlagsBounded]] and the
+ *  ([[Dedup.ngramPairsBounded]], [[Dedup.exactCopies]] and the
  *  `processBatch` that runs them) against the distributed plans they
  *  stand in for, forced through the `localMax` bound: the same rows in
  *  the same order, the same store contents, a fixed job budget, and
- *  only batch-keyed store probes. */
+ *  only batch-keyed store probes — Catalyst probes over the DataFrame
+ *  API's frames, file probes ([[StateStores.Store]]) of the stores a
+ *  trigger names. */
 class BoundedTriggerSpec extends SparkSpec {
 
   private lazy val ledger = WorkLedger.install(spark)
@@ -309,12 +315,12 @@ class BoundedTriggerSpec extends SparkSpec {
     assert(StreamingClusters.readLabels(spark, labels).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L, 5L -> 5L, 30L -> 5L))
-    // the appends run no job: n-gram: batch collect, three store probes
-    // (two jobs each when a probe's keys take the broadcast semi-join);
+    // the appends run no job, and a store probe is one job with no
+    // broadcast build: n-gram: batch collect, three store probes;
     // exact: batch collect, two store probes; cluster: pairs collect,
     // endpoint probe, changed-label probe
-    assert(ngram.jobs <= 7, ngram)
-    assert(exact.jobs <= 5, exact)
+    assert(ngram.jobs <= 4, ngram)
+    assert(exact.jobs <= 3, exact)
     assert(cluster.jobs <= 3, cluster)
   }
 
@@ -384,10 +390,14 @@ class BoundedTriggerSpec extends SparkSpec {
     }
   }
 
+  /** The DataFrame API's n-gram trigger over the stores under `root`. */
+  private def ngramFrames(root: String, batch: DataFrame) =
+    Dedup.dedupNgramIncremental(spark.read.parquet(root + "_shingles"),
+      spark.read.parquet(root + "_gramdf"), batch, 5L, 0.2)
+
   test("n-gram bounded trigger: every file scan is a batch-keyed state-store probe") {
     val (root, batch) = populated("bt-audit-n")
-    val (pairs, plans) = executedPlans(StreamingDedup.triggerPairs(spark, batch,
-      root + "_shingles", root + "_gramdf", 5L, 0.2))
+    val (pairs, plans) = executedPlans(ngramFrames(root, batch))
     assert(isLocal(pairs) && pairs.count() > 0)
     assertStoreProbes(plans, Seq("c_shingles", "c_gramdf"))
     // the candidate probes ran: gram-df, rare grams, endpoints
@@ -403,8 +413,7 @@ class BoundedTriggerSpec extends SparkSpec {
       root + "_gramdf", 5L, 0.2)
     val batch = (100L until 200L).map(d => (d, words(d - 100L).updated(29, "changed")
       .mkString(" "))).toDF("doc_id", "text")
-    val (pairs, plans) = executedPlans(StreamingDedup.triggerPairs(spark, batch,
-      root + "_shingles", root + "_gramdf", 5L, 0.2))
+    val (pairs, plans) = executedPlans(ngramFrames(root, batch))
     assert(pairs.count() === 100)
     assertStoreProbes(plans, Seq("c_shingles", "c_gramdf"))
     assert(plans.exists(_.exists {
@@ -416,11 +425,106 @@ class BoundedTriggerSpec extends SparkSpec {
   test("exact bounded trigger: every file scan is a batch-keyed state-store probe") {
     val (root, _) = populated("bt-audit-x")
     val batch = arrivals(documents("sf0.001")).localCheckpoint()
-    val (flags, plans) = executedPlans(StreamingExactDedup.triggerFlags(spark,
-      batch, root + "_hashes", root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes))
+    val (flags, plans) = executedPlans(Dedup.dedupExactIncremental(
+      spark.read.parquet(root + "_bloom"), spark.read.parquet(root + "_hashes"),
+      batch))
     assert(isLocal(flags))
     assert(flags.filter(col("is_dup") === 1L).count() > 0)
     assertStoreProbes(plans, Seq("c_hashes", "c_bloom"))
     assert(plans.count(_.exists(_.isInstanceOf[FileSourceScanExec])) === 2)
+  }
+
+  /** The probe jobs `body` runs, as (store dir name, key column, key
+   *  count) from their [[StateStores.probeDescription]], after checking
+   *  that every other job is the batch collect: they all run before the
+   *  first probe (`take` over a batch of several partitions may take
+   *  more than one job). */
+  private def storeProbes(body: => Any): Seq[(String, String, Int)] = {
+    val Probe = """state-store probe: (.+) on (\w+), (\d+) keys""".r
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = descs.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    BusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; BusAccess.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = descs.asScala.toSeq
+    assert(!jobs.dropWhile(!Probe.matches(_)).exists(!Probe.matches(_)), jobs)
+    jobs.collect { case Probe(dir, key, n) => (new Path(dir).getName, key, n.toInt) }
+  }
+
+  /** Every probe is of one of `stores` (name -> the key columns it is
+   *  probed on), at batch keys, and none reads a docs store of `docs`. */
+  private def assertNamedStores(probes: Seq[(String, String, Int)],
+                                stores: Map[String, Set[String]],
+                                docs: Set[String]): Unit =
+    for ((store, key, n) <- probes) {
+      assert(!docs(store), probes)
+      assert(stores.get(store).exists(_(key)), probes)
+      assert(n > 0, probes)
+    }
+
+  /** The distinct grams of `batch`'s shingles. */
+  private def batchGrams(batch: DataFrame) =
+    Dedup.shingles(batch).select("gram").distinct().count().toInt
+
+  test("n-gram bounded trigger, store path: every job but the batch collect probes a named state store") {
+    val (root, batch) = populated("bt-store-n")
+    val stores = Map("c_shingles" -> Set("gram", "doc_id"), "c_gramdf" -> Set("gram"))
+    var pairs: Array[Row] = null
+    val viaPairs = storeProbes {
+      pairs = StreamingDedup.triggerPairs(spark, batch, root + "_shingles",
+        root + "_gramdf", 5L, 0.2).collect()
+    }
+    assert(pairs.nonEmpty)
+    assert(pairs.toSeq === ngramFrames(root, batch).collect().toSeq)
+    val viaBatch = storeProbes(StreamingDedup.processBatch(batch, 1L, root + "_n",
+      root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
+    for (probes <- Seq(viaPairs, viaBatch)) {
+      assertNamedStores(probes, stores, Set("c_ndocs", "c_n"))
+      // gram-df at every batch gram, shingles at the rare ones, then at
+      // the candidate endpoints
+      assert(probes.map(p => (p._1, p._2)) ===
+        Seq(("c_gramdf", "gram"), ("c_shingles", "gram"), ("c_shingles", "doc_id")))
+      assert(probes.head._3 === batchGrams(batch))
+    }
+  }
+
+  test("exact bounded trigger, store path: every job but the batch collect probes a named state store") {
+    val (root, _) = populated("bt-store-x")
+    val batch = arrivals(documents("sf0.001")).localCheckpoint()
+    val stores = Map("c_bloom" -> Set("word_idx"), "c_hashes" -> Set("content_hash"))
+    var flags: Array[Row] = null
+    val viaFlags = storeProbes {
+      flags = StreamingExactDedup.triggerFlags(spark, batch, root + "_hashes",
+        root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes).collect()
+    }
+    assert(flags.count(_.getLong(1) == 1L) > 0)
+    assert(flags.toSeq === Dedup.dedupExactIncremental(spark.read.parquet(root + "_bloom"),
+      spark.read.parquet(root + "_hashes"), batch).collect().toSeq)
+    val viaBatch = storeProbes(StreamingExactDedup.processBatch(batch, 1L,
+      root + "_x", root + "_hashes", root + "_bloom", Dedup.BloomBits,
+      Dedup.BloomProbes))
+    val docs = batch.count().toInt
+    for (probes <- Seq(viaFlags, viaBatch)) {
+      assertNamedStores(probes, stores, Set("c_xdocs", "c_x"))
+      assert(probes.map(p => (p._1, p._2)) ===
+        Seq(("c_bloom", "word_idx"), ("c_hashes", "content_hash")))
+      assert(probes.head._3 <= docs * Dedup.BloomProbes && probes(1)._3 <= docs, probes)
+    }
+  }
+
+  test("cluster bounded trigger, store path: both label probes are file probes of the label store") {
+    import spark.implicits._
+    val labels = tmpDir("bt-store-c") + "/labels"
+    StreamingClusters.processPairs(Seq((10L, 11L), (20L, 21L)).toDF("doc_a", "doc_b"),
+      0L, labels)
+    val probes = storeProbes(StreamingClusters.processPairs(
+      Seq((11L, 20L), (5L, 30L)).toDF("doc_a", "doc_b"), 1L, labels))
+    // the endpoints 11, 20, 5, 30; then the one changed label, 20
+    assert(probes === Seq(("labels", "doc_id", 4), ("labels", "label", 1)))
   }
 }

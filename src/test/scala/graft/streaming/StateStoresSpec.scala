@@ -271,12 +271,144 @@ class StateStoresSpec extends SparkSpec {
     val dir = tmpDir("probe-within") + "/s"
     (1L to 10L).map(i => (i, i % 2)).toDF("doc_id", "label")
       .write.parquet(dir)
-    val store = spark.read.parquet(dir)
-    val odd = StateStores.probeRowsWithin(store, "label", Seq(1L), 5)
+    val store = StateStores.Store(spark, dir, read(dir).schema)
+    val odd = store.probeRowsWithin("label", Seq(1L), 5)
     assert(odd.map(_.map(_.getLong(0)).sorted.toSeq) === Some(Seq(1L, 3L, 5L, 7L, 9L)))
-    assert(StateStores.probeRowsWithin(store, "label", Seq(1L), 4) === None)
-    assert(StateStores.probeRowsWithin(store, "label", Seq(0L, 1L), 9) === None)
-    assert(StateStores.probeRowsWithin(store, "label", Nil, 0).map(_.length) === Some(0))
+    assert(store.probeRowsWithin("label", Seq(1L), 4) === None)
+    assert(store.probeRowsWithin("label", Seq(0L, 1L), 9) === None)
+    assert(store.probeRowsWithin("label", Nil, 0).map(_.length) === Some(0))
+  }
+
+  private lazy val ledger = graft.obs.WorkLedger.install(spark)
+
+  private val probeSchema = StructType(Seq(StructField("s", StringType),
+    StructField("i", IntegerType), StructField("l", LongType)))
+
+  /** `rows` of [[probeSchema]] appended to `dir` as one file. */
+  private def appendRows(dir: String, rows: Seq[Row]): Unit =
+    StateStores.writeRows(spark, dir, rows, probeSchema)
+
+  /** `body` with the probe's filter pushed into every file: it goes
+   *  only into files over the open cost, and these files are tiny. */
+  private def filteringAll[T](body: => T): T = {
+    val conf = "spark.sql.files.openCostInBytes"
+    spark.conf.set(conf, 0L)
+    try body finally spark.conf.unset(conf)
+  }
+
+  /** The store probe's rows at `keys`, asserted to be the rows of the
+   *  Catalyst filter `isin` over the same store, in any order. */
+  private def probeParity(dir: String, key: String, keys: Seq[Any]): Seq[Row] = {
+    def sorted(rs: Seq[Row]) = rs.map(_.toSeq.mkString("|")).sorted
+    val got = StateStores.Store(spark, dir, probeSchema).probeRows(key, keys).toSeq
+    assert(sorted(got) === sorted(read(dir).filter(col(key).isin(keys: _*))
+      .collect().toSeq), s"$key in $keys")
+    got
+  }
+
+  test("store probe: the rows of an isin filter for string, int and long keys, nulls in the store and the keys") {
+    val dir = tmpDir("probe-parity") + "/s"
+    // three files; null in every column somewhere, duplicate keys too
+    for (f <- 0 until 3) appendRows(dir, (0 until 40).map { i =>
+      val n = f * 40 + i
+      Row(if (n % 9 == 0) null else s"k${n % 25}", if (n % 7 == 0) null else n % 30,
+        if (n % 11 == 0) null else n.toLong % 35)
+    })
+    def checks(): Unit = {
+      assert(probeParity(dir, "s", Seq("k1", "k7", null, "absent")).nonEmpty)
+      assert(probeParity(dir, "i", Seq(3, null, 29, 99)).nonEmpty)
+      assert(probeParity(dir, "l", Seq(0L, 34L, null)).nonEmpty)
+      // past the In bound the range is pushed down instead
+      assert(probeParity(dir, "s", (0 until 15).map(k => s"k$k") :+ null).nonEmpty)
+      assert(probeParity(dir, "i", (5 until 20) :+ null).nonEmpty)
+      assert(probeParity(dir, "l", (10L until 30L).map(Long.box) :+ null).nonEmpty)
+      assert(probeParity(dir, "s", Seq(null)).isEmpty)
+    }
+    // with the filter pushed into no file (they are tiny) and into all
+    checks()
+    filteringAll(checks())
+  }
+
+  test("store probe: an absent store gives no rows and runs no job") {
+    val dir = tmpDir("probe-absent") + "/s"
+    val (rows, w) = ledger.measure(
+      StateStores.Store(spark, dir, probeSchema).probeRows("s", Seq("a")))
+    assert(rows.isEmpty)
+    assert(w.jobs === 0)
+    assert(!new java.io.File(dir).exists())
+  }
+
+  test("store probe: a store left at <dir>.compact-old is renamed back and read") {
+    val dir = tmpDir("probe-old") + "/s"
+    appendRows(dir, Seq(Row("a", 1, 1L), Row("b", 2, 2L)))
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir),
+      java.nio.file.Paths.get(dir + ".compact-old"))
+    val got = StateStores.Store(spark, dir, probeSchema).probeRows("s", Seq("b"))
+    assert(got.toSeq === Seq(Row("b", 2, 2L)))
+    assert(new java.io.File(dir).isDirectory)
+    assert(!new java.io.File(dir + ".compact-old").exists())
+  }
+
+  test("store probe: hidden temp files, _SUCCESS and _temporary/ are not read") {
+    val dir = tmpDir("probe-hidden") + "/s"
+    appendRows(dir, Seq(Row("a", 1, 1L), Row("b", 2, 2L)))
+    val part = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+    // a copy of the part file under each hidden name would double the rows
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(dir, s".${part.getName}.tmp"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
+    val tmp = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "_temporary", "0"))
+    java.nio.file.Files.copy(part.toPath, tmp.resolve(part.getName))
+    val got = StateStores.Store(spark, dir, probeSchema).probeRows("s", Seq("a", "b"))
+    assert(got.map(_.getString(0)).sorted.toSeq === Seq("a", "b"))
+  }
+
+  test("store probe: a file larger than maxPartitionBytes splits across tasks, each row read once") {
+    val dir = tmpDir("probe-split") + "/s"
+    spark.range(0, 20000, 1, 1)
+      .selectExpr("CAST(id % 100 AS STRING) AS s", "CAST(id AS INT) AS i", "id AS l")
+      .write.option("parquet.block.size", 4096).parquet(dir)
+    val file = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(file.length === 1)
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val (rows, w) = try {
+      spark.conf.set(conf, file.head.length() / 4)
+      ledger.measure(StateStores.Store(spark, dir, probeSchema)
+        .probeRows("s", Seq("7", "42")))
+    } finally spark.conf.unset(conf)
+    assert(w.jobs === 1)
+    assert(w.tasks >= 4, w)
+    val ids = rows.map(_.getLong(2)).toSeq
+    assert(ids.distinct.length === ids.length)
+    assert(ids.sorted === (0L until 20000L).filter(i => i % 100 == 7 || i % 100 == 42))
+  }
+
+  test("store probe: past the In bound no row is lost to the pushed range, strings in UTF-8 order") {
+    val dir = tmpDir("probe-range") + "/s"
+    // "～" (U+FF5E) sorts below "😀" (U+1F600) in UTF-8 but above it
+    // in UTF-16: each in a file of its own, so a range taken in UTF-16
+    // order skips the emoji's file on its statistics
+    val ascii = (0 until 10).map(k => s"a$k")
+    appendRows(dir, ascii.zipWithIndex.map { case (k, i) => Row(k, i, i.toLong) })
+    appendRows(dir, Seq(Row("～", 10, 10L)))
+    appendRows(dir, Seq(Row("😀", 11, 11L)))
+    val keys = ascii ++ Seq("～", "😀")
+    assert(keys.length > spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold").toInt)
+    filteringAll {
+      assert(probeParity(dir, "s", keys).map(_.getInt(1)).sorted === (0 until 12))
+      assert(probeParity(dir, "s", Seq("～", "😀")).length === 2)
+    }
+  }
+
+  test("store probe: WorkLedger.measure bills the probe's input bytes") {
+    val dir = tmpDir("probe-input") + "/s"
+    appendRows(dir, (0 until 100).map(i => Row(s"k$i", i, i.toLong)))
+    val (rows, w) = ledger.measure(
+      StateStores.Store(spark, dir, probeSchema).probeRows("i", Seq(5, 6)))
+    assert(rows.length === 2)
+    assert(w.jobs === 1)
+    assert(w.inputBytes > 0, w)
   }
 
   test("a compaction cut between its two renames: the next trigger sees the prior state") {
