@@ -2,10 +2,15 @@ package graft.pipeline
 
 import scala.collection.mutable
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.WordNGrams
 import graft.streaming.StateStores
 import graft.util.Round.r4
 
@@ -885,8 +890,28 @@ shid AS (
   }
 
   /** Unrounded Jaccard of a pair from its intersection and set sizes. */
-  private val jaccardOf: Column =
+  private[graft] val jaccardOf: Column =
     col("inter_n") * lit(1.0) / (col("n_a") + col("n_b") - col("inter_n"))
+
+  /** [[jaccardOf]], its `>= minJaccard` cut and its [[r4]] rounding on
+   *  the driver, as Catalyst evaluates them: the rounded Jaccard of a
+   *  pair that passes the cut. A zero denominator (multiset counts
+   *  that cancel, as when a batch replays two identical docs onto
+   *  stores that hold them both) is what Catalyst's division makes of
+   *  it: a `DIVIDE_BY_ZERO` error under ANSI, else a null that no cut
+   *  passes. */
+  private[graft] def jaccardCut(interN: Long, nA: Long, nB: Long,
+                                minJaccard: Double, ansi: Boolean): Option[Double] = {
+    val denominator = nA + nB - interN
+    if (denominator == 0L) {
+      if (ansi) throw new ArithmeticException(
+        s"[DIVIDE_BY_ZERO] Jaccard of inter_n $interN, n_a $nA, n_b $nB")
+      None
+    } else {
+      val jaccard = interN * 1.0 / denominator
+      Option.when(jaccard >= minJaccard)(r4(jaccard))
+    }
+  }
 
   private[pipeline] def withJaccard(cands: DataFrame, sh: DataFrame,
                                     restrict: Boolean = true): DataFrame = {
@@ -1916,10 +1941,11 @@ ORDER BY c.doc_a, c.doc_b"""
                             minJaccard: Double = 0.2,
                             localMax: Int = LocalTriggerMax): DataFrame =
     shingledBatch(batch, localMax)
-      .map(ngramPairsBounded(batch.sparkSession,
+      .map(docs => StateStores.local(batch.sparkSession, ngramPairsBounded(
+        batch.sparkSession,
         StateStores.frameProbe(corpusShingles.select("doc_id", "gram")),
-        StateStores.frameProbe(corpusGramDf.select("gram", "df_cnt")), _, maxDf,
-        minJaccard))
+        StateStores.frameProbe(corpusGramDf.select("gram", "df_cnt")), docs, maxDf,
+        minJaccard), ngramPairSchema))
       .getOrElse(ngramPairsDistributed(corpusShingles, corpusGramDf, batch,
         maxDf, minJaccard))
 
@@ -1928,41 +1954,37 @@ ORDER BY c.doc_a, c.doc_b"""
   private[graft] final case class ShingledDoc(id: Long, text: String,
                                               grams: Array[String])
 
-  /** The batch side of a bounded n-gram trigger, collected in one pass
-   *  (shingled by the same `word_ngrams` expression [[shingles]]
-   *  explodes) as one row per shingle (a doc without shingles is one
-   *  row), the doc's id and text riding on its first row only: at most
-   *  `localMax` + 1 rows reach the driver however long the docs are.
-   *  None when the batch has more than `localMax` rows, or `localMax`
-   *  is negative. */
+  /** A bounded n-gram trigger's batch row `(doc_id, text)` as its
+   *  [[ShingledDoc]]: its distinct shingles in `word_ngrams(text, 3)`'s
+   *  order, by the kernel that expression calls
+   *  ([[WordNGrams.compute]]; a null text has none), weighed as its
+   *  [[shingles]] rows (a doc without shingles is one row). */
+  private[graft] object ShingleRows extends StateStores.BatchRows[ShingledDoc] {
+    def apply(row: InternalRow): ShingledDoc =
+      if (row.isNullAt(1)) ShingledDoc(StateStores.longAt(row, 0), null, Array.empty)
+      else {
+        val text = row.getUTF8String(1)
+        val grams = WordNGrams.compute(text, 3)
+        ShingledDoc(StateStores.longAt(row, 0), text.toString,
+          Array.tabulate(grams.numElements())(grams.getUTF8String(_).toString))
+      }
+
+    def weight(doc: ShingledDoc): Long = math.max(1, doc.grams.length)
+  }
+
+  /** The batch side of a bounded n-gram trigger, read once
+   *  ([[StateStores.readBatch]] of `(doc_id, text)`, shingled by
+   *  [[ShingleRows]] in the read's tasks). None when the batch has
+   *  more than `localMax` shingle rows, or `localMax` is negative. */
   private[graft] def shingledBatch(batch: DataFrame,
                                    localMax: Int): Option[Seq[ShingledDoc]] =
-    if (localMax < 0) None
-    else {
-      val first = col("pos").isNull || col("pos") === 0
-      val rows = batch.select(col("doc_id").cast("long").as("id"), col("text"),
-          call_function("word_ngrams", col("text"), lit(3)).as("grams"))
-        .select(posexplode_outer(col("grams")), col("id"), col("text"))
-        .select(col("pos"), col("col"), when(first, col("id")).as("id"),
-          when(first, col("text")).as("text"))
-        .take(math.min(localMax, Int.MaxValue - 1) + 1)
-      if (rows.length > localMax) None
-      else {
-        val docs = mutable.ArrayBuffer.empty[(Long, String, mutable.ArrayBuffer[String])]
-        for (r <- rows) {
-          if (r.isNullAt(0) || r.getInt(0) == 0)
-            docs += ((r.getLong(2), r.getString(3), mutable.ArrayBuffer.empty[String]))
-          if (!r.isNullAt(0)) docs.last._3 += r.getString(1)
-        }
-        Some(docs.toSeq.map { case (id, text, grams) =>
-          ShingledDoc(id, text, grams.toArray) })
-      }
-    }
+    StateStores.readBatch(batch.select(col("doc_id").cast("long"), col("text")),
+      ShingleRows, localMax).map(_.toSeq)
 
-  private val pairCountSchema = StructType(Seq(
+  /** The rows of a bounded n-gram trigger's pairs. */
+  private[graft] val ngramPairSchema = StructType(Seq(
     StructField("doc_a", LongType), StructField("doc_b", LongType),
-    StructField("inter_n", LongType), StructField("n_a", LongType),
-    StructField("n_b", LongType)))
+    StructField("jaccard", DoubleType)))
 
   /** [[dedupNgramIncremental]]'s bounded plan over a collected batch.
    *  Each store is probed at batch keys ([[StateStores.Probe]]: the
@@ -1975,15 +1997,15 @@ ORDER BY c.doc_a, c.doc_b"""
    *  the driver with the distributed plan's multiset semantics — the
    *  batch's rows are added to the store's, so a replayed batch whose
    *  rows are already stored counts twice in df, sizes and
-   *  intersections. The Jaccard cut and its rounding are the same
-   *  Catalyst expressions, projected over the `LocalRelation` of pair
-   *  counts (folded on the driver, no job), so both plans agree bit
-   *  for bit. Rows come out in (doc_a, doc_b) order. */
+   *  intersections. The Jaccard cut and its rounding are
+   *  [[jaccardCut]], the distributed plan's expressions evaluated on
+   *  the driver, so both plans agree bit for bit. Returns
+   *  [[ngramPairSchema]] rows in (doc_a, doc_b) order. */
   private[graft] def ngramPairsBounded(spark: SparkSession,
                                        shingles: StateStores.Probe,
                                        gramDf: StateStores.Probe,
                                        docs: Seq[ShingledDoc], maxDf: Long,
-                                       minJaccard: Double): DataFrame = {
+                                       minJaccard: Double): Seq[Row] = {
     val batchSh = docs.flatMap(d => d.grams.iterator.map(d.id -> _))
     val batchIds = docs.iterator.map(_.id).toSet
     val df = mutable.HashMap.empty[String, Long]
@@ -2015,15 +2037,13 @@ ORDER BY c.doc_a, c.doc_b"""
       .foreach(r => if (!r.isNullAt(0)) add(r.getLong(0), r.getString(1)))
     batchSh.foreach { case (d, g) => if (ends(d)) add(d, g) }
     val none = mutable.HashMap.empty[String, Long]
-    val counts = cands.toSeq.sorted.flatMap { case (a, b) =>
+    val ansi = spark.sessionState.conf.ansiEnabled
+    cands.toSeq.sorted.flatMap { case (a, b) =>
       val (ga, gb) = (grams.getOrElse(a, none), grams.getOrElse(b, none))
       val inter = ga.iterator.map { case (g, k) => k * gb.getOrElse(g, 0L) }.sum
-      if (inter == 0L) None else Some(Row(a, b, inter, sizes(a), sizes(b)))
+      if (inter == 0L) None
+      else jaccardCut(inter, sizes(a), sizes(b), minJaccard, ansi).map(Row(a, b, _))
     }
-    StateStores.local(spark, counts, pairCountSchema)
-      .withColumn("jaccard", jaccardOf)
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), r4(col("jaccard")).as("jaccard"))
   }
 
   /** [[dedupNgramIncremental]]'s distributed plan, for batches over its
@@ -3133,15 +3153,19 @@ GROUP BY t.hamming ORDER BY t.hamming"""
    *  never wraps a long (Spark 4's ANSI mode throws on overflow
    *  instead of wrapping). Build and probe share this definition —
    *  that identity is the no-false-negative guarantee. */
-  private def probePos(h1: Column, h2: Column, i: Column, mBits: Int): Column =
+  private[graft] def probePos(h1: Column, h2: Column, i: Column, mBits: Int): Column =
     probePos(h1, h2, i, lit(mBits.toLong))
 
   /** The one probe-position definition (column-typed m so the
    *  calibration sweep can grid over filter sizes); [[bloomWords]],
    *  [[dedupExactIncremental]], and [[bloomFpCalibration]] all probe
    *  through here. */
-  private def probePos(h1: Column, h2: Column, i: Column, mBits: Column): Column =
+  private[graft] def probePos(h1: Column, h2: Column, i: Column, mBits: Column): Column =
     pmod(pmod(h1, mBits) + i * pmod(h2, mBits), mBits)
+
+  /** [[probePos]] on longs, for a batch read on the driver side. */
+  private[graft] def probePosOf(h1: Long, h2: Long, i: Int, mBits: Long): Long =
+    Math.floorMod(Math.floorMod(h1, mBits) + i * Math.floorMod(h2, mBits), mBits)
 
   def bloomWords(docs: DataFrame, mBits: Int = BloomBits,
                  probes: Int = BloomProbes): DataFrame = {
@@ -3318,28 +3342,42 @@ ORDER BY g.m_bits"""
   private[graft] final case class HashedDoc(id: Long, text: String,
                                             hash: String, pos: Array[Long])
 
-  /** The batch side of a bounded exact trigger, collected in one pass
-   *  as one row per doc: its md5 and its `probes` bloom positions are
-   *  computed by the same expressions ([[probePos]]) [[bloomWords]]
-   *  builds with. None when the batch has more than `localMax` probe
-   *  rows (docs x probes), or `localMax` is negative. Every doc has
-   *  exactly `probes` positions, so the row bound is a doc bound, and
-   *  the collect is a plain projection: a `LocalRelation` batch folds
-   *  on the driver, without a job. */
+  /** `xxhash64(text)` and `xxhash64(text, 1)`, the two seeds of a
+   *  doc's bloom probes, by the function those expressions call:
+   *  Spark's `XxHash64Function` from the seed 42 (a null text leaves
+   *  it), then chained over the int 1. */
+  private[graft] def bloomSeeds(text: UTF8String): (Long, Long) = {
+    val h1 = if (text == null) 42L else XxHash64Function.hash(text, StringType, 42L)
+    (h1, XxHash64Function.hash(1, IntegerType, h1))
+  }
+
+  /** A bounded exact trigger's batch row `(doc_id, text)` as its
+   *  [[HashedDoc]], by the kernels its Catalyst expressions call:
+   *  `md5(text)` (the hex digest of its UTF-8 bytes), [[bloomSeeds]]
+   *  and the [[probePos]] arithmetic ([[probePosOf]]) — the positions
+   *  [[bloomWords]] sets. Weighed as its `probes` probe rows. */
+  private[graft] final case class HashRows(mBits: Int, probes: Int)
+      extends StateStores.BatchRows[HashedDoc] {
+    def apply(row: InternalRow): HashedDoc = {
+      val text = if (row.isNullAt(1)) null else row.getUTF8String(1)
+      val (h1, h2) = bloomSeeds(text)
+      HashedDoc(StateStores.longAt(row, 0), if (text == null) null else text.toString,
+        if (text == null) null else DigestUtils.md5Hex(text.getBytes),
+        Array.tabulate(probes)(probePosOf(h1, h2, _, mBits)))
+    }
+
+    def weight(doc: HashedDoc): Long = math.max(1, probes)
+  }
+
+  /** The batch side of a bounded exact trigger, read once
+   *  ([[StateStores.readBatch]] of `(doc_id, text)`, hashed by
+   *  [[HashRows]] in the read's tasks). None when the batch has more
+   *  than `localMax` probe rows (docs x probes), or `localMax` is
+   *  negative. A `LocalRelation` batch is read without a job. */
   private[graft] def hashedBatch(batch: DataFrame, mBits: Int, probes: Int,
                                  localMax: Int): Option[Seq[HashedDoc]] =
-    if (localMax < 0) None
-    else {
-      val maxDocs = math.min(localMax / math.max(1, probes), Int.MaxValue - 1)
-      val (h1, h2) = (xxhash64(col("text")), xxhash64(col("text"), lit(1)))
-      val docs = batch.select(col("doc_id").cast("long"), col("text"),
-          md5(col("text")),
-          array((0 until probes).map(i => probePos(h1, h2, lit(i), mBits)): _*))
-        .take(maxDocs + 1)
-      if (docs.length > maxDocs) None
-      else Some(docs.toSeq.map(d => HashedDoc(d.getLong(0), d.getString(1),
-        d.getString(2), d.getSeq[Long](3).toArray)))
-    }
+    StateStores.readBatch(batch.select(col("doc_id").cast("long"), col("text")),
+      HashRows(mBits, probes), localMax).map(_.toSeq)
 
   /** The bloom word and bit of a probe position. */
   private[graft] def bloomBit(pos: Long): (Int, Long) =

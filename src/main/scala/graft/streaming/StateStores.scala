@@ -5,9 +5,10 @@ import graft.obs.WorkLedger
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.{LocalTableScanExec, PartitionedFileUtil, QueryExecution, SQLExecutionRDD}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
@@ -19,6 +20,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.language.implicitConversions
+import scala.reflect.ClassTag
 import scala.util.{Failure, Success, Try}
 
 /**
@@ -36,6 +38,11 @@ import scala.util.{Failure, Success, Try}
  *    planned or code-generated;
  *  - [[probe]]: the same probe as a Catalyst query, for the DataFrame
  *    API over frames that are not stores;
+ *  - [[readBatch]]: a bounded trigger's batch read once — one job over
+ *    a plain projection (none for a `LocalRelation`), its rows
+ *    converted in the tasks by per-row kernels ([[BatchRows]]) and
+ *    weighed against the trigger's bound; probe and read tasks are
+ *    named classes, so no closure is cleaned per job;
  *  - [[commit]]: the per-trigger write-ordering contract;
  *  - [[writeRows]]: a delta already on the driver appended as one
  *    file, with no Spark job;
@@ -221,25 +228,21 @@ private[graft] object StateStores {
           StructType(Nil), schema, filters,
           Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
           spark.sessionState.newHadoopConf())
+      // each reader set-up broadcasts a Hadoop conf: build only the
+      // readers some file needs
       val minFiltered = spark.sessionState.conf.filesOpenCostInBytes
-      val whole = reader(Nil)
-      val filtered =
-        if (files.exists(_.getLen > minFiltered)) reader(pushed(key, keyType, wanted))
-        else whole
+      val (large, small) = files.partition(_.getLen > minFiltered)
+      val filtered = Option.when(large.nonEmpty)(reader(pushed(key, keyType, wanted)))
+      val whole = Option.when(small.nonEmpty)(reader(Nil))
       val read = (f: PartitionedFile) =>
-        if (f.fileSize > minFiltered) filtered(f) else whole(f)
+        if (f.fileSize > minFiltered) filtered.get(f) else whole.get(f)
       val rdd = new FileScanRDD(spark, read,
         FilePartition.getFilePartitions(spark, splits, maxSplit), schema)
-      // locals, so the task closure does not capture the store's session
-      val (ord, rowSchema) = (schema.fieldIndex(key), schema)
       val sc = spark.sparkContext
       val outer = sc.getLocalProperty(JobDescription)
       sc.setJobDescription(probeDescription(dir, key, wanted.size))
-      try sc.runJob(rdd, (rows: Iterator[InternalRow]) => {
-          val toRow = CatalystTypeConverters.createToScalaConverter(rowSchema)
-          rows.filter(r => !r.isNullAt(ord) && wanted(r.get(ord, keyType)))
-            .map(toRow(_).asInstanceOf[Row]).take(perTask).toArray
-        }, (_: Int, rows: Array[Row]) => merge(rows))
+      try sc.runJob(rdd, new ProbeTask(schema, schema.fieldIndex(key), wanted, perTask),
+          rdd.partitions.indices, (_: Int, rows: Array[Row]) => merge(rows))
       finally sc.setLocalProperty(JobDescription, outer)
     }
 
@@ -258,6 +261,99 @@ private[graft] object StateStores {
         Seq(sources.GreaterThanOrEqual(key, external(wanted.min(order))),
           sources.LessThanOrEqual(key, external(wanted.max(order))))
       }
+    }
+  }
+
+  /** A probe task: the first `perTask` rows of its files whose key (at
+   *  `ord` of `schema`) is one of `wanted`, as `Row`s. A named class
+   *  rather than a lambda, so `SparkContext.clean` has no closure to
+   *  scan, and it holds no session. */
+  private final class ProbeTask(schema: StructType, ord: Int, wanted: Set[Any],
+                                perTask: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[Row]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Row] = {
+      val keyType = schema(ord).dataType
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      rows.filter(r => !r.isNullAt(ord) && wanted(r.get(ord, keyType)))
+        .map(toRow(_).asInstanceOf[Row]).take(perTask).toArray
+    }
+  }
+
+  /** How [[readBatch]] turns the rows of a bounded trigger's batch into
+   *  driver values: one value per row of the batch's plain projection,
+   *  computed by the same kernels the Catalyst expressions it stands
+   *  for call, and the rows of the trigger's bound that value weighs.
+   *  It runs in the read's tasks: serializable, and holding no session.
+   *  A row's strings point into a reused buffer, so a value keeps
+   *  copies of them, never the `UTF8String`s themselves. */
+  trait BatchRows[T] extends Serializable {
+    def apply(row: InternalRow): T
+    def weight(value: T): Long
+  }
+
+  /** The long at `i` of a batch row: a null is an error, as it is to
+   *  the `Row` and tuple encoders. */
+  def longAt(row: InternalRow, i: Int): Long =
+    if (row.isNullAt(i)) throw new NullPointerException(s"null batch key in column $i")
+    else row.getLong(i)
+
+  /** The batch of a bounded trigger, read once: the rows of the plain
+   *  projection `batch` as values of `rows`, in partition order, if
+   *  their weights total at most `max`; else `None`, also for a
+   *  negative `max`, which reads nothing. A trigger thus decides its
+   *  plan and holds its batch on the driver from one read.
+   *
+   *  The read is ONE job over the projection's physical plan, prepared
+   *  without adaptive execution: an exchange in the batch's plan is a
+   *  stage of that job, not a job of its own. A plan that is a
+   *  `LocalTableScanExec` (a `LocalRelation` batch) runs no job; its
+   *  rows are converted on the driver. No Dataset action runs, so no
+   *  query listener is told of it. Each task converts its rows and
+   *  stops once their weight passes `max`, and the driver keeps values
+   *  only while the total stays within it, so it never holds more than
+   *  about `max` weight plus the task results in flight. */
+  def readBatch[T: ClassTag](batch: DataFrame, rows: BatchRows[T],
+                             max: Int): Option[Array[T]] =
+    if (max < 0) None
+    else {
+      val qe = batch.queryExecution
+      val spark = qe.sparkSession
+      val task = new BatchTask(rows, max)
+      val plan = QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan)
+      var parts = Array.empty[(Array[T], Long)]
+      var weight = 0L
+      def merge(i: Int, part: (Array[T], Long)): Unit = if (weight <= max) {
+        weight += part._2
+        if (weight > max) parts = Array.empty else parts(i) = part
+      }
+      plan match {
+        case local: LocalTableScanExec =>
+          parts = new Array(1)
+          merge(0, task.take(local.executeCollect().iterator))
+        case _ =>
+          val rdd = new SQLExecutionRDD(plan.execute(), spark.sessionState.conf)
+          parts = new Array(rdd.partitions.length)
+          spark.sparkContext.runJob(rdd, task, rdd.partitions.indices, merge _)
+      }
+      if (weight > max) None else Some(parts.flatMap(_._1))
+    }
+
+  /** A [[readBatch]] task: its partition's values up to the first whose
+   *  weight passes `max`, and their total weight. A named class, as
+   *  [[ProbeTask]] is. */
+  private final class BatchTask[T: ClassTag](rows: BatchRows[T], max: Long)
+      extends ((TaskContext, Iterator[InternalRow]) => (Array[T], Long)) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): (Array[T], Long) = take(it)
+
+    def take(it: Iterator[InternalRow]): (Array[T], Long) = {
+      val out = mutable.ArrayBuilder.make[T]
+      var weight = 0L
+      while (weight <= max && it.hasNext) {
+        val value = rows(it.next())
+        weight += rows.weight(value)
+        out += value
+      }
+      (out.result(), weight)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.pipeline.{Clustering, Dedup}
@@ -25,7 +26,8 @@ import graft.pipeline.{Clustering, Dedup}
  * kernel (see [[processPairs]]): two batch-keyed store probes
  * ([[StateStores.Store]]: one parquet-reader job each, no query), the
  * fold on the driver, one driver-written delta file, no write job —
- * three jobs with the pairs collect.
+ * three jobs with the pairs read ([[StateStores.readBatch]]), and no
+ * Dataset action.
  * Any other batch — more pairs than that, or changed clusters holding
  * more stored rows than that — runs the distributed fold
  * ([[processPairsDistributed]]).
@@ -63,7 +65,8 @@ object StreamingClusters {
    *  store. Appends ONLY changed/new labels, stamped `batchId`.
    *
    *  A batch of at most `localMax` pairs ([[Dedup.LocalTriggerMax]])
-   *  runs the bounded-trigger kernel: the pairs are collected once and
+   *  runs the bounded-trigger kernel: the pairs are read once
+   *  ([[StateStores.readBatch]]; a negative `localMax` reads nothing) and
    *  the label store is probed exactly twice at batch keys by its file
    *  probe ([[StateStores.Store]] — no query, and no full-store
    *  `max_by` fold ever runs in a trigger), each probe's rows folded
@@ -96,13 +99,10 @@ object StreamingClusters {
   def processPairs(batchPairs: DataFrame, batchId: Long,
                    labelDir: String, localMax: Int = Dedup.LocalTriggerMax): Unit = {
     val spark = batchPairs.sparkSession
-    import spark.implicits._
-    val pairs = batchPairs
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].take(localMax + 1)
-    if (pairs.length > localMax) {
-      processPairsDistributed(batchPairs, batchId, labelDir); return
-    }
+    val pairs = StateStores.readBatch(
+        batchPairs.select(col("doc_a").cast("long"), col("doc_b").cast("long")),
+        PairRows, localMax)
+      .getOrElse { processPairsDistributed(batchPairs, batchId, labelDir); return }
     val store = StateStores.Store(spark, labelDir, labelSchema)
     val endIds = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val endLabels = latestLabels(store.probeRows("doc_id", endIds.toSeq))
@@ -140,6 +140,13 @@ object StreamingClusters {
         StateStores.writeRows(spark, labelDir, deltaPrior ++ deltaNew, labelSchema)
       case None => processPairsDistributed(batchPairs, batchId, labelDir)
     }
+  }
+
+  /** A batch row `(doc_a, doc_b)` as a pair, weighed as one. */
+  private object PairRows extends StateStores.BatchRows[(Long, Long)] {
+    def apply(row: InternalRow): (Long, Long) =
+      (StateStores.longAt(row, 0), StateStores.longAt(row, 1))
+    def weight(pair: (Long, Long)): Long = 1L
   }
 
   /** The latest-batch-wins fold (`max_by(label, batch_id)` per doc) of

@@ -15,7 +15,8 @@ import graft.pipeline.Dedup
  *
  * Spark-native shape: `foreachBatch` turns each micro-batch into a
  * bounded frame. A batch within [[graft.pipeline.Dedup.LocalTriggerMax]]
- * shingle rows is collected once; each state store is then probed at
+ * shingle rows is read once ([[StateStores.readBatch]]: one job,
+ * shingled in its tasks); each state store is then probed at
  * batch keys by its own file probe ([[StateStores.Store]]: one
  * parquet-reader job, no query) — the gram-df store at the batch
  * grams, the shingle store at the rare batch grams and at the
@@ -23,7 +24,8 @@ import graft.pipeline.Dedup
  * rule and deltas run on the driver
  * ([[graft.pipeline.Dedup.ngramPairsBounded]]); every append is one
  * file the driver writes ([[StateStores.Rows]]), with no job. The
- * batch collect and the three probes are the trigger's four jobs. A
+ * batch read and the three probes are the trigger's four jobs, and no
+ * Dataset action runs. A
  * larger batch runs the distributed plan:
  * [[graft.pipeline.Dedup.dedupNgramIncremental]] joins it against the
  * accumulated state with the batch restriction BELOW the pair join,
@@ -88,8 +90,9 @@ object StreamingDedup {
                    gramDfDir: String, maxDf: Long, minJaccard: Double,
                    localMax: Int = Dedup.LocalTriggerMax): DataFrame =
     Dedup.shingledBatch(batch, localMax) match {
-      case Some(docs) =>
-        boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard)
+      case Some(docs) => StateStores.local(spark,
+        boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard),
+        Dedup.ngramPairSchema)
       case None => Dedup.dedupNgramIncremental(
         StateStores.read(spark, shingleDir, shingleSchema),
         StateStores.read(spark, gramDfDir, gramDfSchema), batch, maxDf,
@@ -98,7 +101,7 @@ object StreamingDedup {
 
   private def boundedPairs(spark: SparkSession, docs: Seq[Dedup.ShingledDoc],
                            shingleDir: String, gramDfDir: String, maxDf: Long,
-                           minJaccard: Double): DataFrame =
+                           minJaccard: Double): Seq[Row] =
     Dedup.ngramPairsBounded(spark,
       StateStores.Store(spark, shingleDir, shingleSchema),
       StateStores.Store(spark, gramDfDir, gramDfSchema), docs, maxDf, minJaccard)
@@ -135,18 +138,17 @@ object StreamingDedup {
     }
   }
 
-  /** The bounded trigger: the pair frame is a `LocalRelation` (see
-   *  [[Dedup.ngramPairsBounded]]) collected without a job, the survivor
-   *  rule and the shingle and gram-df deltas run on the driver over the
-   *  collected batch, and the four appends (the pairs ledger is the
-   *  collected pairs plus `batch_id`) are driver-written files — the
-   *  batch collect and the three store probes are its only jobs. */
+  /** The bounded trigger: the pairs are [[Dedup.ngramPairsBounded]]'s
+   *  driver rows, the survivor rule and the shingle and gram-df deltas
+   *  run on the driver over the batch read, and the four appends (the
+   *  pairs ledger is the pairs plus `batch_id`) are driver-written
+   *  files — the batch read and the three store probes are its only
+   *  jobs, and no Dataset action runs. */
   private def processBounded(docs: Seq[Dedup.ShingledDoc], spark: SparkSession,
                              batchId: Long, storeDir: String, pairsDir: String,
                              shingleDir: String, gramDfDir: String,
                              maxDf: Long, minJaccard: Double): Unit = {
-    val pairs = boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard)
-    val pairRows = pairs.collect()
+    val pairRows = boundedPairs(spark, docs, shingleDir, gramDfDir, maxDf, minJaccard)
     val batchIds = docs.iterator.map(_.id).toSet
     val dropped = pairRows.flatMap { r =>
       val (a, b) = (r.getLong(0), r.getLong(1))
@@ -156,8 +158,8 @@ object StreamingDedup {
     val gramDf = survivors.flatMap(_.grams).groupMapReduce(identity)(_ => 1L)(_ + _)
     StateStores.commit(
       Some(pairsDir -> StateStores.Rows(spark,
-        pairRows.toSeq.map(r => Row.fromSeq(r.toSeq :+ batchId)),
-        pairs.schema.add(StructField("batch_id", LongType, nullable = false)))),
+        pairRows.map(r => Row.fromSeq(r.toSeq :+ batchId)),
+        Dedup.ngramPairSchema.add(StructField("batch_id", LongType, nullable = false)))),
       storeDir -> StateStores.Rows(spark,
         survivors.map(d => Row(d.id, d.text)), docSchema),
       shingleDir -> StateStores.Rows(spark,

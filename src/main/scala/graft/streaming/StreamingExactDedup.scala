@@ -28,13 +28,15 @@ import graft.pipeline.Dedup
  * scans of the two state stores, and the bloom store stays <= m/64
  * rows FOREVER (appended deltas OR into the same fixed bit space).
  * A batch within [[Dedup.LocalTriggerMax]] probe rows (docs x probes)
- * runs that logic on the driver: collected once, one row per doc with
+ * runs that logic on the driver: read once ([[StateStores.readBatch]],
+ * hashed in its tasks), one value per doc with
  * its md5 and probe positions, it probes the bloom store at its word
  * indexes and the hash store at its bloom-positive hashes (one
  * parquet-reader job each, [[StateStores.Store]], no query), and every
  * append is one file the driver writes ([[StateStores.Rows]]), with no
- * job — at most three jobs, none for a `LocalRelation` batch's
- * collect; a larger batch runs the distributed plan. Both write the
+ * job — at most three jobs (the batch read, none for a `LocalRelation`
+ * batch, and the two probes), no Dataset action; a larger batch runs
+ * the distributed plan. Both write the
  * same rows.
  *
  * Write ordering is [[StateStores.commit]]'s: the doc append commits
@@ -108,7 +110,7 @@ object StreamingExactDedup {
    *  taken on the driver without a query; the in-batch collapse and the
    *  bloom delta run on the driver over the collected batch (its probe
    *  positions are the ones [[Dedup.bloomWords]] would set), and the
-   *  three appends are driver-written files — the batch collect (none
+   *  three appends are driver-written files — the batch read (none
    *  for a `LocalRelation` batch) and the two store probes are its only
    *  jobs. */
   private def processBounded(docs: Seq[Dedup.HashedDoc], spark: SparkSession,

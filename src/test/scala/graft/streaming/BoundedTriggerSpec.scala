@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{PlanDump, SparkSpec}
 import graft.obs.WorkLedger
 import graft.pipeline.Dedup
 import org.apache.spark.sql.{DataFrame, Row}
@@ -297,12 +297,30 @@ class BoundedTriggerSpec extends SparkSpec {
 
   test("job budget: one bounded trigger of each dedup loop runs a fixed handful of jobs") {
     import spark.implicits._
-    val (root, batch) = populated("bt-budget")
-    val (_, ngram) = ledger.measure(StreamingDedup.processBatch(batch, 1L,
-      root + "_n", root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
-    val (_, exact) = ledger.measure(StreamingExactDedup.processBatch(batch, 1L,
-      root + "_x", root + "_hashes", root + "_bloom", Dedup.BloomBits,
+    val (root, checkpointed) = populated("bt-budget")
+    // a batch of several partitions behind an exchange reads in one job too
+    for ((batch, i) <- Seq(checkpointed, checkpointed.repartition(3)).zipWithIndex) {
+      assert(ledger.measure(Dedup.shingledBatch(batch, Dedup.LocalTriggerMax))._2.jobs === 1)
+      assert(ledger.measure(Dedup.hashedBatch(batch, Dedup.BloomBits, Dedup.BloomProbes,
+        Dedup.LocalTriggerMax))._2.jobs === 1)
+      val (_, ngram) = ledger.measure(StreamingDedup.processBatch(batch, 1L,
+        root + s"_n$i", root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
+      val (_, exact) = ledger.measure(StreamingExactDedup.processBatch(batch, 1L,
+        root + s"_x$i", root + "_hashes", root + "_bloom", Dedup.BloomBits,
+        Dedup.BloomProbes))
+      // n-gram: batch read, three store probes; exact: batch read, two
+      // store probes; the appends run no job
+      assert(ngram.jobs <= 4, ngram)
+      assert(exact.jobs <= 3, exact)
+    }
+    // a LocalRelation batch is read without a job
+    val local = novel(Seq(1000L, 1001L))
+    assert(ledger.measure(Dedup.hashedBatch(local, Dedup.BloomBits, Dedup.BloomProbes,
+      Dedup.LocalTriggerMax))._2.jobs === 0)
+    val (_, exact) = ledger.measure(StreamingExactDedup.processBatch(local, 1L,
+      root + "_xl", root + "_hashes", root + "_bloom", Dedup.BloomBits,
       Dedup.BloomProbes))
+    assert(exact.jobs <= 2, exact)
     // cluster: clusters {10, 11} and {20, 21} stored; the batch bridges
     // them (20's cluster relabels to 10) and adds the new ids 5 and 30
     val labels = root + "_labels"
@@ -315,13 +333,49 @@ class BoundedTriggerSpec extends SparkSpec {
     assert(StreamingClusters.readLabels(spark, labels).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L, 5L -> 5L, 30L -> 5L))
-    // the appends run no job, and a store probe is one job with no
-    // broadcast build: n-gram: batch collect, three store probes;
-    // exact: batch collect, two store probes; cluster: pairs collect,
-    // endpoint probe, changed-label probe
-    assert(ngram.jobs <= 4, ngram)
-    assert(exact.jobs <= 3, exact)
+    // cluster: pairs read, endpoint probe, changed-label probe
     assert(cluster.jobs <= 3, cluster)
+  }
+
+  test("a negative localMax reads no batch: no job, no query, straight to the distributed plan") {
+    import spark.implicits._
+    val (root, batch) = populated("bt-negative")
+    val (((shingled, hashed), read), w) = ledger.measure(PlanDump.executedPlans(spark)(
+      (Dedup.shingledBatch(batch, -1),
+        Dedup.hashedBatch(batch, Dedup.BloomBits, Dedup.BloomProbes, -1))))
+    assert(shingled.isEmpty && hashed.isEmpty)
+    assert(w.jobs === 0 && read.isEmpty, read)
+    // the cluster fold runs only the distributed fold's queries: no
+    // bounded read of the pairs (a take(0) would be a LocalTableScan)
+    val labels = root + "_labels"
+    val (_, plans) = PlanDump.executedPlans(spark)(StreamingClusters.processPairs(
+      Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b"), 0L, labels, localMax = -1))
+    assert(plans.nonEmpty && !plans.exists(_.isInstanceOf[LocalTableScanExec]),
+      plans.mkString("\n"))
+    assert(StreamingClusters.readLabels(spark, labels).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("a bounded trigger of each loop runs no Dataset action") {
+    import spark.implicits._
+    val (root, checkpointed) = populated("bt-no-action")
+    val parquet = stored(root + "_batch", arrivals(documents("sf0.001")))
+    for ((batch, i) <- Seq(checkpointed, parquet, novel(Seq(1000L, 1001L))).zipWithIndex) {
+      val (_, plans) = PlanDump.executedPlans(spark) {
+        StreamingExactDedup.processBatch(batch, 1L, root + s"_x$i", root + "_hashes",
+          root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes)
+        StreamingDedup.processBatch(batch, 1L, root + s"_n$i", root + "_pairs",
+          root + "_shingles", root + "_gramdf", 5L, 0.2)
+      }
+      assert(plans.isEmpty, plans.mkString("\n"))
+    }
+    val labels = root + "_labels"
+    StreamingClusters.processPairs(Seq((10L, 11L)).toDF("doc_a", "doc_b"), 0L, labels)
+    val pairs = stored(root + "_cpairs", Seq((11L, 20L), (5L, 30L)).toDF("doc_a", "doc_b"))
+    val (_, plans) = PlanDump.executedPlans(spark)(
+      StreamingClusters.processPairs(pairs, 1L, labels))
+    assert(plans.isEmpty, plans.mkString("\n"))
+    assert(StreamingClusters.readLabels(spark, labels).count() === 5L)
   }
 
   test("cluster bounded trigger: a changed cluster past localMax folds distributed, to the distributed run's labels") {
@@ -436,10 +490,9 @@ class BoundedTriggerSpec extends SparkSpec {
 
   /** The probe jobs `body` runs, as (store dir name, key column, key
    *  count) from their [[StateStores.probeDescription]], after checking
-   *  that every other job is the batch collect: they all run before the
-   *  first probe (`take` over a batch of several partitions may take
-   *  more than one job). */
-  private def storeProbes(body: => Any): Seq[(String, String, Int)] = {
+   *  that every other job is the batch read: exactly `batchJobs` jobs,
+   *  all before the first probe. */
+  private def storeProbes(batchJobs: Int)(body: => Any): Seq[(String, String, Int)] = {
     val Probe = """state-store probe: (.+) on (\w+), (\d+) keys""".r
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
@@ -452,7 +505,8 @@ class BoundedTriggerSpec extends SparkSpec {
     try { body; BusAccess.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     val jobs = descs.asScala.toSeq
-    assert(!jobs.dropWhile(!Probe.matches(_)).exists(!Probe.matches(_)), jobs)
+    assert(jobs.takeWhile(!Probe.matches(_)).length === batchJobs, jobs)
+    assert(jobs.drop(batchJobs).forall(Probe.matches(_)), jobs)
     jobs.collect { case Probe(dir, key, n) => (new Path(dir).getName, key, n.toInt) }
   }
 
@@ -475,13 +529,13 @@ class BoundedTriggerSpec extends SparkSpec {
     val (root, batch) = populated("bt-store-n")
     val stores = Map("c_shingles" -> Set("gram", "doc_id"), "c_gramdf" -> Set("gram"))
     var pairs: Array[Row] = null
-    val viaPairs = storeProbes {
+    val viaPairs = storeProbes(batchJobs = 1) {
       pairs = StreamingDedup.triggerPairs(spark, batch, root + "_shingles",
         root + "_gramdf", 5L, 0.2).collect()
     }
     assert(pairs.nonEmpty)
     assert(pairs.toSeq === ngramFrames(root, batch).collect().toSeq)
-    val viaBatch = storeProbes(StreamingDedup.processBatch(batch, 1L, root + "_n",
+    val viaBatch = storeProbes(batchJobs = 1)(StreamingDedup.processBatch(batch, 1L, root + "_n",
       root + "_pairs", root + "_shingles", root + "_gramdf", 5L, 0.2))
     for (probes <- Seq(viaPairs, viaBatch)) {
       assertNamedStores(probes, stores, Set("c_ndocs", "c_n"))
@@ -498,14 +552,14 @@ class BoundedTriggerSpec extends SparkSpec {
     val batch = arrivals(documents("sf0.001")).localCheckpoint()
     val stores = Map("c_bloom" -> Set("word_idx"), "c_hashes" -> Set("content_hash"))
     var flags: Array[Row] = null
-    val viaFlags = storeProbes {
+    val viaFlags = storeProbes(batchJobs = 1) {
       flags = StreamingExactDedup.triggerFlags(spark, batch, root + "_hashes",
         root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes).collect()
     }
     assert(flags.count(_.getLong(1) == 1L) > 0)
     assert(flags.toSeq === Dedup.dedupExactIncremental(spark.read.parquet(root + "_bloom"),
       spark.read.parquet(root + "_hashes"), batch).collect().toSeq)
-    val viaBatch = storeProbes(StreamingExactDedup.processBatch(batch, 1L,
+    val viaBatch = storeProbes(batchJobs = 1)(StreamingExactDedup.processBatch(batch, 1L,
       root + "_x", root + "_hashes", root + "_bloom", Dedup.BloomBits,
       Dedup.BloomProbes))
     val docs = batch.count().toInt
@@ -522,7 +576,7 @@ class BoundedTriggerSpec extends SparkSpec {
     val labels = tmpDir("bt-store-c") + "/labels"
     StreamingClusters.processPairs(Seq((10L, 11L), (20L, 21L)).toDF("doc_a", "doc_b"),
       0L, labels)
-    val probes = storeProbes(StreamingClusters.processPairs(
+    val probes = storeProbes(batchJobs = 0)(StreamingClusters.processPairs(
       Seq((11L, 20L), (5L, 30L)).toDF("doc_a", "doc_b"), 1L, labels))
     // the endpoints 11, 20, 5, 30; then the one changed label, 20
     assert(probes === Seq(("labels", "doc_id", 4), ("labels", "label", 1)))

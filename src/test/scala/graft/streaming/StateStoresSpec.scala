@@ -288,12 +288,26 @@ class StateStoresSpec extends SparkSpec {
   private def appendRows(dir: String, rows: Seq[Row]): Unit =
     StateStores.writeRows(spark, dir, rows, probeSchema)
 
-  /** `body` with the probe's filter pushed into every file: it goes
-   *  only into files over the open cost, and these files are tiny. */
-  private def filteringAll[T](body: => T): T = {
+  /** `body` with the probe's filter pushed into the files over `bytes`:
+   *  it goes only into files over the open cost. */
+  private def withOpenCost[T](bytes: Long)(body: => T): T = {
     val conf = "spark.sql.files.openCostInBytes"
-    spark.conf.set(conf, 0L)
+    spark.conf.set(conf, bytes)
     try body finally spark.conf.unset(conf)
+  }
+
+  /** `body` with the probe's filter pushed into every file (these files
+   *  are tiny). */
+  private def filteringAll[T](body: => T): T = withOpenCost(0L)(body)
+
+  /** The broadcasts `body` makes, from the ids of two throwaway
+   *  broadcasts around it: a probe job broadcasts its task binary, and
+   *  each probe reader set-up its Hadoop conf. */
+  private def broadcasts(body: => Any): Long = {
+    def next() = { val b = spark.sparkContext.broadcast(0); try b.id finally b.destroy() }
+    val before = next()
+    body
+    next() - before - 1
   }
 
   /** The store probe's rows at `keys`, asserted to be the rows of the
@@ -327,6 +341,21 @@ class StateStoresSpec extends SparkSpec {
     // with the filter pushed into no file (they are tiny) and into all
     checks()
     filteringAll(checks())
+    // a probe builds only the readers its files need: one whether the
+    // filter goes into no file or into every file, both when into some
+    val probe = () => StateStores.Store(spark, dir, probeSchema).probeRows("s", Seq("k1"))
+    val oneReader = broadcasts(probe())
+    assert(filteringAll(broadcasts(probe())) === oneReader)
+    val mixed = tmpDir("probe-mixed") + "/s"
+    appendRows(mixed, Seq(Row("k1", 1, 1L)))
+    appendRows(mixed, (0 until 400).map(i => Row(s"k${i % 25}", i, i.toLong)))
+    val sizes = new java.io.File(mixed).listFiles().filter(_.getName.startsWith("part-"))
+      .map(_.length()).sorted
+    withOpenCost(sizes(0)) {
+      assert(broadcasts(StateStores.Store(spark, mixed, probeSchema)
+        .probeRows("s", Seq("k1"))) === oneReader + 1)
+      assert(probeParity(mixed, "s", Seq("k1", "k2", null)).length === 33)
+    }
   }
 
   test("store probe: an absent store gives no rows and runs no job") {

@@ -34,15 +34,55 @@ Options:
     --under REGEX   keep samples with a frame `pkg.Class.method` matching
                     REGEX (default: keep every sample)
     --top N         lines to print (default 30)
+    --phases        also split each line's samples by the Spark phase
+                    that was running (see PHASES), and print the
+                    phases' totals
 
 Prints one line per graft source line: samples, share of the kept
 samples, and `Class.method:line`. Exits 1 if no sample is kept.
+
+A sample's phase is that of the innermost frame matching one of PHASES'
+patterns, so code generated while a plan is prepared counts as codegen,
+a closure cleaned inside `runJob` as closure cleaning, and the analysis
+an encoder runs to bind itself as analysis. A sample matching none is
+"other": graft's own code, Scala collections, parquet I/O.
 """
 import argparse
 import collections
 import json
 import re
 import sys
+
+# Spark driver phases, matched against `pkg.Class.method` frame names.
+PHASES = [
+    ("analysis", r"^org\.apache\.spark\.sql\.catalyst\.analysis\."
+                 r"|\.QueryExecution\.(assertAnalyzed|analyzed)"),
+    ("optimizer", r"^org\.apache\.spark\.sql\.catalyst\.optimizer\."
+                  r"|\.SparkOptimizer\.|\.QueryExecution\.optimizedPlan"),
+    ("planning", r"^org\.apache\.spark\.sql\.catalyst\.planning\."
+                 r"|\.SparkPlanner\.|\.SparkStrategies|\.execution\.adaptive\."
+                 r"|\.QueryExecution[$]?\.(sparkPlan|executedPlan|prepareForExecution"
+                 r"|prepareExecutedPlan|createSparkPlan)"),
+    ("codegen", r"\.expressions\.codegen\.|^org\.codehaus\."
+                r"|\.WholeStageCodegenExec\.doCodeGen"),
+    ("encoder", r"^org\.apache\.spark\.sql\.catalyst\.(encoders\.|ScalaReflection"
+                r"|DeserializerBuildHelper|SerializerBuildHelper)"),
+    ("broadcast", r"^org\.apache\.spark\.broadcast\.|SerializableConfiguration[$]?\.broadcast"),
+    ("closure cleaning", r"ClosureCleaner"),
+    ("job submit", r"^org\.apache\.spark\.scheduler\.(DAGScheduler|JobWaiter)"
+                   r"|^org\.apache\.spark\.SparkContext\.(runJob|submitJob)"),
+]
+PHASE_RES = [(name, re.compile(rx)) for name, rx in PHASES]
+OTHER = "other"
+
+
+def phase_of(frames):
+    """The phase of the innermost frame that names one, else OTHER."""
+    for name, _ in frames:
+        for phase, rx in PHASE_RES:
+            if rx.search(name):
+                return phase
+    return OTHER
 
 
 def frames_of(event):
@@ -72,6 +112,7 @@ def main(argv=None):
     ap.add_argument("json", help="output of `jfr print --json --stack-depth 1000`")
     ap.add_argument("--under", default=None)
     ap.add_argument("--top", type=int, default=30)
+    ap.add_argument("--phases", action="store_true")
     args = ap.parse_args(argv)
 
     with open(args.json) as fh:
@@ -80,6 +121,8 @@ def main(argv=None):
 
     total = kept = truncated = outside = deepest = 0
     counts = collections.Counter()
+    phases = collections.defaultdict(collections.Counter)
+    totals = collections.Counter()
     for e in events:
         if e.get("type") != "jdk.ExecutionSample":
             continue
@@ -90,11 +133,14 @@ def main(argv=None):
             continue
         kept += 1
         truncated += cut
+        phase = phase_of(frames)
+        totals[phase] += 1
         graft = next((f for f in frames if f[0].startswith("graft.")), None)
         if graft is None:
             outside += 1
             continue
         counts[label(graft)] += 1
+        phases[label(graft)][phase] += 1
 
     print(f"samples: {total} recorded, {kept} kept, {truncated} of them truncated, "
           f"{outside} with no graft frame")
@@ -109,7 +155,15 @@ def main(argv=None):
     width = max((len(str(n)) for n in counts.values()), default=1)
     print("innermost graft frame:")
     for lab, n in counts.most_common(args.top):
-        print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {lab}")
+        split = ""
+        if args.phases:
+            split = "  [" + ", ".join(f"{p} {k}" for p, k in phases[lab].most_common()) + "]"
+        print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {lab}{split}")
+    if args.phases:
+        print("by Spark phase (innermost phase frame of every kept sample):")
+        for phase in [p for p, _ in PHASES] + [OTHER]:
+            n = totals[phase]
+            print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {phase}")
     return 0
 
 
