@@ -5,13 +5,14 @@ import scala.collection.mutable
 import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.WordNGrams
 import graft.streaming.StateStores
+import graft.util.Formula
 import graft.util.Round.r4
 
 /**
@@ -728,7 +729,7 @@ shid AS (
    *  [[graft.streaming.StreamingClusters.processPairs]]; a doc's text
    *  rides on its first row only, so the bound also bounds the
    *  collected bytes. At
-   *  or below it a trigger takes the bounded plan: the batch collected
+   *  or below it a trigger takes the bounded plan: the batch read
    *  once, each state store probed once at batch keys (a trigger's
    *  [[StateStores.Store]] probe is one parquet-reader job and no
    *  query; the DataFrame API's is [[StateStores.probe]]), everything
@@ -893,25 +894,18 @@ shid AS (
   private[graft] val jaccardOf: Column =
     col("inter_n") * lit(1.0) / (col("n_a") + col("n_b") - col("inter_n"))
 
-  /** [[jaccardOf]], its `>= minJaccard` cut and its [[r4]] rounding on
-   *  the driver, as Catalyst evaluates them: the rounded Jaccard of a
-   *  pair that passes the cut. A zero denominator (multiset counts
-   *  that cancel, as when a batch replays two identical docs onto
-   *  stores that hold them both) is what Catalyst's division makes of
-   *  it: a `DIVIDE_BY_ZERO` error under ANSI, else a null that no cut
-   *  passes. */
-  private[graft] def jaccardCut(interN: Long, nA: Long, nB: Long,
-                                minJaccard: Double, ansi: Boolean): Option[Double] = {
-    val denominator = nA + nB - interN
-    if (denominator == 0L) {
-      if (ansi) throw new ArithmeticException(
-        s"[DIVIDE_BY_ZERO] Jaccard of inter_n $interN, n_a $nA, n_b $nB")
-      None
-    } else {
-      val jaccard = interN * 1.0 / denominator
-      Option.when(jaccard >= minJaccard)(r4(jaccard))
-    }
-  }
+  /** [[jaccardOf]], the n-gram plans' `>= minJaccard` cut and their
+   *  [[r4]] rounding, as one [[Formula]] over `(inter_n, n_a, n_b,
+   *  min_jaccard)`: the rounded Jaccard of a pair that passes the cut,
+   *  else null. The bounded plan's driver evaluates it, so a zero
+   *  denominator (multiset counts that cancel, as when a batch replays
+   *  two identical docs onto stores that hold them both) is what it is
+   *  to the distributed plan: a `DIVIDE_BY_ZERO` error under ANSI, else
+   *  a null no cut passes. */
+  private[graft] val jaccardCut = new Formula(StructType(Seq(
+      StructField("inter_n", LongType), StructField("n_a", LongType),
+      StructField("n_b", LongType), StructField("min_jaccard", DoubleType))),
+    when(jaccardOf >= col("min_jaccard"), r4(jaccardOf)))
 
   private[pipeline] def withJaccard(cands: DataFrame, sh: DataFrame,
                                     restrict: Boolean = true): DataFrame = {
@@ -1931,7 +1925,7 @@ ORDER BY c.doc_a, c.doc_b"""
    *
    *  Plan choice: a batch of at most `localMax` shingle rows
    *  ([[LocalTriggerMax]]) takes the bounded plan
-   *  ([[ngramPairsBounded]]: the batch collected once, each store
+   *  ([[ngramPairsBounded]]: the batch read once, each store
    *  probed at batch keys, the rest on the driver); a larger one (or a
    *  negative `localMax`) takes the distributed plan. Both return the
    *  same rows. */
@@ -1959,7 +1953,7 @@ ORDER BY c.doc_a, c.doc_b"""
    *  order, by the kernel that expression calls
    *  ([[WordNGrams.compute]]; a null text has none), weighed as its
    *  [[shingles]] rows (a doc without shingles is one row). */
-  private[graft] object ShingleRows extends StateStores.BatchRows[ShingledDoc] {
+  private[graft] object ShingleRows extends StateStores.TaskRows[ShingledDoc] {
     def apply(row: InternalRow): ShingledDoc =
       if (row.isNullAt(1)) ShingledDoc(StateStores.longAt(row, 0), null, Array.empty)
       else {
@@ -1969,7 +1963,7 @@ ORDER BY c.doc_a, c.doc_b"""
           Array.tabulate(grams.numElements())(grams.getUTF8String(_).toString))
       }
 
-    def weight(doc: ShingledDoc): Long = math.max(1, doc.grams.length)
+    override def weight(doc: ShingledDoc): Long = math.max(1, doc.grams.length)
   }
 
   /** The batch side of a bounded n-gram trigger, read once
@@ -2037,12 +2031,13 @@ ORDER BY c.doc_a, c.doc_b"""
       .foreach(r => if (!r.isNullAt(0)) add(r.getLong(0), r.getString(1)))
     batchSh.foreach { case (d, g) => if (ends(d)) add(d, g) }
     val none = mutable.HashMap.empty[String, Long]
-    val ansi = spark.sessionState.conf.ansiEnabled
+    val cut = jaccardCut(spark)
     cands.toSeq.sorted.flatMap { case (a, b) =>
       val (ga, gb) = (grams.getOrElse(a, none), grams.getOrElse(b, none))
       val inter = ga.iterator.map { case (g, k) => k * gb.getOrElse(g, 0L) }.sum
       if (inter == 0L) None
-      else jaccardCut(inter, sizes(a), sizes(b), minJaccard, ansi).map(Row(a, b, _))
+      else Option(cut.eval(InternalRow(inter, sizes(a), sizes(b), minJaccard)))
+        .map(Row(a, b, _))
     }
   }
 
@@ -3158,14 +3153,18 @@ GROUP BY t.hamming ORDER BY t.hamming"""
 
   /** The one probe-position definition (column-typed m so the
    *  calibration sweep can grid over filter sizes); [[bloomWords]],
-   *  [[dedupExactIncremental]], and [[bloomFpCalibration]] all probe
-   *  through here. */
+   *  [[dedupExactIncremental]] (both plans: the bounded one through
+   *  [[probePosFormula]]) and [[bloomFpCalibration]] all probe through
+   *  here. */
   private[graft] def probePos(h1: Column, h2: Column, i: Column, mBits: Column): Column =
     pmod(pmod(h1, mBits) + i * pmod(h2, mBits), mBits)
 
-  /** [[probePos]] on longs, for a batch read on the driver side. */
-  private[graft] def probePosOf(h1: Long, h2: Long, i: Int, mBits: Long): Long =
-    Math.floorMod(Math.floorMod(h1, mBits) + i * Math.floorMod(h2, mBits), mBits)
+  /** [[probePos]] as a [[Formula]] over `(h1, h2, i, m_bits)`, typed as
+   *  [[bloomWords]] feeds it: a bounded exact trigger's probe positions. */
+  private[graft] val probePosFormula = new Formula(StructType(Seq(
+      StructField("h1", LongType), StructField("h2", LongType),
+      StructField("i", IntegerType), StructField("m_bits", LongType))),
+    probePos(col("h1"), col("h2"), col("i"), col("m_bits")))
 
   def bloomWords(docs: DataFrame, mBits: Int = BloomBits,
                  probes: Int = BloomProbes): DataFrame = {
@@ -3354,19 +3353,20 @@ ORDER BY g.m_bits"""
   /** A bounded exact trigger's batch row `(doc_id, text)` as its
    *  [[HashedDoc]], by the kernels its Catalyst expressions call:
    *  `md5(text)` (the hex digest of its UTF-8 bytes), [[bloomSeeds]]
-   *  and the [[probePos]] arithmetic ([[probePosOf]]) — the positions
+   *  and `pos`, the bound [[probePosFormula]] — the positions
    *  [[bloomWords]] sets. Weighed as its `probes` probe rows. */
-  private[graft] final case class HashRows(mBits: Int, probes: Int)
-      extends StateStores.BatchRows[HashedDoc] {
+  private[graft] final case class HashRows(mBits: Int, probes: Int, pos: Expression)
+      extends StateStores.TaskRows[HashedDoc] {
     def apply(row: InternalRow): HashedDoc = {
       val text = if (row.isNullAt(1)) null else row.getUTF8String(1)
       val (h1, h2) = bloomSeeds(text)
       HashedDoc(StateStores.longAt(row, 0), if (text == null) null else text.toString,
         if (text == null) null else DigestUtils.md5Hex(text.getBytes),
-        Array.tabulate(probes)(probePosOf(h1, h2, _, mBits)))
+        Array.tabulate(probes)(i => pos.eval(InternalRow(h1, h2, i, mBits.toLong))
+          .asInstanceOf[Long]))
     }
 
-    def weight(doc: HashedDoc): Long = math.max(1, probes)
+    override def weight(doc: HashedDoc): Long = math.max(1, probes)
   }
 
   /** The batch side of a bounded exact trigger, read once
@@ -3377,7 +3377,8 @@ ORDER BY g.m_bits"""
   private[graft] def hashedBatch(batch: DataFrame, mBits: Int, probes: Int,
                                  localMax: Int): Option[Seq[HashedDoc]] =
     StateStores.readBatch(batch.select(col("doc_id").cast("long"), col("text")),
-      HashRows(mBits, probes), localMax).map(_.toSeq)
+      HashRows(mBits, probes, probePosFormula(batch.sparkSession)), localMax)
+      .map(_.toSeq)
 
   /** The bloom word and bit of a probe position. */
   private[graft] def bloomBit(pos: Long): (Int, Long) =

@@ -5,7 +5,8 @@ import graft.obs.WorkLedger
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{FutureAction, InterruptibleIterator, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.{LocalTableScanExec, PartitionedFileUtil, QueryExecution, SQLExecutionRDD}
@@ -40,9 +41,11 @@ import scala.util.{Failure, Success, Try}
  *    API over frames that are not stores;
  *  - [[readBatch]]: a bounded trigger's batch read once — one job over
  *    a plain projection (none for a `LocalRelation`), its rows
- *    converted in the tasks by per-row kernels ([[BatchRows]]) and
- *    weighed against the trigger's bound; probe and read tasks are
- *    named classes, so no closure is cleaned per job;
+ *    converted in the tasks by per-row kernels ([[TaskRows]]) and
+ *    weighed against the trigger's bound;
+ *  - [[runBounded]]: the one job of a probe or a batch read, cancelled
+ *    once its values pass the bound; its task is a named class, so no
+ *    closure is cleaned per job;
  *  - [[commit]]: the per-trigger write-ordering contract;
  *  - [[writeRows]]: a delta already on the driver appended as one
  *    file, with no Spark job;
@@ -179,45 +182,29 @@ private[graft] object StateStores {
     def select(columns: String*): Store =
       copy(schema = StructType(columns.map(schema(_))))
 
-    def probeRows(key: String, keys: Seq[Any]): Array[Row] = {
-      val kept = mutable.ArrayBuffer.empty[Row]
-      scan(key, keys, Int.MaxValue)(kept ++= _)
-      kept.toArray
-    }
+    def probeRows(key: String, keys: Seq[Any]): Array[Row] =
+      scan(key, keys, Long.MaxValue).get
 
     /** [[probeRows]] if it holds at most `max` rows, else `None`: for
-     *  keys whose rows the batch does not bound. Each task returns at
-     *  most `max + 1` rows, and the driver keeps rows only while their
-     *  total stays within `max`, so it never holds more than about
-     *  `max` rows plus the task results in flight. */
-    def probeRowsWithin(key: String, keys: Seq[Any], max: Int): Option[Array[Row]] = {
-      val kept = mutable.ArrayBuffer.empty[Row]
-      var over = false
-      scan(key, keys, max + 1) { rows =>
-        if (!over) {
-          if (kept.length + rows.length > max) { over = true; kept.clear() }
-          else kept ++= rows
-        }
-      }
-      if (over) None else Some(kept.toArray)
-    }
+     *  keys whose rows the batch does not bound. The probe job stops
+     *  once its rows pass `max` ([[runBounded]]). */
+    def probeRowsWithin(key: String, keys: Seq[Any], max: Int): Option[Array[Row]] =
+      scan(key, keys, max)
 
-    /** The probe job: each task's first `perTask` matching rows, handed
-     *  to `merge` on the driver as the tasks finish. */
-    private def scan(key: String, keys: Seq[Any], perTask: Int)(
-        merge: Array[Row] => Unit): Unit = {
+    /** The probe job: its matching rows if they number at most `max`. */
+    private def scan(key: String, keys: Seq[Any], max: Long): Option[Array[Row]] = {
       val keyType = schema(key).dataType
       // strings as UTF8String, the row's representation of the key
       val wanted = keys.iterator.filter(_ != null)
         .map(CatalystTypeConverters.convertToCatalyst).toSet
-      if (wanted.isEmpty || !exists(spark, dir)) return
+      if (wanted.isEmpty || !exists(spark, dir)) return Some(Array.empty)
       val path = new Path(dir)
       val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .listStatus(path).filter { f =>
           val name = f.getPath.getName
           f.isFile && !name.startsWith("_") && !name.startsWith(".")
         }.map(FileStatusWithMetadata(_)).toSeq
-      if (files.isEmpty) return
+      if (files.isEmpty) return Some(Array.empty)
       val maxSplit = FilePartition.maxSplitBytes(spark,
         Seq(PartitionDirectory(InternalRow.empty, files)))
       val splits = files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
@@ -241,8 +228,7 @@ private[graft] object StateStores {
       val sc = spark.sparkContext
       val outer = sc.getLocalProperty(JobDescription)
       sc.setJobDescription(probeDescription(dir, key, wanted.size))
-      try sc.runJob(rdd, new ProbeTask(schema, schema.fieldIndex(key), wanted, perTask),
-          rdd.partitions.indices, (_: Int, rows: Array[Row]) => merge(rows))
+      try runBounded(rdd, ProbeRows(schema, schema.fieldIndex(key), wanted), max)
       finally sc.setLocalProperty(JobDescription, outer)
     }
 
@@ -264,31 +250,30 @@ private[graft] object StateStores {
     }
   }
 
-  /** A probe task: the first `perTask` rows of its files whose key (at
-   *  `ord` of `schema`) is one of `wanted`, as `Row`s. A named class
-   *  rather than a lambda, so `SparkContext.clean` has no closure to
-   *  scan, and it holds no session. */
-  private final class ProbeTask(schema: StructType, ord: Int, wanted: Set[Any],
-                                perTask: Int)
-      extends ((TaskContext, Iterator[InternalRow]) => Array[Row]) with Serializable {
-    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[Row] = {
-      val keyType = schema(ord).dataType
-      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      rows.filter(r => !r.isNullAt(ord) && wanted(r.get(ord, keyType)))
-        .map(toRow(_).asInstanceOf[Row]).take(perTask).toArray
-    }
+  /** How the tasks of a bounded read turn its rows into driver values:
+   *  the rows it keeps, one value per kept row, and the weight of that
+   *  value against the read's bound (one by default). A [[Store]]
+   *  probe keeps the rows at its keys ([[ProbeRows]]); [[readBatch]]
+   *  keeps every row of a batch, its value computed by the same
+   *  kernels the Catalyst expressions it stands for call. It runs in
+   *  the read's tasks: serializable, and holding no session. A row's
+   *  strings point into a reused buffer, so a value keeps copies of
+   *  them, never the `UTF8String`s themselves. */
+  trait TaskRows[T] extends Serializable {
+    def keep(row: InternalRow): Boolean = true
+    def apply(row: InternalRow): T
+    def weight(value: T): Long = 1L
   }
 
-  /** How [[readBatch]] turns the rows of a bounded trigger's batch into
-   *  driver values: one value per row of the batch's plain projection,
-   *  computed by the same kernels the Catalyst expressions it stands
-   *  for call, and the rows of the trigger's bound that value weighs.
-   *  It runs in the read's tasks: serializable, and holding no session.
-   *  A row's strings point into a reused buffer, so a value keeps
-   *  copies of them, never the `UTF8String`s themselves. */
-  trait BatchRows[T] extends Serializable {
-    def apply(row: InternalRow): T
-    def weight(value: T): Long
+  /** The rows of a probe: those whose key (at `ord` of `schema`) is
+   *  one of `wanted`, as `Row`s. */
+  private final case class ProbeRows(schema: StructType, ord: Int, wanted: Set[Any])
+      extends TaskRows[Row] {
+    @transient private lazy val keyType = schema(ord).dataType
+    @transient private lazy val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    override def keep(row: InternalRow): Boolean =
+      !row.isNullAt(ord) && wanted(row.get(ord, keyType))
+    def apply(row: InternalRow): Row = toRow(row).asInstanceOf[Row]
   }
 
   /** The long at `i` of a batch row: a null is an error, as it is to
@@ -308,52 +293,81 @@ private[graft] object StateStores {
    *  stage of that job, not a job of its own. A plan that is a
    *  `LocalTableScanExec` (a `LocalRelation` batch) runs no job; its
    *  rows are converted on the driver. No Dataset action runs, so no
-   *  query listener is told of it. Each task converts its rows and
-   *  stops once their weight passes `max`, and the driver keeps values
-   *  only while the total stays within it, so it never holds more than
-   *  about `max` weight plus the task results in flight. */
-  def readBatch[T: ClassTag](batch: DataFrame, rows: BatchRows[T],
+   *  query listener is told of it. The job stops once the values
+   *  pass `max` ([[runBounded]]). */
+  def readBatch[T: ClassTag](batch: DataFrame, rows: TaskRows[T],
                              max: Int): Option[Array[T]] =
     if (max < 0) None
     else {
       val qe = batch.queryExecution
       val spark = qe.sparkSession
-      val task = new BatchTask(rows, max)
-      val plan = QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan)
-      var parts = Array.empty[(Array[T], Long)]
-      var weight = 0L
-      def merge(i: Int, part: (Array[T], Long)): Unit = if (weight <= max) {
-        weight += part._2
-        if (weight > max) parts = Array.empty else parts(i) = part
-      }
-      plan match {
+      QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan) match {
         case local: LocalTableScanExec =>
-          parts = new Array(1)
-          merge(0, task.take(local.executeCollect().iterator))
-        case _ =>
-          val rdd = new SQLExecutionRDD(plan.execute(), spark.sessionState.conf)
-          parts = new Array(rdd.partitions.length)
-          spark.sparkContext.runJob(rdd, task, rdd.partitions.indices, merge _)
+          val (values, weight) = new BoundedTask(rows, max).apply(local.executeCollect().iterator)
+          Option.when(weight <= max)(values)
+        case plan =>
+          runBounded(new SQLExecutionRDD(plan.execute(), spark.sessionState.conf), rows, max)
       }
-      if (weight > max) None else Some(parts.flatMap(_._1))
     }
 
-  /** A [[readBatch]] task: its partition's values up to the first whose
-   *  weight passes `max`, and their total weight. A named class, as
-   *  [[ProbeTask]] is. */
-  private final class BatchTask[T: ClassTag](rows: BatchRows[T], max: Long)
-      extends ((TaskContext, Iterator[InternalRow]) => (Array[T], Long)) with Serializable {
-    def apply(ctx: TaskContext, it: Iterator[InternalRow]): (Array[T], Long) = take(it)
+  /** The values `rows` makes of the rows of `rdd`, in partition order,
+   *  if their weights total at most `max`; else `None`. ONE job reads
+   *  them. Each task stops at its first value past `max`, and a task
+   *  whose own values pass it returns their weight alone. The driver
+   *  keeps values while the total stays within `max`; the first result
+   *  that passes it cancels the job, so the tasks not yet started never
+   *  run and those running stop at their next row. The driver thus
+   *  receives at most `max` weight of values per task that finished
+   *  before the cancel reached it — about one per core — however many
+   *  partitions the read has. */
+  private def runBounded[T: ClassTag](rdd: RDD[InternalRow], rows: TaskRows[T],
+                                      max: Long): Option[Array[T]] = {
+    val parts = new Array[Array[T]](rdd.partitions.length)
+    val lock = new Object
+    var weight = 0L
+    var job: FutureAction[Unit] = null
+    def merge(i: Int, part: (Array[T], Long)): Unit = lock.synchronized {
+      if (weight <= max) {
+        weight += part._2
+        if (weight <= max) parts(i) = part._1
+        else if (job != null) job.cancel()
+      }
+    }
+    val action = rdd.sparkContext.submitJob(rdd, new BoundedTask(rows, max),
+      rdd.partitions.indices, merge _, ())
+    // a result handled before `job` was set left the cancel to here
+    lock.synchronized { job = action; if (weight > max) action.cancel() }
+    Await.ready(action, Duration.Inf)
+    lock.synchronized {
+      if (weight > max) None // the job's own end: cancelled or complete
+      else action.value.get match {
+        case Success(_) => Some(parts.flatten)
+        case Failure(e) => throw e
+      }
+    }
+  }
 
-    def take(it: Iterator[InternalRow]): (Array[T], Long) = {
+  /** A [[runBounded]] task: its partition's values up to the first whose
+   *  weight passes `max`, and their total weight; only the weight once
+   *  it passes. A named class rather than a lambda, so
+   *  `SparkContext.clean` has no closure to scan. */
+  private final class BoundedTask[T: ClassTag](rows: TaskRows[T], max: Long)
+      extends (Iterator[InternalRow] => (Array[T], Long)) with Serializable {
+    def apply(input: Iterator[InternalRow]): (Array[T], Long) = {
+      // a cancelled job's task stops at its next row; TaskContext is
+      // null when the driver reads a local batch
+      val it = Option(TaskContext.get()).fold(input)(new InterruptibleIterator(_, input))
       val out = mutable.ArrayBuilder.make[T]
       var weight = 0L
       while (weight <= max && it.hasNext) {
-        val value = rows(it.next())
-        weight += rows.weight(value)
-        out += value
+        val row = it.next()
+        if (rows.keep(row)) {
+          val value = rows(row)
+          weight += rows.weight(value)
+          out += value
+        }
       }
-      (out.result(), weight)
+      (if (weight > max) Array.empty[T] else out.result(), weight)
     }
   }
 

@@ -143,10 +143,9 @@ object StreamingClusters {
   }
 
   /** A batch row `(doc_a, doc_b)` as a pair, weighed as one. */
-  private object PairRows extends StateStores.BatchRows[(Long, Long)] {
+  private object PairRows extends StateStores.TaskRows[(Long, Long)] {
     def apply(row: InternalRow): (Long, Long) =
       (StateStores.longAt(row, 0), StateStores.longAt(row, 1))
-    def weight(pair: (Long, Long)): Long = 1L
   }
 
   /** The latest-batch-wins fold (`max_by(label, batch_id)` per doc) of

@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions.{floor, lit}
 object Round {
   def r4(c: Column): Column = floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
-  /** [[r4]] as Catalyst evaluates it on a double: `floor` gives a long. */
-  def r4(x: Double): Double = math.floor(x * 10000.0 + 0.5).toLong / 10000.0
-
   /** The DuckDB spelling of [[r4]]. */
   def r4Sql(inner: String): String = s"FLOOR(($inner) * 10000.0 + 0.5) / 10000.0"
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.streaming.StreamingDedup
 import graft.util.Round.r4
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The per-row kernels of a bounded trigger's batch read
  *  ([[Dedup.ShingleRows]], [[Dedup.HashRows]], [[Dedup.bloomSeeds]],
  *  run in the read's tasks or on the driver) and its driver-side
- *  Jaccard cut ([[Dedup.jaccardCut]]) against the Catalyst expressions
- *  they stand for: `word_ngrams`, `md5`, `xxhash64`, [[Dedup.probePos]],
+ *  Jaccard cut ([[Dedup.jaccardCut]], evaluated row by row) against
+ *  the Catalyst expressions they stand for, run in generated code:
+ *  `word_ngrams`, `md5`, `xxhash64`, [[Dedup.probePos]],
  *  [[Dedup.jaccardOf]] and `r4`. */
 class BatchKernelSpec extends SparkSpec {
 
@@ -92,6 +94,11 @@ class BatchKernelSpec extends SparkSpec {
     try body finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
+  /** The driver's cut of `(inter_n, n_a, n_b)` at `min`. */
+  private def cut(c: (Long, Long, Long), min: Double): Option[Double] =
+    Option(Dedup.jaccardCut(spark).eval(InternalRow(c._1, c._2, c._3, min)))
+      .map(_.asInstanceOf[Double])
+
   test("jaccard: the driver's cut and rounding are jaccardOf, >= minJaccard and r4") {
     // shares near every 1e-4 rounding boundary, and negative denominators
     val counts = (for {
@@ -109,8 +116,7 @@ class BatchKernelSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
         .toMap
       assert(want.nonEmpty)
-      val got = counts.flatMap(c =>
-        Dedup.jaccardCut(c._1, c._2, c._3, min, ansi = true).map(c -> _)).toMap
+      val got = counts.flatMap(c => cut(c, min).map(c -> _)).toMap
       assert(got === want, s"minJaccard $min")
     }
   }
@@ -120,12 +126,12 @@ class BatchKernelSpec extends SparkSpec {
     def catalyst() = frame.withColumn("jaccard", Dedup.jaccardOf)
       .filter(col("jaccard") >= 0.2).select(col("inter_n")).collect().map(_.getLong(0)).toSeq
     assert(chain(intercept[Exception](catalyst())).exists(_.contains("DIVIDE_BY_ZERO")))
-    assert(chain(intercept[ArithmeticException](Dedup.jaccardCut(4L, 2L, 2L, 0.2,
-      ansi = true))).exists(_.contains("DIVIDE_BY_ZERO")))
+    assert(chain(intercept[ArithmeticException](cut((4L, 2L, 2L), 0.2)))
+      .exists(_.contains("DIVIDE_BY_ZERO")))
     withoutAnsi {
       assert(catalyst() === Seq(1L))
-      assert(Dedup.jaccardCut(4L, 2L, 2L, 0.2, ansi = false) === None)
-      assert(Dedup.jaccardCut(1L, 2L, 2L, 0.2, ansi = false) === Some(0.3333))
+      assert(cut((4L, 2L, 2L), 0.2) === None)
+      assert(cut((1L, 2L, 2L), 0.2) === Some(0.3333))
     }
   }
 

@@ -12,8 +12,10 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.graft.BusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.{SparkException, Success}
+import org.apache.spark.graft.{BusAccess, ConfAccess}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.hadoop.fs.Path
 import scala.jdk.CollectionConverters._
 
@@ -335,6 +337,45 @@ class BoundedTriggerSpec extends SparkSpec {
       Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L, 5L -> 5L, 30L -> 5L))
     // cluster: pairs read, endpoint probe, changed-label probe
     assert(cluster.jobs <= 3, cluster)
+  }
+
+  test("an over-bound batch of many partitions stops its read early and folds distributed") {
+    // 64 partitions of 4 docs, each doc ~39 KB of text: a task's docs
+    // stay within the bound of 30 probe rows, two tasks' pass it, and
+    // all 64 tasks' results would pass the result-size limit below
+    val batch = spark.range(0L, 256L, 1L, 64).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("doc"), col("id").cast("string"),
+        repeat(lit("filler words "), 3000)).as("text"))
+    val dirs = Seq("over", "dist").map(tmpDir("bt-over") + "/" + _)
+    ConfAccess.withConf(spark.sparkContext, "spark.driver.maxResultSize", "3m") {
+      assert(intercept[SparkException](batch.rdd.collect()).getMessage
+        .contains("maxResultSize"))
+      // the bytes of the task results the driver received
+      val received = new AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.reason == Success) received.addAndGet(e.taskMetrics.resultSize)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val (read, w) = try ledger.measure(
+          Dedup.hashedBatch(batch, Dedup.BloomBits, Dedup.BloomProbes, 30))
+        finally {
+          BusAccess.drain(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(read.isEmpty)
+      // one job, cancelled long before its last task: the driver took
+      // a few tasks' results (~160 KB each), not 64 of them
+      assert(w.jobs === 1 && w.tasks <= 16, w)
+      assert(received.get <= (3L << 20) / 2, received)
+      for ((root, max) <- dirs.zip(Seq(30, -1)))
+        StreamingExactDedup.processBatch(batch, 0L, root, root + "_hashes",
+          root + "_bloom", Dedup.BloomBits, Dedup.BloomProbes, localMax = max)
+    }
+    val stores = Seq("", "_hashes", "_bloom")
+    val got = contents(dirs.head, stores)
+    assert(got.head._2.length === 256)
+    assert(got === contents(dirs(1), stores))
   }
 
   test("a negative localMax reads no batch: no job, no query, straight to the distributed plan") {
