@@ -5,6 +5,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.SqlAccess
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import graft.events.EventLogParser
 
@@ -220,12 +224,8 @@ class IncrementalIngest(spark: SparkSession, checkpointPath: String,
       else Some(EventLogParser.read(spark, whole.map(_._1.toString): _*))
     val tailDf: Option[DataFrame] =
       if (tails.isEmpty) None
-      else {
-        import spark.implicits._
-        Some(EventLogParser.parseLines(
-          tailRows(spark, hadoopConf, tails)
-            .toDF("value", "log_file", "attempt_hint")))
-      }
+      else Some(EventLogParser.parseLines(
+        SqlAccess.internalFrame(spark, tailRows(spark, hadoopConf, tails), TailSchema)))
     val delta = (wholeDf, tailDf) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), _) => a
@@ -390,36 +390,63 @@ object IncrementalIngest {
    *  whole/rewritten reads — and the checkpointed head verdict, whose
    *  presence skips the head read). */
   private def scanRows(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
-                       files: Seq[(String, Long, Long, Long, Option[Option[String]])])
-      : RDD[ScanRow] =
+                       files: Seq[ScanFile.In]): RDD[ScanRow] =
     spark.sparkContext
       .parallelize(files, math.min(files.size, 64).max(1))
-      .map { case (pathStr, len, mt, prevOffset, known) =>
-        val (f, p) = openFs(pathStr, conf)
-        val lineEnd = lastLineEnd(f, p, len)
-        val head = known.orElse(headAttemptId(f, p, len))
-        if (prevOffset < 0L) // whole/rewritten: parsed by the file reader
-          ScanRow(pathStr, mt, lineEnd, len, head, 0L, 0L)
-        else // grown: tail range [prevOffset, lineEnd) when it advanced
-          ScanRow(pathStr, mt, math.max(lineEnd, prevOffset), len, head,
-            prevOffset, math.max(lineEnd, prevOffset))
-      }
+      .map(new ScanFile(conf))
+
+  /** One pending file's [[ScanRow]], computed by [[scanRows]]'s tasks.
+   *  A named class rather than a lambda, so `SparkContext.clean` has
+   *  no closure to scan each round. */
+  private final class ScanFile(conf: Broadcast[SerializableConfiguration])
+      extends (ScanFile.In => ScanRow) with Serializable {
+    def apply(in: ScanFile.In): ScanRow = {
+      val (pathStr, len, mt, prevOffset, known) = in
+      val (f, p) = openFs(pathStr, conf)
+      val lineEnd = lastLineEnd(f, p, len)
+      val head = known.orElse(headAttemptId(f, p, len))
+      if (prevOffset < 0L) // whole/rewritten: parsed by the file reader
+        ScanRow(pathStr, mt, lineEnd, len, head, 0L, 0L)
+      else // grown: tail range [prevOffset, lineEnd) when it advanced
+        ScanRow(pathStr, mt, math.max(lineEnd, prevOffset), len, head,
+          prevOffset, math.max(lineEnd, prevOffset))
+    }
+  }
+
+  private object ScanFile {
+    /** (path, len, mtime, prevOffset, checkpointed head verdict) */
+    type In = (String, Long, Long, Long, Option[Option[String]])
+  }
+
+  /** The tail parse's input: each line with its file and the file's
+   *  attempt id. */
+  private val TailSchema = StructType(Seq("value", "log_file", "attempt_hint")
+    .map(StructField(_, StringType)))
 
   /** Distributed tail read over the grown files' collected rows: each
    *  task seeks and reads its files' byte ranges in an executor and
    *  emits the lines, stamped with the file's attempt id, directly
-   *  into the parser's input — the tail bytes never stage on the
-   *  driver. */
+   *  into the parser's input as rows of [[TailSchema]] — the tail
+   *  bytes never stage on the driver. */
   private def tailRows(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
-                       tails: Seq[ScanRow]): RDD[(String, String, String)] =
+                       tails: Seq[ScanRow]): RDD[InternalRow] =
     spark.sparkContext
       .parallelize(tails, math.min(tails.size, 64).max(1))
-      .flatMap { r =>
-        val (f, p) = openFs(r.path, conf)
-        val buf = new Array[Byte]((r.tailEnd - r.tailStart).toInt)
-        val in = f.open(p)
-        try { in.seek(r.tailStart); in.readFully(buf) } finally in.close()
-        new String(buf, "UTF-8").linesIterator
-          .filter(_.nonEmpty).map(l => (l, r.path, r.head.flatten.orNull)).toList
-      }
+      .flatMap(new TailLines(conf))
+
+  /** A grown file's tail lines, read by [[tailRows]]'s tasks; a named
+   *  class like [[ScanFile]]. */
+  private final class TailLines(conf: Broadcast[SerializableConfiguration])
+      extends (ScanRow => Iterator[InternalRow]) with Serializable {
+    def apply(r: ScanRow): Iterator[InternalRow] = {
+      val (f, p) = openFs(r.path, conf)
+      val buf = new Array[Byte]((r.tailEnd - r.tailStart).toInt)
+      val in = f.open(p)
+      try { in.seek(r.tailStart); in.readFully(buf) } finally in.close()
+      val path = UTF8String.fromString(r.path)
+      val hint = UTF8String.fromString(r.head.flatten.orNull)
+      new String(buf, "UTF-8").linesIterator.filter(_.nonEmpty)
+        .map(l => InternalRow(UTF8String.fromString(l), path, hint))
+    }
+  }
 }

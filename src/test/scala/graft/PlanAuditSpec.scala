@@ -121,9 +121,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(agg.count() === 2)
   }
 
-  test("event-log parse: one from_json per line, canonical projection in whole-stage codegen") {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, JsonToStructs}
+  test("event-log parse: no JsonToStructs; EventLine runs in whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.events.EventLine
     // the nodes a codegen stage compiles: its subtree down to its inputs
     def stageNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case _: InputAdapter => Nil
@@ -131,20 +133,18 @@ class PlanAuditSpec extends SparkSpec {
     })
     def audit(what: String, plans: Seq[SparkPlan]): Unit = {
       val shown = s"$what:\n${plans.mkString("\n")}"
-      val parses = plans.flatMap(_.collect { case n => n.expressions }.flatten)
-        .flatMap(_.collect { case j: JsonToStructs => j })
-      assert(parses.size === 1, shown)
-      val canonical = plans.flatMap(_.collect {
-        case p: ProjectExec if p.projectList.exists {
-          case a: Alias => a.name == "event_time_us"
-          case _ => false
-        } => p
+      val exprs = plans.flatMap(_.collect { case n => n.expressions }.flatten)
+      assert(exprs.flatMap(_.collect { case j: JsonToStructs => j }).isEmpty, shown)
+      // one parse per line: the expression sits in exactly one project
+      assert(exprs.flatMap(_.collect { case e: EventLine => e }).size === 1, shown)
+      val parse = plans.flatMap(_.collect {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[EventLine])) => p
       })
-      assert(canonical.size === 1, shown)
+      assert(parse.size === 1, shown)
       val compiled = plans.flatMap(_.collect {
         case w: WholeStageCodegenExec => stageNodes(w.child)
       }).flatten
-      assert(compiled.exists(_ eq canonical.head), shown)
+      assert(compiled.exists(_ eq parse.head), shown)
     }
     val logs = tmpDir("parse-once-logs")
     val log = java.nio.file.Paths.get(logs, "app-po1.json")
@@ -165,6 +165,14 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(tail === 4)
     audit("tail read", tailPlans)
+    // streaming: the event-type filter stays above the parse
+    val q = graft.streaming.StreamingIngest.readStream(spark, logs)
+      .writeStream.format("noop").start()
+    try {
+      q.processAllAvailable()
+      audit("streaming read", Seq(q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan))
+    } finally q.stop()
   }
 
   test("whole-stage codegen covers the canonical projection") {

@@ -2,7 +2,9 @@ package graft.events
 
 import graft.SparkSpec
 import graft.analytics.Resources
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionAccess
 
 class EventLogParserSpec extends SparkSpec {
 
@@ -145,5 +147,109 @@ class EventLogParserSpec extends SparkSpec {
     assert(e(0).getAs[String]("spark_version") === "4.1.2")
     assert(e(0).getAs[scala.collection.Map[String, String]]("spark_props") === Map(
       "spark.master" -> "yarn", "spark.version" -> "3.5.7", "spark.app.version" -> "4.1.2"))
+  }
+
+  /** `lines` of the given files, as [[EventLogParser.read]] builds them. */
+  private def linesOf(paths: Seq[String]): DataFrame =
+    spark.read.textFile(paths: _*).toDF("value").withColumn("log_file", input_file_name())
+
+  private def writeLines(dir: String, name: String, lines: Seq[Array[Byte]]): String = {
+    val p = java.nio.file.Paths.get(dir, name)
+    val out = new java.io.ByteArrayOutputStream()
+    lines.foreach { l => out.write(l); out.write('\n') }
+    java.nio.file.Files.write(p, out.toByteArray)
+    p.toString
+  }
+
+  private lazy val fixtureFiles = {
+    val d = tmpDir("parity-fixture")
+    EventLogFixture.writeLogs(d, Seq("app-20240101-0011", "app-20240101-0012")) :+
+      writeLines(d, "app-ext.json", EventLogFixture.extendedLog().map(_.getBytes("UTF-8")))
+  }
+
+  private lazy val fleet = EventLogFixture.fleet(seed = 7, apps = 8)
+
+  private lazy val fleetFiles = {
+    val d = tmpDir("parity-fleet")
+    fleet.map { case (name, lines) => writeLines(d, name, lines.map(_.getBytes("UTF-8"))) }
+  }
+
+  private lazy val edgeFiles = {
+    val d = tmpDir("parity-edge")
+    val (a, b) = EventLogFixture.edgeLines.splitAt(EventLogFixture.edgeLines.size / 2)
+    Seq(writeLines(d, "app-edge-1.json", a), writeLines(d, "edge-2.log.inprogress", b))
+  }
+
+  private lazy val poisonFile = writeLines(tmpDir("parity-poison"), "app-poison.json",
+    EventLogFixture.poisonLines.map(_.getBytes("UTF-8")))
+
+  /** Both parses' rows, each as one string; maps as their entries, in
+   *  order and with duplicate keys. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.withColumn("spark_props", map_entries(col("spark_props")))
+      .collect().map(_.toSeq.mkString(" | ")).toSeq.sorted
+
+  /** The parser's frame equals the `from_json` oracle's: schema and
+   *  every row, `event_id` included. Returns the row count. */
+  private def assertParity(what: String, lines: => DataFrame, keepRaw: Boolean = false): Int = {
+    val got = EventLogParser.parseLines(lines, keepRaw)
+    val want = EventLogOracle.parseLines(lines, keepRaw)
+    assert(got.schema === want.schema, what)
+    val (g, w) = (rowsOf(got), rowsOf(want))
+    val extra = g.diff(w)
+    val missing = w.diff(g)
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$what: ${extra.size} rows only from the parser, e.g.\n${extra.take(3).mkString("\n")}\n" +
+        s"${missing.size} only from from_json, e.g.\n${missing.take(3).mkString("\n")}")
+    g.size
+  }
+
+  private def withConfs[T](confs: Seq[(String, String)])(body: => T): T = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("parse equals the from_json oracle in every codegen and ANSI mode") {
+    val codegen = Seq(
+      "whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
+      "no whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+      "no codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    val fleetEvents = fleet.map(_._2.size).sum
+    for ((mode, confs) <- codegen; ansi <- Seq(true, false)) {
+      val what = s"$mode, ANSI $ansi"
+      withConfs(confs :+ ("spark.sql.ansi.enabled" -> ansi.toString)) {
+        assert(assertParity(s"fixture, $what", linesOf(fixtureFiles)) === 30)
+        assert(assertParity(s"fleet, $what", linesOf(fleetFiles)) === fleetEvents)
+        // the old parse failed the whole query on a poison line under ANSI
+        val edge = if (ansi) edgeFiles else edgeFiles :+ poisonFile
+        val edgeRows = assertParity(s"edge table, $what", linesOf(edge), keepRaw = true)
+        assert(edgeRows > 40, what)
+        assertParity(s"hinted edge table, $what",
+          linesOf(edge).withColumn("attempt_hint", lit("3")))
+      }
+    }
+    // the poison lines: kept under ANSI with the value that does not fit read as null
+    withConfs(Seq("spark.sql.ansi.enabled" -> "true")) {
+      val p = EventLogParser.parseLines(linesOf(Seq(poisonFile))).collect()
+        .map(r => r.getAs[String]("event_type") -> r).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      assert(p.values.map(_.length).sum === EventLogFixture.poisonLines.size)
+      assert(p(EventModel.ExecutorAdded).forall(_.isNullAt(p(EventModel.ExecutorAdded).head.fieldIndex("cores"))))
+      assert(p(EventModel.ExecutorAdded).map(_.getAs[String]("host")).sorted.toSeq === Seq("big", "neg"))
+      assert(p(EventModel.JobStart).head.isNullAt(p(EventModel.JobStart).head.fieldIndex("event_time_us")))
+      assert(p(EventModel.JobStart).head.getAs[Long]("job_id") === 77L)
+      assert(p(EventModel.TaskEnd).head.isNullAt(p(EventModel.TaskEnd).head.fieldIndex("shuffle_read_bytes")))
+      assert(p(EventModel.TaskEnd).head.getAs[Long]("task_id") === 5L)
+    }
+  }
+
+  test("a session without GraftExtensions parses event logs") {
+    val plain = SessionAccess.withoutExtensions(spark)
+    assert(spark.catalog.functionExists("word_ngrams"))
+    assert(!plain.catalog.functionExists("word_ngrams"))
+    val c = EventLogParser.read(plain, dir)
+    assert(c.count() === 24)
+    assert(rowsOf(c) === rowsOf(canon))
   }
 }

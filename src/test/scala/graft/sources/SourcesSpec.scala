@@ -366,6 +366,45 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("under ANSI an overflowing value reads null; bulk and tail ingest go on") {
+    val old = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val d = tmpDir("ansi-poison")
+      val p = java.nio.file.Paths.get(d, "app-poison.json")
+      val app = EventLogFixture.appLog("app-poison")
+      val poison = EventLogFixture.poisonLines
+      append(p, app.take(6) :+ poison.head) // Total Cores 4000000000
+      // bulk: a collect and a store write, where the ANSI cast failed
+      val store = tmpDir("ansi-poison-store")
+      assert(EventLogSource.readDirectory(spark, s"file://$d").collect().length === 7)
+      EventLogSource.writeStore(EventLogSource.readDirectory(spark, s"file://$d"), s"file://$store")
+      val bulk = spark.read.parquet(store)
+      assert(bulk.count() === 7)
+      assert(bulk.filter(col("host") === "big").select("cores").collect()
+        .map(_.isNullAt(0)).toSeq === Seq(true))
+      // incremental: the whole file, then two tail rounds that each
+      // carry a poison line; every round commits
+      val ing = new IncrementalIngest(spark, tmpDir("ansi-poison-ckpt") + "/state.tsv")
+      val tails = tmpDir("ansi-poison-tails")
+      def round(): Seq[String] =
+        ing.ingest(s"file://$d")(_.write.mode("append").parquet(s"file://$tails"))
+      assert(round().size === 1)
+      append(p, app.slice(6, 9) ++ poison.drop(2)) // timestamps, a shuffle-read sum
+      assert(round().size === 1)
+      append(p, Seq(poison(1), taskEnd(50)))
+      assert(round().size === 1)
+      assert(round().isEmpty) // the checkpoint advanced past every line
+      val rows = spark.read.parquet(tails)
+      assert(rows.count() === 7 + 3 + (poison.size - 2) + 2)
+      assert(rows.filter(col("job_id") === 77 && col("event_time_us").isNull).count() === 2)
+      assert(rows.filter(col("task_id") === 5 && col("shuffle_read_bytes").isNull).count() === 1)
+      assert(rows.filter(col("event_type") === "SparkListenerExecutorAdded" && col("cores").isNull)
+        .count() === 2)
+    } finally old.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
+      spark.conf.set("spark.sql.ansi.enabled", _))
+  }
+
   test("lastLineEnd finds a newline past its first window; a file with none commits 0") {
     val d = tmpDir("incr-lastline")
     def lastLineEnd(name: String, body: String): Long = {

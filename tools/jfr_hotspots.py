@@ -37,6 +37,12 @@ Options:
     --phases        also split each line's samples by the Spark phase
                     that was running (see PHASES), and print the
                     phases' totals
+    --threads       also split each line's samples by the thread group
+                    that took them (see THREADS: the driver's `main`,
+                    task threads, AQE stage threads, the DAG
+                    scheduler), and print the groups' totals. A filter
+                    on a driver frame (`--under`) keeps only driver
+                    samples; run without it to see the task side.
 
 Prints one line per graft source line: samples, share of the kept
 samples, and `Class.method:line`. Exits 1 if no sample is kept.
@@ -74,6 +80,23 @@ PHASES = [
 ]
 PHASE_RES = [(name, re.compile(rx)) for name, rx in PHASES]
 OTHER = "other"
+
+# Thread groups, matched against the sampled thread's Java name.
+THREADS = [
+    ("driver main", r"^main$"),
+    ("task", r"^Executor task launch worker"),
+    ("AQE stage", r"^(shuffle-exchange|broadcast-exchange|ResultQueryStageExecution"
+                  r"|QueryStageCreator|subquery)"),
+    ("dag scheduler", r"^dag-scheduler-event-loop"),
+]
+THREAD_RES = [(name, re.compile(rx)) for name, rx in THREADS]
+
+
+def thread_of(event):
+    """The thread group of the sampled thread, else OTHER."""
+    t = event.get("values", {}).get("sampledThread") or {}
+    name = t.get("javaName") or t.get("osName") or ""
+    return next((group for group, rx in THREAD_RES if rx.search(name)), OTHER)
 
 
 def phase_of(frames):
@@ -113,6 +136,7 @@ def main(argv=None):
     ap.add_argument("--under", default=None)
     ap.add_argument("--top", type=int, default=30)
     ap.add_argument("--phases", action="store_true")
+    ap.add_argument("--threads", action="store_true")
     args = ap.parse_args(argv)
 
     with open(args.json) as fh:
@@ -123,6 +147,8 @@ def main(argv=None):
     counts = collections.Counter()
     phases = collections.defaultdict(collections.Counter)
     totals = collections.Counter()
+    threads = collections.defaultdict(collections.Counter)
+    thread_totals = collections.Counter()
     for e in events:
         if e.get("type") != "jdk.ExecutionSample":
             continue
@@ -135,12 +161,15 @@ def main(argv=None):
         truncated += cut
         phase = phase_of(frames)
         totals[phase] += 1
+        group = thread_of(e)
+        thread_totals[group] += 1
         graft = next((f for f in frames if f[0].startswith("graft.")), None)
         if graft is None:
             outside += 1
             continue
         counts[label(graft)] += 1
         phases[label(graft)][phase] += 1
+        threads[label(graft)][group] += 1
 
     print(f"samples: {total} recorded, {kept} kept, {truncated} of them truncated, "
           f"{outside} with no graft frame")
@@ -157,13 +186,20 @@ def main(argv=None):
     for lab, n in counts.most_common(args.top):
         split = ""
         if args.phases:
-            split = "  [" + ", ".join(f"{p} {k}" for p, k in phases[lab].most_common()) + "]"
+            split += "  [" + ", ".join(f"{p} {k}" for p, k in phases[lab].most_common()) + "]"
+        if args.threads:
+            split += "  [" + ", ".join(f"{t} {k}" for t, k in threads[lab].most_common()) + "]"
         print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {lab}{split}")
     if args.phases:
         print("by Spark phase (innermost phase frame of every kept sample):")
         for phase in [p for p, _ in PHASES] + [OTHER]:
             n = totals[phase]
             print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {phase}")
+    if args.threads:
+        print("by thread group (every kept sample):")
+        for group in [t for t, _ in THREADS] + [OTHER]:
+            n = thread_totals[group]
+            print(f"  {n:>{width}}  {100.0 * n / kept:5.1f}%  {group}")
     return 0
 
 
