@@ -37,7 +37,8 @@ object EventLogParser {
    *
    *  Parse once: a line is read by ONE [[EventLine]] expression (the
    *  `p` column of the child projection), which returns the line's
-   *  canonical struct, and the canonical columns are `p.*`. The
+   *  canonical struct; the canonical columns are its fields (its
+   *  `attempt_raw` only feeds `attempt_id`). The
    *  expression generates its own code, so the parse and the
    *  projection run inside one whole-stage-codegen stage; `p` is a
    *  child column because its fields are read 33 times, and a
