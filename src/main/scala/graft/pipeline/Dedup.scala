@@ -1,16 +1,15 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
-import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.WordNGrams
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import graft.streaming.StateStores
 import graft.util.Formula
 import graft.util.Round.r4
@@ -366,8 +365,12 @@ ORDER BY n.source"""
    *  lambda interpreted on the hottest loop of the dedup family.
    *  Docs shorter than n words yield an empty array (no rows). */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame =
-    docs.select(col("doc_id"),
-      explode(call_function("word_ngrams", col("text"), lit(n))).as("gram"))
+    docs.select(col("doc_id"), explode(shingleArray(col("text"), n)).as("gram"))
+
+  /** A text's distinct word-n-gram shingles in first-occurrence order
+   *  (null for a null text): the array [[shingles]] explodes. */
+  private[graft] def shingleArray(text: Column, n: Int = 3): Column =
+    call_function("word_ngrams", text, lit(n))
 
   /** Materialize the shingle frame once for the whole near-dup family:
    *  every shingle consumer (`dedupNgram`/`dedupMinhash`
@@ -1948,20 +1951,30 @@ ORDER BY c.doc_a, c.doc_b"""
   private[graft] final case class ShingledDoc(id: Long, text: String,
                                               grams: Array[String])
 
+  /** The `(text)` rows a bounded read's [[Formula]]s are bound to: the
+   *  builders are analysed once, not in the read's own plan, where the
+   *  bloom chain's analysis cost every trigger more than the read. */
+  private val textRow = StructType(Seq(StructField("text", StringType)))
+
+  /** [[shingleArray]] (n = 3) as a [[Formula]] over `(text)`: a bounded
+   *  n-gram read's shingles. */
+  private val shingleFormula = new Formula(textRow, shingleArray(col("text")))
+
   /** A bounded n-gram trigger's batch row `(doc_id, text)` as its
-   *  [[ShingledDoc]]: its distinct shingles in `word_ngrams(text, 3)`'s
-   *  order, by the kernel that expression calls
-   *  ([[WordNGrams.compute]]; a null text has none), weighed as its
-   *  [[shingles]] rows (a doc without shingles is one row). */
-  private[graft] object ShingleRows extends StateStores.TaskRows[ShingledDoc] {
-    def apply(row: InternalRow): ShingledDoc =
-      if (row.isNullAt(1)) ShingledDoc(StateStores.longAt(row, 0), null, Array.empty)
-      else {
-        val text = row.getUTF8String(1)
-        val grams = WordNGrams.compute(text, 3)
-        ShingledDoc(StateStores.longAt(row, 0), text.toString,
-          Array.tabulate(grams.numElements())(grams.getUTF8String(_).toString))
-      }
+   *  [[ShingledDoc]], its shingles the bound [[shingleFormula]]'s value
+   *  (a null text has none), weighed as its [[shingles]] rows (a doc
+   *  without shingles is one row). */
+  private[graft] final case class ShingleRows(grams: Expression)
+      extends StateStores.TaskRows[ShingledDoc] {
+    def apply(row: InternalRow): ShingledDoc = {
+      val text = StateStores.stringAt(row, 1)
+      ShingledDoc(StateStores.longAt(row, 0), text,
+        if (text == null) Array.empty
+        else {
+          val gs = grams.eval(InternalRow(row.getUTF8String(1))).asInstanceOf[ArrayData]
+          Array.tabulate(gs.numElements())(gs.getUTF8String(_).toString)
+        })
+    }
 
     override def weight(doc: ShingledDoc): Long = math.max(1, doc.grams.length)
   }
@@ -1973,7 +1986,7 @@ ORDER BY c.doc_a, c.doc_b"""
   private[graft] def shingledBatch(batch: DataFrame,
                                    localMax: Int): Option[Seq[ShingledDoc]] =
     StateStores.readBatch(batch.select(col("doc_id").cast("long"), col("text")),
-      ShingleRows, localMax).map(_.toSeq)
+      ShingleRows(shingleFormula(batch.sparkSession)), localMax).map(_.toSeq)
 
   /** The rows of a bounded n-gram trigger's pairs. */
   private[graft] val ngramPairSchema = StructType(Seq(
@@ -3133,51 +3146,48 @@ GROUP BY t.hamming ORDER BY t.hamming"""
   val BloomBits = 1 << 20
   val BloomProbes = 5
 
-  /** Corpus membership bloom as a PLAIN DATAFRAME of (word_idx, word)
-   *  64-bit words — no driver-side sketch object, no UDF. Each doc's
-   *  two xxhash64 seeds expand to `probes` double-hashed bit
-   *  positions (h1 + i*h2 mod m — Kirsch-Mitzenmacher, so two text
-   *  hashes fund any probe count); positions fold to words via
-   *  `bit_or`. The frame is at most m/64 rows regardless of corpus
-   *  size, mergeable by the same bit_or fold (append a delta frame,
-   *  re-fold on read — the [[graft.streaming.StreamingDedup]] gram-df
-   *  delta-store discipline), and broadcastable to probes. */
   /** Kirsch-Mitzenmacher probe i of a double-hashed bloom, in
    *  ANSI-safe arithmetic: both hashes reduce mod m BEFORE the affine
    *  combine, so `pmod(h,m) + i*pmod(h,m)` stays < (probes+1)*m and
    *  never wraps a long (Spark 4's ANSI mode throws on overflow
    *  instead of wrapping). Build and probe share this definition —
-   *  that identity is the no-false-negative guarantee. */
-  private[graft] def probePos(h1: Column, h2: Column, i: Column, mBits: Int): Column =
-    probePos(h1, h2, i, lit(mBits.toLong))
-
-  /** The one probe-position definition (column-typed m so the
-   *  calibration sweep can grid over filter sizes); [[bloomWords]],
-   *  [[dedupExactIncremental]] (both plans: the bounded one through
-   *  [[probePosFormula]]) and [[bloomFpCalibration]] all probe through
-   *  here. */
+   *  that identity is the no-false-negative guarantee. The one
+   *  probe-position definition (column-typed m so the calibration
+   *  sweep can grid over filter sizes): [[bloomBits]] and
+   *  [[bloomFpCalibration]] probe through here. */
   private[graft] def probePos(h1: Column, h2: Column, i: Column, mBits: Column): Column =
     pmod(pmod(h1, mBits) + i * pmod(h2, mBits), mBits)
 
-  /** [[probePos]] as a [[Formula]] over `(h1, h2, i, m_bits)`, typed as
-   *  [[bloomWords]] feeds it: a bounded exact trigger's probe positions. */
-  private[graft] val probePosFormula = new Formula(StructType(Seq(
-      StructField("h1", LongType), StructField("h2", LongType),
-      StructField("i", IntegerType), StructField("m_bits", LongType))),
-    probePos(col("h1"), col("h2"), col("i"), col("m_bits")))
-
-  def bloomWords(docs: DataFrame, mBits: Int = BloomBits,
-                 probes: Int = BloomProbes): DataFrame = {
-    require(mBits % 64 == 0 && mBits > 0, "mBits must be a positive multiple of 64")
-    docs.select(xxhash64(col("text")).as("h1"),
-        xxhash64(col("text"), lit(1)).as("h2"))
-      .select(explode(sequence(lit(0), lit(probes - 1))).as("i"),
-        col("h1"), col("h2"))
-      .select(probePos(col("h1"), col("h2"), col("i"), mBits).as("pos"))
-      .select(expr("pos div 64").cast("int").as("word_idx"),
-        expr("shiftleft(cast(1 as bigint), cast(pos % 64 as int))").as("mask"))
-      .groupBy("word_idx").agg(expr("bit_or(mask)").as("word"))
+  /** A text's bloom bits, the one spelling of the bloom chain: per probe
+   *  `0 until probes`, `struct(word_idx, mask)` of its [[probePos]]
+   *  from the seeds `xxhash64(text)`, `xxhash64(text, 1)`. Literal probe
+   *  indexes, not a lambda, keep the array in generated code. With no
+   *  probe every doc would pass the all-probes-set test, so `probes`
+   *  must be at least one and `mBits` a positive multiple of 64. */
+  private[graft] def bloomBits(text: Column, mBits: Int, probes: Int): Column = {
+    require(mBits > 0 && mBits % 64 == 0 && probes >= 1,
+      s"a bloom needs mBits a positive multiple of 64 and probes >= 1 " +
+        s"(mBits = $mBits, probes = $probes)")
+    val (h1, h2) = (xxhash64(text), xxhash64(text, lit(1)))
+    array((0 until probes).map { i =>
+      val pos = probePos(h1, h2, lit(i), lit(mBits.toLong))
+      struct(call_function("div", pos, lit(64)).cast("int").as("word_idx"),
+        call_function("shiftleft", lit(1L), (pos % 64).cast("int")).as("mask"))
+    }: _*)
   }
+
+  /** Corpus membership bloom as a PLAIN DATAFRAME of (word_idx, word)
+   *  64-bit words — no driver-side sketch object, no UDF: each doc's
+   *  [[bloomBits]] fold to words via `bit_or`. The frame is at most
+   *  m/64 rows regardless of corpus size, mergeable by the same bit_or
+   *  fold (append a delta frame, re-fold on read — the
+   *  [[graft.streaming.StreamingDedup]] gram-df delta-store
+   *  discipline), and broadcastable to probes. */
+  def bloomWords(docs: DataFrame, mBits: Int = BloomBits,
+                 probes: Int = BloomProbes): DataFrame =
+    docs.select(explode(bloomBits(col("text"), mBits, probes)).as("b"))
+      .select("b.*")
+      .groupBy("word_idx").agg(expr("bit_or(mask)").as("word"))
 
   /** The hash state [[dedupExactIncremental]] count-folds: one
    *  `(doc_id, content_hash)` row per corpus doc (the layout of the
@@ -3337,36 +3347,35 @@ ORDER BY g.m_bits"""
         mBits, probes))
 
   /** One batch doc of a bounded exact trigger: its id, text, md5
-   *  content hash and bloom probe positions. */
+   *  content hash and [[bloomBits]] as `(word_idx, mask)` pairs. */
   private[graft] final case class HashedDoc(id: Long, text: String,
-                                            hash: String, pos: Array[Long])
+                                            hash: String, bits: Array[(Int, Long)])
 
-  /** `xxhash64(text)` and `xxhash64(text, 1)`, the two seeds of a
-   *  doc's bloom probes, by the function those expressions call:
-   *  Spark's `XxHash64Function` from the seed 42 (a null text leaves
-   *  it), then chained over the int 1. */
-  private[graft] def bloomSeeds(text: UTF8String): (Long, Long) = {
-    val h1 = if (text == null) 42L else XxHash64Function.hash(text, StringType, 42L)
-    (h1, XxHash64Function.hash(1, IntegerType, h1))
-  }
+  /** A bounded exact read's hashes, one [[Formula]] per geometry:
+   *  `md5(text)` as [[contentHashes]] projects it and [[bloomBits]]. */
+  private val docHashes = new ConcurrentHashMap[(Int, Int), Formula]
+
+  private def docHashFormula(mBits: Int, probes: Int): Formula =
+    docHashes.computeIfAbsent((mBits, probes), _ =>
+      new Formula(textRow, struct(md5(col("text")), bloomBits(col("text"), mBits, probes))))
 
   /** A bounded exact trigger's batch row `(doc_id, text)` as its
-   *  [[HashedDoc]], by the kernels its Catalyst expressions call:
-   *  `md5(text)` (the hex digest of its UTF-8 bytes), [[bloomSeeds]]
-   *  and `pos`, the bound [[probePosFormula]] — the positions
-   *  [[bloomWords]] sets. Weighed as its `probes` probe rows. */
-  private[graft] final case class HashRows(mBits: Int, probes: Int, pos: Expression)
+   *  [[HashedDoc]], its hash and bits the bound [[docHashFormula]]'s
+   *  value, weighed as its probe rows. */
+  private[graft] final case class HashRows(hashes: Expression)
       extends StateStores.TaskRows[HashedDoc] {
     def apply(row: InternalRow): HashedDoc = {
-      val text = if (row.isNullAt(1)) null else row.getUTF8String(1)
-      val (h1, h2) = bloomSeeds(text)
-      HashedDoc(StateStores.longAt(row, 0), if (text == null) null else text.toString,
-        if (text == null) null else DigestUtils.md5Hex(text.getBytes),
-        Array.tabulate(probes)(i => pos.eval(InternalRow(h1, h2, i, mBits.toLong))
-          .asInstanceOf[Long]))
+      val h = hashes.eval(InternalRow(if (row.isNullAt(1)) null else row.getUTF8String(1)))
+        .asInstanceOf[InternalRow]
+      val bits = h.getArray(1)
+      HashedDoc(StateStores.longAt(row, 0), StateStores.stringAt(row, 1),
+        StateStores.stringAt(h, 0), Array.tabulate(bits.numElements()) { i =>
+          val bit = bits.getStruct(i, 2)
+          (bit.getInt(0), bit.getLong(1))
+        })
     }
 
-    override def weight(doc: HashedDoc): Long = math.max(1, probes)
+    override def weight(doc: HashedDoc): Long = doc.bits.length
   }
 
   /** The batch side of a bounded exact trigger, read once
@@ -3377,12 +3386,7 @@ ORDER BY g.m_bits"""
   private[graft] def hashedBatch(batch: DataFrame, mBits: Int, probes: Int,
                                  localMax: Int): Option[Seq[HashedDoc]] =
     StateStores.readBatch(batch.select(col("doc_id").cast("long"), col("text")),
-      HashRows(mBits, probes, probePosFormula(batch.sparkSession)), localMax)
-      .map(_.toSeq)
-
-  /** The bloom word and bit of a probe position. */
-  private[graft] def bloomBit(pos: Long): (Int, Long) =
-    ((pos / 64).toInt, 1L << (pos % 64).toInt)
+      HashRows(docHashFormula(mBits, probes)(batch.sparkSession)), localMax).map(_.toSeq)
 
   private val copiesSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_corpus_copies", LongType)))
@@ -3411,12 +3415,11 @@ ORDER BY g.m_bits"""
                                  docs: Seq[HashedDoc],
                                  probes: Int): Seq[(Long, Option[Long])] = {
     val bloom = mutable.HashMap.empty[Int, Long]
-    words.probeRows("word_idx", docs.flatMap(_.pos.map(bloomBit(_)._1)).distinct)
+    words.probeRows("word_idx", docs.flatMap(_.bits.map(_._1)).distinct)
       .foreach(r => if (!r.isNullAt(0) && !r.isNullAt(1))
         bloom(r.getInt(0)) = bloom.getOrElse(r.getInt(0), 0L) | r.getLong(1))
-    val hits = docs.groupMapReduce(_.id)(_.pos.count { p =>
-      val (w, bit) = bloomBit(p)
-      bloom.get(w).exists(x => (x & bit) != 0L)
+    val hits = docs.groupMapReduce(_.id)(_.bits.count { case (w, mask) =>
+      bloom.get(w).exists(x => (x & mask) != 0L)
     }.toLong)(_ + _)
     val cands = docs.filter(d => hits(d.id) == probes && d.hash != null)
     val copies = mutable.HashMap.empty[String, Long]
@@ -3449,14 +3452,10 @@ ORDER BY g.m_bits"""
                                     mBits: Int, probes: Int): DataFrame = {
     val words = corpusWords
       .groupBy("word_idx").agg(expr("bit_or(word)").as("word"))
-    val b = batch.select(col("doc_id"), col("text"),
-      xxhash64(col("text")).as("h1"), xxhash64(col("text"), lit(1)).as("h2"))
+    val b = batch.select(col("doc_id"), col("text"))
     val hits = b
-      .select(col("doc_id"), explode(sequence(lit(0), lit(probes - 1))).as("i"),
-        col("h1"), col("h2"))
-      .select(col("doc_id"), probePos(col("h1"), col("h2"), col("i"), mBits).as("pos"))
-      .select(col("doc_id"), expr("pos div 64").cast("int").as("word_idx"),
-        expr("shiftleft(cast(1 as bigint), cast(pos % 64 as int))").as("mask"))
+      .select(col("doc_id"), explode(bloomBits(col("text"), mBits, probes)).as("b"))
+      .select(col("doc_id"), col("b.word_idx"), col("b.mask"))
       .join(broadcast(words), Seq("word_idx"), "left")
       .select(col("doc_id"),
         when(col("word").isNotNull &&

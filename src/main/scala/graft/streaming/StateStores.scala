@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.{FutureAction, InterruptibleIterator, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.{LocalTableScanExec, PartitionedFileUtil, QueryExecution, SQLExecutionRDD}
@@ -41,8 +41,9 @@ import scala.util.{Failure, Success, Try}
  *    API over frames that are not stores;
  *  - [[readBatch]]: a bounded trigger's batch read once — one job over
  *    a plain projection (none for a `LocalRelation`), its rows
- *    converted in the tasks by per-row kernels ([[TaskRows]]) and
- *    weighed against the trigger's bound;
+ *    converted in the tasks by the distributed plan's own Catalyst
+ *    expressions ([[TaskRows]]) and weighed against the trigger's
+ *    bound;
  *  - [[runBounded]]: the one job of a probe or a batch read, cancelled
  *    once its values pass the bound; its task is a named class, so no
  *    closure is cleaned per job;
@@ -254,11 +255,12 @@ private[graft] object StateStores {
    *  the rows it keeps, one value per kept row, and the weight of that
    *  value against the read's bound (one by default). A [[Store]]
    *  probe keeps the rows at its keys ([[ProbeRows]]); [[readBatch]]
-   *  keeps every row of a batch, its value computed by the same
-   *  kernels the Catalyst expressions it stands for call. It runs in
-   *  the read's tasks: serializable, and holding no session. A row's
-   *  strings point into a reused buffer, so a value keeps copies of
-   *  them, never the `UTF8String`s themselves. */
+   *  keeps every row of a batch, its value computed by the Catalyst
+   *  expressions of the distributed plan's own Column builders, bound
+   *  once as `graft.util.Formula`s — no expression is re-implemented
+   *  in Scala. It runs in the read's tasks: serializable, and holding
+   *  no session. A row's strings point into a reused buffer, so a value
+   *  keeps copies of them, never the `UTF8String`s themselves. */
   trait TaskRows[T] extends Serializable {
     def keep(row: InternalRow): Boolean = true
     def apply(row: InternalRow): T
@@ -282,6 +284,11 @@ private[graft] object StateStores {
     if (row.isNullAt(i)) throw new NullPointerException(s"null batch key in column $i")
     else row.getLong(i)
 
+  /** The string at `i` of a batch row, copied out of the row's buffer;
+   *  null where the column is. */
+  def stringAt(row: InternalRow, i: Int): String =
+    if (row.isNullAt(i)) null else row.getUTF8String(i).toString
+
   /** The batch of a bounded trigger, read once: the rows of the plain
    *  projection `batch` as values of `rows`, in partition order, if
    *  their weights total at most `max`; else `None`, also for a
@@ -293,8 +300,14 @@ private[graft] object StateStores {
    *  stage of that job, not a job of its own. A plan that is a
    *  `LocalTableScanExec` (a `LocalRelation` batch) runs no job; its
    *  rows are converted on the driver. No Dataset action runs, so no
-   *  query listener is told of it. The job stops once the values
-   *  pass `max` ([[runBounded]]). */
+   *  query listener is told of it. The job stops once the values pass
+   *  `max` ([[runBounded]]). Its partitions are coalesced, without a
+   *  shuffle, into at most `defaultParallelism` contiguous ranges
+   *  ([[ContiguousRanges]]): the cancel reaches the tasks only after
+   *  the tasks that finish meanwhile have shipped their values, so an
+   *  over-bound batch must pass `max` inside each task, which then
+   *  ships only its weight, not across many small tasks that each ship
+   *  theirs. */
   def readBatch[T: ClassTag](batch: DataFrame, rows: TaskRows[T],
                              max: Int): Option[Array[T]] =
     if (max < 0) None
@@ -306,9 +319,28 @@ private[graft] object StateStores {
           val (values, weight) = new BoundedTask(rows, max).apply(local.executeCollect().iterator)
           Option.when(weight <= max)(values)
         case plan =>
-          runBounded(new SQLExecutionRDD(plan.execute(), spark.sessionState.conf), rows, max)
+          val rdd = new SQLExecutionRDD(plan.execute(), spark.sessionState.conf)
+          runBounded(rdd.coalesce(spark.sparkContext.defaultParallelism, shuffle = false,
+            Some(ContiguousRanges)), rows, max)
       }
     }
+
+  /** Coalesces an RDD's partitions into at most `maxPartitions`
+   *  contiguous, near-equal ranges, so the coalesced partitions keep
+   *  the parent's order (Spark's default coalescer groups by preferred
+   *  location). */
+  private object ContiguousRanges extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val parts = parent.partitions
+      val n = math.min(maxPartitions, parts.length)
+      def start(g: Int) = (g.toLong * parts.length / n).toInt
+      Array.tabulate(n) { g =>
+        val group = new PartitionGroup()
+        group.partitions ++= parts.slice(start(g), start(g + 1))
+        group
+      }
+    }
+  }
 
   /** The values `rows` makes of the rows of `rdd`, in partition order,
    *  if their weights total at most `max`; else `None`. ONE job reads

@@ -29,8 +29,8 @@ import graft.pipeline.Dedup
  * rows FOREVER (appended deltas OR into the same fixed bit space).
  * A batch within [[Dedup.LocalTriggerMax]] probe rows (docs x probes)
  * runs that logic on the driver: read once ([[StateStores.readBatch]],
- * hashed in its tasks), one value per doc with
- * its md5 and probe positions, it probes the bloom store at its word
+ * hashed in its tasks by `md5` and [[Dedup.bloomBits]]), one value per
+ * doc, it probes the bloom store at its word
  * indexes and the hash store at its bloom-positive hashes (one
  * parquet-reader job each, [[StateStores.Store]], no query), and every
  * append is one file the driver writes ([[StateStores.Rows]]), with no
@@ -108,8 +108,8 @@ object StreamingExactDedup {
    *  unverified rows ([[Dedup.exactCopies]]; a verified count is at
    *  least one, so exactly the rows the verdict flags `is_dup` = 0),
    *  taken on the driver without a query; the in-batch collapse and the
-   *  bloom delta run on the driver over the collected batch (its probe
-   *  positions are the ones [[Dedup.bloomWords]] would set), and the
+   *  bloom delta run on the driver over the collected batch (its bits
+   *  are the [[Dedup.bloomBits]] that [[Dedup.bloomWords]] folds), and the
    *  three appends are driver-written files — the batch read (none
    *  for a `LocalRelation` batch) and the two store probes are its only
    *  jobs. */
@@ -120,8 +120,7 @@ object StreamingExactDedup {
       .collect { case (id, None) => id }.groupMapReduce(identity)(_ => 1)(_ + _)
     val survivors = docs.flatMap(d => Seq.fill(fresh.getOrElse(d.id, 0))(d))
       .groupBy(d => Option(d.hash)).values.map(_.minBy(_.id)).toSeq
-    val words = survivors.flatMap(_.pos.map(Dedup.bloomBit))
-      .groupMapReduce(_._1)(_._2)(_ | _)
+    val words = survivors.flatMap(_.bits).groupMapReduce(_._1)(_._2)(_ | _)
     StateStores.commit(None,
       storeDir -> StateStores.Rows(spark,
         survivors.map(d => Row(d.id, d.text)), docSchema),

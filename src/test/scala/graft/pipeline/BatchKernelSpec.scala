@@ -1,22 +1,26 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.streaming.StreamingDedup
+import graft.obs.WorkLedger
+import graft.streaming.{StreamingDedup, StreamingExactDedup}
 import graft.util.Round.r4
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
+import scala.util.Try
 
-/** The per-row kernels of a bounded trigger's batch read
- *  ([[Dedup.ShingleRows]], [[Dedup.HashRows]], [[Dedup.bloomSeeds]],
- *  run in the read's tasks or on the driver) and its driver-side
- *  Jaccard cut ([[Dedup.jaccardCut]], evaluated row by row) against
- *  the Catalyst expressions they stand for, run in generated code:
- *  `word_ngrams`, `md5`, `xxhash64`, [[Dedup.probePos]],
+/** A bounded trigger's batch read ([[Dedup.shingledBatch]],
+ *  [[Dedup.hashedBatch]], run in the read's tasks or on the
+ *  driver) against the distributed plan's own frames over the same
+ *  batch ([[Dedup.shingles]], [[Dedup.contentHashes]],
+ *  [[Dedup.bloomWords]]), and its driver-side Jaccard cut
+ *  ([[Dedup.jaccardCut]], evaluated row by row) against the Catalyst
+ *  expressions it stands for, run in generated code:
  *  [[Dedup.jaccardOf]] and `r4`. */
 class BatchKernelSpec extends SparkSpec {
+
+  private lazy val ledger = WorkLedger.install(spark)
 
   /** Every sf0.001 doc, then edge texts with ids past the docs'. */
   private lazy val texts: Seq[(Long, String)] = {
@@ -41,39 +45,63 @@ class BatchKernelSpec extends SparkSpec {
     Seq(spark.read.parquet(dir), local)
   }
 
-  test("shingles: a batch read's shingles are word_ngrams(text, 3), in its order") {
-    val want = batches.head.select(col("doc_id"), col("text"),
-        call_function("word_ngrams", col("text"), lit(3))).collect()
-      .map(r => r.getLong(0) -> (r.getString(1),
-        Option(r.getSeq[String](2)).getOrElse(Nil))).toMap
-    assert(want.size === texts.length)
-    assert(want.values.count(_._2.isEmpty) >= 4)
+  /** A batch's `(text)` per doc id. */
+  private def textsOf(b: DataFrame): Map[Long, String] =
+    b.select(col("doc_id"), col("text")).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("shingles: a batch read's shingles are the distributed plan's shingle rows, in their order") {
     for (b <- batches) {
+      val want = Dedup.shingles(b).collect().toSeq
+        .groupMap(_.getLong(0))(_.getString(1))
+      assert(texts.count(t => !want.contains(t._1)) >= 4)
       val got = Dedup.shingledBatch(b, Int.MaxValue).get
       assert(got.length === texts.length)
-      assert(got.map(d => d.id -> (d.text, d.grams.toSeq)).toMap === want)
+      assert(got.map(d => d.id -> d.text).toMap === textsOf(b))
+      assert(got.map(d => d.id -> d.grams.toSeq).toMap ===
+        texts.map(t => t._1 -> want.getOrElse(t._1, Nil)).toMap)
     }
   }
 
-  test("hashes: a batch read's md5, xxhash64 seeds and probe positions are the Catalyst expressions'") {
-    val (h1, h2) = (xxhash64(col("text")), xxhash64(col("text"), lit(1)))
-    val seeds = batches.head.select(col("text"), h1, h2).collect()
-    assert(seeds.length === texts.length)
-    for (r <- seeds)
-      assert(Dedup.bloomSeeds(UTF8String.fromString(r.getString(0))) ===
-        ((r.getLong(1), r.getLong(2))), String.valueOf(r.getString(0)))
-    for ((mBits, probes) <- Seq((Dedup.BloomBits, Dedup.BloomProbes), (64, 3), (192, 7))) {
-      val want = batches.head.select(col("doc_id"), col("text"), md5(col("text")),
-          array((0 until probes).map(i => Dedup.probePos(h1, h2, lit(i), mBits)): _*))
-        .collect()
-        .map(r => r.getLong(0) -> (r.getString(1), r.getString(2), r.getSeq[Long](3)))
-        .toMap
-      for (b <- batches) {
-        val got = Dedup.hashedBatch(b, mBits, probes, Int.MaxValue).get
-        assert(got.length === texts.length)
-        assert(got.map(d => d.id -> (d.text, d.hash, d.pos.toSeq)).toMap === want,
-          s"m = $mBits, probes = $probes")
+  test("hashes: a batch read's hashes are contentHashes and its bloom bits fold to bloomWords") {
+    for ((mBits, probes) <- Seq((Dedup.BloomBits, Dedup.BloomProbes), (64, 3), (192, 7));
+         b <- batches) {
+      val clue = s"m = $mBits, probes = $probes, ${b.queryExecution.optimizedPlan.nodeName}"
+      val got = Dedup.hashedBatch(b, mBits, probes, Int.MaxValue).get
+      assert(got.length === texts.length, clue)
+      assert(got.map(d => d.id -> d.text).toMap === textsOf(b), clue)
+      assert(got.map(d => d.id -> d.hash).toMap === Dedup.contentHashes(b).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap, clue)
+      // each doc sets one bit per probe, inside the filter
+      for (d <- got) {
+        assert(d.bits.length === probes, clue)
+        assert(d.bits.forall { case (w, mask) =>
+          w >= 0 && w < mBits / 64 && java.lang.Long.bitCount(mask) == 1 }, clue)
       }
+      assert(got.flatMap(_.bits).groupMapReduce(_._1)(_._2)(_ | _) ===
+        Dedup.bloomWords(b, mBits, probes).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap, clue)
+    }
+  }
+
+  test("a bloom without probes, or over a width not a multiple of 64, fails before any job in either plan") {
+    val root = tmpDir("kernel-geometry")
+    for (((mBits, probes), g) <- Seq((Dedup.BloomBits, 0), (Dedup.BloomBits, -1),
+           (100, Dedup.BloomProbes)).zipWithIndex;
+         (b, i) <- batches.zipWithIndex; localMax <- Seq(Dedup.LocalTriggerMax, -1)) {
+      val dir = s"$root/g$g-b$i-$localMax"
+      val runs = Seq(
+        () => Dedup.bloomWords(b, mBits, probes),
+        () => Dedup.dedupExactIncremental(Dedup.bloomWords(b), Dedup.contentHashes(b), b,
+          mBits, probes, localMax).collect(),
+        () => StreamingExactDedup.processBatch(b, 0L, dir, dir + "_hashes", dir + "_bloom",
+          mBits, probes, localMax))
+      for (run <- runs) {
+        val (result, work) = ledger.measure(Try(run()))
+        assert(result.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+          s"m = $mBits, probes = $probes, batch $i, localMax = $localMax: $result")
+        assert(work.jobs === 0L, work)
+      }
+      assert(!new java.io.File(dir).exists())
     }
   }
 
